@@ -233,9 +233,9 @@ object Bench {
     // digest — so any consumer can verify the committed
     // BENCH_full_latest.json IS this session's 278-row map and diff
     // that instead of the top-5 window.
-    val qDigest = java.security.MessageDigest.getInstance("MD5")
-      .digest(qs.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString.take(16)
+    val qDigest = graft.functions.Hashing.hex(java.security.MessageDigest
+      .getInstance("MD5")
+      .digest(qs.getBytes(java.nio.charset.StandardCharsets.UTF_8))).take(16)
     val fullJson = s"""{"metric":"total","value":$total,"unit":"sec","value_core":${r3(coreSum)},"value_lifecycle":${r3(lifecycleSum)},"lifecycle":$lifecycleNames,"queries":$qs,"rows":${results.size},"qdigest":"$qDigest","stream_busy":$streamBusyJson,"park_secs":$parkJson,"park_in_queries_secs":${r3(parkInQueries)},"steal_secs":$stealJson,"steal_in_queries_secs":${r3(stealInQueries)},"n_ok":${ok.size},"n_err":$nErr,"transfer_rows_per_sec":${rowsPerSec.round},$transferEvidence,"sf":"$sfDir"}"""
     // The final printed line must fit the driver's ~2 KB tail-capture
     // window: 158 queries x 17-digit doubles is 4.6 KB and arrives

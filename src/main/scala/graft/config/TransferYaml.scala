@@ -113,7 +113,9 @@ object TransferYaml {
       case "rename_tables" => T.RenameTables(
         asMap(cfg("mapping")).map { case (k, v) => k -> v.toString })
       case "mask_field" => T.MaskField(strs("columns"), cfg("salt").toString,
-        cfg.getOrElse("hmac", "true").toString.toBoolean)
+        cfg.getOrElse("hmac", "true").toString.toBooleanOption.getOrElse(
+          throw new IllegalArgumentException(
+            s"mask_field: hmac must be true or false, got '${cfg("hmac")}'")))
       case "sql" => T.SqlTransform(cfg("query").toString,
         cfg.getOrElse("view", "table").toString)
       case "clickhouse_sql" => T.SqlTransform(

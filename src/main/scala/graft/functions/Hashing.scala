@@ -2,7 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.StableHash64Expr
 import org.apache.spark.sql.types.LongType
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Engine-stable hashing built from md5 — deterministic, identical across
   * engines and languages (md5 is fully specified), which makes hash-keyed
@@ -27,11 +29,13 @@ object Hashing {
   /** Driver-side twin of [[hex8ToLong]] (same md5-first-8-hex value) for
     * planning decisions — e.g. computing a key's state bucket without a
     * Spark job. */
-  def hex8ToLongJvm(s: String): Long = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8"))
-    java.lang.Long.parseLong(d.take(4).map("%02x".format(_)).mkString, 16)
-  }
+  def hex8ToLongJvm(s: String): Long =
+    StableHash64Expr.hash(UTF8String.fromString(s))
+
+  private val Hex = java.util.HexFormat.of()
+
+  /** Lowercase hex of a digest, two chars per byte. */
+  def hex(d: Array[Byte]): String = Hex.formatHex(d)
 
   /** Seeded variant: seed participates in the hashed payload. */
   def seeded(c: Column, seed: Int): Column =

@@ -307,8 +307,7 @@ object Multimodal {
                 pcm.samples.slice(f * fftSize, (f + 1) * fftSize), fftSize)
             }
             md.reset()
-            val fp = md.digest(bins.mkString(",").getBytes("UTF-8"))
-              .map(b => f"$b%02x").mkString
+            val fp = Hashing.hex(md.digest(bins.mkString(",").getBytes("UTF-8")))
             Seq[Any](bins.toSeq, fp)
           } catch {
             case scala.util.control.NonFatal(_) => Seq[Any](null, null)
@@ -356,8 +355,7 @@ object Multimodal {
                 ((sum / (img.width * img.height)) / quant).toInt
             }
             md.reset()
-            val fp = md.digest(qs.mkString(",").getBytes("UTF-8"))
-              .map(b => f"$b%02x").mkString
+            val fp = Hashing.hex(md.digest(qs.mkString(",").getBytes("UTF-8")))
             Seq[Any](qs, fp)
           } catch {
             case scala.util.control.NonFatal(_) => Seq[Any](null, null)

@@ -46,18 +46,19 @@ object Similarity {
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
+  /** A value in [-1, 1) derived from `key`'s md5 prefix:
+    * `hex8(key) % 2000 / 1000.0 - 1`. */
+  private def unitComponent(key: String): Double =
+    (Hashing.hex8ToLongJvm(key) % 2000L).toDouble / 1000.0 - 1.0
+
   /** Deterministic pseudo-random hyperplane component in [-1, 1):
     * md5-derived, seeded by (plane, dim). Computed on the DRIVER and
     * embedded as literals — the values are a pure function of the seed,
     * so per-row recomputation would be pure waste (and measured as the
     * dominant cost of LSH bucketing). Identical to the SQL spelling
     * `('0x'||substr(md5('hp<j>_<d>'),1,8))::BIGINT % 2000 / 1000.0 - 1`. */
-  def planeComponent(plane: Int, dim: Int): Double = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"hp${plane}_$dim".getBytes("UTF-8"))
-    val hex8 = d.take(4).map("%02x".format(_)).mkString
-    (java.lang.Long.parseLong(hex8, 16) % 2000L).toDouble / 1000.0 - 1.0
-  }
+  def planeComponent(plane: Int, dim: Int): Double =
+    unitComponent(s"hp${plane}_$dim")
 
   /** Sign bucket from `planes` hyperplanes over `dims` dimensions:
     * bit j = sign(v · plane_j). Planes are literal arrays; the work per
@@ -345,12 +346,8 @@ object Similarity {
   /** Deterministic pseudo-random centroid component in [-1, 1):
     * md5-derived like [[planeComponent]], `cent` namespace. SQL twin:
     * `('0x'||substr(md5('cent<c>_<d>'),1,8))::BIGINT % 2000 / 1000.0 - 1`. */
-  def centroidComponent(c: Int, dim: Int): Double = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"cent${c}_$dim".getBytes("UTF-8"))
-    val hex8 = d.take(4).map("%02x".format(_)).mkString
-    (java.lang.Long.parseLong(hex8, 16) % 2000L).toDouble / 1000.0 - 1.0
-  }
+  def centroidComponent(c: Int, dim: Int): Double =
+    unitComponent(s"cent${c}_$dim")
 
   /** k md5-derived centroids as a centroid DataFrame (centroid_id,
     * vecCol double array) — a deterministic stand-in for a fitted
@@ -566,12 +563,8 @@ object Similarity {
   /** Deterministic pseudo-random PQ codebook component in [-1, 1):
     * md5-derived like [[centroidComponent]], `pq` namespace. SQL twin:
     * `('0x'||substr(md5('pq<s>c<c>_<d>'),1,8))::BIGINT % 2000 / 1000.0 - 1`. */
-  def pqComponent(sub: Int, code: Int, dim: Int): Double = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"pq${sub}c${code}_$dim".getBytes("UTF-8"))
-    val hex8 = d.take(4).map("%02x".format(_)).mkString
-    (java.lang.Long.parseLong(hex8, 16) % 2000L).toDouble / 1000.0 - 1.0
-  }
+  def pqComponent(sub: Int, code: Int, dim: Int): Double =
+    unitComponent(s"pq${sub}c${code}_$dim")
 
   /** Per-subspace codebooks as driver literals (m * ksub * subDim
     * doubles — a few KB; a production codebook is the same size, which

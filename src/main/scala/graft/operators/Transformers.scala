@@ -113,27 +113,20 @@ object Transformers {
 
   /** #6 mask_field — salted hash of selected columns, output hex string
     * (reference: registry/mask/mask.go:20, hmac_hasher.go:29-33 uses
-    * HMAC-SHA256). `MaskHmac` is the faithful mode (JVM crypto via UDF);
-    * `MaskSaltedSha` is a codegen-friendly sha2(salt||value) variant that
-    * stays inside whole-stage codegen. */
+    * HMAC-SHA256). `hmac = true` is the faithful mode: HMAC-SHA256 keyed
+    * by the salt over each value's string form, run by the native
+    * codegen kernel [[graft.functions.HmacSha256Hex]] inside whole-stage
+    * codegen. `hmac = false` is the cheaper sha2(salt||value) variant,
+    * built from Spark's own functions. Nulls stay null in both modes. */
   final case class MaskField(cols: Seq[String], salt: String,
                              hmac: Boolean = true) extends Transformer {
+    require(!hmac || salt.nonEmpty,
+      s"mask_field on ${cols.mkString(", ")}: HMAC needs a non-empty salt")
     val name = "mask_field"
     def apply(df: DataFrame): DataFrame = {
       val mask: Column => Column =
-        if (hmac) { c =>
-          val f = udf { (v: String) =>
-            if (v == null) null
-            else {
-              val mac = javax.crypto.Mac.getInstance("HmacSHA256")
-              mac.init(new javax.crypto.spec.SecretKeySpec(
-                salt.getBytes("UTF-8"), "HmacSHA256"))
-              mac.doFinal(v.getBytes("UTF-8"))
-                .map("%02x".format(_)).mkString
-            }
-          }
-          f(c.cast(StringType))
-        } else { c => sha2(concat(lit(salt), c.cast(StringType)), 256) }
+        if (hmac) c => graft.functions.HmacSha256Hex(c.cast(StringType), salt)
+        else c => sha2(concat(lit(salt), c.cast(StringType)), 256)
       cols.foldLeft(df)((d, c) => d.withColumn(c, mask(col(c))))
     }
   }

@@ -22,6 +22,8 @@ object Sinks {
     case Disabled => "append"
   }
 
+  private val SaltKey = "spark.graft.write.salt"
+
   /** File sinks. partitionCols ≙ the table_splitter/rotator write layout
     * (per-value directories). */
   def parquet(df: DataFrame, path: String,
@@ -38,8 +40,10 @@ object Sinks {
     // [[spreadByCols]]'s skew envelope). Production sizing: salt ≈
     // ceil(hot value's bytes / target file bytes); local default stays
     // 1 so bench file counts and plans are unchanged.
-    val salt = df.sparkSession.conf
-      .getOption("spark.graft.write.salt").map(_.toInt).getOrElse(1)
+    val salt = df.sparkSession.conf.getOption(SaltKey).map(v =>
+      v.toIntOption.filter(_ >= 1).getOrElse(
+        throw new IllegalArgumentException(
+          s"$SaltKey must be an integer >= 1, got '$v'"))).getOrElse(1)
     val src =
       if (partitionCols.isEmpty) rebalanced(df)
       else spreadByCols(df, partitionCols.map(col), salt = salt)
@@ -62,15 +66,23 @@ object Sinks {
     * parquet encode. Plain parquet files carry no ordering contract, so
     * round-robin loses nothing; well-parallelized or small inputs pass
     * through untouched, preserving their (possibly deliberate)
-    * partitioning. */
+    * partitioning.
+    *
+    * The size estimate comes from the optimized logical plan and costs
+    * nothing. The partition count does not: `df.rdd` builds a second
+    * physical plan next to the write's own, and under AQE it runs the
+    * shuffle map stages of any exchange in the frame before the write
+    * starts. Below the 128 MB floor the widen cannot fire for any
+    * partition count, so such frames pass through without `df.rdd`. */
   private def rebalanced(df: DataFrame): DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    // physical planning only — neither of these runs a job
-    val parts = math.max(1, df.rdd.getNumPartitions)
+    val minBytes = BigInt(128L << 20)
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (parts * 2 <= target && bytes / parts >= (128L << 20))
-      df.repartition(target)
-    else df
+    val target = df.sparkSession.sparkContext.defaultParallelism
+    def narrow: Boolean = {
+      val parts = math.max(1, df.rdd.getNumPartitions)
+      parts * 2 <= target && bytes / parts >= minBytes
+    }
+    if (bytes >= minBytes && narrow) df.repartition(target) else df
   }
 
   /** Hash-repartition on the write's partition columns with an EXPLICIT

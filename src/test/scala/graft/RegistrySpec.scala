@@ -52,6 +52,16 @@ class RegistrySpec extends SparkSpec {
     assert(s1 != s2)
   }
 
+  test("hashing: driver-side hex and md5-prefix twins equal the format spelling") {
+    Seq("", "hello", "hp3_17", "cent12_5", "pq1c7_2", "日本", "a,b,c").foreach { s =>
+      val d = java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
+      val hex = d.map("%02x".format(_)).mkString
+      assert(Hashing.hex(d) == hex)
+      assert(Hashing.hex8ToLongJvm(s) == java.lang.Long.parseLong(hex.take(8), 16))
+    }
+    assert(Hashing.hex(Array[Byte](0, -1, 16, 127, -128)) == "00ff107f80")
+  }
+
   test("GraftSession applies scale configs and registers engine functions") {
     val s = GraftSession.create("local[2]")
     assert(s.conf.get("spark.sql.adaptive.enabled") == "true")

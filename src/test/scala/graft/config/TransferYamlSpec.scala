@@ -76,4 +76,26 @@ class TransferYamlSpec extends SparkSpec {
         |  - not_a_transformer: { }
         |""".stripMargin))
   }
+
+  test("mask_field config errors name the transformer and the key") {
+    def maskYaml(body: String) =
+      s"""type: SNAPSHOT_ONLY
+         |src: { kind: sample, rows: 1 }
+         |dst: { kind: console }
+         |transformations:
+         |  - mask_field: $body
+         |""".stripMargin
+    val bad = intercept[IllegalArgumentException](TransferYaml.fromString(
+      maskYaml("{ columns: [a], salt: s, hmac: maybe }")))
+    assert(bad.getMessage.contains("mask_field") &&
+      bad.getMessage.contains("hmac") && bad.getMessage.contains("maybe"),
+      bad.getMessage)
+    val empty = intercept[IllegalArgumentException](TransferYaml.fromString(
+      maskYaml("{ columns: [a, b], salt: '' }")))
+    assert(empty.getMessage.contains("mask_field") &&
+      empty.getMessage.contains("a, b"), empty.getMessage)
+    assert(TransferYaml.fromString(
+      maskYaml("{ columns: [a], salt: s, hmac: false }")).transformers ==
+      Seq(T.MaskField(Seq("a"), "s", hmac = false)))
+  }
 }

@@ -1,0 +1,82 @@
+package graft.sinks
+
+import java.nio.file.Files
+
+import scala.collection.mutable
+
+import graft.SparkSpec
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.bridge
+
+class SinksSpec extends SparkSpec {
+
+  private def tmp(): String =
+    Files.createTempDirectory("graft_sinks").toString
+
+  /** SQL execution id of every job `body` starts, in start order. */
+  private def jobsOf(body: => Unit): Seq[Option[String]] = {
+    val seen = mutable.ArrayBuffer.empty[Option[String]]
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = seen.synchronized {
+        seen += Option(e.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+      }
+    }
+    assert(bridge.drainListenerBus(spark, 10000))
+    spark.sparkContext.addSparkListener(l)
+    try body
+    finally {
+      assert(bridge.drainListenerBus(spark, 10000))
+      spark.sparkContext.removeSparkListener(l)
+    }
+    seen.synchronized(seen.toList)
+  }
+
+  private def parquetFiles(dir: String): Seq[String] =
+    Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
+      .map(_.getName).filter(_.endsWith(".parquet")).toSeq
+
+  test("unpartitioned parquet sink of a small aggregate starts no job before the write") {
+    val agg: DataFrame = spark.range(20000)
+      .groupBy((col("id") % 50).as("k")).agg(sum("id").as("v"))
+    val plain = jobsOf(agg.write.parquet(tmp() + "/plain"))
+    val path = tmp() + "/sink"
+    val jobs = jobsOf(Sinks.parquet(agg, path))
+    // every job belongs to the write's own query execution, and there
+    // are as many as a bare DataFrameWriter write of the same frame runs
+    assert(jobs.nonEmpty && jobs.forall(_.isDefined), jobs)
+    assert(jobs.distinct.size == 1, jobs)
+    assert(jobs.size == plain.size, s"sink $jobs vs bare write $plain")
+    assert(spark.read.parquet(path).count() == 50)
+  }
+
+  test("unpartitioned parquet sink of a small scan writes what a bare write does") {
+    val src = tmp() + "/src"
+    spark.range(0, 3000, 1, 3).select(col("id"), (col("id") * 3).as("w"))
+      .write.parquet(src)
+    val scan = spark.read.parquet(src)
+    val bare = tmp() + "/bare"
+    scan.write.parquet(bare)
+    val sink = tmp() + "/sink"
+    Sinks.parquet(scan, sink, policy = Sinks.Drop)
+    assert(parquetFiles(sink).size == parquetFiles(bare).size)
+    assert(parquetFiles(sink).size == scan.rdd.getNumPartitions)
+    val back = spark.read.parquet(sink)
+    assert(back.count() == 3000)
+    assert(back.orderBy("id").collect().toSeq == scan.orderBy("id").collect().toSeq)
+  }
+
+  test("spark.graft.write.salt must be an integer >= 1; the error names key and value") {
+    val df = spark.range(10).select(col("id"), (col("id") % 2).as("k"))
+    Seq("0", "-3", "two", "1.5").foreach { bad =>
+      spark.conf.set("spark.graft.write.salt", bad)
+      try {
+        val e = intercept[IllegalArgumentException](
+          Sinks.parquet(df, tmp() + "/x", partitionCols = Seq("k")))
+        assert(e.getMessage.contains("spark.graft.write.salt"), e.getMessage)
+        assert(e.getMessage.contains(s"'$bad'"), e.getMessage)
+      } finally spark.conf.unset("spark.graft.write.salt")
+    }
+  }
+}
