@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.sinks.Swap
 
 /** Deduplication operators for 100 TB-scale corpora. Design rules:
   *   - never all-pairs: candidate generation is always bucketed (LSH
@@ -1301,7 +1302,7 @@ object Dedup {
       // an index that already contains this batch
       val found = cross.unionByName(within).localCheckpoint(true)
       // spread the batch's cells across the cluster before the
-      // partitioned append (r17, ProfIndex): the batch arrives on a
+      // partitioned append: the batch arrives on a
       // handful of scan partitions, and a bare partitionBy write makes
       // ONE task write every touched `bucket=` dir's file serially —
       // measured 8-22 s per update on a ~250-cell batch, half the
@@ -1356,10 +1357,9 @@ object Dedup {
     * run over the same arrival stream at the new parameters — both
     * equal the one-shot operator over the full corpus. Vectors are
     * re-bucketed from the stored `v` column, so `planes` may change;
-    * the two-phase swap (stage → main→bak → tmp→main, every rename
-    * checked) leaves either the old lake or the new one on any
-    * crash, and a half-staged tmp from a previous crash is cleared
-    * on entry.
+    * the [[graft.sinks.Swap]] directory swap (stage → main→bak →
+    * tmp→main, every rename checked) leaves either the old lake or the
+    * new one on any crash, and recovers a previous crash on entry.
     *
     * Cadence (fresh-sf10 ladder, tools/RebuildScale, PLANS.md r16):
     * rebuild wall grows linearly with the lake past a fixed
@@ -1377,19 +1377,7 @@ object Dedup {
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = new org.apache.hadoop.fs.Path(indexPath + ".__rebuild_tmp")
     val bak = new org.apache.hadoop.fs.Path(indexPath + ".__rebuild_bak")
-    def renameOrDie(from: org.apache.hadoop.fs.Path,
-                    to: org.apache.hadoop.fs.Path): Unit =
-      require(fs.rename(from, to),
-        s"embeddingIndexRebuild: rename failed: $from -> $to")
-    // crash recovery, same window analysis as Sinks.compact: main
-    // missing means the crash hit between the swap renames — tmp (a
-    // complete staged lake) or bak holds the sole copy; finish the
-    // swap instead of deleting it
-    if (!fs.exists(hPath)) {
-      if (fs.exists(tmp)) renameOrDie(tmp, hPath)
-      else if (fs.exists(bak)) renameOrDie(bak, hPath)
-    }
-    Seq(tmp, bak).foreach(p => if (fs.exists(p)) fs.delete(p, true))
+    Swap.recoverDir(fs, hPath, tmp, bak)
     // explicit-count spread on the new cell id (r17): the rebuild's
     // staged write is the same partitionBy shape as the update's append
     // — without it one AQE-coalesced task writes every `bucket=` dir
@@ -1403,9 +1391,7 @@ object Dedup {
             col("v")),
         Seq(col("bucket")))
       .write.partitionBy("bucket").parquet(tmp.toString)
-    renameOrDie(hPath, bak)
-    renameOrDie(tmp, hPath)
-    fs.delete(bak, true)
+    Swap.installDir(fs, hPath, tmp, bak)
     embeddingNearDups(
       spark.read.option("basePath", indexPath).parquet(indexPath)
         .select(col("id"), col("v")),
@@ -1422,8 +1408,8 @@ object Dedup {
     * ANY order). Recomputes df over the CURRENT corpus from the
     * postings themselves (texts not needed), re-ranks every doc under
     * the fresh `(df, stable hash, shingle)` order, and swaps both
-    * `dford/` and `postings/` in crash-safely via
-    * [[graft.sinks.Sinks.compact]]'s two-phase discipline. A crash
+    * `dford/` and `postings/` in crash-safely, each by a
+    * [[graft.sinks.Swap]] directory swap. A crash
     * between the two swaps leaves a new dford with old postings —
     * safe: order affects prefix SELECTION speed only, and the next
     * rebuild completes it. Probes answer identically before and
@@ -1450,19 +1436,9 @@ object Dedup {
           spark.sparkContext.hadoopConfiguration)
         val tmp = new org.apache.hadoop.fs.Path(path + ".__rebuild_tmp")
         val bak = new org.apache.hadoop.fs.Path(path + ".__rebuild_bak")
-        def renameOrDie(from: org.apache.hadoop.fs.Path,
-                        to: org.apache.hadoop.fs.Path): Unit =
-          require(fs.rename(from, to),
-            s"containmentIndexRebuild: rename failed: $from -> $to")
-        if (!fs.exists(hPath)) {
-          if (fs.exists(tmp)) renameOrDie(tmp, hPath)
-          else if (fs.exists(bak)) renameOrDie(bak, hPath)
-        }
-        Seq(tmp, bak).foreach(p => if (fs.exists(p)) fs.delete(p, true))
+        Swap.recoverDir(fs, hPath, tmp, bak)
         df.write.parquet(tmp.toString)
-        renameOrDie(hPath, bak)
-        renameOrDie(tmp, hPath)
-        fs.delete(bak, true)
+        Swap.installDir(fs, hPath, tmp, bak)
       }
       swapIn(dfordPath, freshDf)
       swapIn(postingsPath, ranked)

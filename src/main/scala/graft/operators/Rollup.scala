@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.model.{CdcEnvelope => E}
+import graft.sinks.Swap
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -203,10 +204,10 @@ object Rollup {
   /** Continuously-maintained aggregate: fold one changelog batch into
     * a parquet-persisted state — the `foreachBatch` body of a streaming
     * rollup. The state is group-cardinality-sized, so it is rewritten
-    * whole each fold behind a two-phase swap (write .tmp → move live
-    * aside to .bak → move .tmp in → drop .bak); a crash at any point
-    * leaves either the old state or a recoverable .bak, never a torn
-    * directory. Pass foreachBatch's `batchId` for exactly-once under
+    * whole each fold behind a [[graft.sinks.Swap]] directory swap
+    * (stage .tmp → move live aside to .bak → move .tmp in → drop .bak);
+    * a crash at any point leaves the old state or the new one, never a
+    * torn directory. Pass foreachBatch's `batchId` for exactly-once under
     * replay: the id is written INSIDE the new state dir before the
     * swap, so it travels atomically with the rename — a replayed batch
     * that already folded (crash after swap, before the streaming
@@ -220,19 +221,12 @@ object Rollup {
     val fs = live.getFileSystem(conf)
     val bak = new org.apache.hadoop.fs.Path(statePath + ".bak")
     val tmp = new org.apache.hadoop.fs.Path(statePath + ".tmp")
-    // crash recovery: a .bak with no live state means the previous
-    // fold died between its two moves — restore the pre-fold state
-    if (fs.exists(bak) && !fs.exists(live)) fs.rename(bak, live)
-    if (fs.exists(tmp)) fs.delete(tmp, true)
+    Swap.recoverDir(fs, live, tmp, bak)
     // replay detection: the live state already carries this batch id
-    val marker = new org.apache.hadoop.fs.Path(live, "_graft_batch")
-    if (batchId >= 0 && fs.exists(marker)) {
-      val in = fs.open(marker)
-      val folded =
-        try new String(in.readAllBytes(), "UTF-8").trim.toLong
-        finally in.close()
-      if (folded == batchId) return spark.read.parquet(statePath)
-    }
+    if (batchId >= 0 &&
+        markedBatch(fs, new org.apache.hadoop.fs.Path(live, Marker))
+          .contains(batchId))
+      return spark.read.parquet(statePath)
 
     val d = delta(retractionBatch, groupKeys, metrics)
     val next =
@@ -246,72 +240,25 @@ object Rollup {
     next.write.mode("overwrite").parquet(tmp.toString)
     if (batchId >= 0) {
       // underscore-prefixed, so parquet readers ignore it like _SUCCESS
-      val out = fs.create(new org.apache.hadoop.fs.Path(tmp, "_graft_batch"))
+      val out = fs.create(new org.apache.hadoop.fs.Path(tmp, Marker))
       try out.write(batchId.toString.getBytes("UTF-8")) finally out.close()
     }
-    if (fs.exists(bak)) fs.delete(bak, true)
-    if (fs.exists(live)) fs.rename(live, bak)
-    fs.rename(tmp, live)
-    fs.delete(bak, true)
+    Swap.installDir(fs, live, tmp, bak)
     spark.read.parquet(statePath)
   }
 
   private val BucketCol = graft.streaming.CdcStream.BucketCol
   private val Marker = "_graft_batch"
-  private val FreshManifest = "_graft_fresh"
-  private val ManifestEnd = "#end"
-  private val CommitSentinel = "_graft_done"
 
-  private def readSmallFile(fs: org.apache.hadoop.fs.FileSystem,
-                            p: org.apache.hadoop.fs.Path): String = {
-    val in = fs.open(p)
-    try new String(in.readAllBytes(), "UTF-8") finally in.close()
-  }
-
-  /** Parse the fresh-item manifest: `batch=<id>`, one fresh name per
-    * line, `#end` terminator. A file missing the terminator or the
-    * header is a torn direct-write (only possible on stores without
-    * atomic rename, and only while the manifest itself was being
-    * written — i.e. before ANY rename happened) and is treated as
-    * absent, so recovery never acts on a truncated name list. */
-  private def readManifest(fs: org.apache.hadoop.fs.FileSystem,
-                           bak: org.apache.hadoop.fs.Path)
-      : Option[(Long, Seq[String])] = {
-    val p = new org.apache.hadoop.fs.Path(bak, FreshManifest)
-    if (!fs.exists(p)) None
+  /** The batch id the marker records, if any. */
+  private def markedBatch(fs: org.apache.hadoop.fs.FileSystem,
+                          marker: org.apache.hadoop.fs.Path): Option[Long] =
+    if (!fs.exists(marker)) None
     else {
-      val lines = readSmallFile(fs, p).split("\n")
-        .map(_.trim).filter(_.nonEmpty).toSeq
-      if (lines.isEmpty || lines.last != ManifestEnd ||
-          !lines.head.startsWith("batch=")) None
-      else scala.util.Try(lines.head.stripPrefix("batch=").toLong)
-        .toOption.map(b => (b, lines.slice(1, lines.length - 1)))
-    }
-  }
-
-  /** Tear down `.bak` in an order recovery can always interpret:
-    * bucket backups first, then the manifest, then the commit sentinel
-    * LAST, then the dir itself. The sentinel (written at the commit
-    * point, before any backup is deleted) outlives everything else, so
-    * a crash anywhere mid-teardown leaves a `.bak` recovery recognises
-    * as committed and resumes tearing down — never a live manifest over
-    * already-deleted backups that a rollback would misread, deleting
-    * committed fresh buckets it can no longer restore. The id-based
-    * commit check covers marked folds; the sentinel covers
-    * `batchId = -1` folds, whose manifest header can never match a
-    * root marker. */
-  private def deleteBakOrdered(fs: org.apache.hadoop.fs.FileSystem,
-                               bak: org.apache.hadoop.fs.Path): Unit =
-    if (fs.exists(bak)) {
-      fs.listStatus(bak).foreach { st =>
-        val n = st.getPath.getName
-        if (!n.startsWith(FreshManifest) && n != CommitSentinel)
-          fs.delete(st.getPath, true)
-      }
-      fs.delete(new org.apache.hadoop.fs.Path(bak, FreshManifest), false)
-      fs.delete(new org.apache.hadoop.fs.Path(bak, CommitSentinel), false)
-      fs.delete(bak, true)
-      ()
+      val in = fs.open(marker)
+      try scala.util.Try(new String(in.readAllBytes(), "UTF-8").trim.toLong)
+        .toOption
+      finally in.close()
     }
 
   /** [[fold]] for HIGH-cardinality rollups (per-user, per-document):
@@ -324,25 +271,21 @@ object Rollup {
     *
     *   - aggregates the BATCH into a signed delta (map-side combined),
     *   - reads ONLY the buckets its delta touches,
-    *   - merges and rewrites ONLY those buckets behind a two-phase
+    *   - merges and rewrites ONLY those buckets behind a crash-safe
     *     bucket swap —
     *
     * so rewrite I/O scales with the batch's key spread, never total
     * group cardinality. Unlike the replication MERGE (last-write-wins,
     * idempotent under replay) an aggregate fold is NOT idempotent, so
-    * the replay marker swaps WITH the buckets: it moves into `.bak`
-    * beside the displaced state and is rewritten only after the new
-    * buckets land. Affected items with NO pre-fold state (every bucket
-    * on the bootstrap fold, any new-key bucket later, the marker on the
-    * first marked fold) are named in a fresh-item manifest written into
-    * `.bak` before any rename, so recovery can delete their folded
-    * copies from the root. The manifest header records this fold's
-    * batch id: recovery compares it with the root marker to tell a
-    * crash mid-swap (roll back, batch replays and folds once) from a
-    * crash mid-cleanup after the marker committed (resume the
-    * teardown, replay detected and skipped) — so a crash anywhere
-    * leaves either the pre-fold state + pre-fold marker or the
-    * post-fold state + post-fold marker, never a mix. */
+    * the replay marker swaps WITH the buckets: both are children of one
+    * [[graft.sinks.Swap]] children swap, the marker moved in last. The
+    * swap manifest's header records this fold's batch id: recovery
+    * compares it with the root marker to tell a crash mid-swap (roll
+    * back, batch replays and folds once) from a crash mid-cleanup after
+    * the marker committed (resume the teardown, replay detected and
+    * skipped) — so a crash anywhere leaves either the pre-fold state +
+    * pre-fold marker or the post-fold state + post-fold marker, never a
+    * mix. */
   def foldBucketed(spark: org.apache.spark.sql.SparkSession,
                    statePath: String, retractionBatch: DataFrame,
                    groupKeys: Seq[String], metrics: Seq[String],
@@ -396,8 +339,7 @@ object Rollup {
   /** The shared bucketed-state fold machinery: crash recovery, replay
     * detection, touched-bucket discovery from `probe` (any frame
     * carrying [[BucketCol]] for every touched group), the
-    * `next(existingAffectedState)` computation, and the two-phase
-    * bucket swap. `next` receives None on bootstrap (no affected
+    * `next(existingAffectedState)` computation, and the bucket swap. `next` receives None on bootstrap (no affected
     * bucket exists yet), otherwise the affected buckets' state without
     * the layout column, and returns the replacement rows for exactly
     * those buckets' groups. */
@@ -415,67 +357,21 @@ object Rollup {
     val tmp = new org.apache.hadoop.fs.Path(statePath + ".tmp")
     val marker = new org.apache.hadoop.fs.Path(root, Marker)
 
-    // crash recovery: a leftover .bak means a previous swap died
-    // mid-flight. The .bak restore alone only covers buckets that
-    // EXISTED pre-fold; an affected bucket with no pre-fold state (every
-    // bucket on the bootstrap fold, any new group-key bucket later) has
-    // no .bak counterpart, so a folded copy left in the root would
-    // survive restore and double-count on replay. The fresh-item
-    // manifest (written into .bak before any rename) names exactly
-    // those: delete them from the root first — any root copy can only
-    // be a post-fold rename, since the item did not exist pre-fold —
-    // then restore everything .bak holds. Either way the state is
-    // exactly pre-fold; the unfinished batch never reached its
-    // checkpoint and will replay.
-    if (fs.exists(bak)) {
-      // Did the interrupted fold reach its commit point (root marker
-      // written with ITS batch id, recorded in the manifest header)?
-      // If so only the .bak teardown crashed: resume the teardown —
-      // rolling back here would restore pre-fold state under a
-      // post-fold marker and the replayed batch would be skipped,
-      // silently losing it.
-      val manifest = readManifest(fs, bak)
-      val rootBatch =
-        if (fs.exists(marker))
-          scala.util.Try(readSmallFile(fs, marker).trim.toLong).toOption
-        else None
-      // committed = the id check (marked folds) OR the commit sentinel
-      // (covers batchId = -1, where the header can never match a marker)
-      val committed = ((manifest, rootBatch) match {
-        case (Some((b, _)), Some(rb)) => b >= 0 && b == rb
-        case _ => false
-      }) || fs.exists(new org.apache.hadoop.fs.Path(bak, CommitSentinel))
-      if (committed) deleteBakOrdered(fs, bak)
-      else {
-        manifest.foreach { case (_, fresh) =>
-          fresh.foreach { name =>
-            val p = new org.apache.hadoop.fs.Path(root, name)
-            if (fs.exists(p)) fs.delete(p, true)
-          }
-        }
-        fs.listStatus(bak).foreach { st =>
-          if (!st.getPath.getName.startsWith(FreshManifest)) {
-            val dst = new org.apache.hadoop.fs.Path(root, st.getPath.getName)
-            if (fs.exists(dst)) fs.delete(dst, true)
-            fs.rename(st.getPath, dst)
-            ()
-          }
-        }
-        deleteBakOrdered(fs, bak)
-      }
-    }
-    if (fs.exists(tmp)) fs.delete(tmp, true)
+    // crash recovery. A fold reached its commit point once its marker
+    // (the last swapped child) records the batch id the swap manifest
+    // was written for, or once the sentinel is down (the only record of
+    // an unmarked fold): then only the teardown crashed and is resumed
+    // — rolling back would restore pre-fold buckets under a post-fold
+    // marker, and the replayed batch would be skipped and lost.
+    // Otherwise the swap is rolled back and the batch replays once.
+    Swap.recoverChildren(fs, root, tmp, bak,
+      committed = b => b >= 0 && markedBatch(fs, marker).contains(b))
     // stateSchema is analysis-only (no job): lets the two internal
     // reads below return a typed empty frame when a fold has retracted
     // the entire state (marker present, no buckets)
     val expectedSchema = Some(stateSchema)
-    if (batchId >= 0 && fs.exists(marker)) {
-      val folded =
-        scala.util.Try(readSmallFile(fs, marker).trim.toLong)
-          .getOrElse(-1L)
-      if (folded == batchId)
-        return readBucketed(spark, statePath, expectedSchema)
-    }
+    if (batchId >= 0 && markedBatch(fs, marker).contains(batchId))
+      return readBucketed(spark, statePath, expectedSchema)
 
     val d = probe.persist()
     // the touched-bucket set is <= numBuckets rows — driver-cheap
@@ -500,53 +396,15 @@ object Rollup {
       .write.partitionBy(BucketCol).parquet(tmp.toString)
     d.unpersist()
 
-    if (!fs.exists(root)) fs.mkdirs(root)
-    fs.mkdirs(bak)
-    // fresh-item manifest FIRST, before any rename: names every
-    // affected item with no pre-fold state (recovery must delete those
-    // from the root — they cannot be restored from .bak)
-    val freshNames =
-      affected.map(i => s"$BucketCol=$i")
-        .filterNot(n => fs.exists(new org.apache.hadoop.fs.Path(root, n))) ++
-      (if (fs.exists(marker)) Nil else Seq(Marker))
-    // header carries THIS fold's batch id (recovery's commit check);
-    // temp-create + rename makes the manifest appear atomically, and
-    // the #end terminator guards stores whose rename is copy+delete
-    val manifestTmp =
-      new org.apache.hadoop.fs.Path(bak, FreshManifest + ".tmp")
-    val fo = fs.create(manifestTmp)
-    try fo.write((s"batch=$batchId" +: freshNames :+ ManifestEnd)
-      .mkString("\n").getBytes("UTF-8"))
-    finally fo.close()
-    fs.rename(manifestTmp,
-      new org.apache.hadoop.fs.Path(bak, FreshManifest))
-    affected.foreach { i =>
-      val dst = new org.apache.hadoop.fs.Path(root, s"$BucketCol=$i")
-      if (fs.exists(dst)) {
-        fs.rename(dst, new org.apache.hadoop.fs.Path(bak, s"$BucketCol=$i"))
-        ()
-      }
-    }
-    // the marker swaps WITH the buckets: pre-fold marker rides in .bak
-    if (fs.exists(marker)) {
-      fs.rename(marker, new org.apache.hadoop.fs.Path(bak, Marker)); ()
-    }
-    affected.foreach { i =>
-      val src = new org.apache.hadoop.fs.Path(tmp, s"$BucketCol=$i")
-      val dst = new org.apache.hadoop.fs.Path(root, s"$BucketCol=$i")
-      if (fs.exists(src)) { fs.rename(src, dst); () }
-    }
+    // the marker is staged beside the buckets and swapped in last: an
+    // unmarked fold (batchId = -1) moves the old marker aside and
+    // replaces it with nothing
     if (batchId >= 0) {
-      val o = fs.create(marker)
+      val o = fs.create(new org.apache.hadoop.fs.Path(tmp, Marker))
       try o.write(batchId.toString.getBytes("UTF-8")) finally o.close()
     }
-    // commit point reached (post-fold buckets + marker live in root):
-    // stamp the sentinel BEFORE any backup is deleted, so a crash
-    // anywhere in the teardown below is recognised as committed and
-    // resumed, never rolled back over partially-deleted backups
-    fs.create(new org.apache.hadoop.fs.Path(bak, CommitSentinel)).close()
-    deleteBakOrdered(fs, bak)
-    fs.delete(tmp, true)
+    Swap.installChildren(fs, root, tmp, bak,
+      affected.map(i => s"$BucketCol=$i") :+ Marker, batch = batchId)
     readBucketed(spark, statePath, expectedSchema)
   }
 

@@ -3,6 +3,7 @@ package graft.sinks
 import graft.model.{CdcEnvelope => E}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Sink registry + serializers (reference: pkg/abstract/sink.go Sinker
   * contract; serializer formats pkg/abstract/model/serialization.go:12-18
@@ -89,7 +90,7 @@ object Sinks {
     * task count (never the bare `repartition(cols)`): under AQE a bare
     * column repartition of a small frame coalesces to ONE post-shuffle
     * partition, and that single task then writes every value directory's
-    * file SERIALLY — measured (r17, ProfIndex): a ~250-dir partitioned
+    * file SERIALLY — measured: a ~250-dir partitioned
     * append off a 1-partition batch spent 8-22 s in one task writing
     * ~250 tiny parquet files back-to-back (~15-90 ms per file open +
     * footer + commit, machine-dependent), 45-50% of the whole standing-
@@ -111,10 +112,10 @@ object Sinks {
     * §2.5). Callers whose layout spec does NOT require exactly one
     * file per directory (e.g. [[parquet]]'s partitioned path — readers
     * list the whole value dir either way) pass `salt > 1`: each row
-    * gets a DETERMINISTIC salt (xxhash64 of the full row — never
-    * rand(), which duplicates/loses rows when retried map tasks redraw,
-    * SPARK-38388) and the hot value spreads over up to `salt` tasks and
-    * files. Exact-packing callers (compaction's `filesAfter == dirs`
+    * gets a DETERMINISTIC salt (xxhash64 of the row's non-map columns —
+    * never rand(), which duplicates/loses rows when retried map tasks
+    * redraw, SPARK-38388) and the hot value spreads over up to `salt`
+    * tasks and files. Exact-packing callers (compaction's `filesAfter == dirs`
     * stat, the standing-index appends whose specs count one file per
     * cell per append) keep salt = 1 and accept the documented bound. */
   private[graft] def spreadByCols(df: DataFrame, cols: Seq[Column],
@@ -139,9 +140,22 @@ object Sinks {
     val byBytes = ((bytes + split - 1) / split).min(BigInt(cap)).toInt
     val n = math.max(math.max(sc.defaultParallelism, floor),
       math.max(1, byBytes))
-    if (salt <= 1) df.repartition(n, cols: _*)
+    // the salt hashes every column xxhash64 accepts (it rejects maps,
+    // nested ones included); backtick-quoted df.col keeps a dotted name
+    // from resolving as a struct field access
+    def hasMap(t: DataType): Boolean = t match {
+      case _: MapType => true
+      case a: ArrayType => hasMap(a.elementType)
+      case s: StructType => s.fields.exists(f => hasMap(f.dataType))
+      case _ => false
+    }
+    val hashed =
+      if (salt <= 1) Array.empty[Column]
+      else df.schema.fields.filterNot(f => hasMap(f.dataType))
+        .map(f => df.col("`" + f.name.replace("`", "``") + "`"))
+    if (hashed.isEmpty) df.repartition(n, cols: _*)
     else {
-      val saltCol = pmod(xxhash64(struct(df.columns.map(col): _*)),
+      val saltCol = pmod(xxhash64(struct(hashed.toIndexedSeq: _*)),
         lit(salt.toLong))
       df.withColumn("__graft_salt", saltCol)
         .repartition(n, (cols :+ col("__graft_salt")): _*)
@@ -203,12 +217,11 @@ object Sinks {
     *    partition columns before `partitionBy`, landing one file per
     *    value directory (the same tasks×dirs guard [[parquet]] applies).
     *
-    * The rewrite is crash-safe two-phase: stage fully into
+    * The rewrite is a [[Swap]] directory swap: stage fully into
     * `<path>.__compact_tmp`, swap via rename with the previous tree kept
-    * at `<path>.__compact_bak` until the swap completes (the bucketed
-    * MERGE state discipline, CdcStream.scala) — a crash at any point
-    * leaves either the old tree or the new one, never a mix. Stale
-    * tmp/bak trees from a previous crash are cleared on entry.
+    * at `<path>.__compact_bak` until the swap completes — a crash at any
+    * point leaves either the old tree or the new one, never a mix, and
+    * the next pass recovers it on entry.
     */
   def compact(spark: org.apache.spark.sql.SparkSession, path: String,
               targetBytes: Long = 128L << 20,
@@ -217,30 +230,7 @@ object Sinks {
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = new org.apache.hadoop.fs.Path(path + ".__compact_tmp")
     val bak = new org.apache.hadoop.fs.Path(path + ".__compact_bak")
-    // recover from a previous crash. If the MAIN path is missing the
-    // crash hit between rename(main→bak) and rename(tmp→main): the data
-    // lives ONLY in tmp (complete — it is fully written before the
-    // first rename) and bak; complete the swap rather than deleting the
-    // sole surviving copy (ADVICE r13: the old unconditional delete
-    // destroyed the lake on exactly this crash window). With main
-    // present, a leftover tmp is an unswapped rewrite and a leftover
-    // bak a finished swap — both safe to drop.
-    // Hadoop FileSystem.rename reports many failures by returning
-    // FALSE rather than throwing; the cleanup below unconditionally
-    // deletes tmp and bak, so an unchecked failed recovery rename
-    // would delete the sole surviving copy of the lake — the exact
-    // loss this recovery exists to prevent (ADVICE r14, medium).
-    // Check every rename and abort the pass on failure.
-    def renameOrDie(from: org.apache.hadoop.fs.Path,
-                    to: org.apache.hadoop.fs.Path): Unit =
-      require(fs.rename(from, to),
-        s"Sinks.compact: rename failed (no exception, returned " +
-          s"false): $from -> $to — aborting before any cleanup delete")
-    if (!fs.exists(hPath)) {
-      if (fs.exists(tmp)) renameOrDie(tmp, hPath)
-      else if (fs.exists(bak)) renameOrDie(bak, hPath)
-    }
-    Seq(tmp, bak).foreach(p => if (fs.exists(p)) fs.delete(p, true))
+    Swap.recoverDir(fs, hPath, tmp, bak)
     // listing via Spark's parallel file index, not a driver-side
     // recursive walk: at compaction cadence the lake holds hundreds of
     // partition dirs and LocalFileSystem's listFiles does a per-entry
@@ -269,9 +259,7 @@ object Sinks {
       spreadByCols(df, partitionCols.map(col), floor)
         .write.partitionBy(partitionCols: _*).parquet(tmp.toString)
     }
-    renameOrDie(hPath, bak)
-    renameOrDie(tmp, hPath)
-    fs.delete(bak, true)
+    Swap.installDir(fs, hPath, tmp, bak)
     val after = leafParquet().size
     CompactionStats(files.size, totalBytes, after)
   }

@@ -98,13 +98,11 @@ object ZOrderLake {
     * The file listing comes from the read relation's file index
     * (driver metadata, no data scan); the manifest itself is
     * file-count-sized, so the known-set comparison is driver-cheap.
-    * Swap protocol (Hadoop rename cannot overwrite a directory):
-    * old -> .bak, new -> manifest, drop .bak. A crash between the two
-    * renames leaves no manifest but an intact .bak — the next call
-    * restores it before proceeding, so the lake is never left
-    * manifest-less for longer than one maintenance run. This is a
-    * single-writer maintenance op; readers racing the swap window
-    * should retry. */
+    * The new manifest replaces the old one by a [[Swap]] directory swap
+    * (Hadoop rename cannot overwrite a directory): a crash at any step
+    * leaves the old manifest or the new one once the next call has
+    * recovered it on entry. This is a single-writer maintenance op;
+    * readers racing the swap window should retry. */
   def updateManifest(spark: SparkSession, path: String,
                      dims: Seq[String]): String =
     incrementalUpdate(spark, path, path.stripSuffix("/") + "_manifest",
@@ -154,8 +152,8 @@ object ZOrderLake {
     val hPath = new org.apache.hadoop.fs.Path(manifestPath)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val bak = new org.apache.hadoop.fs.Path(manifestPath + "_bak")
-    // crash recovery: a previous run died between its two renames
-    if (!fs.exists(hPath) && fs.exists(bak)) fs.rename(bak, hPath)
+    val tmp = new org.apache.hadoop.fs.Path(manifestPath + "_new")
+    Swap.recoverDir(fs, hPath, tmp, bak)
     if (!fs.exists(hPath)) return rebuild()
 
     import spark.implicits._
@@ -179,12 +177,8 @@ object ZOrderLake {
     // lake file) — a single output file would bottleneck at millions
     // of entries, 32 shuffle-sized ones litter small lakes
     val parts = math.max(1, math.min(32, current.size / 50000))
-    val tmp = new org.apache.hadoop.fs.Path(manifestPath + "_new")
     combined.coalesce(parts).write.mode("overwrite").parquet(tmp.toString)
-    fs.delete(bak, true)
-    fs.rename(hPath, bak)
-    fs.rename(tmp, hPath)
-    fs.delete(bak, true)
+    Swap.installDir(fs, hPath, tmp, bak)
     manifestPath
   }
 

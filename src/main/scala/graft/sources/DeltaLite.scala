@@ -183,18 +183,11 @@ object DeltaLite {
     val logDir = new org.apache.hadoop.fs.Path(s"$tablePath/_delta_log")
     require(fs.exists(logDir), s"not a Delta table: no _delta_log at $tablePath")
 
-    val ckptVersion: Option[Long] = {
-      val p = new org.apache.hadoop.fs.Path(logDir, "_last_checkpoint")
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val raw = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        """"version"\s*:\s*(\d+)""".r.findFirstMatchIn(raw)
-          .map(_.group(1).toLong)
-          .filter(v => asOf.forall(v <= _))
-      }
-    }
+    val ckptVersion: Option[Long] = graft.sinks.Swap.readText(fs,
+        new org.apache.hadoop.fs.Path(logDir, "_last_checkpoint"))
+      .flatMap(""""version"\s*:\s*(\d+)""".r.findFirstMatchIn(_))
+      .map(_.group(1).toLong)
+      .filter(v => asOf.forall(v <= _))
     asOf.foreach { v =>
       val committed = ckptVersion.contains(v) || fs.exists(
         new org.apache.hadoop.fs.Path(logDir, f"$v%020d.json"))
@@ -545,7 +538,7 @@ object DeltaLite {
           if (relDir.isEmpty) new org.apache.hadoop.fs.Path(tablePath)
           else new org.apache.hadoop.fs.Path(tablePath, relDir)
         if (relDir.nonEmpty) fs.mkdirs(destDir)
-        fs.rename(st.getPath,
+        graft.sinks.Swap.rename(fs, st.getPath,
           new org.apache.hadoop.fs.Path(destDir, newName))
         val rel = if (relDir.isEmpty) newName else s"$relDir/$newName"
         moved += ((rel, st.getLen, pv))
@@ -1098,13 +1091,12 @@ object DeltaLite {
       .map(_.getPath).find(_.getName.startsWith("part-"))
       .getOrElse(throw new IllegalStateException("checkpoint write lost"))
     val dst = new org.apache.hadoop.fs.Path(logDir, f"$version%020d.checkpoint.parquet")
-    if (fs.exists(dst)) fs.delete(dst, false)
-    fs.rename(part, dst)
+    graft.sinks.Swap.replaceFile(fs, part, dst)
     fs.delete(staging, true)
     // _last_checkpoint LAST: a crash before this line leaves the old
     // pointer valid; the orphan checkpoint file is harmless
-    val lc = fs.create(new org.apache.hadoop.fs.Path(logDir, "_last_checkpoint"), true)
-    try lc.write(s"""{"version":$version,"size":${rows.length}}""".getBytes("UTF-8"))
-    finally lc.close()
+    graft.sinks.Swap.writeText(fs,
+      new org.apache.hadoop.fs.Path(logDir, "_last_checkpoint"),
+      s"""{"version":$version,"size":${rows.length}}""")
   }
 }

@@ -174,13 +174,7 @@ final case class IncrementalScan(stateDir: String) {
 
   def readState(table: String, cursorCol: String): Option[String] = {
     val p = stateFile(table, cursorCol)
-    val fs = p.getFileSystem(hconf)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim)
-      finally in.close()
-    }
+    graft.sinks.Swap.readText(p.getFileSystem(hconf), p)
   }
 
   /** Rows strictly beyond the stored cursor (all rows on first run). */
@@ -191,19 +185,13 @@ final case class IncrementalScan(stateDir: String) {
     }
 
   /** Persist the new high-water mark after a successful load. The write
-    * is create-then-rename so a concurrent reader never sees a torn
-    * cursor. */
+    * is a [[graft.sinks.Swap]] small-file replace, so a reader never
+    * sees a torn or missing cursor. */
   def commit(df: DataFrame, table: String, cursorCol: String): Unit = {
     val mx = df.agg(max(col(cursorCol)).cast("string")).collect()(0)
     if (!mx.isNullAt(0)) {
       val p = stateFile(table, cursorCol)
-      val fs = p.getFileSystem(hconf)
-      val tmp = new Path(p.getParent, p.getName + ".tmp")
-      val out = fs.create(tmp, true)
-      try out.write(mx.getString(0).getBytes("UTF-8")) finally out.close()
-      if (fs.exists(p)) fs.delete(p, false)
-      fs.rename(tmp, p)
-      ()
+      graft.sinks.Swap.writeText(p.getFileSystem(hconf), p, mx.getString(0))
     }
   }
 }

@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.model.{CdcEnvelope => E}
 import graft.operators.Collapse
+import graft.sinks.Swap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
@@ -72,7 +73,7 @@ object CdcStream {
 
   /** State-dir metadata pinning the bucket count and column set so every
     * batch agrees on the layout and bucket schemas stay homogeneous.
-    * `schema` (r18) is the TYPED union across drifts: with it, state
+    * `schema` is the TYPED union across drifts: with it, state
     * reads pass an explicit schema instead of mergeSchema, skipping the
     * per-batch footer-inference job over every affected bucket — at
     * lake scale a mergeSchema read sweeps EVERY file footer of the
@@ -80,16 +81,19 @@ object CdcStream {
     * streaming cadence that job recurs per micro-batch. Lagging buckets
     * (lazy DDL migration) read identically either way: the parquet
     * reader surfaces null for schema columns a file predates — the
-    * exact semantics mergeSchema produced. Absent on metas written
-    * before r18 (readers fall back to mergeSchema). */
+    * exact semantics mergeSchema produced. Absent when it would not
+    * cover every logical column, and on older metas: readers then fall
+    * back to mergeSchema. */
   private final case class StateMeta(numBuckets: Int, columns: Seq[String],
       schema: Option[org.apache.spark.sql.types.StructType] = None)
 
   private def fsOf(spark: SparkSession): org.apache.hadoop.fs.FileSystem =
     org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
 
+  private val MetaName = "_graft_meta.json"
+
   private def metaPath(dir: String) =
-    new org.apache.hadoop.fs.Path(dir, "_graft_meta.json")
+    new org.apache.hadoop.fs.Path(dir, MetaName)
 
   private def readMeta(fs: org.apache.hadoop.fs.FileSystem,
                        dir: String): Option[StateMeta] = {
@@ -119,9 +123,11 @@ object CdcStream {
     }
   }
 
-  private def writeMeta(fs: org.apache.hadoop.fs.FileSystem, dir: String,
-                        meta: StateMeta): Unit = {
-    val out = fs.create(metaPath(dir), true)
+  /** The meta is staged into the swap's temp dir and moves in with the
+    * buckets, so it is never overwritten in place. */
+  private def writeMeta(fs: org.apache.hadoop.fs.FileSystem,
+                        p: org.apache.hadoop.fs.Path, meta: StateMeta): Unit = {
+    val out = fs.create(p, true)
     val schemaField = meta.schema.map { s =>
       s""","schemaB64":"${java.util.Base64.getEncoder
         .encodeToString(s.json.getBytes("UTF-8"))}""""
@@ -136,7 +142,7 @@ object CdcStream {
     * different drift generations; the union schema surfaces null for
     * columns a lagging bucket predates. */
   def readState(spark: SparkSession, stateDir: String): DataFrame = {
-    // typed meta schema (r18): skip the footer-inference/mergeSchema
+    // typed meta schema: skip the footer-inference/mergeSchema
     // job — the union schema is already known; lagging buckets surface
     // null for columns they predate either way (see [[StateMeta]])
     val schema = readMeta(fsOf(spark), stateDir).flatMap(_.schema)
@@ -187,9 +193,11 @@ object CdcStream {
     * rewrites ONLY the buckets containing its keys — rewrite I/O scales
     * with the batch's key spread, not total state size (the flat-layout
     * predecessor rewrote the whole state every batch). Per-batch plan:
-    * one read over the affected buckets + one partitioned write; the swap
-    * is per-bucket rename, and replaying after a mid-swap crash converges
-    * because the merge itself is idempotent. At warehouse scale the same
+    * one read over the affected buckets + one partitioned write; the
+    * rewritten buckets and the new meta then replace the old ones in one
+    * [[graft.sinks.Swap]] children swap, so a crash at any step leaves
+    * the pre-batch or the post-batch state, and the replayed batch
+    * converges because the merge itself is idempotent. At warehouse scale the same
     * batch function lands on a Delta/Iceberg MERGE INTO — the collapse
     * step, key discipline and bucket-pruned rewrite are identical
     * (reference semantics: pkg/sink_factory/sink_factory.go:100-133
@@ -205,14 +213,14 @@ object CdcStream {
     * meta's union indefinitely, by design: reads stay correct (the
     * union schema null-backfills columns a file predates) without the
     * stop-the-world rewrite that at 100 TB of state would be an
-    * unbounded pause inside one micro-batch. Since r18 the meta
+    * unbounded pause inside one micro-batch. The meta
     * carries the TYPED union schema, so (a) state reads pass it
     * explicitly instead of paying a mergeSchema footer sweep per
     * batch, and (b) any rewrite a batch does perform projects the
     * touched buckets to the union (null-filled drifted columns) —
     * observable results are identical either way, convergence is just
-    * faster. Metas written before r18 lack the typed schema and fall
-    * back to mergeSchema reads. The meta's column set records the
+    * faster. A meta without the typed schema falls back to mergeSchema
+    * reads. The meta's column set records the
     * logical union across drifts. A legacy flat-layout dir is still
     * migrated whole on first contact (its layout, not just its
     * schema, changes). */
@@ -225,31 +233,20 @@ object CdcStream {
     val spark = batch.sparkSession
     val fs = fsOf(spark)
     val root = new org.apache.hadoop.fs.Path(stateDir)
-    // crash recovery: a leftover .bak dir means a previous swap died
-    // mid-flight (the batch never committed to the checkpoint, so it
-    // WILL be replayed) — restore the pre-batch buckets first, making
-    // the swap-then-replay sequence exact, not just per-bucket-atomic
+    val tmp = new org.apache.hadoop.fs.Path(stateDir + ".tmp")
     val bak = new org.apache.hadoop.fs.Path(stateDir + ".bak")
-    if (fs.exists(bak)) {
-      val entries = fs.listStatus(bak)
-      // interrupted LEGACY migration: .bak holds the flat-layout part-*
-      // snapshot — it is the authoritative pre-batch state, so any
-      // half-swapped bucket dirs in the root are replay debris and must
-      // go before the flat files come back (otherwise the re-detected
-      // legacy read would see old rows twice)
-      if (entries.exists(_.getPath.getName.startsWith("part-")) &&
-          fs.exists(root))
-        fs.listStatus(root).filter(_.getPath.getName.startsWith(BucketCol))
-          .foreach(st => fs.delete(st.getPath, true))
-      entries.filter(st => st.getPath.getName.startsWith(BucketCol) ||
-          st.getPath.getName.startsWith("part-"))
-        .foreach { st =>
-          val dst = new org.apache.hadoop.fs.Path(stateDir, st.getPath.getName)
-          if (fs.exists(dst)) fs.delete(dst, true)
-          fs.rename(st.getPath, dst)
-        }
-      fs.delete(bak, true)
-    }
+    // a .bak without a swap manifest that holds flat part-* files is an
+    // interrupted legacy migration in the older layout: it does not
+    // name the bucket dirs already moved in, and all of them are
+    // replay debris (the flat snapshot is the pre-batch state)
+    if (Swap.unlisted(fs, bak) && fs.listStatus(bak)
+        .exists(_.getPath.getName.startsWith("part-")))
+      fs.listStatus(root).filter(_.getPath.getName.startsWith(BucketCol))
+        .foreach(st => fs.delete(st.getPath, true))
+    // a swap that died mid-flight never reached the checkpoint, so its
+    // batch replays: recovery restores the pre-batch buckets and meta
+    // (or finishes a committed teardown) before anything is read
+    Swap.recoverChildren(fs, root, tmp, bak)
     val meta = readMeta(fs, stateDir)
     val n = meta.map(_.numBuckets).getOrElse(numBuckets)
 
@@ -279,7 +276,7 @@ object CdcStream {
         // affected buckets may sit at different drift generations
         // (lazy migration) — the read must union their schemas, not
         // inherit whichever file the reader samples first. With a
-        // typed meta schema (r18) that union is KNOWN: pass it
+        // typed meta schema that union is KNOWN: pass it
         // explicitly and skip the per-batch mergeSchema footer sweep
         // (the parquet reader nulls out columns a lagging file
         // predates — identical semantics, one fewer job per batch).
@@ -315,58 +312,14 @@ object CdcStream {
       .select(outCols.map(col): _*)
       .withColumn(BucketCol, bucketOf(pks, n))
 
-    // write-then-swap: rewritten buckets land in a temp dir, then each
-    // affected bucket dir is swapped by rename — untouched buckets are
-    // never read or written
-    val tmp = new org.apache.hadoop.fs.Path(stateDir + ".tmp")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    // repartition on the bucket BEFORE partitionBy: otherwise every
-    // shuffle task writes a file into every bucket dir (tasks x buckets
-    // files per batch — a small-file explosion at cluster scale)
-    out.repartition(math.min(n, out.sparkSession.sessionState.conf.numShufflePartitions),
-        col(BucketCol))
-      // PK-sorted files: parquet min/max stats become selective, so a
-      // point lookup inside a bucket prunes to one row group
-      .sortWithinPartitions((col(BucketCol) +: pks.map(col)): _*)
-      .write.partitionBy(BucketCol).parquet(tmp.toString)
-    if (!fs.exists(root)) fs.mkdirs(root)
-    // two-phase swap: move every affected live bucket aside into .bak,
-    // then move the rewritten buckets in, then drop .bak. A crash at any
-    // point leaves either a recoverable .bak (see recovery above) or the
-    // completed new state — never a half-lost bucket.
-    fs.mkdirs(bak)
-    if (legacy)
-      // legacy flat layout: STAGE the part-* snapshot into .bak rather
-      // than deleting the root — a crash anywhere in the swap window
-      // leaves the pre-batch snapshot recoverable (the recovery path
-      // above restores flat files and discards half-swapped buckets)
-      fs.listStatus(root).filter(_.isFile).foreach { st =>
-        fs.rename(st.getPath,
-          new org.apache.hadoop.fs.Path(bak, st.getPath.getName))
-      }
-    affected.foreach { i =>
-      val dst = new org.apache.hadoop.fs.Path(stateDir, s"$BucketCol=$i")
-      if (fs.exists(dst)) {
-        fs.rename(dst, new org.apache.hadoop.fs.Path(bak, s"$BucketCol=$i"))
-        ()
-      }
-    }
-    affected.foreach { i =>
-      val src = new org.apache.hadoop.fs.Path(tmp, s"$BucketCol=$i")
-      val dst = new org.apache.hadoop.fs.Path(stateDir, s"$BucketCol=$i")
-      if (fs.exists(src)) { fs.rename(src, dst); () }
-    }
-    fs.delete(bak, true)
-    fs.delete(tmp, true)
     // the meta column set is the LOGICAL union across drifts: untouched
     // buckets may lag it on disk until a batch touches them
-    val logicalCols =
-      meta.map(_.columns).getOrElse(Nil) ++
-        outCols.filterNot(meta.map(_.columns).getOrElse(Nil).contains)
-    // typed union schema (r18): this write's data schema wins for the
-    // columns it carries (it already absorbed every affected bucket's
-    // drift via the schema-union read above); columns only PREVIOUS
-    // metas knew — dropped by DDL but still present in lagging buckets
+    val prevCols = meta.map(_.columns).getOrElse(Nil)
+    val logicalCols = prevCols ++ outCols.filterNot(prevCols.contains)
+    // typed union schema: this write's data schema wins for the columns
+    // it carries (it already absorbed every affected bucket's drift via
+    // the schema-union read above); columns only the previous meta's
+    // schema knew — dropped by DDL but still present in lagging buckets
     // — are retained so reads keep surfacing them as null
     val outSchema = org.apache.spark.sql.types.StructType(
       out.schema.filter(_.name != BucketCol).map(_.copy(nullable = true)))
@@ -377,7 +330,34 @@ object CdcStream {
           outSchema.fields ++ prev.fields.filterNot(f => names(f.name)))
       case None => outSchema
     }
-    writeMeta(fs, stateDir, StateMeta(n, logicalCols, Some(unionSchema)))
+    // bake the schema only when it covers every logical column: a
+    // previous meta without one cannot say what a drift column living
+    // only in untouched buckets looks like, and baking a partial schema
+    // would hide that column from every later read — stay on mergeSchema
+    val typed = Some(unionSchema)
+      .filter(u => logicalCols.forall(u.fieldNames.toSet))
+
+    // write-then-swap: rewritten buckets and the new meta are staged in
+    // a temp dir, then swapped in as children of the state dir —
+    // untouched buckets are never read or written. A legacy dir's flat
+    // files are children too, moved aside and replaced by nothing.
+    // repartition on the bucket BEFORE partitionBy: otherwise every
+    // shuffle task writes a file into every bucket dir (tasks x buckets
+    // files per batch — a small-file explosion at cluster scale)
+    out.repartition(math.min(n, out.sparkSession.sessionState.conf.numShufflePartitions),
+        col(BucketCol))
+      // PK-sorted files: parquet min/max stats become selective, so a
+      // point lookup inside a bucket prunes to one row group
+      .sortWithinPartitions((col(BucketCol) +: pks.map(col)): _*)
+      .write.partitionBy(BucketCol).parquet(tmp.toString)
+    writeMeta(fs, new org.apache.hadoop.fs.Path(tmp, MetaName),
+      StateMeta(n, logicalCols, typed))
+    val flatFiles =
+      if (legacy) fs.listStatus(root).filter(_.isFile)
+        .map(_.getPath.getName).toSeq
+      else Nil
+    Swap.installChildren(fs, root, tmp, bak,
+      flatFiles ++ affected.map(i => s"$BucketCol=$i") :+ MetaName)
     collapsed.unpersist()
     ()
   }

@@ -79,4 +79,16 @@ class SinksSpec extends SparkSpec {
       } finally spark.conf.unset("spark.graft.write.salt")
     }
   }
+
+  test("salted partitioned write keeps rows of a frame with a map column and a dotted name") {
+    val df = spark.range(40).select(col("id"), (col("id") % 2).as("k"),
+      map(lit("x"), col("id")).as("m"), (col("id") * 10).as("a.b"))
+    val out = tmp() + "/salted"
+    spark.conf.set("spark.graft.write.salt", "4")
+    try Sinks.parquet(df, out, partitionCols = Seq("k"))
+    finally spark.conf.unset("spark.graft.write.salt")
+    def rows(d: DataFrame) = d.select(col("id"), col("k"), col("m"), col("`a.b`"))
+      .orderBy("id").collect().toSeq
+    assert(rows(spark.read.parquet(out)) == rows(df))
+  }
 }

@@ -1,0 +1,374 @@
+package graft.sinks
+
+import java.io.{File, IOException}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.Files
+
+import scala.collection.mutable
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, FilterFileSystem, FSDataOutputStream, Path}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Crash-point properties of [[Swap]]: for every mutating step k of each
+  * protocol (staging included), the process dies at step k; re-entering
+  * (recovery) must leave exactly the before-state or the after-state.
+  * A second sweep also kills the recovery itself at each of its steps.
+  * Faults come from [[SwapSpec.Faulty]], a FilterFileSystem handed to
+  * Swap in place of the real one. */
+class SwapSpec extends AnyFunSuite {
+  import SwapSpec._
+
+  // Hadoop's checksummed local filesystem, the default for file: paths;
+  // like HDFS its rename will not replace an existing file
+  private val raw: FileSystem = FileSystem.getLocal(new Configuration())
+
+  private def newDir(): File = Files.createTempDirectory("graft_swap").toFile
+
+  private def put(fs: FileSystem, p: Path, text: String): Unit = {
+    val out = fs.create(p, true)
+    try out.write(text.getBytes(UTF_8)) finally out.close()
+  }
+
+  /** Every data file under `d` (checksum sidecars skipped), relative
+    * path → content; a missing dir is empty (an empty dir holds no
+    * data). */
+  private def tree(d: File): Map[String, String] = {
+    def walk(f: File, rel: String): Seq[(String, String)] =
+      if (f.isDirectory)
+        f.listFiles().toSeq.filterNot(_.getName.endsWith(".crc")).flatMap(c =>
+          walk(c, if (rel.isEmpty) c.getName else s"$rel/${c.getName}"))
+      else Seq(rel -> new String(Files.readAllBytes(f.toPath), UTF_8))
+    if (d.exists()) walk(d, "").toMap else Map.empty
+  }
+
+  /** One protocol under test: `setup` builds the before-state with the
+    * real fs, `run` is the writer call (recover, stage, install),
+    * `recover` the re-entry, `state` what must equal before or after,
+    * `sidecars` what recovery must clear. */
+  private case class Case(name: String, setup: FileSystem => Unit,
+                          run: FileSystem => Unit,
+                          recover: FileSystem => Unit,
+                          state: () => Map[String, String],
+                          sidecars: Seq[File])
+
+  /** Reference run: the states before and after, and the op log. */
+  private def reference(c: Case): (Map[String, String], Map[String, String],
+                                   Seq[String]) = {
+    c.setup(raw)
+    val before = c.state()
+    val f = new Faulty(raw, Int.MaxValue, falseRename = false)
+    c.run(f)
+    (before, c.state(), f.log.toSeq)
+  }
+
+  private def assertClean(c: Case, where: String): Unit =
+    c.sidecars.foreach(s => assert(!s.exists(), s"$where: $s left behind"))
+
+  /** `commitOp` picks the commit step out of the reference log: a crash
+    * at any later step must leave the after-state. */
+  private def crashSweep(mk: () => Case,
+                         commitOp: Seq[String] => Int): Unit = {
+    val (before, after, log) = reference(mk())
+    assert(before != after, "the swap must change something")
+    val commitAt = commitOp(log)
+    assert(commitAt >= 0, s"no commit step in $log")
+    for (k <- 1 to log.size) {
+      val c = mk()
+      c.setup(raw)
+      val f = new Faulty(raw, k, falseRename = false)
+      intercept[Crash](c.run(f))
+      c.recover(raw)
+      val got = c.state()
+      val where = s"${c.name}: crash at step $k (${log(k - 1)})"
+      if (k - 1 > commitAt) assert(got == after, s"$where: committed swap lost")
+      else assert(got == before || got == after, s"$where: torn state $got")
+      assertClean(c, where)
+      // the re-entry dies too, at each of its own steps
+      var j = 1
+      var recovered = false
+      while (!recovered) {
+        val c2 = mk()
+        c2.setup(raw)
+        intercept[Crash](c2.run(new Faulty(raw, k, falseRename = false)))
+        val g = new Faulty(raw, j, falseRename = false)
+        try { c2.recover(g); recovered = true }
+        catch { case _: Crash => c2.recover(raw) }
+        val got2 = c2.state()
+        assert(got2 == got, s"$where, recovery crash at step $j: " +
+          s"$got2 differs from an uninterrupted recovery's $got")
+        assertClean(c2, s"$where, recovery crash at step $j")
+        j += 1
+      }
+    }
+  }
+
+  private def falseRenameSweep(mk: () => Case): Unit = {
+    val (before, after, log) = reference(mk())
+    val renames = log.count(_.startsWith("rename "))
+    assert(renames > 0)
+    for (r <- 1 to renames) {
+      val c = mk()
+      c.setup(raw)
+      val f = new Faulty(raw, r, falseRename = true)
+      val err = intercept[IOException](c.run(f))
+      val failed = f.log.lastIndexWhere(_.startsWith("rename "))
+      val (from, to) = f.renamed(failed)
+      val where = s"${c.name}: rename $r returned false"
+      assert(err.getMessage.contains(s"$from → $to"), s"$where: ${err.getMessage}")
+      assert(f.log.size == failed + 1,
+        s"$where: steps ran after the failed rename: ${f.log.drop(failed + 1)}")
+      c.recover(raw)
+      val got = c.state()
+      assert(got == before || got == after, s"$where: torn state $got")
+      assertClean(c, where)
+    }
+  }
+
+  // ---------------- whole directory ----------------
+
+  private def dirCase(bootstrap: Boolean): () => Case = () => {
+    val d = newDir()
+    val live = new Path(d.toURI.toString, "lake")
+    val tmp = new Path(live.toString + ".__compact_tmp")
+    val bak = new Path(live.toString + ".__compact_bak")
+    def protocol(fs: FileSystem): Unit = {
+      Swap.recoverDir(fs, live, tmp, bak)
+      put(fs, new Path(tmp, "a"), "new-a")
+      put(fs, new Path(tmp, "sub/c"), "new-c")
+      Swap.installDir(fs, live, tmp, bak)
+    }
+    Case(s"dir(bootstrap=$bootstrap)",
+      setup = fs => if (!bootstrap) {
+        put(fs, new Path(live, "a"), "old-a")
+        put(fs, new Path(live, "sub/b"), "old-b")
+      },
+      run = protocol,
+      recover = fs => Swap.recoverDir(fs, live, tmp, bak),
+      state = () => tree(new File(d, "lake")),
+      sidecars = Seq(new File(d, "lake.__compact_tmp"),
+        new File(d, "lake.__compact_bak")))
+  }
+
+  test("directory swap: every crash point recovers to before or after") {
+    for (b <- Seq(false, true))
+      crashSweep(dirCase(b), _.indexWhere(op => op.startsWith("rename ") &&
+        op.contains("__compact_tmp ") && op.endsWith("lake")))
+  }
+
+  test("directory swap: a rename returning false aborts before any cleanup") {
+    for (b <- Seq(false, true)) falseRenameSweep(dirCase(b))
+  }
+
+  test("directory swap recovery keeps the only complete copy") {
+    val c = dirCase(bootstrap = false)()
+    c.setup(raw)
+    val d = c.sidecars.head.getParentFile
+    val live = new Path(d.toURI.toString, "lake")
+    val tmp = new Path(live.toString + ".__compact_tmp")
+    val bak = new Path(live.toString + ".__compact_bak")
+    // live moved aside, the staged tree complete: install it
+    put(raw, new Path(tmp, "a"), "new-a")
+    raw.rename(live, bak)
+    Swap.recoverDir(raw, live, tmp, bak)
+    assert(tree(new File(d, "lake")) == Map("a" -> "new-a"))
+    // live moved aside, nothing staged: restore the backup
+    raw.rename(live, bak)
+    Swap.recoverDir(raw, live, tmp, bak)
+    assert(tree(new File(d, "lake")) == Map("a" -> "new-a"))
+    // no live, no backup: a half-written bootstrap stage is dropped
+    raw.delete(live, true)
+    put(raw, new Path(tmp, "a"), "half")
+    Swap.recoverDir(raw, live, tmp, bak)
+    assert(!raw.exists(live) && !raw.exists(tmp))
+  }
+
+  // ---------------- set of children ----------------
+
+  private val Meta = "_graft_meta.json"
+  private val Marker = "_graft_batch"
+
+  /** `layout`: "buckets" (replaced, removed, fresh and untouched
+    * buckets plus the meta), "legacy" (flat part files moved aside and
+    * replaced by nothing), "bootstrap" (no root), "marked" (a batch
+    * marker swapped last, committed by the id check). */
+  private def childrenCase(layout: String): () => Case = () => {
+    val d = newDir()
+    val root = new Path(d.toURI.toString, "state")
+    val tmp = new Path(root.toString + ".tmp")
+    val bak = new Path(root.toString + ".bak")
+    def b(i: Int) = s"__bucket=$i"
+    val names = layout match {
+      case "legacy" => Seq("part-0", "part-1", b(0), b(1), Meta)
+      case "marked" => Seq(b(1), b(2), b(4), Marker)
+      case _ => Seq(b(1), b(2), b(4), Meta)
+    }
+    val batch = if (layout == "marked") 7L else -1L
+    def markerBatch(fs: FileSystem): Option[Long] = {
+      val p = new Path(root, Marker)
+      if (!fs.exists(p)) None
+      else {
+        val in = fs.open(p)
+        try Some(new String(in.readAllBytes(), UTF_8).trim.toLong)
+        finally in.close()
+      }
+    }
+    def recover(fs: FileSystem): Unit =
+      Swap.recoverChildren(fs, root, tmp, bak,
+        committed = id => id >= 0 && markerBatch(fs).contains(id))
+    def protocol(fs: FileSystem): Unit = {
+      recover(fs)
+      layout match {
+        case "legacy" =>
+          put(fs, new Path(tmp, s"${b(0)}/part-a"), "new-0")
+          put(fs, new Path(tmp, s"${b(1)}/part-a"), "new-1")
+          put(fs, new Path(tmp, Meta), "meta-2")
+        case _ =>
+          // b(2) is removed: staged as nothing
+          put(fs, new Path(tmp, s"${b(1)}/part-a"), "new-1")
+          put(fs, new Path(tmp, s"${b(4)}/part-a"), "new-4")
+          put(fs, new Path(tmp, if (layout == "marked") Marker else Meta),
+            if (layout == "marked") "7" else "meta-2")
+      }
+      Swap.installChildren(fs, root, tmp, bak, names, batch)
+    }
+    Case(s"children($layout)",
+      setup = fs => layout match {
+        case "bootstrap" => ()
+        case "legacy" =>
+          put(fs, new Path(root, "part-0"), "flat-0")
+          put(fs, new Path(root, "part-1"), "flat-1")
+        case _ =>
+          Seq(0, 1, 2, 3).foreach(i =>
+            put(fs, new Path(root, s"${b(i)}/part-a"), s"old-$i"))
+          if (layout == "marked") put(fs, new Path(root, Marker), "6")
+          else put(fs, new Path(root, Meta), "meta-1")
+      },
+      run = protocol,
+      recover = recover,
+      state = () => tree(new File(d, "state")),
+      sidecars = Seq(new File(d, "state.tmp"), new File(d, "state.bak")))
+  }
+
+  private val childLayouts = Seq("buckets", "legacy", "bootstrap", "marked")
+
+  test("children swap: every crash point recovers to before or after") {
+    for (l <- childLayouts)
+      crashSweep(childrenCase(l), _.indexWhere(op =>
+        if (l == "marked") op.startsWith("rename ") && op.endsWith(s"state/$Marker")
+        else op.startsWith("create") && op.endsWith("_graft_done")))
+  }
+
+  test("children swap: a rename returning false aborts before any cleanup") {
+    for (l <- childLayouts) falseRenameSweep(childrenCase(l))
+  }
+
+  // ---------------- small file ----------------
+
+  private def fileCase(bootstrap: Boolean): () => Case = () => {
+    val target = new Path(newDir().toURI.toString, "t.cursor")
+    Case(s"file(bootstrap=$bootstrap)",
+      setup = fs => if (!bootstrap) Swap.writeText(fs, target, "41"),
+      run = fs => Swap.writeText(fs, target, "42"),
+      recover = _ => (),
+      state = () => Swap.readText(raw, target).map("v" -> _).toMap,
+      sidecars = Nil)
+  }
+
+  test("small file: every crash point reads as before or after") {
+    for (b <- Seq(false, true)) {
+      val mk = fileCase(b)
+      // the rename that lands the value; a replace first deletes the old
+      // target only once the temp is complete
+      crashSweep(mk, _.lastIndexWhere(_.startsWith("rename ")))
+    }
+  }
+
+  test("small file: a rename returning false loses neither value") {
+    for (b <- Seq(false, true)) {
+      val c = fileCase(b)()
+      c.setup(raw)
+      val before = c.state()
+      val f = new Faulty(raw, 1, falseRename = true)
+      // with a target to replace, the refused rename takes the
+      // delete-then-rename path; with none, it fails naming both paths
+      try c.run(f)
+      catch { case e: IOException => assert(b && e.getMessage.contains(" → "), e) }
+      val created = f.log.indexWhere(_.startsWith("create"))
+      val deleted = f.log.indexWhere(_.startsWith("delete"))
+      assert(deleted < 0 || deleted > created + 1,
+        s"target deleted before the temp was complete: ${f.log}")
+      val got = c.state()
+      assert(got == before || got == Map("v" -> "42"), got)
+    }
+  }
+
+  test("small file: a temp cut short by a crash reads as absent") {
+    val d = newDir()
+    Files.write(new File(d, "t.cursor.tmp").toPath, "4".getBytes(UTF_8))
+    val target = new Path(d.toURI.toString, "t.cursor")
+    assert(Swap.readText(raw, target).isEmpty)
+    // a finished temp whose rename never ran is recovered from
+    Files.write(new File(d, "t.cursor.tmp").toPath, "42\n".getBytes(UTF_8))
+    assert(Swap.readText(raw, target).contains("42"))
+    // the target wins over any temp
+    Swap.writeText(raw, target, "43")
+    Files.write(new File(d, "t.cursor.tmp").toPath, "44\n".getBytes(UTF_8))
+    assert(Swap.readText(raw, target).contains("43"))
+  }
+}
+
+object SwapSpec {
+  final class Crash extends RuntimeException("injected crash")
+
+  /** Counts every mutating call (create, mkdirs, rename, delete) and
+    * fails the `failAt`-th: by throwing [[Crash]], or — with
+    * `falseRename` — by making the `failAt`-th rename return false
+    * without renaming. Logs `op from to` per step. */
+  final class Faulty(under: FileSystem, failAt: Int, falseRename: Boolean)
+      extends FilterFileSystem(under) {
+    val log = mutable.ArrayBuffer.empty[String]
+    val renamed = mutable.Map.empty[Int, (Path, Path)]
+    private var steps = 0
+    private var renames = 0
+
+    private def step(op: String, paths: Path*): Boolean = {
+      log += (op +: paths.map(_.toString)).mkString(" ")
+      steps += 1
+      !falseRename && steps == failAt
+    }
+
+    override def rename(src: Path, dst: Path): Boolean = {
+      renamed(log.size) = (src, dst)
+      if (step("rename", src, dst)) throw new Crash
+      renames += 1
+      if (falseRename && renames == failAt) false
+      else super.rename(src, dst)
+    }
+
+    override def delete(p: Path, recursive: Boolean): Boolean = {
+      if (step("delete", p)) throw new Crash
+      super.delete(p, recursive)
+    }
+
+    override def mkdirs(p: Path, perm: FsPermission): Boolean = {
+      if (step("mkdirs", p)) throw new Crash
+      super.mkdirs(p, perm)
+    }
+
+    override def mkdirs(p: Path): Boolean = {
+      if (step("mkdirs", p)) throw new Crash
+      super.mkdirs(p)
+    }
+
+    override def create(p: Path, perm: FsPermission, overwrite: Boolean,
+                        bufferSize: Int, replication: Short, blockSize: Long,
+                        progress: Progressable): FSDataOutputStream = {
+      if (step("create", p)) throw new Crash
+      super.create(p, perm, overwrite, bufferSize, replication, blockSize,
+        progress)
+    }
+  }
+}

@@ -243,6 +243,36 @@ class StreamingSpec extends SparkSpec {
     assert(out == Seq((1L, "a", None), (2L, "b", None), (3L, "c", Some(7L))))
   }
 
+  test("a meta without a typed schema keeps a drift column that lives " +
+    "only in untouched buckets") {
+    val state = tmp() + "/tw"
+    val n = 8
+    CdcStream.mergeBatch(
+      spark.range(0, 100)
+        .select(col("id"), concat(lit("v"), col("id")).as("v")),
+      state, Seq("id"), numBuckets = n)
+    def bucket(id: Long): Int = spark.range(id, id + 1)
+      .select(CdcStream.bucketOf(Seq("id"), n)).first().getInt(0)
+    // drift column w arrives on key 5 only, so only its bucket holds it
+    CdcStream.mergeBatch(Seq((5L, "v5", 55L)).toDF("id", "v", "w")
+      .withColumn(E.Kind, lit("update")).withColumn(E.Lsn, lit(1L))
+      .withColumn(E.Counter, lit(0)), state, Seq("id"))
+    // an older meta: the column list, no typed schema
+    val meta = java.nio.file.Paths.get(state, "_graft_meta.json")
+    java.nio.file.Files.writeString(meta,
+      s"""{"numBuckets":$n,"columns":["id","v","w"]}""")
+    java.nio.file.Files.deleteIfExists(
+      java.nio.file.Paths.get(state, "._graft_meta.json.crc"))
+    // the next batch touches a different bucket only
+    val other = (6L until 100L).find(bucket(_) != bucket(5L)).get
+    CdcStream.mergeBatch(batch((other, "x", "update", 2L)), state, Seq("id"))
+    val out = CdcStream.readState(spark, state)
+    assert(out.columns.contains("w"), s"w lost: ${out.columns.toSeq}")
+    assert(out.filter(col("id") === 5).select("w").as[Long].head() == 55L)
+    assert(out.filter(col("id") === other).select("v").as[String].head() == "x")
+    assert(out.count() == 100)
+  }
+
   test("DDL drift mid-stream migrates lazily: only touched buckets " +
     "rewritten, untouched bucket files byte-identical") {
     val state = tmp() + "/tl"

@@ -68,6 +68,7 @@ def load(path):
                   f"matching digest was found — diffing the top-5 "
                   f"window only; absent rows are NOT dropped queries "
                   f"(rows={d.get('rows')}, n_ok={d.get('n_ok')}).")
+            d = dict(d, unresolved=True)
     runs = (d.get("transfer") or {}).get("run_secs") or []
     # session speed proxy: median transfer time (lower = faster session)
     med = sorted(runs)[len(runs) // 2] if runs else None
@@ -166,12 +167,19 @@ def main():
                        if k not in lc and isinstance(v, (int, float)))
         print(f"core totals (lifecycle rows excluded): "
               f"old {core(old):.1f}s -> new {core(new):.1f}s")
-    added = sorted(set(nq) - set(oq))
-    gone = sorted(set(oq) - set(nq))
-    if added:
-        print(f"added rows: {', '.join(added)}")
-    if gone:
-        print(f"removed rows: {', '.join(gone)}")
+    # a compact artifact that did not resolve carries only its top-5
+    # window: set differences against it are artifacts of the window,
+    # not added or removed queries
+    if old.get("unresolved") or new.get("unresolved"):
+        print("added/removed rows: unresolved (a compact artifact has no "
+              "full artifact with a matching digest)")
+    else:
+        added = sorted(set(nq) - set(oq))
+        gone = sorted(set(oq) - set(nq))
+        if added:
+            print(f"added rows: {', '.join(added)}")
+        if gone:
+            print(f"removed rows: {', '.join(gone)}")
     # park coverage gate: when parks ate a large share of a session's
     # measured query wall, per-row park windows are themselves noisy
     # (the heartbeat localizes a stall to ~100ms granularity and cannot
