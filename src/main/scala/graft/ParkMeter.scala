@@ -1,9 +1,9 @@
 package graft
 
-/** Whole-VM stall (park) detector — the r17 bench heartbeat, shared
-  * with the measurement harnesses (RebuildScale, ProbeAB, LinkScale)
-  * so ladder points carry their park overlap instead of being read as
-  * "minima under unknown contamination" (r16 verdict #4).
+/** Whole-VM stall (park) detector — the bench heartbeat, shared with
+  * the measurement harnesses (RebuildScale, LinkScale) so ladder
+  * points carry their park overlap instead of being read as "minima
+  * under unknown contamination".
   *
   * A daemon thread sleeps a fixed period and records every overshoot
   * beyond `threshMs` as a park interval: a stall of the whole VM

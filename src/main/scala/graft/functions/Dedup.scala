@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.sinks.Swap
 
 /** Deduplication operators for 100 TB-scale corpora. Design rules:
   *   - never all-pairs: candidate generation is always bucketed (LSH
@@ -304,75 +303,55 @@ object Dedup {
     *
     * The returned frame is MATERIALIZED before the index append (the
     * join must not see the batch's own rows), so the write has
-    * happened by the time this returns. */
+    * happened by the time this returns. The update runs the
+    * [[StandingIndex]] lifecycle, which first recovers an interrupted
+    * compaction of the index. */
   def bandIndexUpdate(indexPath: String, newDocs: DataFrame,
                       textCol: String, idCol: String,
                       k: Int = 16, shingleN: Int = 3, bands: Int = 4,
                       maxBucketSize: Int = 1000): DataFrame = {
-    val spark = newDocs.sparkSession
     val keys = Seq("band", "band_hash")
-    val newBands = lshBands(newDocs, textCol, idCol, k, shingleN, bands)
-      .withColumnRenamed(idCol, "id").persist()
-    val cached = scala.collection.mutable.Buffer.empty[DataFrame]
-    try {
-      val root = new org.apache.hadoop.fs.Path(indexPath)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val hasIdx = fs.exists(root)
-      // ONE aggregation serves the emptiness gate, the index
-      // semi-filter, and the hot-bucket cap's batch side (r18):
-      // previously `isEmpty` scanned the minhash lineage in its own
-      // job, the semi-filter ran a DISTINCT over the same keys, and
-      // the cap re-aggregated them a third time — three passes over
-      // the batch's band keys where one suffices. The count doubles
-      // as the persist's materialization (the same discipline as
-      // containmentIndexUpdate's nPostings).
-      val batchSizes = newBands.groupBy(keys.map(col): _*)
-        .agg(count(lit(1)).as("__bn")).persist()
-      cached += batchSizes
-      // empty batch: nothing to probe AND nothing to append — an
-      // append of zero rows can create a parquet-less directory that
-      // poisons the next update's schema inference (same guard as
-      // embeddingIndexUpdate, ADVICE r13)
-      if (batchSizes.count() == 0L)
-        return newBands.limit(0)
-          .select(col("id").as("id_a"), col("id").as("id_b"))
-      // matching index rows only: the batch's distinct band keys
-      // broadcast into a map-side semi-filter, so everything after
-      // this line is candidate-scale, never index-scale
-      val matchedIdx =
-        if (hasIdx) {
-          val m = spark.read.parquet(indexPath)
-            .join(broadcast(batchSizes.select(keys.map(col): _*)), keys)
-            .persist()
-          cached += m
-          m
-        } else newBands.limit(0)
-      // the hot-bucket cap counts the TOTAL bucket (index + batch) —
-      // the same population a full recompute would cap on
-      val idxSizes = matchedIdx.groupBy(keys.map(col): _*)
-        .agg(count(lit(1)).as("__in"))
-      val okKeys = batchSizes.join(idxSizes, keys, "left")
-        .filter(coalesce(col("__in"), lit(0L)) + col("__bn") <= maxBucketSize)
-        .select(keys.map(col): _*)
-      val prunedNew = newBands.join(broadcast(okKeys), keys)
-      val cross = matchedIdx
-        .join(broadcast(prunedNew.withColumnRenamed("id", "__new_id")), keys)
-        .filter(col("id") =!= col("__new_id"))
-        .select(least(col("id"), col("__new_id")).as("id_a"),
-          greatest(col("id"), col("__new_id")).as("id_b"))
-      val within = bucketPairs(prunedNew, "id", maxBucketSize)
-      // materialize BEFORE the append so the lazily-evaluated join
-      // cannot rescan an index that already contains this batch
-      val found = cross.unionByName(within).distinct().localCheckpoint(true)
-      newBands.write.mode("append").parquet(indexPath)
-      found
-    } finally {
-      // unpersist on every exit path — the matched index slice must
-      // not leak into the block cache when a probe or the append
-      // throws (ADVICE r13, same discipline as embeddingIndexUpdate)
-      cached.foreach(_.unpersist())
-      newBands.unpersist()
-    }
+    StandingIndex.update(newDocs.sparkSession, Seq(indexPath),
+      new StandingIndex.Kind[DataFrame] {
+        def rows(s: StandingIndex.Scope) =
+          lshBands(newDocs, textCol, idCol, k, shingleN, bands)
+            .withColumnRenamed(idCol, "id")
+        // one aggregation serves the emptiness gate, the index
+        // semi-filter and the cap's batch side, not one pass over the
+        // batch's band keys for each
+        def gate(s: StandingIndex.Scope, rows: DataFrame) = {
+          val sizes = s.persist(rows.groupBy(keys.map(col): _*)
+            .agg(count(lit(1)).as("__bn")))
+          if (sizes.count() == 0L) None else Some(sizes)
+        }
+        def noPairs(rows: DataFrame) =
+          rows.limit(0).select(col("id").as("id_a"), col("id").as("id_b"))
+        // matching index rows only: the batch's distinct band keys
+        // broadcast into a map-side semi-filter, so everything after
+        // this is candidate-scale, never index-scale
+        def slice(s: StandingIndex.Scope, rows: DataFrame, sizes: DataFrame) =
+          s.spark.read.parquet(indexPath)
+            .join(broadcast(sizes.select(keys.map(col): _*)), keys)
+        // over-cap buckets are dropped, counted on the TOTAL bucket
+        def probe(rows: DataFrame, sizes: DataFrame,
+                  slice: Option[DataFrame]) = {
+          val idx = slice.getOrElse(rows.limit(0))
+          val okKeys = StandingIndex.bucketTotals(sizes, idx, keys)
+            .filter(col("__tot") <= maxBucketSize)
+            .select(keys.map(col): _*)
+          val prunedNew = rows.join(broadcast(okKeys), keys)
+          val cross = idx
+            .join(broadcast(prunedNew.withColumnRenamed("id", "__new_id")),
+              keys)
+            .filter(col("id") =!= col("__new_id"))
+            .select(least(col("id"), col("__new_id")).as("id_a"),
+              greatest(col("id"), col("__new_id")).as("id_b"))
+          cross.unionByName(bucketPairs(prunedNew, "id", maxBucketSize))
+            .distinct()
+        }
+        def append(s: StandingIndex.Scope, rows: DataFrame) =
+          rows.write.mode("append").parquet(indexPath)
+      })
   }
 
   /** Maintenance for the persisted LSH band index: rewrite the lake's
@@ -388,7 +367,7 @@ object Dedup {
                        indexPath: String,
                        targetBytes: Long = 128L << 20)
       : graft.sinks.Sinks.CompactionStats =
-    graft.sinks.Sinks.compact(spark, indexPath, targetBytes)
+    StandingIndex.compact(spark, Seq(indexPath), targetBytes)
 
   // ---------------- SimHash ----------------
 
@@ -736,328 +715,206 @@ object Dedup {
                              maxMatchedPostings: Long = 500000000L)
       : DataFrame = {
     require(theta > 0 && theta <= 1, "theta in (0, 1]")
-    val spark = newDocs.sparkSession
-    val W = org.apache.spark.sql.expressions.Window
-    val root = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val postingsPath = s"$indexPath/postings"
     val dfordPath = s"$indexPath/dford"
-    val hasIdx = fs.exists(new org.apache.hadoop.fs.Path(postingsPath))
+    val pl = prefixLen(theta)
     val sh = newDocs.select(col(idCol).as("id"),
       explode(array_distinct(shingles(col(textCol), shingleN))).as("s"))
-    // bootstrap: freeze THIS batch's df as the order's first component
-    // (immutable side table — the order must never change again). The
-    // WRITE is deferred until the batch is known non-empty (below): an
-    // empty overwrite would leave a parquet-less dford dir that poisons
-    // every later update's read (same guard as embeddingIndexUpdate,
-    // ADVICE r13) — and deferring it also lets the emptiness check ride
-    // the nPostings materialization instead of a separate isEmpty scan
-    // of the (often filter-heavy) batch lineage (r17: one job per
-    // update).
-    // persisted: the SAME computed aggregate feeds the ranks below (via
-    // the dford broadcast) AND the deferred dford parquet freeze — if
-    // the caller's newDocs lineage is nondeterministic (sample, limit,
-    // uuid ids), recomputing the aggregate at the write could freeze an
-    // order DISAGREEING with the ranks already baked into the appended
-    // postings, silently breaking the frozen-order invariant the prefix
-    // filter's losslessness depends on (ADVICE r17). The broadcast
-    // build populates the cache; unpersisted in the shared finally.
-    val bootDf =
-      if (hasIdx) None
-      else Some(sh.groupBy("s").agg(count(lit(1)).as("__df")).persist())
-    // per-shingle frozen df for the batch's vocabulary: the df table
-    // is probed map-side by the batch's distinct shingles (the index
-    // side never shuffles), then the batch-vocab-sized result rides a
-    // broadcast; shingles unseen at bootstrap default to df 0 (rare →
-    // prefix-eligible, always lossless). On bootstrap the frozen df IS
-    // this batch's df: the vocab restriction is an identity join there,
-    // so the in-memory frame stands in for the read-back + semi-join
-    // (r17 — two jobs off every bootstrap).
-    val dford = bootDf.getOrElse(
-      spark.read.parquet(dfordPath)
-        .join(broadcast(sh.select("s").distinct()), Seq("s")))
-    val ranked = sh
-      .join(broadcast(dford), Seq("s"), "left")
-      .withColumn("__df", coalesce(col("__df"), lit(0L)))
-      .withColumn("__rk", row_number().over(
-        W.partitionBy("id").orderBy(col("__df"),
-          Hashing.hex8ToLong(col("s")), col("s"))))
-      .withColumn("__n", count(lit(1)).over(W.partitionBy("id")))
-      .drop("__df")
-      .persist()
-    try {
-      // Fail-fast bound on the batch-side broadcasts (ADVICE r14 /
-      // What's-wrong #5): everything the probe BROADCASTS below —
-      // the batch's prefix postings, the full ranked postings, and
-      // the per-doc shingle arrays — is batch-postings-sized, and
-      // the "ingest-sized by contract" promise was previously
-      // unenforced: a caller feeding a 10 GB batch got a driver OOM
-      // instead of a contract error. The cap counts POSTINGS rows
-      // (docs × distinct shingles — the unit that actually
-      // serializes; measured: a 16.7k-doc fixture batch's postings
-      // deserialize past Spark's 8 GiB broadcast hard cap). The
-      // count doubles as the persist's materialization. Mirrors
-      // embeddingIndexUpdate's over-cap IllegalStateException; split
-      // the ingest batch to get under the cap —
-      // [[containmentIndexUpdateMany]] GROUPS batches per lake scan,
-      // it never relaxes this bound (the union is what broadcasts).
-      val nPostings = ranked.count()
-      if (nPostings > maxBatchPostings)
-        throw new IllegalStateException(
-          s"containmentIndexUpdate: ingest batch carries $nPostings " +
-            s"postings (docs x distinct shingles) > maxBatchPostings=" +
-            s"$maxBatchPostings — the probe broadcasts batch-sized " +
-            s"frames by contract, and a batch this size would OOM " +
-            s"the driver instead. Split the ingest batch (or raise " +
-            s"the cap on a driver sized for it).")
-      // empty batch: no postings to append, and — on a FRESH index —
-      // no dford freeze either (an empty overwrite would poison later
-      // reads). Detected off the nPostings materialization, not a
-      // separate isEmpty scan of the batch lineage. The returned frame
-      // must be EMPTY, not newDocs-shaped: a non-empty batch whose
-      // texts are all NULL reaches here too (ShinglesExpr
-      // null-propagates, explode drops the rows), and the update's
-      // contract is pairs at containment >= theta — never (id, id, 0.0)
-      // self-pairs (r17 verdict What's-wrong #1).
-      if (nPostings == 0L)
-        return newDocs.limit(0).select(col(idCol).as("id_a"),
-          col(idCol).as("id_b"), lit(0.0).as("containment"))
-      // bootstrap dford freeze, deferred past the emptiness gate:
-      // overwrite mode — a crash between this write and the postings
-      // append leaves no postings, so re-freezing on retry is safe
-      bootDf.foreach(_.write.mode("overwrite").parquet(dfordPath))
-      val idx =
-        if (hasIdx) spark.read.parquet(postingsPath)
-        else ranked.limit(0) // bootstrap: lake arms skipped below
-      // Probe = lossless PREFIX candidates + per-doc ARRAY-INTERSECT
-      // verify. Three spellings were measured before this one stuck:
-      //
-      //  - r13 shipped prefix candidates verified by PAIR-EXPANDED
-      //    broadcasts (candidate pairs joined back to their postings,
-      //    broadcast against the lake). On replica-dense corpora — the
-      //    100 TB norm, and what ScaleUp fresh mode synthesizes —
-      //    candidates are candidate-volume-sized, not answer-sized:
-      //    fresh-sf10 ladder measured 0.5M candidate pairs per
-      //    direction from a 1.67k-doc batch at a 42k-doc lake, a
-      //    32M-row broadcast, 58 s PER VERIFY DIRECTION, growing.
-      //  - An unrestricted co-occurrence aggregation (lake ⨝ broadcast
-      //    batch on the shingle, count per pair) fixes replica density
-      //    but resurrects the hot-shingle cliff the frozen-df prefix
-      //    order exists to dodge: one universal shingle co-occurs
-      //    |lake|×|batch| times with near-all-pairs aggregate keys
-      //    (StressR13 case 31's exact construction — C(N,2) state).
-      //  - This spelling serves both shapes: candidates come from the
-      //    prefix joins (hot shingles stay out of every prefix under
-      //    the frozen-df order — lossless at θ, hot-safe); the verify
-      //    then intersects the two docs' DISTINCT-SHINGLE ARRAYS
-      //    directly. The batch's arrays broadcast (ingest-sized by
-      //    contract); the lake contributes only the CANDIDATE docs'
-      //    postings — semi-filtered by the broadcast candidate-id
-      //    set, grouped to answer+candidate-scale arrays — so nothing
-      //    pair-expanded is ever built and the lake never shuffles.
-      //    Ladder: 33-50 s/update (r13 verify) → 2-15 s; StressR13
-      //    case 31 exact at 110k hot-shingle docs. First shipped as
-      //    TWO candidate scans (one per direction) + the verify scan:
-      //    fresh-sf10 ladder fit 4.3 s + 9.8 s/100k lake docs — the
-      //    linear term is the SCAN COUNT, so r15 merged the candidate
-      //    directions into one pass (3 lake scans → 2) and r16 merges
-      //    candidates + verify onto ONE vocab-restricted scan (below).
-      //
-      // ONE lake scan for candidates AND verify (r16; two scans in
-      // r15, three in r14 — the fresh-sf10 ladder says the linear term
-      // IS the scan count). The observation: every lake row either
-      // pass ever USES has its shingle inside the BATCH'S VOCABULARY —
-      //   - candidate dir 0 (new-contained-in-old: the NEW doc's
-      //     prefix must hit ANY old posting — the lake side cannot be
-      //     prefix-restricted, the old doc's matching token may sit
-      //     anywhere in its order) matches lake rows with
-      //     s ∈ batch PREFIX vocab;
-      //   - candidate dir 1 (old-contained-in-new: OLD prefix against
-      //     ANY batch posting) matches lake PREFIX rows with
-      //     s ∈ batch full vocab;
-      //   - the verify needs candidate docs' postings restricted to
-      //     the batch vocab (r15: out-of-vocab shingles cannot change
-      //     |A ∩ B| — every intersect meets a batch-doc array — and
-      //     the denominator is the STORED __n).
-      // So one scan materializes `matched` = lake ⨝ broadcast(vocab) —
-      // each row tagged with whether its shingle is in the batch's
-      // prefix vocab and whether the row sits in its OWN doc's prefix
-      // at θ — and the three consumers re-read the (vocab-restricted,
-      // persisted) frame instead of the lake. Hot-shingle shape: a
-      // universal shingle in the batch vocab contributes ≤ one matched
-      // row per lake doc carrying it — LINEAR in lake docs, never
-      // pair-quadratic (candidates stay prefix-derived: dir 0 keys on
-      // prefix vocab, which excludes hot shingles under the frozen-df
-      // order, and dir 1 probes only lake prefix rows, which exclude
-      // them the same way — the r15 merge's argument, unchanged).
-      val pl = prefixLen(theta)
-      val newPref = ranked.filter(col("__rk") <= pl)
-      val candNN = newPref.select(col("id").as("id_a"), col("s"))
-        .join(ranked.select(col("id").as("id_b"), col("s")), Seq("s"))
-        .filter(col("id_a") =!= col("id_b"))
-        .select("id_a", "id_b").distinct()
-      // per-doc sorted distinct-shingle arrays. Batch side broadcasts;
-      // lake side materializes ONLY the candidate docs (either probe
-      // direction), so the group-by shuffles candidate-doc postings,
-      // never the lake — and the input is the already-persisted
-      // vocab-restricted `matched`, not a second lake read. Raw
-      // shingle strings, not hashes: exactness is the contract.
-      val batchArr = ranked.groupBy("id")
-        .agg(sort_array(collect_list(col("s"))).as("arr"),
-          first(col("__n")).as("n"))
-      def contain(c: DataFrame, aArr: DataFrame, bArr: DataFrame,
-                  aBc: Boolean, bBc: Boolean): DataFrame = {
-        val aSide = aArr.select(col("id").as("id_a"),
-          col("arr").as("__arr_a"), col("n").as("n_a"))
-        val bSide = bArr.select(col("id").as("id_b"),
-          col("arr").as("__arr_b"))
-        c.join(if (aBc) broadcast(aSide) else aSide, Seq("id_a"))
-          .join(if (bBc) broadcast(bSide) else bSide, Seq("id_b"))
-          .withColumn("containment",
-            size(array_intersect(col("__arr_a"), col("__arr_b")))
-              .cast("double") / col("n_a"))
-          .select("id_a", "id_b", "containment")
-      }
-      val interNN = contain(candNN, batchArr, batchArr,
-        aBc = true, bBc = true)
-      // Bootstrap short-circuit (r17): on a FRESH index the lake arms
-      // are empty by construction (idx is a zero-row frame), yet the
-      // full probe still built, persisted, counted and joined the
-      // empty `matched` frame through ~8 extra jobs — measured ~2x the
-      // wall of a post-bootstrap update. Skip the lake arms entirely;
-      // the batch-vs-batch NN arm is the whole answer on bootstrap.
-      var matchedCache: Option[DataFrame] = None
-      val inter =
-        if (!hasIdx) interNN
-        else {
-          // batch vocabulary, flagged: __pref0 = shingle appears in
-          // SOME batch doc's prefix (batch-sized agg, broadcast)
-          val vocab = ranked.groupBy("s")
-            .agg(max(when(col("__rk") <= pl, 1).otherwise(0))
-              .as("__pref0"))
-          val matched = idx.join(broadcast(vocab), Seq("s"))
+    // a new index freezes THIS batch's df as the order's first
+    // component. Persisted: the same computed aggregate feeds the ranks
+    // and the dford freeze, so a nondeterministic newDocs lineage
+    // (sample, limit, uuid ids) cannot freeze an order that disagrees
+    // with the ranks baked into the appended postings.
+    val boot = sh.groupBy("s").agg(count(lit(1)).as("__df"))
+    StandingIndex.update(newDocs.sparkSession, Seq(postingsPath, dfordPath),
+      new StandingIndex.Kind[Unit] {
+        // per-shingle frozen df for the batch's vocabulary, probed
+        // map-side by the batch's distinct shingles and broadcast;
+        // shingles unseen at bootstrap default to df 0 (rare →
+        // prefix-eligible, always lossless). On a new index the frozen
+        // df IS this batch's df, so the in-memory frame stands in for a
+        // read-back and semi-join (two jobs off every bootstrap).
+        def rows(s: StandingIndex.Scope) = {
+          val dford =
+            if (s.exists) s.spark.read.parquet(dfordPath)
+              .join(broadcast(sh.select("s").distinct()), Seq("s"))
+            else s.persist(boot)
+          rankPostings(sh.join(broadcast(dford), Seq("s"), "left")
+            .withColumn("__df", coalesce(col("__df"), lit(0L))))
+        }
+        // Fail-fast bound on the batch-side broadcasts: everything the
+        // probe broadcasts (the batch's prefix postings, its full
+        // ranked postings, its per-doc shingle arrays) is
+        // batch-postings-sized, and a batch too large for that should
+        // get a contract error, not a driver OOM. The cap counts
+        // POSTINGS rows (docs × distinct shingles, the unit that
+        // serializes; a 16.7k-doc fixture batch's postings measured
+        // past Spark's 8 GiB broadcast limit). The count is also the
+        // persist's materialization and the emptiness gate, so an
+        // empty batch costs no separate scan of the batch lineage.
+        // [[containmentIndexUpdateMany]] groups batches under the same
+        // cap; it never relaxes it.
+        def gate(s: StandingIndex.Scope, rows: DataFrame) = {
+          val nPostings = rows.count()
+          if (nPostings > maxBatchPostings)
+            throw new IllegalStateException(
+              s"containmentIndexUpdate: ingest batch carries $nPostings " +
+                s"postings (docs x distinct shingles) > maxBatchPostings=" +
+                s"$maxBatchPostings — the probe broadcasts batch-sized " +
+                s"frames by contract, and a batch this size would OOM " +
+                s"the driver instead. Split the ingest batch (or raise " +
+                s"the cap on a driver sized for it).")
+          if (nPostings == 0L) None else Some(())
+        }
+        // EMPTY, not newDocs-shaped: a batch whose texts are all NULL
+        // has no postings either (ShinglesExpr null-propagates, explode
+        // drops the rows), and the contract is pairs at containment
+        // >= theta, never (id, id, 0.0) self-pairs
+        def noPairs(rows: DataFrame) =
+          newDocs.limit(0).select(col(idCol).as("id_a"),
+            col(idCol).as("id_b"), lit(0.0).as("containment"))
+        // ONE lake scan serves the candidates AND the verify (on the
+        // fresh-sf10 ladder per-update cost fit 4.3 s + 9.8 s/100k lake
+        // docs, the linear term tracking the number of lake scans).
+        // Every lake row either pass uses has its shingle inside the
+        // BATCH'S VOCABULARY:
+        //   - candidates new-contained-in-old: the new doc's prefix
+        //     against ANY old posting (the old doc's matching token may
+        //     sit anywhere in its order), so lake rows with s in the
+        //     batch PREFIX vocab;
+        //   - candidates old-contained-in-new: the old prefix against
+        //     ANY batch posting, so lake PREFIX rows with s in the batch
+        //     vocab;
+        //   - the verify: candidate docs' postings restricted to the
+        //     batch vocab (out-of-vocab shingles cannot change |A ∩ B|,
+        //     every intersect meets a batch-doc array, and the
+        //     denominator is the STORED __n).
+        // So the slice is lake ⨝ broadcast(vocab), each row tagged with
+        // whether its shingle is in the batch's prefix vocab (__pref0)
+        // and whether it sits in its own doc's prefix at θ (__lpref). A
+        // universal shingle contributes at most one row per lake doc:
+        // linear in lake docs, never pair-quadratic.
+        def slice(s: StandingIndex.Scope, rows: DataFrame, g: Unit) = {
+          val vocab = rows.groupBy("s")
+            .agg(max(when(col("__rk") <= pl, 1).otherwise(0)).as("__pref0"))
+          s.spark.read.parquet(postingsPath).join(broadcast(vocab), Seq("s"))
             .select(col("s"), col("id").as("__lid"), col("__pref0"),
               (col("__rk") <= pl).as("__lpref"), col("__n").as("__ln"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          matchedCache = Some(matched)
-          // Cap on the one-scan frame (r16 verdict #7): `matched` is
-          // vocab-RESTRICTED, not vocab-bounded — in the worst case
-          // (batch vocab ⊇ lake vocab, e.g. a batch of concatenated
-          // corpus samples) it approaches the whole lake's postings, and
-          // a silent executor-storage blowup is worse than a named
-          // contract error. The count IS the persist's materialization
-          // (the probe consumers below re-read the cache), so the
-          // guard costs zero extra lake scans — same discipline as
-          // nPostings doubling as `ranked`'s materialization above.
-          val nMatched = matched.count()
-          if (nMatched > maxMatchedPostings) {
-            matched.unpersist(blocking = false)
-            throw new IllegalStateException(
-              s"containmentIndexUpdate: the batch's vocabulary matches " +
-                s"$nMatched lake postings > maxMatchedPostings=" +
-                s"$maxMatchedPostings — the one-scan probe frame would " +
-                s"approach lake size in executor storage. The batch's " +
-                s"vocab covers too much of the lake (concatenated / " +
-                s"corpus-sampled ingest?); split the batch, or raise the " +
-                s"cap on a cluster whose aggregate storage is sized for " +
-                s"a lake-scale cache.")
-          }
-          // ONE broadcast probe serves BOTH candidate directions (r18;
-          // r17 verdict task #1 — the family was 3 of the 6 slowest
-          // clean rows, fixed-overhead-bound). Previously candNO
-          // scanned `matched` against a broadcast of the batch's PREFIX
-          // postings and candON scanned it AGAIN against a broadcast of
-          // the batch's FULL postings, then a third union-distinct
-          // derived oldIds — two matched scans, three distincts, ~4
-          // broadcast joins per update at execution. The merged
-          // spelling probes `matched` once with the full batch postings
-          // tagged by prefix membership; per joined row the dir-0
-          // condition is "the BATCH doc's posting sits in its own
-          // prefix" (__bpref — which implies the old __pref0 pre-filter
-          // for that shingle) and the dir-1 condition is "the LAKE row
-          // sits in its own doc's prefix" (__lpref) — the same two
-          // membership tests as before, folded into per-pair direction
-          // flags by the ONE aggregation that replaces the distincts.
-          // oldIds falls out of the candidate frame directly: a lake
-          // doc is a verify target iff it appears in ANY candidate
-          // pair, in either direction.
-          val cand = matched
-            .filter(col("__pref0") === 1 || col("__lpref"))
-            .join(broadcast(ranked.select(col("s"), col("id").as("__bid"),
-              (col("__rk") <= pl).as("__bpref"))), Seq("s"))
-            .filter(col("__bpref") || col("__lpref"))
-            .groupBy(col("__bid"), col("__lid"))
-            .agg(max(col("__bpref")).as("__d0"),
-              max(col("__lpref")).as("__d1"))
-          val oldIds = cand.select(col("__lid").as("id")).distinct()
-          val oldArr = matched.select(col("__lid").as("id"), col("s"),
-              col("__ln"))
-            .join(broadcast(oldIds), Seq("id"))
-            .groupBy("id")
-            .agg(sort_array(collect_list(col("s"))).as("arr"),
-              first(col("__ln")).as("n"))
-          // one verify join pair scores BOTH directions: the expensive
-          // array_intersect runs ONCE per (batch doc, lake doc) pair —
-          // |A ∩ B| is direction-symmetric, only the denominator (the
-          // contained side's stored n) differs — where the two contain()
-          // arms each recomputed it. Self-pairs cannot arise (batch ids
-          // are absent from the lake index by the append-after-probe
-          // discipline), matching the old arms.
-          val scored = cand
-            .join(broadcast(batchArr.select(col("id").as("__bid"),
-              col("arr").as("__barr"), col("n").as("__bn"))), Seq("__bid"))
-            .join(oldArr.select(col("id").as("__lid"),
-              col("arr").as("__oarr"), col("n").as("__on")), Seq("__lid"))
-            .withColumn("__isz",
-              size(array_intersect(col("__barr"), col("__oarr")))
-                .cast("double"))
-          val lakeArms = scored.select(explode(array(
-              when(col("__d0"), struct(col("__bid").as("id_a"),
-                col("__lid").as("id_b"),
-                (col("__isz") / col("__bn")).as("containment"))),
-              when(col("__d1"), struct(col("__lid").as("id_a"),
-                col("__bid").as("id_b"),
-                (col("__isz") / col("__on")).as("containment")))))
-              .as("__p"))
-            .filter(col("__p").isNotNull)
-            .select(col("__p.id_a"), col("__p.id_b"),
-              col("__p.containment"))
-          lakeArms.unionByName(interNN)
         }
-      // plan-evidence hook (diagnostic only): the probe's physical plan
-      // is execution-internal (localCheckpointed before return), so the
-      // committed before/after explain for plans/rNN comes from here —
-      // set -Dgraft.debug.containmentPlanDir=<dir> (or the env twin,
-      // which survives sbt's forked run JVM) to dump it
-      sys.props.get("graft.debug.containmentPlanDir")
-        .orElse(sys.env.get("GRAFT_DEBUG_CONTAINMENT_PLAN_DIR"))
-        .foreach { d =>
-        val p = java.nio.file.Paths.get(d)
-        java.nio.file.Files.createDirectories(p)
-        java.nio.file.Files.write(
-          p.resolve(s"containment_probe_${if (hasIdx) "post" else "boot"}.txt"),
-          inter.filter(col("containment") >= theta).queryExecution
-            .explainString(org.apache.spark.sql.execution.FormattedMode)
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      }
-      // materialize BEFORE the append so the lazy probes cannot rescan
-      // an index that already contains this batch
-      val found = inter
-        .filter(col("containment") >= theta)
-        .localCheckpoint(true)
-      // `found` is eagerly materialized above — the one-scan frame's
-      // cache is dead weight from here on (absent on bootstrap)
-      matchedCache.foreach(_.unpersist(blocking = false))
-      ranked.write.mode("append").parquet(postingsPath)
-      found
-    } finally {
-      ranked.unpersist()
-      bootDf.foreach(_.unpersist(blocking = false))
-    }
+        def probe(rows: DataFrame, g: Unit, slice: Option[DataFrame]) = {
+          val candNN = rows.filter(col("__rk") <= pl)
+            .select(col("id").as("id_a"), col("s"))
+            .join(rows.select(col("id").as("id_b"), col("s")), Seq("s"))
+            .filter(col("id_a") =!= col("id_b"))
+            .select("id_a", "id_b").distinct()
+          // per-doc sorted distinct-shingle arrays; raw shingle
+          // strings, not hashes: exactness is the contract
+          val batchArr = rows.groupBy("id")
+            .agg(sort_array(collect_list(col("s"))).as("arr"),
+              first(col("__n")).as("n"))
+          val interNN = candNN
+            .join(broadcast(batchArr.select(col("id").as("id_a"),
+              col("arr").as("__arr_a"), col("n").as("n_a"))), Seq("id_a"))
+            .join(broadcast(batchArr.select(col("id").as("id_b"),
+              col("arr").as("__arr_b"))), Seq("id_b"))
+            .withColumn("containment",
+              size(array_intersect(col("__arr_a"), col("__arr_b")))
+                .cast("double") / col("n_a"))
+            .select("id_a", "id_b", "containment")
+          // a new index has no lake arms: the batch-vs-batch arm is the
+          // whole answer (building them over an empty lake cost ~8
+          // jobs, about 2x the wall of a later update)
+          val inter = slice.fold(interNN) { matched =>
+            // The probe's lake side: prefix candidates, then a per-doc
+            // ARRAY-INTERSECT verify. Prefix candidates stay lossless at θ
+            // and keep hot shingles out (an unrestricted co-occurrence
+            // aggregation meets one universal shingle |lake|×|batch| times,
+            // StressR13 case 31). The verify intersects the two docs'
+            // distinct-shingle arrays, so nothing pair-expanded is built:
+            // verifying through pair-expanded broadcasts measured 0.5M
+            // candidate pairs per direction from a 1.67k-doc batch at a
+            // 42k-doc lake on the fresh-sf10 ladder, a 32M-row broadcast
+            // and 58 s per direction, where this form takes 2-15 s per
+            // update.
+            // `matched` is vocab-RESTRICTED, not vocab-bounded: a batch
+            // whose vocab covers the lake (concatenated corpus samples)
+            // makes it approach the lake's postings, and a named contract
+            // error beats a silent executor-storage blowup. The count is
+            // the slice's materialization, so the cap costs no lake scan.
+            val nMatched = matched.count()
+            if (nMatched > maxMatchedPostings)
+              throw new IllegalStateException(
+                s"containmentIndexUpdate: the batch's vocabulary matches " +
+                  s"$nMatched lake postings > maxMatchedPostings=" +
+                  s"$maxMatchedPostings — the one-scan probe frame would " +
+                  s"approach lake size in executor storage. The batch's " +
+                  s"vocab covers too much of the lake (concatenated / " +
+                  s"corpus-sampled ingest?); split the batch, or raise the " +
+                  s"cap on a cluster whose aggregate storage is sized for " +
+                  s"a lake-scale cache.")
+            // ONE broadcast probe serves both candidate directions: the
+            // slice joins the batch's full postings tagged by prefix
+            // membership; per joined row the new-contained direction
+            // needs the BATCH posting in its doc's prefix (__bpref) and
+            // the old-contained direction the LAKE row in its doc's
+            // prefix (__lpref), folded into per-pair flags by the one
+            // aggregation. A lake doc is a verify target iff it appears
+            // in any candidate pair.
+            val cand = matched
+              .filter(col("__pref0") === 1 || col("__lpref"))
+              .join(broadcast(rows.select(col("s"), col("id").as("__bid"),
+                (col("__rk") <= pl).as("__bpref"))), Seq("s"))
+              .filter(col("__bpref") || col("__lpref"))
+              .groupBy(col("__bid"), col("__lid"))
+              .agg(max(col("__bpref")).as("__d0"),
+                max(col("__lpref")).as("__d1"))
+            val oldIds = cand.select(col("__lid").as("id")).distinct()
+            val oldArr = matched.select(col("__lid").as("id"), col("s"),
+                col("__ln"))
+              .join(broadcast(oldIds), Seq("id"))
+              .groupBy("id")
+              .agg(sort_array(collect_list(col("s"))).as("arr"),
+                first(col("__ln")).as("n"))
+            // one array_intersect per (batch doc, lake doc) pair scores
+            // BOTH directions: |A ∩ B| is symmetric, only the denominator
+            // (the contained side's stored n) differs. Self-pairs cannot
+            // arise: batch ids are absent from the lake, which the batch
+            // joins only after this probe.
+            val scored = cand
+              .join(broadcast(batchArr.select(col("id").as("__bid"),
+                col("arr").as("__barr"), col("n").as("__bn"))), Seq("__bid"))
+              .join(oldArr.select(col("id").as("__lid"),
+                col("arr").as("__oarr"), col("n").as("__on")), Seq("__lid"))
+              .withColumn("__isz",
+                size(array_intersect(col("__barr"), col("__oarr")))
+                  .cast("double"))
+            scored.select(explode(array(
+                when(col("__d0"), struct(col("__bid").as("id_a"),
+                  col("__lid").as("id_b"),
+                  (col("__isz") / col("__bn")).as("containment"))),
+                when(col("__d1"), struct(col("__lid").as("id_a"),
+                  col("__bid").as("id_b"),
+                  (col("__isz") / col("__on")).as("containment")))))
+                .as("__p"))
+              .filter(col("__p").isNotNull)
+              .select(col("__p.id_a"), col("__p.id_b"),
+                col("__p.containment"))
+              .unionByName(interNN)
+          }
+          inter.filter(col("containment") >= theta)
+        }
+        // a new index freezes its order with its first postings: a
+        // crash between the two writes leaves no postings, so the retry
+        // freezes again (overwrite)
+        def append(s: StandingIndex.Scope, rows: DataFrame) = {
+          if (!s.exists) boot.write.mode("overwrite").parquet(dfordPath)
+          rows.write.mode("append").parquet(postingsPath)
+        }
+      })
   }
 
   /** Micro-batch grouping for the containment index — the documented
-    * 100-TB answer (PLANS.md r14) to the update's one linear term:
+    * 100-TB answer to the update's one linear term:
     * each [[containmentIndexUpdate]] pays ONE full lake scan
     * (~2.7 s/100k lake docs measured on the fresh-sf10 ladder), so at
     * streaming cadence the scans dominate long before the batch-side
@@ -1080,7 +937,7 @@ object Dedup {
     * batch is what broadcasts — so the cap is exactly what bounds k:
     * group as many batches as fit under it, never more. Batches must
     * share the new-docs schema. A doc id shared by TWO grouped batches
-    * FAILS FAST (r15 verdict #4): sequential updates would treat the
+    * FAILS FAST: sequential updates would treat the
     * second arrival as a fresh doc probed against a lake that already
     * holds the first, while the grouped union merges both into one
     * postings set — silently violating the grouping==sequential law
@@ -1125,32 +982,24 @@ object Dedup {
       theta, maxBatchPostings, maxMatchedPostings)
   }
 
-  /** Maintenance for the persisted containment index — the one
-    * standing index that was missing a compaction entry point (r14;
-    * band/IVF/embedding each got theirs in r12-r13). Every
+  /** Maintenance for the persisted containment index. Every
     * [[containmentIndexUpdate]] appends its own part files to
-    * `postings/`, and each update performs ONE probe read of the
-    * lake (merged candidate + verify pass — two in r15, three in r14),
-    * so at streaming cadence the scans turn LISTING-bound long
-    * before they turn byte-bound — measured on the fresh-sf10 ladder:
-    * per-update cost grew 4.5 → ~25 s by update 24 (768 accumulated
-    * part files, ~50 MB of actual bytes) with the growth tracking
-    * file count, not data. Compaction is row-content-preserving, and
-    * the postings' stored frozen-df ranks (`__rk`, `__n`) ride the
-    * rows, so probes before and after answer identically (spec +
-    * shared oracle); the bootstrap-frozen `dford/` table is rewritten
-    * the same way. Crash-safe two-phase swap throughout
+    * `postings/` and reads the lake once, so at streaming cadence the
+    * read turns LISTING-bound long before it turns byte-bound:
+    * measured on the fresh-sf10 ladder, per-update cost grew 4.5 →
+    * ~25 s by update 24 (768 accumulated part files, ~50 MB of actual
+    * bytes), tracking file count, not data. Compaction is
+    * row-content-preserving, and the postings' stored frozen-df ranks
+    * (`__rk`, `__n`) ride the rows, so probes before and after answer
+    * identically (spec + shared oracle); the bootstrap-frozen `dford/`
+    * table is rewritten the same way. Crash-safe swap throughout
     * ([[graft.sinks.Sinks.compact]]). Run off the update path. */
   def containmentIndexCompact(spark: org.apache.spark.sql.SparkSession,
                               indexPath: String,
                               targetBytes: Long = 128L << 20)
-      : graft.sinks.Sinks.CompactionStats = {
-    val fs = new org.apache.hadoop.fs.Path(indexPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$indexPath/dford")))
-      graft.sinks.Sinks.compact(spark, s"$indexPath/dford", targetBytes)
-    graft.sinks.Sinks.compact(spark, s"$indexPath/postings", targetBytes)
-  }
+      : graft.sinks.Sinks.CompactionStats =
+    StandingIndex.compact(spark,
+      Seq(s"$indexPath/postings", s"$indexPath/dford"), targetBytes)
 
   // ---------------- embedding near-dup ----------------
 
@@ -1167,7 +1016,12 @@ object Dedup {
     // inside one bucket is the scale killer, not total corpus size
     val keep = b0.groupBy("bucket").agg(count(lit(1)).as("__n"))
       .filter(col("__n") <= maxBucketSize).select("bucket")
-    val b = b0.join(broadcast(keep), Seq("bucket"))
+    bucketCosPairs(b0.join(broadcast(keep), Seq("bucket")), minCos)
+  }
+
+  /** Pairs of `(bucket, id, v)` rows sharing a bucket at cosine ≥
+    * `minCos`: `id_a < id_b`, `cos`. */
+  private def bucketCosPairs(b: DataFrame, minCos: Double): DataFrame = {
     val l = b.select(col("bucket"), col("id").as("id_a"), col("v").as("v_a"))
     val r = b.select(col("bucket"), col("id").as("id_b"), col("v").as("v_b"))
     l.join(r, Seq("bucket")).filter(col("id_a") < col("id_b"))
@@ -1178,17 +1032,15 @@ object Dedup {
 
   /** Incremental embedding near-dup against a PERSISTED sign-LSH
     * bucket index — the embedding spelling of [[bandIndexUpdate]]'s
-    * continuous-crawl discipline, completing the standing-index family
-    * (exact / band / containment / IVF / embedding): the corpus's
-    * `(id, bucket, vector)` rows live in a parquet lake PARTITIONED BY
-    * bucket, and each new batch (a) finds its near-dup pairs against
-    * the index with the index scan PARTITION-PRUNED to the batch's own
-    * buckets (≤ 2^planes cell ids, collected driver-side — a vector
-    * has exactly ONE bucket, so the probe reads only the cells the
-    * batch touches) and the batch side broadcast (ingest-batch-sized
-    * by the streaming contract, never the corpus), and (b) appends its
-    * own rows, so per-update cost is O(touched cells + batch), never a
-    * corpus re-hash.
+    * continuous-crawl discipline: the corpus's `(id, bucket, vector)`
+    * rows live in a parquet lake PARTITIONED BY bucket, and each new
+    * batch (a) finds its near-dup pairs against the index with the
+    * index scan PARTITION-PRUNED to the batch's own buckets (≤ 2^planes
+    * cell ids, collected driver-side — a vector has exactly ONE bucket,
+    * so the probe reads only the cells the batch touches) and the batch
+    * side broadcast (ingest-batch-sized by the streaming contract,
+    * never the corpus), and (b) appends its own rows, so per-update
+    * cost is O(touched cells + batch), never a corpus re-hash.
     *
     * Returns the pairs DISCOVERED by this update (index↔batch plus
     * within-batch, exact cosine ≥ `minCos`, `id_a < id_b`); a pair is
@@ -1198,7 +1050,9 @@ object Dedup {
     * (the cap counts the TOTAL bucket — matched index rows + batch —
     * the same population the one-shot operator caps on). The returned
     * frame is MATERIALIZED before the index append, so the join never
-    * sees the batch's own rows. Maintenance: [[embeddingIndexCompact]].
+    * sees the batch's own rows. The update runs the [[StandingIndex]]
+    * lifecycle, which first recovers an interrupted compaction or
+    * rebuild. Maintenance: [[embeddingIndexCompact]].
     *
     * Cf. reference dataplane cross-snapshot dedup (provider-agnostic
     * half), here banded by sign-LSH over the embedding column. */
@@ -1210,115 +1064,77 @@ object Dedup {
     // driver IN-list (that literal list is what partition-prunes the
     // index scan) — 2^20 ints is the most a driver should ever hold
     // for a pruning predicate; past that the cell space is so fine
-    // that near-dups rarely share a cell anyway (r13 verdict #5)
+    // that near-dups rarely share a cell anyway
     require(planes >= 1 && planes <= 20,
       s"planes must be in [1, 20] (cell ids become a driver-side " +
         s"pruning IN-list, ≤ 2^planes entries): $planes")
-    val spark = batch.sparkSession
-    val nb = batch.select(col(idCol).as("id"),
-        Similarity.hyperplaneBucket(col(vecCol), planes).cast("int")
-          .as("bucket"),
-        col(vecCol).as("v")).persist()
-    val matchedIdx = scala.collection.mutable.Buffer.empty[DataFrame]
-    try {
-      val root = new org.apache.hadoop.fs.Path(indexPath)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // the batch's cell set: ≤ 2^planes ints — request-sized, and the
-      // literal IN list is what turns the index scan partition-pruned.
-      // ONE aggregation yields the cell set AND the cap's batch-side
-      // bucket sizes (r18): the distinct-cells collect and the
-      // batchSizes groupBy previously ran the same shuffle twice. The
-      // collected rows carry one extra long per cell — the same
-      // ≤ 2^planes driver bound the IN-list already accepts.
-      val sizeRows = nb.groupBy("bucket").agg(count(lit(1)).as("__bn"))
-        .collect()
-      val cells = sizeRows.map(_.getAs[Number](0).intValue()).sorted
-      // empty batch: nothing to probe AND nothing to append — an
-      // append of zero rows would create a parquet-less directory that
-      // poisons the next update's read (ADVICE r13)
-      if (cells.isEmpty)
-        return nb.select(col("id").as("id_a"), col("id").as("id_b"),
-          lit(0.0).as("cos"))
-      val idx =
-        if (fs.exists(root))
-          embeddingIndexScan(spark, indexPath, cells.toSeq).persist()
-        else nb.limit(0)
-      matchedIdx += idx
-      // batch sizes re-enter as a driver-local relation (collected
-      // above) — the cap join's batch side costs no second shuffle
-      val batchSizes = {
-        import spark.implicits._
-        sizeRows.map(r => (r.getAs[Number](0).intValue(), r.getLong(1)))
-          .toSeq.toDF("bucket", "__bn")
-      }
-      val idxSizes = idx.groupBy("bucket")
-        .agg(count(lit(1)).as("__in"))
-      // hot-bucket cap over the TOTAL bucket (index + batch) — the
-      // population a full recompute would cap on. The incremental ==
-      // one-shot law holds only while NO bucket ever exceeds the cap:
-      // earlier updates have already emitted (unretractable) pairs a
-      // one-shot over the growing corpus would drop, so a crossing is
-      // an irreconcilable contract break — FAIL FAST with the cells so
-      // the caller can raise the cap and rebuild, rather than return a
-      // silently diverged answer (ADVICE r13, medium)
-      val totals = batchSizes.join(idxSizes, Seq("bucket"), "left")
-        .withColumn("__tot", coalesce(col("__in"), lit(0L)) + col("__bn"))
-      val overCap = totals.filter(col("__tot") > maxBucketSize)
-        .select("bucket", "__tot").limit(10).collect()
-      if (overCap.nonEmpty)
-        throw new IllegalStateException(
-          s"embeddingIndexUpdate: bucket(s) exceed maxBucketSize=" +
-            s"$maxBucketSize — the incremental==one-shot equivalence " +
-            s"contract cannot hold once a bucket crosses the cap " +
-            s"(earlier updates' emitted pairs are not retractable). " +
-            s"Recover with Dedup.embeddingIndexRebuild(spark, " +
-            s"indexPath, planes, minCos, raisedCap) — it re-buckets " +
-            s"the lake " +
-            s"(planes may change), swaps it in crash-safely, and " +
-            s"returns the full pair set at the new parameters. " +
-            s"First cells: " +
-            overCap.map(r => s"${r.get(0)}(n=${r.get(1)})").mkString(", "))
-      val prunedNew = nb
-      val cross = idx
-        .join(broadcast(prunedNew.select(col("bucket"),
-          col("id").as("__new_id"), col("v").as("__new_v"))), Seq("bucket"))
-        .filter(col("id") =!= col("__new_id"))
-        .withColumn("cos", Similarity.cosine(col("v"), col("__new_v")))
-        .filter(col("cos") >= minCos)
-        .select(least(col("id"), col("__new_id")).as("id_a"),
-          greatest(col("id"), col("__new_id")).as("id_b"), col("cos"))
-      val l = prunedNew.select(col("bucket"), col("id").as("id_a"),
-        col("v").as("v_a"))
-      val r = prunedNew.select(col("bucket"), col("id").as("id_b"),
-        col("v").as("v_b"))
-      val within = l.join(r, Seq("bucket"))
-        .filter(col("id_a") < col("id_b"))
-        .withColumn("cos", Similarity.cosine(col("v_a"), col("v_b")))
-        .filter(col("cos") >= minCos)
-        .select("id_a", "id_b", "cos")
-      // a pair lands in exactly one of cross/within (one bucket per
-      // vector, one discovering update) — union, no dedup needed;
-      // materialize BEFORE the append so the lazy join cannot rescan
-      // an index that already contains this batch
-      val found = cross.unionByName(within).localCheckpoint(true)
-      // spread the batch's cells across the cluster before the
-      // partitioned append: the batch arrives on a
-      // handful of scan partitions, and a bare partitionBy write makes
-      // ONE task write every touched `bucket=` dir's file serially —
-      // measured 8-22 s per update on a ~250-cell batch, half the
-      // update's wall. The batch is broadcast-sized by contract, so
-      // the extra shuffle is noise; each cell still lands in exactly
-      // one task → one file per cell per append.
-      graft.sinks.Sinks.spreadByCols(nb, Seq(col("bucket")))
-        .write.mode("append").partitionBy("bucket").parquet(indexPath)
-      found
-    } finally {
-      // unpersist BOTH cached frames on every exit path — the index
-      // slice must not leak into the block cache when the cap check or
-      // the append throws (ADVICE r13)
-      matchedIdx.foreach(_.unpersist())
-      nb.unpersist()
-    }
+    StandingIndex.update(batch.sparkSession, Seq(indexPath),
+      new StandingIndex.Kind[Array[(Int, Long)]] {
+        def rows(s: StandingIndex.Scope) = batch.select(col(idCol).as("id"),
+          Similarity.hyperplaneBucket(col(vecCol), planes).cast("int")
+            .as("bucket"),
+          col(vecCol).as("v"))
+        // ONE aggregation yields the cell set (≤ 2^planes ints, the
+        // literal IN-list that prunes the index scan) AND the cap's
+        // batch-side bucket sizes, one extra long per cell
+        def gate(s: StandingIndex.Scope, rows: DataFrame) = {
+          import s.spark.implicits._
+          val sizes = rows.groupBy("bucket").agg(count(lit(1)).as("__bn"))
+            .as[(Int, Long)].collect()
+          if (sizes.isEmpty) None else Some(sizes)
+        }
+        def noPairs(rows: DataFrame) = rows.select(col("id").as("id_a"),
+          col("id").as("id_b"), lit(0.0).as("cos"))
+        def slice(s: StandingIndex.Scope, rows: DataFrame,
+                  sizes: Array[(Int, Long)]) =
+          embeddingIndexScan(s.spark, indexPath, sizes.map(_._1).sorted.toSeq)
+        def probe(rows: DataFrame, sizes: Array[(Int, Long)],
+                  slice: Option[DataFrame]) = {
+          val spark = rows.sparkSession
+          import spark.implicits._
+          val idx = slice.getOrElse(rows.limit(0))
+          // batch sizes re-enter as a driver-local relation, so the
+          // cap join's batch side costs no second shuffle
+          val batchSizes = sizes.toSeq.toDF("bucket", "__bn")
+          // The incremental == one-shot law holds only while NO bucket
+          // ever exceeds the cap: earlier updates have already emitted
+          // (unretractable) pairs a one-shot over the grown corpus
+          // would drop, so a crossing fails fast with the cells, so the
+          // caller can raise the cap and rebuild, rather than return a
+          // silently diverged answer
+          val overCap = StandingIndex.bucketTotals(batchSizes, idx,
+              Seq("bucket"))
+            .filter(col("__tot") > maxBucketSize)
+            .select("bucket", "__tot").limit(10).collect()
+          if (overCap.nonEmpty)
+            throw new IllegalStateException(
+              s"embeddingIndexUpdate: bucket(s) exceed maxBucketSize=" +
+                s"$maxBucketSize — the incremental==one-shot equivalence " +
+                s"contract cannot hold once a bucket crosses the cap " +
+                s"(earlier updates' emitted pairs are not retractable). " +
+                s"Recover with Dedup.embeddingIndexRebuild(spark, " +
+                s"indexPath, planes, minCos, raisedCap) — it re-buckets " +
+                s"the lake " +
+                s"(planes may change), swaps it in crash-safely, and " +
+                s"returns the full pair set at the new parameters. " +
+                s"First cells: " +
+                overCap.map(r => s"${r.get(0)}(n=${r.get(1)})").mkString(", "))
+          val cross = idx
+            .join(broadcast(rows.select(col("bucket"),
+              col("id").as("__new_id"), col("v").as("__new_v"))),
+              Seq("bucket"))
+            .filter(col("id") =!= col("__new_id"))
+            .withColumn("cos", Similarity.cosine(col("v"), col("__new_v")))
+            .filter(col("cos") >= minCos)
+            .select(least(col("id"), col("__new_id")).as("id_a"),
+              greatest(col("id"), col("__new_id")).as("id_b"), col("cos"))
+          // a pair lands in exactly one of cross/within (one bucket per
+          // vector, one discovering update): union, no dedup needed
+          cross.unionByName(bucketCosPairs(rows, minCos))
+        }
+        def append(s: StandingIndex.Scope, rows: DataFrame) =
+          StandingIndex.appendCells(rows, "bucket", indexPath)
+      })
   }
 
   /** The update's index-side read: PARTITION-PRUNED to the probed cell
@@ -1326,8 +1142,7 @@ object Dedup {
     * partitioned by bucket at all). */
   private[functions] def embeddingIndexScan(spark: SparkSession,
       indexPath: String, cells: Seq[Int]): DataFrame =
-    spark.read.option("basePath", indexPath).parquet(indexPath)
-      .filter(col("bucket").isin(cells.map(Integer.valueOf): _*))
+    StandingIndex.readCells(spark, indexPath, "bucket", cells)
 
   /** Maintenance for the persisted embedding bucket index: per-cell
     * compaction via the crash-safe two-phase swap, KEEPING the
@@ -1335,20 +1150,18 @@ object Dedup {
     * partition-pruned and answer identically before and after. */
   def embeddingIndexCompact(spark: SparkSession, indexPath: String)
       : graft.sinks.Sinks.CompactionStats =
-    graft.sinks.Sinks.compact(spark, indexPath,
+    StandingIndex.compact(spark, Seq(indexPath),
       partitionCols = Seq("bucket"))
 
   /** Offline REBUILD of the persisted embedding bucket index at new
     * parameters — the entry point the [[embeddingIndexUpdate]]
-    * over-cap exception sends callers to (r14 verdict #6: the
-    * exception said "rebuild via the one-shot operator" but no helper
-    * did it). A cap crossing is an irreconcilable break for the
-    * INCREMENTAL contract (earlier updates' pairs are unretractable),
-    * so the recovery is: re-bucket the whole lake at the new
-    * `planes`, swap it in crash-safely, and return the FULL pair set
-    * at the new parameters computed by the one-shot
-    * [[embeddingNearDups]] — a bucket-keyed shuffle join over the
-    * corpus, never a corpus broadcast (rebuild is the one place the
+    * over-cap exception sends callers to. A cap crossing is an
+    * irreconcilable break for the INCREMENTAL contract (earlier
+    * updates' pairs are unretractable), so the recovery is: re-bucket
+    * the whole lake at the new `planes`, swap it in crash-safely, and
+    * return the FULL pair set at the new parameters computed by the
+    * one-shot [[embeddingNearDups]] — a bucket-keyed shuffle join over
+    * the corpus, never a corpus broadcast (rebuild is the one place the
     * corpus may shuffle; it runs off the update path, like
     * compaction). After the swap, incremental updates resume against
     * the rebuilt lake at the raised cap.
@@ -1357,11 +1170,13 @@ object Dedup {
     * run over the same arrival stream at the new parameters — both
     * equal the one-shot operator over the full corpus. Vectors are
     * re-bucketed from the stored `v` column, so `planes` may change;
-    * the [[graft.sinks.Swap]] directory swap (stage → main→bak →
-    * tmp→main, every rename checked) leaves either the old lake or the
-    * new one on any crash, and recovers a previous crash on entry.
+    * the [[StandingIndex.rebuild]] directory swap leaves either the
+    * old lake or the new one on any crash, and recovers a previous
+    * crash on entry. The staged write spreads the new cells over the
+    * cluster like the update's append (without it one task wrote every
+    * `bucket=` dir serially, measured 21.5 s of a 31 s rebuild).
     *
-    * Cadence (fresh-sf10 ladder, tools/RebuildScale, PLANS.md r16):
+    * Cadence (fresh-sf10 ladder, measured with `graft.tools.RebuildScale`):
     * rebuild wall grows linearly with the lake past a fixed
     * intercept — ~21 s at 40k vectors, ~55 s at 168k (park-free
     * minima; one rebuild ≈ 2-4 incremental updates' wall at 8k-vector
@@ -1373,28 +1188,14 @@ object Dedup {
                             maxBucketSize: Int = 10000): DataFrame = {
     require(planes >= 1 && planes <= 20,
       s"planes must be in [1, 20]: $planes")
-    val hPath = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(indexPath + ".__rebuild_tmp")
-    val bak = new org.apache.hadoop.fs.Path(indexPath + ".__rebuild_bak")
-    Swap.recoverDir(fs, hPath, tmp, bak)
-    // explicit-count spread on the new cell id (r17): the rebuild's
-    // staged write is the same partitionBy shape as the update's append
-    // — without it one AQE-coalesced task writes every `bucket=` dir
-    // serially (measured 21.5 s of the 31 s rebuild). Lake-scale inputs
-    // keep their scan width via the spread's input-partition floor.
-    graft.sinks.Sinks.spreadByCols(
-        spark.read.option("basePath", indexPath).parquet(indexPath)
-          .select(col("id"),
-            Similarity.hyperplaneBucket(col("v"), planes).cast("int")
-              .as("bucket"),
-            col("v")),
-        Seq(col("bucket")))
-      .write.partitionBy("bucket").parquet(tmp.toString)
-    Swap.installDir(fs, hPath, tmp, bak)
-    embeddingNearDups(
-      spark.read.option("basePath", indexPath).parquet(indexPath)
-        .select(col("id"), col("v")),
+    def lake = spark.read.option("basePath", indexPath).parquet(indexPath)
+    StandingIndex.rebuild(spark, indexPath)(_ => Seq(tmp =>
+      StandingIndex.appendCells(lake.select(col("id"),
+          Similarity.hyperplaneBucket(col("v"), planes).cast("int")
+            .as("bucket"),
+          col("v")),
+        "bucket", tmp)))
+    embeddingNearDups(lake.select(col("id"), col("v")),
       "v", "id", planes, minCos, maxBucketSize)
   }
 
@@ -1409,7 +1210,7 @@ object Dedup {
     * postings themselves (texts not needed), re-ranks every doc under
     * the fresh `(df, stable hash, shingle)` order, and swaps both
     * `dford/` and `postings/` in crash-safely, each by a
-    * [[graft.sinks.Swap]] directory swap. A crash
+    * [[StandingIndex.rebuild]] directory swap. A crash
     * between the two swaps leaves a new dford with old postings —
     * safe: order affects prefix SELECTION speed only, and the next
     * rebuild completes it. Probes answer identically before and
@@ -1417,34 +1218,28 @@ object Dedup {
     * off the update path, at compaction cadence. */
   def containmentIndexRebuild(spark: SparkSession,
                               indexPath: String): Unit = {
-    val W = org.apache.spark.sql.expressions.Window
     val postingsPath = s"$indexPath/postings"
     val dfordPath = s"$indexPath/dford"
-    val postings = spark.read.parquet(postingsPath).select("id", "s")
-      .persist()
-    try {
+    StandingIndex.rebuild(spark, dfordPath, postingsPath) { s =>
+      val postings = s.persist(
+        spark.read.parquet(postingsPath).select("id", "s"))
       val freshDf = postings.groupBy("s").agg(count(lit(1)).as("__df"))
-      val ranked = postings.join(freshDf, Seq("s"))
-        .withColumn("__rk", row_number().over(
-          W.partitionBy("id").orderBy(col("__df"),
-            Hashing.hex8ToLong(col("s")), col("s"))))
-        .withColumn("__n", count(lit(1)).over(W.partitionBy("id")))
-        .drop("__df")
-      def swapIn(path: String, df: DataFrame): Unit = {
-        val hPath = new org.apache.hadoop.fs.Path(path)
-        val fs = hPath.getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
-        val tmp = new org.apache.hadoop.fs.Path(path + ".__rebuild_tmp")
-        val bak = new org.apache.hadoop.fs.Path(path + ".__rebuild_bak")
-        Swap.recoverDir(fs, hPath, tmp, bak)
-        df.write.parquet(tmp.toString)
-        Swap.installDir(fs, hPath, tmp, bak)
-      }
-      swapIn(dfordPath, freshDf)
-      swapIn(postingsPath, ranked)
-    } finally postings.unpersist()
+      Seq(freshDf.write.parquet,
+        rankPostings(postings.join(freshDf, Seq("s"))).write.parquet)
+    }
   }
 
+  /** Rank each doc's postings `(id, s, __df)` under the containment
+    * index's fixed order `(df, stable hash, shingle)`: adds `__rk` and
+    * the doc's posting count `__n`, drops `__df`. */
+  private def rankPostings(p: DataFrame): DataFrame = {
+    val W = org.apache.spark.sql.expressions.Window
+    p.withColumn("__rk", row_number().over(
+        W.partitionBy("id").orderBy(col("__df"),
+          Hashing.hex8ToLong(col("s")), col("s"))))
+      .withColumn("__n", count(lit(1)).over(W.partitionBy("id")))
+      .drop("__df")
+  }
 
   // ---------------- benchmark decontamination ----------------
 

@@ -431,19 +431,8 @@ object Similarity {
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
       notNull(assignStruct(col(vecCol), centsLocal, roundTo)
         .getField("centroid_id")).as("centroid_id"))
-    val cents = centroids.select(col("centroid_id"), col(vecCol).as("centv"))
-    val qScored = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .crossJoin(broadcast(cents))
-      .withColumn("score_c", round(cosine(col("qv"), col("centv")), roundTo))
-    val wq = Window.partitionBy("query_id")
-      .orderBy(col("score_c").desc, col("centroid_id"))
-    val probes = qScored.withColumn("rk", row_number().over(wq))
-      .filter(col("rk") <= nprobe)
-      .select("query_id", "qv", "centroid_id")
-    val scored = c.join(broadcast(probes), Seq("centroid_id"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("score", round(cosine(col("qv"), col("cv")), roundTo))
-    rankTopK(scored, k)
+    rankInCells(c, nearestCells(queries, centroids, vecCol, idCol, nprobe,
+      roundTo), k, roundTo)
   }
 
   /** Append a vector batch to a PERSISTED cell-partitioned IVF index —
@@ -455,24 +444,18 @@ object Similarity {
     * via mode("append") — ingest cost is batch-sized, the standing
     * index is never read or rewritten. Centroids must stay FIXED
     * across appends (re-fitting reassigns cells and would demand a
-    * full rebuild — the operational contract of every IVF system). */
+    * full rebuild — the operational contract of every IVF system).
+    * Like every standing-index writer it first recovers an interrupted
+    * compaction ([[StandingIndex]]). */
   def ivfIndexAppend(batch: DataFrame, indexPath: String,
                      centroids: DataFrame, vecCol: String, idCol: String,
                      roundTo: Int = 6): Unit = {
     val cents = collectCentroids(centroids, vecCol)
-    // cell assignment stays a pure projection; the explicit-count
-    // spread on the cell id before the partitioned append is the write
-    // shape only (r17): a bare partitionBy write makes one AQE-coalesced
-    // task write every touched `centroid_id=` dir serially — the same
-    // measured 8-22 s/append cliff as the embedding index. Batch-sized
-    // shuffle; one file per cell per append either way.
-    graft.sinks.Sinks.spreadByCols(
-        batch.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-          notNull(assignStruct(col(vecCol), cents, roundTo)
-            .getField("centroid_id")).as("centroid_id")),
-        Seq(col("centroid_id")))
-      .write.mode("append").partitionBy("centroid_id")
-      .parquet(indexPath)
+    StandingIndex.append(batch.sparkSession,
+      batch.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
+        notNull(assignStruct(col(vecCol), cents, roundTo)
+          .getField("centroid_id")).as("centroid_id")),
+      "centroid_id", indexPath)
   }
 
   /** Probe a persisted IVF index: each query scores exactly inside its
@@ -486,31 +469,41 @@ object Similarity {
   def ivfIndexProbe(queries: DataFrame, indexPath: String,
                     centroids: DataFrame, vecCol: String, idCol: String,
                     k: Int, nprobe: Int = 2, roundTo: Int = 6): DataFrame = {
-    val spark = queries.sparkSession
+    val probes = nearestCells(queries, centroids, vecCol, idCol, nprobe,
+      roundTo)
+    val cellIds = probes.select(col("centroid_id")).distinct()
+      .collect().map(_.getInt(0)).sorted
+    rankInCells(StandingIndex.readCells(queries.sparkSession, indexPath,
+      "centroid_id", cellIds.toSeq), probes, k, roundTo)
+  }
+
+  /** Each query's `nprobe` nearest cells: `(query_id, qv,
+    * centroid_id)`. Caller-supplied centroid frames may carry a LONG
+    * centroid_id (and a parquet partition column's type is inferred
+    * on read independently of it), so the cell id is normalized to
+    * int, matching [[collectCentroids]]' defensive cast. */
+  private def nearestCells(queries: DataFrame, centroids: DataFrame,
+                           vecCol: String, idCol: String, nprobe: Int,
+                           roundTo: Int): DataFrame = {
     val cents = centroids.select(col("centroid_id").cast("int")
       .as("centroid_id"), col(vecCol).as("centv"))
-    val qScored = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .crossJoin(broadcast(cents))
-      .withColumn("score_c", round(cosine(col("qv"), col("centv")), roundTo))
     val wq = Window.partitionBy("query_id")
       .orderBy(col("score_c").desc, col("centroid_id"))
-    val probes = qScored.withColumn("rk", row_number().over(wq))
+    queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
+      .crossJoin(broadcast(cents))
+      .withColumn("score_c", round(cosine(col("qv"), col("centv")), roundTo))
+      .withColumn("rk", row_number().over(wq))
       .filter(col("rk") <= nprobe)
       .select("query_id", "qv", "centroid_id")
-    // caller-supplied centroid frames may carry a LONG centroid_id
-    // (and the parquet partition column's type is inferred on read
-    // independently of it): normalize to int on both the collect and
-    // the join key, matching collectCentroids' defensive cast
-    val cellIds = probes.select(col("centroid_id").cast("int")).distinct()
-      .collect().map(_.getAs[Number](0).intValue()).sorted
-    val idx = spark.read.option("basePath", indexPath).parquet(indexPath)
-      .filter(col("centroid_id").isin(cellIds.map(Integer.valueOf): _*))
-    val scored = idx.join(broadcast(probes), Seq("centroid_id"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("score", round(cosine(col("qv"), col("cv")), roundTo))
-    rankTopK(scored, k)
   }
+
+  /** Top-k per query over the `(neighbor_id, cv, centroid_id)` rows of
+    * the probed cells, never the query itself. */
+  private def rankInCells(cells: DataFrame, probes: DataFrame, k: Int,
+                          roundTo: Int): DataFrame =
+    rankTopK(cells.join(broadcast(probes), Seq("centroid_id"))
+      .filter(col("query_id") =!= col("neighbor_id"))
+      .withColumn("score", round(cosine(col("qv"), col("cv")), roundTo)), k)
 
   /** Maintenance for the persisted IVF index: per-cell compaction of
     * the `centroid_id=<cell>/` parquet lake via the crash-safe
@@ -526,7 +519,7 @@ object Similarity {
     * the append rate demands. */
   def ivfIndexCompact(spark: org.apache.spark.sql.SparkSession,
                       indexPath: String): graft.sinks.Sinks.CompactionStats =
-    graft.sinks.Sinks.compact(spark, indexPath,
+    StandingIndex.compact(spark, Seq(indexPath),
       partitionCols = Seq("centroid_id"))
 
   /** IVF-style coarse quantization: assign each vector to the nearest of
