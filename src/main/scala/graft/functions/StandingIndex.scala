@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 import graft.sinks.{Sinks, Swap}
 
@@ -50,6 +51,22 @@ private[graft] object StandingIndex {
     private[StandingIndex] def release(): Unit = held.foreach(_.unpersist())
   }
 
+  /** Build the cache of the persisted `df` now, in one job over its
+    * cached batches, and return its row count. Left to the first query
+    * that reads it, an unbuilt cache costs one build job per scan of it
+    * in that query's plan, and `count()` adds a partial/final
+    * aggregation pair. */
+  def materialize(df: DataFrame): Long = df.queryExecution.withCachedData match {
+    case r: InMemoryRelation =>
+      r.cacheBuilder.cachedColumnBuffers.map(_.numRows.toLong).fold(0L)(_ + _)
+    case _ => throw new IllegalArgumentException(
+      "StandingIndex.materialize: the frame is not persisted")
+  }
+
+  /** The index rows one update probes, persisted and built, with their
+    * count. */
+  final case class Slice(df: DataFrame, count: Long)
+
   /** One index's part in [[update]]. `G` is what the gate learns about
     * the batch and hands to the slice read and the probe. */
   trait Kind[G] {
@@ -63,19 +80,20 @@ private[graft] object StandingIndex {
     /** The answer to an empty batch. */
     def noPairs(rows: DataFrame): DataFrame
     /** The index rows the probe needs; read only when the index exists.
-      * [[update]] persists the slice. */
+      * [[update]] persists and builds the slice before the probe. */
     def slice(s: Scope, rows: DataFrame, g: G): DataFrame
     /** The pairs this batch discovers; `slice` is `None` on a new
       * index. Throws when the kind's over-cap policy says so. */
-    def probe(rows: DataFrame, g: G, slice: Option[DataFrame]): DataFrame
+    def probe(rows: DataFrame, g: G, slice: Option[Slice]): DataFrame
     /** Add the batch's rows to the index. */
     def append(s: Scope, rows: DataFrame): Unit
   }
 
   /** One incremental update of the index in `dirs`, whose head is the
     * directory whose presence means the index exists. Order: recover →
-    * persist the batch rows → gate → read the slice (existing index
-    * only) → probe → materialize the pairs → drop the slice → append.
+    * persist the batch rows → gate → read, persist and build the slice
+    * (existing index only) → probe → materialize the pairs → drop the
+    * slice → append.
     * The pairs are materialized by `localCheckpoint` before the append,
     * so the lazy probe can never rescan an index that already holds
     * this batch; every persisted frame is released on every exit. */
@@ -88,10 +106,12 @@ private[graft] object StandingIndex {
       kind.gate(s, rows) match {
         case None => kind.noPairs(rows)
         case Some(g) =>
-          val slice =
-            if (s.exists) Some(s.persist(kind.slice(s, rows, g))) else None
+          val slice = if (!s.exists) None else {
+            val df = s.persist(kind.slice(s, rows, g))
+            Some(Slice(df, materialize(df)))
+          }
           val found = kind.probe(rows, g, slice).localCheckpoint(true)
-          slice.foreach(_.unpersist(blocking = false))
+          slice.foreach(_.df.unpersist(blocking = false))
           kind.append(s, rows)
           found
       }

@@ -770,7 +770,7 @@ object TextAnalysis {
                  idCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val t = tokens(col(textCol))
-    // ONE corpus tokenize+explode (ProfKernels discipline, the dsir
+    // ONE corpus tokenize+explode (kernel-profile discipline, the dsir
     // rewrite applied here): docTf, tokC and vocabN are all pure
     // roll-ups of the per-(doc, class, token) count frame. The frame
     // is eagerly checkpointed because plan-level sharing does NOT
@@ -863,7 +863,7 @@ object TextAnalysis {
     * combined, ≤|classes|² rows leave the mappers — the earlier
     * rows×classes broadcast expansion both scanned the input twice,
     * once for the class list and once for the counts, and multiplied
-    * every row by |classes| before filtering; ProfKernels r16 measured
+    * every row by |classes| before filtering; a kernel profile measured
     * the double-computation at 2× the classify cost when the input is
     * itself a classifier pipeline). tp/fp/fn are exact-integer
     * roll-ups of the matrix; the class list is the matrix's distinct

@@ -137,15 +137,33 @@ object CdcStream {
     try out.write(json.getBytes("UTF-8")) finally out.close()
   }
 
+  /** Readers do not recover a merge swap; only [[mergeBatch]] does. A
+    * state dir without its meta while `<stateDir>.bak` exists is a swap
+    * that died mid-flight: some buckets and the meta sit in the backup,
+    * and reading the dir would silently return the buckets left in
+    * place. Refuse it, naming both paths. */
+  private def requireSettled(fs: org.apache.hadoop.fs.FileSystem,
+                             stateDir: String): Unit =
+    if (!fs.exists(metaPath(stateDir)) &&
+        fs.exists(new org.apache.hadoop.fs.Path(stateDir + ".bak")))
+      throw new IllegalStateException(
+        s"$stateDir is half-swapped: it has no $MetaName and " +
+          s"$stateDir.bak holds the backup of an interrupted merge. The " +
+          s"next mergeBatch into $stateDir recovers the state; read it " +
+          s"after that.")
+
   /** Read the merged state back without the layout's bucket column.
     * Schema-merging: under lazy DDL migration bucket dirs may sit at
     * different drift generations; the union schema surfaces null for
-    * columns a lagging bucket predates. */
+    * columns a lagging bucket predates. Throws on a half-swapped state
+    * dir (see [[requireSettled]]). */
   def readState(spark: SparkSession, stateDir: String): DataFrame = {
+    val fs = fsOf(spark)
+    requireSettled(fs, stateDir)
     // typed meta schema: skip the footer-inference/mergeSchema
     // job — the union schema is already known; lagging buckets surface
     // null for columns they predate either way (see [[StateMeta]])
-    val schema = readMeta(fsOf(spark), stateDir).flatMap(_.schema)
+    val schema = readMeta(fs, stateDir).flatMap(_.schema)
     val df = schema match {
       case Some(s) => spark.read.schema(s).parquet(stateDir)
       case None => spark.read.option("mergeSchema", "true").parquet(stateDir)
@@ -161,11 +179,13 @@ object CdcStream {
     * the result carries the BUCKET's schema generation (a bucket dir
     * is always internally homogeneous — rewrites replace it whole);
     * a lagging bucket simply lacks columns it predates, the same
-    * contract as a pre-drift read of the whole state. */
+    * contract as a pre-drift read of the whole state. Throws on a
+    * half-swapped state dir, as [[readState]] does. */
   def lookup(spark: SparkSession, stateDir: String, pks: Seq[String],
              key: Seq[Any]): DataFrame = {
     require(pks.length == key.length, "one value per key column")
     val fs = fsOf(spark)
+    requireSettled(fs, stateDir)
     val n = readMeta(fs, stateDir).map(_.numBuckets).getOrElse(
       throw new IllegalArgumentException(s"$stateDir is not a bucketed state"))
     val rendered = key

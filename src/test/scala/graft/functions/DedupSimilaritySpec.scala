@@ -1220,4 +1220,53 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(u1.count() == 6)
     assert(u2.count() == 0)
   }
+
+  /** Pairs of one [[Dedup.bandIndexUpdate]] call, as a set. */
+  private def bandUpdate(idx: String, docs: Seq[(Long, String)],
+                         maxBucketSize: Int = 1000): Set[(Long, Long)] =
+    Dedup.bandIndexUpdate(idx, docs.toDF("doc_id", "text"), "text",
+        "doc_id", maxBucketSize = maxBucketSize)
+      .as[(Long, Long)].collect().toSet
+
+  // three texts with no 3-word shingle in common: docs with the same
+  // text share all four band buckets, docs with different texts none
+  private val textT = "same text repeated " * 5
+  private val textU = "another entirely different sentence about nothing " * 3
+  private val textV = "a third unrelated line of words here " * 3
+
+  test("band index: an id already indexed that arrives again pairs with " +
+    "the others in its buckets, never with itself") {
+    val idx = java.nio.file.Files.createTempDirectory("bandreid").toString +
+      "/idx"
+    assert(bandUpdate(idx, Seq(1L -> textT, 2L -> textT, 3L -> textU)) ==
+      Set((1L, 2L)))
+    // 2 arrives again with its text, 3 with a new one; 5 joins 3's old
+    // buckets
+    assert(bandUpdate(idx, Seq(2L -> textT, 3L -> textT, 5L -> textU)) ==
+      Set((1L, 2L), (1L, 3L), (2L, 3L), (3L, 5L)))
+  }
+
+  test("band index: the same id twice in one batch is one document") {
+    val idx = java.nio.file.Files.createTempDirectory("bandtwice").toString +
+      "/idx"
+    assert(bandUpdate(idx, Seq(7L -> textT, 7L -> textT, 8L -> textT,
+      9L -> textV, 9L -> textV)) == Set((7L, 8L)))
+    assert(bandUpdate(idx, Seq(10L -> textT, 10L -> textT, 11L -> textV)) ==
+      Set((7L, 10L), (8L, 10L), (9L, 11L)))
+  }
+
+  test("band index: a bucket that crosses maxBucketSize mid-stream keeps " +
+    "its early pairs and yields none once over the cap") {
+    val idx = java.nio.file.Files.createTempDirectory("bandcross").toString +
+      "/idx"
+    // the T bucket grows 3 → 4 (at the cap of 4, kept) → 5 → 6 (over)
+    assert(bandUpdate(idx, Seq(0L -> textT, 1L -> textT, 2L -> textT), 4) ==
+      Set((0L, 1L), (0L, 2L), (1L, 2L)))
+    assert(bandUpdate(idx, Seq(3L -> textT), 4) ==
+      Set((0L, 3L), (1L, 3L), (2L, 3L)))
+    assert(bandUpdate(idx, Seq(4L -> textT, 5L -> textU, 6L -> textU), 4) ==
+      Set((5L, 6L)))
+    assert(bandUpdate(idx, Seq(7L -> textT, 8L -> textU), 4) ==
+      Set((5L, 8L), (6L, 8L)))
+  }
 }

@@ -155,6 +155,38 @@ class StreamingSpec extends SparkSpec {
     assert(!java.nio.file.Files.exists(bak))
   }
 
+  test("readers refuse a half-swapped state until mergeBatch recovers it") {
+    val state = tmp() + "/th"
+    val snap = spark.range(0, 200)
+      .select(col("id"), concat(lit("v"), col("id")).as("v"))
+    CdcStream.mergeBatch(snap, state, Seq("id"), numBuckets = 8)
+    // the children swap moves the batch's buckets, then the meta, into
+    // .bak before it moves the staged ones in: crash in between
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(state)
+    val bak = java.nio.file.Paths.get(state + ".bak")
+    java.nio.file.Files.createDirectories(bak)
+    val bucket = java.nio.file.Files.list(root).iterator().asScala
+      .filter(_.getFileName.toString.startsWith(CdcStream.BucketCol))
+      .toSeq.head
+    Seq(bucket, root.resolve("_graft_meta.json"))
+      .foreach(p => java.nio.file.Files.move(p, bak.resolve(p.getFileName)))
+    for ((name, read) <- Seq[(String, () => Any)](
+        "readState" -> (() => CdcStream.readState(spark, state)),
+        "lookup" -> (() => CdcStream.lookup(spark, state, Seq("id"), Seq(5L))))) {
+      val e = intercept[IllegalStateException](read())
+      assert(e.getMessage.contains(s"$state ") &&
+        e.getMessage.contains(s"$state.bak") &&
+        e.getMessage.contains("mergeBatch"), s"$name: ${e.getMessage}")
+    }
+    CdcStream.mergeBatch(batch((5L, "v5c", "update", 9L)), state, Seq("id"))
+    val out = CdcStream.readState(spark, state)
+    assert(out.count() == 200, "rows lost across crash recovery")
+    assert(CdcStream.lookup(spark, state, Seq("id"), Seq(5L))
+      .select("v").as[String].collect().toSeq == Seq("v5c"))
+    assert(!java.nio.file.Files.exists(bak))
+  }
+
   test("legacy flat state migrates into buckets on first contact") {
     val state = tmp() + "/tlg"
     spark.range(0, 50)
