@@ -31,13 +31,13 @@ object Bench {
     // Streaming rows are LATENCY-bound, not compute-bound: their wall
     // time is micro-batch trigger work PLUS trigger scheduling waits,
     // and on a parking VM the waits absorb multi-second host stalls
-    // that then read as row regressions (r15: stream_sketch 2.85→7.61 s
+    // that then read as row regressions (measured: stream_sketch 2.85→7.61 s
     // with untouched code). Accumulate each row's actual per-trigger
     // compute (`durationMs.triggerExecution` summed over every progress
     // event in the row's window) so the artifact carries a wait-free
     // "busy" number per streaming row and the diff tool can normalize
     // streaming rows on compute, making VM-park false flags
-    // structurally impossible (r15 verdict task 6).
+    // structurally impossible.
     val streamBusyMs = new java.util.concurrent.atomic.AtomicLong(0)
     spark.streams.addListener(
       new org.apache.spark.sql.streaming.StreamingQueryListener {
@@ -51,7 +51,7 @@ object Bench {
         }
       })
     val streamBusy = scala.collection.mutable.Map[String, Double]()
-    // Park heartbeat (r16 verdict #1): the instantaneous transfer probe
+    // Park heartbeat: the instantaneous transfer probe
     // cannot see INTERMITTENT host stalls — BENCH_r16 read 1.45x the
     // committed anchor on an anchor-class probe because mid-run VM
     // parks inflate individual rows (containment_compact 132.8 s vs
@@ -74,9 +74,9 @@ object Bench {
     def parkOverlapSecs(winStart: Long, winEnd: Long): Double =
       parkMeter.overlapSecs(winStart, winEnd)
     val parkSecs = scala.collection.mutable.Map[String, Double]()
-    // sustained sub-threshold steal (r17): a host stealing 30-60% of
+    // sustained sub-threshold steal: a host stealing 30-60% of
     // the vCPU continuously trips NO park interval yet inflates rows
-    // 2-6x in alphabetical bands (r16 verdict; reproduced this round:
+    // 2-6x in alphabetical bands (reproduced:
     // mysql_binlog_parse 16.6 s in-session vs 1.1 s isolated with
     // park_secs 0). Emitted per row as a DIAGNOSTIC — bench_diff
     // refuses a verdict on a steal-soaked session but never subtracts
@@ -85,7 +85,7 @@ object Bench {
     // materialize the wire-parse fixture caches BEFORE the timed loop: a
     // regenerated sf dir invalidates their signature and a cold rebuild
     // inside the timed region charges the parse query ~10x its
-    // steady-state time (r7: mysql_binlog_parse 10.6s vs ~1.1s warm)
+    // steady-state time (measured: mysql_binlog_parse 10.6s vs ~1.1s warm)
     val selectedNames = selected.map(_._1).toSet
     for (name <- Queries.wireCached if selectedNames(name);
          fn <- SparkEntry.queries.get(name))
@@ -128,16 +128,16 @@ object Bench {
         // isolate measurements: a streaming query (merge_*/monotonic_guard/
         // replicate_stream) leaves state-store maintenance threads, and a
         // few queries cache frames — both tax every query measured after
-        // them (r4: mysql_binlog_parse/native_parse ran 1.8-1.9x slower in
+        // them (mysql_binlog_parse/native_parse ran 1.8-1.9x slower in
         // the full session than isolated). Quiesce between queries.
-        // r14 (the r12→r13 21-row regression triage, BENCH_DIFF_r14.md):
+        // From a 21-row regression triage (BENCH_DIFF_r14.md):
         // clearCache only drops the SQL cache — eager localCheckpoints
         // (the standing-index rows materialize found-pairs/index slices
         // that way) register as PERSISTENT RDDs and stay pinned in the
         // 8 GiB driver's storage pool for the rest of the run, and every
         // checkpointed stream leaves its state-store provider loaded.
         // Reproduced: confluent_decode 1.2 s isolated → 9.6 s when run
-        // after the 7 new r13 rows. Unpersist every lingering RDD block,
+        // after 7 standing-index rows. Unpersist every lingering RDD block,
         // unload state-store providers, and GC (outside the timer) so
         // the ContextCleaner can drop dead shuffle files — one row's
         // residue must not masquerade as another row's regression.
@@ -157,10 +157,10 @@ object Bench {
     val ok = results.collect { case (_, Right(v)) => v }
     val total = if (ok.nonEmpty) ok.sum else 0.0
     val nErr = results.count(_._2.isLeft)
-    // headline split (r13 verdict What's-wrong #2): lifecycle rows
+    // headline split: lifecycle rows
     // (standing-index multi-update cycles, checkpointed streams) are
     // fixed-overhead-bound at sf0.1 — report their sum separately so
-    // `value_core` is the round-over-round comparable number
+    // `value_core` is the run-over-run comparable number
     val lifecycleSum = results.collect {
       case (k, Right(v)) if Queries.lifecycle(k) => v }.sum
     val coreSum = total - lifecycleSum
@@ -171,8 +171,8 @@ object Bench {
     // — a cold-JVM measurement reads 2x low), but QUIESCED first: drop
     // the loop's GC debt, then one discarded warm-up transfer, then
     // median of 3 timed runs (a single run is within-session noise —
-    // r3 588k vs r4 529k).
-    // KPI sub-evidence (r11 verdict: a 19% driver-run drop with flat
+    // 588k vs 529k rows/s measured on the same code).
+    // KPI sub-evidence (a 19% full-run drop with flat
     // per-query wall was undecidable between sandbox noise and a real
     // transfer regression) — emit the raw per-run times of the
     // median-of-3, the row count, and the written bytes/file count, so
@@ -196,7 +196,7 @@ object Bench {
       val files = Option(dir.listFiles()).getOrElse(Array.empty)
         .filter(_.getName.startsWith("part-"))
       // per-run park overlap rides along: a parked KPI run is decidable
-      // from the artifact (r16: a 19%-class KPI drop needed a human)
+      // from the artifact (a 19%-class KPI drop once needed a human)
       val parkEv =
         if (timed.exists(_._2 >= 0.05))
           s""","park_run_secs":[${timed.map(t => r3(t._2)).mkString(",")}]"""
@@ -224,7 +224,7 @@ object Bench {
     val stealJson = stealSecs.toSeq.sortBy(_._1)
       .map { case (k, v) => s""""$k":${r3(v)}""" }.mkString("{", ",", "}")
     val stealInQueries = stealSecs.values.sum
-    // digest of the FULL per-query map (r17 verdict #6): the compact
+    // digest of the FULL per-query map: the compact
     // printed line deliberately carries only the 5 slowest rows (the
     // driver's ~2 KB tail-capture window), which let a query that got
     // FASTER read as "dropped_from_bench" in the per-query diff. The
@@ -239,10 +239,10 @@ object Bench {
     val fullJson = s"""{"metric":"total","value":$total,"unit":"sec","value_core":${r3(coreSum)},"value_lifecycle":${r3(lifecycleSum)},"lifecycle":$lifecycleNames,"queries":$qs,"rows":${results.size},"qdigest":"$qDigest","stream_busy":$streamBusyJson,"park_secs":$parkJson,"park_in_queries_secs":${r3(parkInQueries)},"steal_secs":$stealJson,"steal_in_queries_secs":${r3(stealInQueries)},"n_ok":${ok.size},"n_err":$nErr,"transfer_rows_per_sec":${rowsPerSec.round},$transferEvidence,"sf":"$sfDir"}"""
     // The final printed line must fit the driver's ~2 KB tail-capture
     // window: 158 queries x 17-digit doubles is 4.6 KB and arrives
-    // decapitated (BENCH_r04/r05 `parsed: null`). Print a COMPACT summary
-    // as the last line — totals plus only the 5 slowest queries, seconds
-    // rounded to 3 decimals (~400 bytes) — and leave the full per-query
-    // map in /tmp/graft_bench.json for forensics.
+    // decapitated (early bench artifacts read `parsed: null`). Print a
+    // COMPACT summary as the last line — totals plus only the 5 slowest
+    // queries, seconds rounded to 3 decimals (~400 bytes) — and leave the
+    // full per-query map in /tmp/graft_bench.json for forensics.
     val top5 = results.collect { case (k, Right(v)) => k -> v }
       .sortBy(-_._2).take(5)
       .map { case (k, v) => s""""$k":${r3(v)}""" }.mkString("{", ",", "}")
@@ -252,8 +252,8 @@ object Bench {
     val compact = s"""{"metric":"total","value":${r3(total)},"unit":"sec","value_core":${r3(coreSum)},"value_lifecycle":${r3(lifecycleSum)},"queries":$top5,"rows":${results.size},"qdigest":"$qDigest","park_in_queries_secs":${r3(parkInQueries)},"steal_in_queries_secs":${r3(stealInQueries)},"n_ok":${ok.size},"n_err":$nErr,"transfer_rows_per_sec":${rowsPerSec.round},$transferEvidence,"sf":"$sfDir","full":"$fullPath"}"""
     // Emission must be un-losable: streaming queries leave state-store
     // maintenance threads that race RpcEnv shutdown and can dump multi-KB
-    // stack traces AFTER our output (this cost round 4 its perf signal —
-    // BENCH_r04 `parsed: null`). Quiesce streams, silence the logger, stop
+    // stack traces AFTER our output (this once cost a whole perf signal:
+    // the artifact read `parsed: null`). Quiesce streams, silence the logger, stop
     // Spark, THEN persist the JSON to a file and print the compact line as
     // the very last output before a hard exit so no straggler thread can
     // write after it.
@@ -262,8 +262,8 @@ object Bench {
     spark.stop()
     // the full per-query map goes to /tmp AND into the working tree
     // (BENCH_full_latest.json): /tmp may not survive the session, and
-    // cross-round per-query regression review needs the committed file
-    // (r11 verdict artifact-gap item) — the next round commits it.
+    // per-query regression review across changes needs the committed file
+    // — the next change commits it.
     // The repo copy is resolved against the repo ROOT (env override,
     // else walk up from cwd to the dir holding build.sbt), not the
     // JVM's cwd — a bench launched from elsewhere must not silently
@@ -277,7 +277,7 @@ object Bench {
     }
     // an SPARK_GRAFT_ONLY-filtered run is a triage probe, not a full
     // bench — it must never clobber the committed full-artifact trail
-    // (r16: an isolated stream_sketch run overwrote the session's
+    // (an isolated stream_sketch run once overwrote the session's
     // 278-row anchor artifact with a 1-row file)
     val artifacts =
       if (only.isDefined) Seq("/tmp/graft_bench_only.json")

@@ -30,7 +30,7 @@ object GraftSession {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.parquet.aggregatePushdown", "true")
       // lz4 (LZ4_RAW frames) beats the snappy default on BOTH axes for
-      // this engine's write-heavy paths: ~9% faster encode (KpiProbe,
+      // this engine's write-heavy paths: ~9% faster encode (measured
       // steady-state medians: 760k vs 688k rows/s on the lineitem
       // transfer) and slightly smaller files (10.26 vs 10.52 MB).
       // Readable by pyarrow/duckdb/trino. zstd remains the archival
@@ -49,8 +49,8 @@ object GraftSession {
     * so state lifetime is bounded too (docs/state-layout.md).
     *
     * Opt-in rather than the local default, with a MEASURED crossover
-    * ([[graft.tools.StateStoreBench]], monotonic-guard shape, local[32],
-    * r13 — b1 = state-build batch, b2 = full-state redelivery commit):
+    * (monotonic-guard shape, local[32] — b1 = state-build batch, b2 =
+    * full-state redelivery commit):
     *
     *   keys    HDFS b1/b2      RocksDB b1/b2
     *   10^5      4.8 /  2.4      2.5 /  1.8

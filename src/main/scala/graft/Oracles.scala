@@ -3308,7 +3308,7 @@ object Oracles {
     // one-shot containment join over the full corpus — same naive
     // all-pairs oracle by design (the bandIndexUpdate discipline,
     // exact here: no bucket-cap caveats); the micro-batch-GROUPED
-    // spelling (updateMany, r15) makes the same promise for ANY
+    // spelling (updateMany) makes the same promise for ANY
     // grouping of the arrival stream, so it shares the oracle too
     "containment_incremental" ->
       (s"""WITH d0 AS (SELECT doc_id, $toks AS tk FROM documents

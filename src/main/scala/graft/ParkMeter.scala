@@ -1,9 +1,8 @@
 package graft
 
-/** Whole-VM stall (park) detector — the bench heartbeat, shared with
-  * the measurement harnesses (RebuildScale, LinkScale) so ladder
-  * points carry their park overlap instead of being read as "minima
-  * under unknown contamination".
+/** Whole-VM stall (park) detector — the [[Bench]] heartbeat, so each
+  * measured row carries its park overlap instead of being read as a
+  * "minimum under unknown contamination".
   *
   * A daemon thread sleeps a fixed period and records every overshoot
   * beyond `threshMs` as a park interval: a stall of the whole VM
@@ -16,13 +15,13 @@ package graft
 final class ParkMeter(periodMs: Long = 100L, threshMs: Long = 250L) {
   private val parks =
     new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
-  // SUSTAINED fractional steal (r17): a host stealing 30-60% of the
+  // SUSTAINED fractional steal: a host stealing 30-60% of the
   // vCPUs continuously never produces a single >250 ms heartbeat
   // overshoot — the kernel wakes a sleeping thread promptly even under
   // 2x CPU oversubscription (measured: a 64-spinner synthetic slowed
   // rows 2-4x with ZERO heartbeat lag) — yet it inflates rows 2-6x in
-  // alphabetical bands with park_secs ~0 (the r16 verdict's band
-  // flags; reproduced in the r17 baseline: 16.6 s for a row whose
+  // alphabetical bands with park_secs ~0 (reproduced in a full
+  // baseline run: 16.6 s for a row whose
   // isolated steady state is 1.1 s). The authoritative signal is the
   // kernel's own steal accounting: /proc/stat's cpu line, field 8, is
   // cumulative jiffies the hypervisor did not schedule this VM's
@@ -43,13 +42,13 @@ final class ParkMeter(periodMs: Long = 100L, threshMs: Long = 250L) {
   // container availableProcessors() returns the (smaller) quota while
   // the aggregate `cpu ` line spans the whole host/VM, and mixing the
   // two overstates whole-VM-equivalent steal enough to trip
-  // bench_diff's 15% refusal spuriously (ADVICE r17). Falls back to
+  // bench_diff's 15% refusal spuriously. Falls back to
   // availableProcessors() when /proc/stat carries no cpuN lines.
   @volatile private var nCpusStat = 0
   private def stealJiffies(): Long =
     try {
-      // reader CLOSED every tick (ADVICE r17 medium: the old unclosed
-      // BufferedReader leaked one fd per 100 ms tick for the session)
+      // reader CLOSED every tick (an unclosed BufferedReader leaked
+      // one fd per 100 ms tick for the session)
       val r = java.nio.file.Files.newBufferedReader(stealPath)
       try {
         val first = r.readLine()

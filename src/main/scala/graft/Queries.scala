@@ -88,7 +88,7 @@ object Queries {
     * in-plan fixture times fixture construction AND parse, and in a
     * crowded session the construction chain (scan -> repartition
     * exchange -> format_string) inherits every upstream session tax
-    * (r4/r5 driver benches showed 9x the isolated parse time). Reading
+    * (full benches showed 9x the isolated parse time). Reading
     * the frame back from parquet makes the timed region the parse
     * itself — which is what a queue-backed deployment measures: the
     * wire arrives from the transport, not from a projection. The build
@@ -111,9 +111,9 @@ object Queries {
     * write-read cycle) and checkpointed streaming rows (per-microbatch
     * commit/checkpoint cost on a handful of rows). At sf0.1 these are
     * ~90% fixed cost, which both inflates the headline wall and buries
-    * genuine per-query drift (r13 verdict, What's-wrong #2). The bench
-    * reports their sum separately (`value_lifecycle`) so the headline
-    * `value_core` stays comparable round-over-round; their SCALE story
+    * genuine per-query drift. The bench reports their sum separately
+    * (`value_lifecycle`) so the headline `value_core` stays comparable
+    * from run to run; their SCALE story
     * lives in the fresh-sf ladder (PLANS.md), not the sf0.1 wall. */
   val lifecycle: Set[String] = Set(
     // standing-index lifecycles (multi-update + compact over a lake)
@@ -126,9 +126,9 @@ object Queries {
     "replicate_stream", "replicate_stream_fs", "monotonic_guard",
     "stream_dedup_lsh", "stream_sketch", "stream_join", "stream_enrich",
     "watermark_dedup",
-    // multi-phase fixed-overhead rows missed by the r14 split (r14
-    // verdict #4): a 5-phase table-set surgery (each phase its own
-    // write-read cycle) and a checkpointed multi-table foreachBatch
+    // multi-phase fixed-overhead rows missed by the first split: a
+    // 5-phase table-set surgery (each phase its own write-read cycle)
+    // and a checkpointed multi-table foreachBatch
     // merge — both ~90% phase/commit overhead at sf0.1
     "add_tables_lifecycle", "merge_multitable")
 
@@ -835,7 +835,7 @@ object Queries {
           col("o_orderdate"), col("o_orderpriority")))
         // the drifted table stands in for a STORED replica (reality:
         // read from disk); materialize it once instead of re-deriving
-        // the planted drift in every diff/apply leg (r16 scan census:
+        // the planted drift in every diff/apply leg (scan census:
         // 11 scans in this row's executed plan)
         .localCheckpoint()
       // the repair batch is drift-sized by contract and applyRepair
@@ -1115,7 +1115,7 @@ object Queries {
       // (reality: read from the stream/log); materialize it once —
       // foldWithExtrema consumes it twice (additive delta + extrema
       // scan) and the lazy plan re-derived the 3-leg fixture union per
-      // consumer (r16 scan census: 13 scans in this row's plan)
+      // consumer (scan census: 13 scans in this row's plan)
       val st = Rollup.foldWithExtrema(s0,
         Rollup.retractions(changes).localCheckpoint(),
         base, keys, mets)
@@ -1172,7 +1172,7 @@ object Queries {
       // the cross-engine compare never rides on float rounding ties.
       import graft.functions.Sketches
       val o = t(s, dir, "orders")
-      // eager checkpoints (r16 scan census): each 256-row sketch is
+      // eager checkpoints (scan census): each 256-row sketch is
       // consumed by BOTH the union and the intersection join — without
       // materialization each consumer re-ran the corpus scan (6 scans
       // measured for a row whose whole point is fixed-size sketches)
@@ -1964,7 +1964,7 @@ object Queries {
         pmod(graft.functions.Hashing.hex8ToLong(
           concat(lit("split:"), col("doc_id").cast(StringType))),
           lit(10L)) === 0)
-      // eager checkpoint (r16 session 2 diamond sweep): pairs is
+      // eager checkpoint (diamond sweep): pairs is
       // candidate-pair-sized (the banded-candidate OUTPUT, never
       // all-pairs) and is probed from BOTH directions below — without
       // it the whole shingle+minhash+band pipeline runs twice
@@ -3268,7 +3268,7 @@ object Queries {
         try q.processAllAvailable() finally q.stop()
       }
       // one LSN of state per key: route the store by the measured key
-      // count (the StateStoreBench crossover — the sf10 spelling of
+      // count (the measured store crossover — the sf10 spelling of
       // this query was the bench's worst honest ratio precisely
       // because 15M keys rode the default store's full-state commit)
       graft.GraftSession.withStateStoreFor(s, o.count()) {
@@ -3360,7 +3360,7 @@ object Queries {
       // guard state is one LSN per key: route the store by the key
       // count (free here — the feed is already collected); at sf0.1
       // this stays on the default provider, at sf10+ it crosses to
-      // RocksDB+changelog (the measured StateStoreBench crossover)
+      // RocksDB+changelog (the measured store crossover)
       graft.GraftSession.withStateStoreFor(s, rows.length.toLong) {
         val q = graft.streaming.CdcStream.replicate(guarded, state,
           s"$base/ckpt", Seq("k"),
@@ -3428,7 +3428,7 @@ object Queries {
         .monotonicGuard(stream, "__key").drop("__key")
       // the guard holds one LSN per order key: route the state store by
       // the MEASURED key count (metadata-cheap parquet count) — past the
-      // StateStoreBench crossover the default store's full-state commit
+      // measured crossover the default store's full-state commit
       // goes superlinear (81.6 s/batch at 10^7 keys; RocksDB+changelog
       // 24.9 s), below it the default is faster. This is the sizing
       // rule from GraftSession.scaleStreamingState, encoded.
@@ -4261,7 +4261,7 @@ object Queries {
       // deltas are BATCH-sized by contract and the step expansion
       // references each twice (dA x B, dA x dB / A x dB, dA x dB) —
       // without materialization every reference re-runs the two-sided
-      // delta construction (r16 scan census: 21 scans in this row's
+      // delta construction (scan census: 21 scans in this row's
       // executed plan; exchange reuse never fires across re-aliased
       // branches)
       val dA = IncrementalJoin.delta(
@@ -4311,9 +4311,9 @@ object Queries {
       // the curation chain: drop the degenerate tails (gate), then
       // clip what survives (winsorize) — ONE approx_count_distinct
       // decision pre-pass threads through both stages via domainHint
-      // (the r13 verdict task-8 shape: per-stage estimates doubled a
-      // corpus scan; a gate only shrinks the domain, so the pre-gate
-      // estimate stays an honest branch pick for the survivor stage)
+      // (per-stage estimates once doubled a corpus scan; a gate only
+      // shrinks the domain, so the pre-gate estimate stays an honest
+      // branch pick for the survivor stage)
       val d = t(s, dir, "documents").select(col("doc_id"), col("n_chars"))
       val est = Some(Quantiles.estimateDomain(d, "n_chars"))
       val gated = Quantiles.gate(d, "n_chars",
@@ -4523,15 +4523,14 @@ object Queries {
     }),
 
     "containment_compact" -> ((s, dir) => {
-      // containment-index MAINTENANCE mid-stream (r14 — the one
-      // standing index that lacked a compaction entry point): compact
-      // the postings + frozen-df lakes between the second and third
-      // update; stored ranks ride the rows, so the remaining updates'
-      // answers — and the cumulative union — must equal the
+      // containment-index MAINTENANCE mid-stream: compact the
+      // postings + frozen-df lakes between the second and third update;
+      // stored ranks ride the rows, so the remaining updates' answers
+      // — and the cumulative union — must equal the
       // uncompacted twin's exactly (containment_incremental's shared
       // naive all-pairs oracle). The fresh-sf10 ladder measures WHY:
       // without cadence the three per-update probe reads turn
-      // listing-bound (PLANS.md r14).
+      // listing-bound (PLANS.md).
       val base = "/tmp/graft_containment_idx_cpt"
       org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
         .delete(new org.apache.hadoop.fs.Path(base), true)
@@ -4555,7 +4554,7 @@ object Queries {
     }),
 
     "containment_update_many" -> ((s, dir) => {
-      // micro-batch GROUPING (r15): the same corpus arrives in six
+      // micro-batch GROUPING: the same corpus arrives in six
       // batches but the index is updated three times, two batches per
       // lake scan via containmentIndexUpdateMany — the documented
       // 100-TB amortization of the update's one linear term (the
@@ -4584,7 +4583,7 @@ object Queries {
     }),
 
     "embedding_rebuild" -> ((s, dir) => {
-      // the over-cap recovery path (r15): the standing embedding index
+      // the over-cap recovery path: the standing embedding index
       // is built incrementally, then REBUILT offline at a raised cap —
       // the exact recovery embeddingIndexUpdate's fail-fast exception
       // prescribes. The rebuild re-buckets the lake from its stored

@@ -45,7 +45,9 @@ object TransferYaml {
       cleanup = root.getOrElse("cleanup", "disabled").toString match {
         case "drop" => Sinks.Drop
         case "truncate" => Sinks.Truncate
-        case _ => Sinks.Disabled
+        case "disabled" => Sinks.Disabled
+        case other => throw new IllegalArgumentException(
+          s"cleanup must be drop, truncate or disabled, got '$other'")
       },
       errorsOutput = root.get("errors_path")
         .map(p => ErrorsOutput.ToPath(p.toString): ErrorsOutput)
@@ -53,23 +55,41 @@ object TransferYaml {
       checkpointDir = root.get("checkpoint").map(_.toString))
   }
 
+  /** A typed config value: `key` of `block` parsed by `kind`, or
+    * `default` when the key is absent. A missing required key or a value
+    * that does not parse fails naming the block, the key and the value. */
+  private def typed[A](kind: Kind[A], block: String, m: Map[String, Any],
+                       key: String, default: Option[A] = None): A =
+    m.get(key) match {
+      case Some(v) => kind.parse(String.valueOf(v)).getOrElse(
+        throw new IllegalArgumentException(
+          s"$block: $key must be ${kind.what}, got '$v'"))
+      case None => default.getOrElse(throw new IllegalArgumentException(
+        s"$block: missing required key '$key'"))
+    }
+
+  private final case class Kind[A](what: String, parse: String => Option[A])
+  private val IntKey = Kind("an integer", _.toIntOption)
+  private val LongKey = Kind("an integer", _.toLongOption)
+  private val BoolKey = Kind("true or false", _.toBooleanOption)
+
   private def sourceOf(m: Map[String, Any]): SourceConfig =
     m("kind").toString match {
       case "parquet" => SourceConfig.Parquet(m("path").toString)
       case "csv" => SourceConfig.Csv(m("path").toString,
         m.getOrElse("delimiter", ",").toString,
-        m.getOrElse("header", "true").toString.toBoolean)
+        typed(BoolKey, "src", m, "header", Some(true)))
       case "jsonl" => SourceConfig.JsonLines(m("path").toString)
       case "text" => SourceConfig.Text(m("path").toString)
       case "jdbc" => SourceConfig.Jdbc(m("url").toString, m("table").toString,
         m.get("partition_column").map(_.toString),
-        m.getOrElse("lower_bound", "0").toString.toLong,
-        m.getOrElse("upper_bound", "0").toString.toLong,
-        m.getOrElse("num_partitions", "1").toString.toInt)
+        typed(LongKey, "src", m, "lower_bound", Some(0L)),
+        typed(LongKey, "src", m, "upper_bound", Some(0L)),
+        typed(IntKey, "src", m, "num_partitions", Some(1)))
       case "kafka" => SourceConfig.Kafka(m("bootstrap").toString,
         m("topic").toString,
         m.getOrElse("starting_offsets", "earliest").toString)
-      case "sample" => SourceConfig.Sample(m("rows").toString.toLong)
+      case "sample" => SourceConfig.Sample(typed(LongKey, "src", m, "rows"))
       case "text_stream" => SourceConfig.TextStream(m("dir").toString)
       case other => throw new IllegalArgumentException(s"source kind $other")
     }
@@ -113,9 +133,7 @@ object TransferYaml {
       case "rename_tables" => T.RenameTables(
         asMap(cfg("mapping")).map { case (k, v) => k -> v.toString })
       case "mask_field" => T.MaskField(strs("columns"), cfg("salt").toString,
-        cfg.getOrElse("hmac", "true").toString.toBooleanOption.getOrElse(
-          throw new IllegalArgumentException(
-            s"mask_field: hmac must be true or false, got '${cfg("hmac")}'")))
+        typed(BoolKey, id, cfg, "hmac", Some(true)))
       case "sql" => T.SqlTransform(cfg("query").toString,
         cfg.getOrElse("view", "table").toString)
       case "clickhouse_sql" => T.SqlTransform(
@@ -131,10 +149,10 @@ object TransferYaml {
       case "raw_doc_grouper" => T.RawDocGrouper(strs("keys"))
       case "raw_cdc_doc_grouper" => T.RawCdcDocGrouper(strs("keys"))
       case "sharder" => T.Sharder(strs("columns"),
-        cfg("parts").toString.toInt,
-        cfg.getOrElse("stable", "false").toString.toBoolean)
+        typed(IntKey, id, cfg, "parts"),
+        typed(BoolKey, id, cfg, "stable", Some(false)))
       case "table_splitter" => T.TableSplitter(cfg("table").toString, strs("columns"))
-      case "batch_splitter" => T.BatchSplitter(cfg("parts").toString.toInt)
+      case "batch_splitter" => T.BatchSplitter(typed(IntKey, id, cfg, "parts"))
       case "dbt" => T.DbtTransform(cfg("project").toString,
         cfg("select").toString,
         cfg.getOrElse("view", "this").toString)

@@ -450,7 +450,7 @@ object Dedup {
     // Docs lose the dropped shingles from BOTH the intersection and
     // their sizes, so jaccard stays a true Jaccard over the filtered
     // shingle universe.
-    // eager checkpoints (r16 session 2 diamond sweep): grouped feeds
+    // eager checkpoints (diamond sweep): grouped feeds
     // both the size model and the pair stream, sizes is joined from
     // both pair sides — exchange reuse never deduplicates re-aliased
     // branches, so each consumer re-ran the corpus shingle explode
@@ -564,7 +564,7 @@ object Dedup {
   def prefixJaccardPairs(df: DataFrame, textCol: String, idCol: String,
                          shingleN: Int = 3, theta: Double = 0.5): DataFrame = {
     require(theta > 0 && theta <= 1, "theta in (0, 1]")
-    // eager checkpoint (r16 session 2 diamond sweep): the posting
+    // eager checkpoint (diamond sweep): the posting
     // frame feeds df counts, ranking, verify legs and sizes — without
     // materialization each consumer re-runs the corpus shingle explode
     // (exchange reuse never fires across re-aliased branches; measured
@@ -596,7 +596,7 @@ object Dedup {
     // combinations route ngramJaccardPairs takes: that one explodes
     // every co-occurring pair per shingle group BEFORE any candidate
     // filter, so one universal hot shingle is C(N,2) structs and the
-    // job dies at corpus scale (found by Stress case 18 at 100k docs).
+    // job dies at corpus scale (measured: it OOM'd at 100k docs).
     // Here the hot groups are joined against the candidate list
     // first; work is |candidates| x doc size, whatever the df skew.
     val sizes = sh.groupBy("id").agg(count(lit(1)).as("n"))
@@ -638,7 +638,7 @@ object Dedup {
                              shingleN: Int = 3,
                              theta: Double = 0.8): DataFrame = {
     require(theta > 0 && theta <= 1, "theta in (0, 1]")
-    // eager checkpoint (r16 session 2 diamond sweep): FIVE consumers
+    // eager checkpoint (diamond sweep): FIVE consumers
     // below (df counts, ranking, candidate probe, both intersect legs,
     // sizes) each re-ran the corpus shingle explode without it
     // (measured 12 scans / 6 explodes in containment_join's executed
@@ -699,8 +699,8 @@ object Dedup {
     * keeping the PPJoin rarity property (a pure hash order is also
     * lossless but posts hot shingles into ~(1−θ) of prefixes: measured
     * 157 s vs 4 s batch on the 110k-doc universal-hot-shingle stress;
-    * with the frozen-df order the stress runs at batch speed, StressR13
-    * case 31). Shingles that EMERGE after bootstrap default to df 0
+    * with the frozen-df order the stress runs at batch speed).
+    * Shingles that EMERGE after bootstrap default to df 0
     * (rare → prefix-eligible — always safe for correctness; a shingle
     * that turns hot later degrades speed only, and a full re-rank
     * under a fresh snapshot is an offline rebuild, the standard
@@ -835,7 +835,7 @@ object Dedup {
           // Prefix candidates, then a per-doc ARRAY-INTERSECT verify.
           // Prefix candidates stay lossless at θ and keep hot shingles
           // out (an unrestricted co-occurrence aggregation meets one
-          // universal shingle |lake|×|batch| times, StressR13 case 31).
+          // universal shingle |lake|×|batch| times).
           // ONE broadcast probe of the batch's full postings, tagged by
           // prefix membership (__bpref), serves every candidate
           // direction. Its stream side is the lake rows either direction
@@ -1181,7 +1181,7 @@ object Dedup {
     * cluster like the update's append (without it one task wrote every
     * `bucket=` dir serially, measured 21.5 s of a 31 s rebuild).
     *
-    * Cadence (fresh-sf10 ladder, measured with `graft.tools.RebuildScale`):
+    * Cadence (measured on a fresh-sf10 ladder):
     * rebuild wall grows linearly with the lake past a fixed
     * intercept — ~21 s at 40k vectors, ~55 s at 168k (park-free
     * minima; one rebuild ≈ 2-4 incremental updates' wall at 8k-vector
@@ -1371,13 +1371,13 @@ object Dedup {
   def semanticDedup(df: DataFrame, centroids: DataFrame, vecCol: String,
                     idCol: String, minCos: Double,
                     maxCellSize: Int = 100000): DataFrame = {
-    // eager checkpoint (r16 scan census): the assignment table feeds
+    // eager checkpoint (scan census): the assignment table feeds
     // the cell-size model, both self-join legs and the final verdict —
     // without materialization each consumer re-ran the IVF assign over
     // the corpus (9 scans measured). The (id, centroid, vector) table
     // is what a real semantic-dedup pipeline persists between the
     // assign and pair phases. The vector CARRIES through the assign
-    // projection (ADVICE r16): the previous spelling joined the assign
+    // projection: the previous spelling joined the assign
     // back to df on idCol, which silently dropped NULL-id rows and
     // multiplied duplicate ids — "returns every vector" is the
     // contract, and a pure projection keeps it by construction.

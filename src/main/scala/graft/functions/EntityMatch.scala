@@ -122,7 +122,7 @@ object EntityMatch {
     * block key. Output: (dKeyCol, master key, dist), one row per
     * linked pair, deduped across shared blocks.
     *
-    * Cost discipline (r13→r14: `entity_match_edit2` 25 s → ~6 s):
+    * Cost discipline (measured: `entity_match_edit2` 25 s → ~6 s):
     *  - the block join key ships as a 64-bit hash, not the O(length)
     *    key string — with [[deletionBlocker2]] a 30-char name emits
     *    ~200-450 keys × ~20-30 bytes, so hashing cuts the exploded
@@ -137,8 +137,8 @@ object EntityMatch {
     *    block would appear where the unhashed spelling excludes it —
     *    probability ~n²·2^-64, negligible but nonzero; callers
     *    needing exact semantic blocking should verify the block
-    *    predicate downstream or accept the documented odds (r14
-    *    ADVICE review: documented as probabilistic by design);
+    *    predicate downstream or accept the documented odds
+    *    (probabilistic by design);
     *  - the free length-band prune (ed(a,b) ≥ |len(a)-len(b)|) runs
     *    before the distance;
     *  - the distance is the BANDED levenshtein (threshold form):
@@ -157,8 +157,8 @@ object EntityMatch {
     *    streams the 65M candidates through the banded distance
     *    map-side and shuffles only the answer-sized survivor set.
     *
-    * OPERATING ENVELOPE + candidate budget (r16 verdict: the third
-    * LinkScale decade): filter-first is still quadratic in per-block
+    * OPERATING ENVELOPE + candidate budget (the third measured scale
+    * decade): filter-first is still quadratic in per-block
     * occupancy. On precision-degenerate corpora (structured ids whose
     * deletion neighborhoods collapse onto shared keys) candidates grow
     * ~quadratically in masters — fresh-sf1 measured 296M candidates,
@@ -206,33 +206,16 @@ object EntityMatch {
       .agg(min(col("dist")).as("dist"))
   }
 
-  /** The exact candidate-row count the block join would stream:
-    * Σ over block keys of (dirty occupancy × master occupancy) —
-    * pre-length-prune, pre-dedup (a multi-block pair counts once per
-    * shared block, exactly like the join). Runs on the HASHED keys
-    * the join itself ships (the first spelling grouped the raw key
-    * strings and cost ~3× the non-degenerate link wall — measured
+  /** Per-hashed-block candidate products: Σ over block keys of
+    * (dirty occupancy × master occupancy) is the exact candidate-row
+    * count the block join would stream — pre-length-prune, pre-dedup (a
+    * multi-block pair counts once per shared block, exactly like the
+    * join). Runs on the HASHED keys the join itself ships (grouping the
+    * raw key strings cost ~3× the non-degenerate link wall — measured
     * 131 s vs a 47 s link at fresh-sf1; 8-byte hashes with map-side
-    * combine make the guard a fraction of the join it protects).
-    * Exact modulo 2^-64 hash collisions, like the join. Public so
-    * scale harnesses (LinkScale) can report the guard's number next
-    * to the measured census. */
-  def candidateEstimate(dirty: DataFrame, dKey: String, dName: String,
-                        master: DataFrame, mKey: String, mName: String,
-                        blocker: Column => Column): Long = {
-    // widen BEFORE the explode, like link(): a single-split source
-    // would otherwise run the O(rows·length²) key generation on one
-    // core (the same trap widen() documents for the join's map side)
-    val dRaw = widen(dirty).select(col(dKey), col(dName),
-      explode(blocker(col(dName))).as("__bk"))
-    val mRaw = widen(master).select(col(mKey), col(mName),
-      explode(blocker(col(mName))).as("__bk"))
-    occupancy(dRaw, mRaw).agg(coalesce(sum("__cand"), lit(0L)))
-      .first().getLong(0)
-  }
-
-  /** Per-hashed-block candidate products; `__block` rides along so
-    * the failure path can resolve hot hashes back to key names. */
+    * combine make the guard a fraction of the join it protects). Exact
+    * modulo 2^-64 hash collisions, like the join. `__block` rides along
+    * so the failure path can resolve hot hashes back to key names. */
   private def occupancy(dRaw: DataFrame, mRaw: DataFrame): DataFrame =
     dRaw.select(xxhash64(col("__bk")).as("__block"))
       .groupBy("__block").agg(count(lit(1)).as("__dc"))
@@ -294,7 +277,7 @@ object EntityMatch {
     // the CURRENT width from the pre-adaptive physical plan rather
     // than df.rdd: constructing the RDD finalizes the AQE plan and
     // can EXECUTE upstream stages whose work the repartition below
-    // then repeats (ADVICE r14). For a plan whose partitioning is
+    // then repeats. For a plan whose partitioning is
     // unknown pre-execution (e.g. a bare file scan) numPartitions
     // reads 0 and we repartition — the safe side: the shuffle moves
     // only the raw pre-explode names, input-sized.

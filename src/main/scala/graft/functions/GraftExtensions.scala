@@ -29,8 +29,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 object GraftFunctions {
   type Builder = Seq[Expression] => Expression
 
-  /** Evaluate a scalar argument that must be a plan-time Int — ADVICE
-    * r15: matching only `Literal(_: Int)` rejected BIGINT literals
+  /** Evaluate a scalar argument that must be a plan-time Int —
+    * matching only `Literal(_: Int)` rejected BIGINT literals
     * (`graft_shingles(t, 3L)`, `CAST(3 AS BIGINT)`) and any foldable
     * arithmetic (`2 + 1`), all of which a SQL user legitimately
     * writes. Any foldable integral expression folds here; a value

@@ -93,7 +93,7 @@ object ImageDedup {
   def nearDupPairs(hashed: DataFrame, idCol: String = "doc_id",
                    maxHamming: Int = 6, bucketCap: Int = 1000): DataFrame = {
     val clean = hashed.filter(col("b0").isNotNull)
-    // eager checkpoint (r16 scan census): the band postings feed the
+    // eager checkpoint (scan census): the band postings feed the
     // bucket-cap model AND both pair-join legs — without it every
     // consumer re-ran the upstream image decode + dHash (4 scans / 4
     // explodes measured; the decode is the expensive kernel). Four

@@ -3,9 +3,9 @@ package graft.functions
 import org.apache.spark.sql.DataFrame
 
 /** Materialization policy for one-shot operators that pin a
-  * CORPUS-SIZED intermediate frame (r16 verdict #3 / ADVICE).
+  * CORPUS-SIZED intermediate frame.
   *
-  * Background: the r16 scan-census sweep showed Spark's exchange reuse
+  * Background: the scan-census sweep showed Spark's exchange reuse
   * never deduplicates re-aliased derived branches, so any operator
   * whose intermediate feeds N consumers re-runs the corpus pass N
   * times unless the frame is eagerly materialized. For BOUNDED frames
@@ -35,7 +35,7 @@ import org.apache.spark.sql.DataFrame
   * distributed write+read. Unset (the default, and the right call at
   * bench scale on local[32]) it stays `localCheckpoint(true)`.
   *
-  * Streaming contract (ADVICE r16): BOTH spellings are actions — the
+  * Streaming contract: BOTH spellings are actions — the
   * wrapped operators execute at DataFrame-CONSTRUCTION time and throw
   * `AnalysisException` on a streaming Dataset. Every caller of this
   * helper is a batch corpus operator by design; feed streams through

@@ -107,9 +107,9 @@ object Quantiles {
     val hist = histogram(df, valueCol)
     // a caller-supplied domain estimate skips the decision pre-pass —
     // a gate→winsorize chain over the same frame should pay for ONE
-    // approx_count_distinct corpus scan, not one per stage (r13
-    // verdict task 8); the branches are value-identical, so any
-    // honest estimate only picks the plan shape
+    // approx_count_distinct corpus scan, not one per stage; the
+    // branches are value-identical, so any honest estimate only picks
+    // the plan shape
     val domain = domainHint.getOrElse(domainAndCount(df, valueCol)._1)
     val cum =
       if (domain <= smallDomainLimit) {
@@ -247,7 +247,7 @@ object Quantiles {
     * decision — [[groupedMadOutliers]] reuses its first estimate for
     * the deviation pass (|v − med_g| is a function of (g, v), so its
     * pair count is bounded by the first pass's), halving the
-    * decision-pass cost that doubled the MAD bench row in r12. */
+    * decision-pass cost that once doubled the MAD bench row. */
   private def groupedThresholdImpl(df: DataFrame, groupCol: String,
                                    valueCol: String, permille: Int,
                                    smallDomainLimit: Long, buckets: Int,
@@ -286,8 +286,8 @@ object Quantiles {
     * take a single-partition cumulative + broadcast join; larger
     * domains switch to [[cumTwoLevel]] + a value-keyed shuffle join —
     * a 10^7-plus distinct-value domain must never be broadcast to the
-    * driver nor moved through one window partition (stress-proven at
-    * 10^7 distinct values, StressSpec "percentiles high-cardinality"). */
+    * driver nor moved through one window partition (measured at 10^7
+    * distinct values; QuantilesSpec checks the plan shape). */
   def percentiles(df: DataFrame, valueCol: String,
                   smallDomainLimit: Long = 1000000L,
                   buckets: Int = 256): DataFrame = {

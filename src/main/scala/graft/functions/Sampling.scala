@@ -65,7 +65,7 @@ object Sampling {
     val perDoc = df.select(col(strataCol).as("stratum"),
       col(idCol).cast("string").as("__k"),
       size(TextAnalysis.tokens(col(textCol))).cast("long").as("__nt"))
-    // eager checkpoint (r16 session 2): byStratum is stratum-domain-
+    // eager checkpoint: byStratum is stratum-domain-
     // sized and feeds totals + rates — without it each consumer re-ran
     // the corpus tokenize scan (measured 5 scans where the documented
     // shape is two: one stats pass, one membership pass)
@@ -109,7 +109,7 @@ object Sampling {
                          budgetNum: Int, budgetDen: Int): DataFrame = {
     val perDoc = df.select(col(strataCol).as("stratum"),
       col(idCol).cast("string").as("__k"))
-    // eager checkpoint (r16 session 2): same two-scan restoration as
+    // eager checkpoint: same two-scan restoration as
     // tokenBudgetSummary — the stratum stat frame feeds totals + rates
     val byStratum = perDoc.groupBy("stratum")
       .agg(count(lit(1)).as("n_docs"))
@@ -189,7 +189,7 @@ object Sampling {
       .withColumn("__b",
         pmod(conv(substring(md5(col("__tok")), 1, 4), 16, 10).cast("long"),
           lit(buckets.toLong)))
-    // ONE corpus tokenize+md5 pass (r16): the bucket-count models
+    // ONE corpus tokenize+md5 pass: the bucket-count models
     // (rawC/tgtC/totals) are pure roll-ups of the per-doc bucket
     // counts, so they derive from `perDoc` — previously each re-ran
     // the token explode + md5 over the corpus (4 passes total,
@@ -198,8 +198,8 @@ object Sampling {
     // constant) so the target slice stays separable.
     // Eagerly checkpointed: plan-level sharing does NOT happen here —
     // analyzer re-aliasing across the four consumers breaks exchange
-    // identity, so ReuseExchange/AQE deduplicates nothing (measured
-    // r16 session 2: 4 file scans, 4 explodes, 0 reuses without
+    // identity, so ReuseExchange/AQE deduplicates nothing (measured:
+    // 4 file scans, 4 explodes, 0 reuses without
     // this). The frame is bounded at docs × min(doc-vocab, `buckets`)
     // rows — the materialization, not the recompute, is the 100-TB
     // shape.

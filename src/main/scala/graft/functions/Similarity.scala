@@ -34,8 +34,8 @@ object Similarity {
     * (same element widening, same left-to-right IEEE accumulation) but
     * stays inside whole-stage codegen — the HOF spelling interprets
     * two lambda chains per evaluation, the measured bottleneck on
-    * candidate-pair volumes (156M pairs: 408s interpreted vs the
-    * primitive loop; Stress case 6). */
+    * candidate-pair volumes (156M pairs at 50k vectors: 408s
+    * interpreted vs the primitive loop). */
   def dot(a: Column, b: Column): Column =
     org.apache.spark.sql.graft.bridge.column(
       org.apache.spark.sql.graft.DotProductExpr(
@@ -105,7 +105,7 @@ object Similarity {
     * per map task and ships only those — at ANN candidate volumes
     * (100 queries x 500k corpus = 50M pairs) that is the difference
     * between sorting 50M rows and merging 100*k*tasks heap entries
-    * (measured: pqTopK 13.1s -> 8.2s on the Stress case; the scoring
+    * (measured: pqTopK 13.1s -> 8.2s at 100 queries x 500k; the scoring
     * projection dominates what remains). Ordering (score DESC,
     * neighbor ASC) is identical to the window spelling, so results
     * stay bit-identical under every oracle. */
@@ -157,7 +157,7 @@ object Similarity {
   def contrastivePairs(queries: DataFrame, corpus: DataFrame,
                        vecCol: String, idCol: String,
                        kPos: Int = 3, kNeg: Int = 5): DataFrame = {
-    // Deliberately NOT checkpointed (r16 scan census): pos feeds both
+    // Deliberately NOT checkpointed (scan census): pos feeds both
     // the negative anti-join and the final union, but the measured A/B
     // says the lazy double-run wins at this shape (0.77 s lazy vs
     // 1.10 s checkpointed) — same finding as [[bitextMine]]: when the
@@ -318,8 +318,8 @@ object Similarity {
     * right spelling: generated code grows with k*dims and a stage in
     * the hundreds of centroids overflows janino into interpreted
     * fallback. The loop expression takes over — same values, O(1)
-    * generated code. 64 is the largest k the stress suite has proven
-    * comfortably inside codegen limits (Stress case 3). */
+    * generated code. 64 is the largest k measured comfortably inside
+    * codegen limits (500k x 64-dim corpus). */
   private val literalCentroidLimit = 64
 
   /** Large-k spelling of [[bestCell]]: one compact codegen loop over a
@@ -533,7 +533,7 @@ object Similarity {
     * and Catalyst's projection collapse inlines a computed expression
     * into every reference — k interpreted re-evaluations per row,
     * because higher-order array lambdas never enter whole-stage
-    * codegen. Measured 20x+ on a 500k corpus at k=16 (Stress case 3):
+    * codegen. Measured 20x+ on a 500k corpus at k=16:
     * materialize the reconstruction first (read it back from storage,
     * or cache/localCheckpoint). */
   def ivfAssign(df: DataFrame, centroids: DataFrame, vecCol: String,
@@ -543,7 +543,7 @@ object Similarity {
     // carryCols ride the projection so consumers that need the vector
     // (or any payload) alongside the cell id stay join-free: a join
     // back on idCol would silently drop NULL ids and multiply
-    // duplicates (ADVICE r16 on semanticDedup) — a pure projection
+    // duplicates — a pure projection
     // keeps every input row by construction
     df.withColumn("__best", assignStruct(col(vecCol), cents, roundTo))
       .select(col(idCol) +: col("__best.centroid_id").as("centroid_id")
@@ -661,7 +661,7 @@ object Similarity {
     val scorer = top2.getOrElse((qs: DataFrame, corpus: DataFrame) =>
       bruteForceTopK(qs, corpus, vecCol, idCol, k = 2, roundTo,
         excludeSelf = false))
-    // Deliberately NOT checkpointed (r16 scan census): each ranked
+    // Deliberately NOT checkpointed (scan census): each ranked
     // table IS consumed twice (rank-1 mutuality + rank-2 margin legs)
     // and the lazy plan re-runs the scorer per consumer — but the
     // measured A/B says the re-run is CHEAPER than materializing

@@ -31,7 +31,7 @@ object TextAnalysis {
   /** Adjacent-token bigrams as space-joined strings, via the native
     * shingle expression ([[org.apache.spark.sql.graft.ShinglesExpr]])
     * — one byte pass per doc where the transform/element_at lambda
-    * tree ran interpreted per bigram (the r15 shingle lesson; tokens
+    * tree ran interpreted per bigram (the shingle lesson; tokens
     * are space-free by construction, so the joined string is a
     * lossless pair encoding and `substring_index(bg, ' ', ±1)`
     * recovers w1/w2 exactly, empty edge tokens included). Callers
@@ -315,8 +315,8 @@ object TextAnalysis {
     * element copies — the 512 default keeps that at ~130k copies per
     * bucket (sub-millisecond) while restart waste stays ≤ 1 bin per
     * 512 docs (<0.5% at ~1 doc/bin); total work is O(N·idsPerBucket),
-    * linear in the corpus for the fixed knob (stress-proven: 10⁶ docs
-    * in seconds, StressR11 case 27). Global bin ids come from the same
+    * linear in the corpus for the fixed knob (measured: 10⁶ docs in
+    * seconds). Global bin ids come from the same
     * two-level base-offset discipline as [[packSequences]]: per-bucket
     * bin counts cumulate over the bucket-totals frame. Zero-token
     * docs are excluded (they occupy no sequence). All integers,
@@ -374,13 +374,13 @@ object TextAnalysis {
     * on. Two balanced shuffles (doc-token, then token) plus a
     * broadcast of the one-row corpus count.
     *
-    * EAGER by contract (r16 reuse fix): construction materializes the
+    * EAGER by contract (the reuse fix): construction materializes the
     * per-doc tf table — a Spark job runs at call time; streaming
     * inputs are unsupported ([[Materialize]] has the policy). */
   def tfidfKeywords(df: DataFrame, textCol: String, idCol: String,
                     k: Int = 3): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // eager checkpoint (r16 session 2): tf feeds both the df roll-up
+    // eager checkpoint: tf feeds both the df roll-up
     // and the scoring join; exchange reuse never deduplicates the two
     // branches, so the corpus explode ran twice (measured 3 scans /
     // 2 explodes). The per-doc tf table is the materialization a real
@@ -435,7 +435,7 @@ object TextAnalysis {
       .select(col(idCol), size(col("__t")).as("dl"),
         explode(col("__t")).as("token"))
     // prune to the query vocabulary BEFORE the shuffle; eager
-    // checkpoint (r16 session 2): tf is query-vocabulary-bounded and
+    // checkpoint: tf is query-vocabulary-bounded and
     // feeds both the df roll-up and the scoring join — without it the
     // corpus token stream re-runs per consumer (exchange reuse never
     // fires across the re-aliased branches)
@@ -640,7 +640,7 @@ object TextAnalysis {
         substring_index(col("__bg"), " ", -1).as("w2"))
       .agg(count(lit(1)).as("cb"))
       .filter(col("cb") >= minCount)
-    // eager checkpoint (r16 session 2): uni feeds the corpus total
+    // eager checkpoint: uni feeds the corpus total
     // and BOTH count-attach joins — vocab-sized, and without it the
     // token explode re-runs per consumer (exchange reuse never fires)
     val uni = df.select(explode(t).as("w"))
@@ -681,7 +681,7 @@ object TextAnalysis {
                  minCount: Long = 5, topK: Int = 10): DataFrame = {
     val tok = df.select(col(classCol).as("cls"),
       explode(tokens(col(textCol))).as("tok"))
-    // ONE corpus explode (r16 session 2): tf_t, n_c and N are pure
+    // ONE corpus explode: tf_t, n_c and N are pure
     // integer roll-ups of the (class, token) count frame, which is
     // class×vocab-bounded — previously all four consumers re-ran the
     // corpus explode (measured 4 scans / 4 explodes; exchange reuse
@@ -715,7 +715,7 @@ object TextAnalysis {
       .select(col(idCol),
         substring_index(col("__bg"), " ", 1).as("w1"),
         substring_index(col("__bg"), " ", -1).as("w2"))
-    // eager checkpoints (r16 session 2, the reuse finding): docTf is
+    // eager checkpoints (the reuse finding): docTf is
     // consumed by the model roll-up AND the scoring join, uniCounts by
     // the vocab count AND the join — plan-level exchange reuse never
     // fires across the re-aliased branches, so without materialization

@@ -305,6 +305,7 @@ object Transformers {
     * murmur3 `hash()` for speed. Random sharding = hash of all columns. */
   final case class Sharder(cols: Seq[String], parts: Int,
                            stable: Boolean = false) extends Transformer {
+    require(parts >= 1, s"sharder: parts must be >= 1, got $parts")
     val name = "sharder_transformer"
     def apply(df: DataFrame): DataFrame = {
       val key = concat_ws("\u0001", cols.map(c => col(c).cast(StringType)): _*)
@@ -331,6 +332,7 @@ object Transformers {
     * is partitioning, semantically a no-op (reference:
     * registry/batch_splitter/batch_splitter.go:36-52). */
   final case class BatchSplitter(parts: Int) extends Transformer {
+    require(parts >= 1, s"batch_splitter: parts must be >= 1, got $parts")
     val name = "batch_splitter"
     def apply(df: DataFrame): DataFrame = df.repartition(parts)
   }

@@ -5,16 +5,17 @@ import org.apache.spark.sql.catalyst.plans.logical
 import org.apache.spark.sql.execution.{CollectLimitExec, LocalTableScanExec, RangeExec, SparkPlan, GlobalLimitExec, LocalLimitExec, TakeOrderedAndProjectExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, ObjectHashAggregateExec, SortAggregateExec}
-import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import scala.util.Try
+import scala.util.control.NonFatal
 
 /** Scale-guard audit: build every registered query's physical plan and
   * flag the shapes that do not survive a 100x scale-up:
   *
   *   1. `CartesianProduct` / `BroadcastNestedLoopJoin` /
-  *      `Exchange SinglePartition` (string-level, as before);
+  *      `Exchange SinglePartition` (string-level);
   *   2. WINDOWS WITH AN EMPTY PARTITION SPEC — a corpus through one
-  *      window partition is the cliff class round 10's verdict found
-  *      twice by hand. Deliberately-bounded frames are spelled with
+  *      window partition is a cliff class found twice by hand.
+  *      Deliberately-bounded frames are spelled with
   *      [[graft.functions.WindowKeys.onePartition]], which survives as
   *      a non-empty spec, so any empty spec left is an unreviewed hit;
   *   3. HINT-FORCED broadcast builds not provably bounded — a
@@ -33,24 +34,27 @@ import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
   *      a separate hit kind (`grouped-agg-broadcast`) because a
   *      corpus-cardinality grouping key makes the frame corpus-sized —
   *      each such site must state why its key's cardinality is
-  *      feature-sized or runtime-measured.
+  *      feature-sized or runtime-measured;
+  *   4. `multi-scan`: a query outside [[graft.Queries.lifecycle]] whose
+  *      executed plan counts scans + generates >= 5 with zero
+  *      `ReusedExchange` — the signature of a hidden multi-pass diamond
+  *      (plan-level exchange reuse never deduplicates a re-aliased
+  *      derived branch, so every extra consumer of a derived frame
+  *      re-runs its corpus pass). Only this kind runs the query (a
+  *      `noop` write); the other kinds read plans.
   *
   * Some hits are INTENTIONAL (exact ANN baselines broadcast a
   * filter-selected query side; fixture-fed parsers broadcast a local
-  * relation) — every such site lives in [[reviewed]] with its bound
-  * justification. A hit NOT in the list prints as `NEW (unreviewed)`
-  * and the audit exits nonzero: new cliffs fail review instead of
-  * scrolling past. Usage: `sbt "runMain graft.tools.PlanAudit [sfDir]"`.
+  * relation) — every such site lives in [[graft.PlanAuditExceptions]]
+  * with its bound justification. [[gate]] fails on any hit NOT listed
+  * there and on any query that throws. `PlanGateSpec` runs it over
+  * every registered query at sf0.001 in the test suite; `main` runs the
+  * same gate at any scale and exits 1 when it fails.
+  * Usage: `sbt "runMain graft.tools.PlanAudit [sfDir]"`.
   */
 object PlanAudit {
   private val Flags = Seq("CartesianProduct", "BroadcastNestedLoopJoin",
     "Exchange SinglePartition")
-
-  /** query-name -> (hit-kind -> justification). Kinds are the strings
-    * printed by the audit: one of [[Flags]], `unpartitioned-window`,
-    * `unbounded-broadcast(<leaf>)`, or `grouped-agg-broadcast(<leaf>)`. */
-  private def reviewed: Map[String, Map[String, String]] = Map.empty ++
-    graft.SparkEntry.planAuditExceptions
 
   /** Bound class of a broadcast build subtree. A GROUPED aggregate does
     * NOT bound a build regardless of corpus size — a groupBy on a
@@ -171,7 +175,7 @@ object PlanAudit {
               // LogicalRDD leaves (checkpointed frames) are anonymous —
               // the nodeName alone would let any FUTURE broadcast over
               // any checkpointed frame in the same query ride a stale
-              // justification (ADVICE r16). Append the broadcast
+              // justification. Append the broadcast
               // side's output schema so the exception key names WHICH
               // frame was reviewed; a new frame = a new key = NEW hit.
               val leaves =
@@ -190,34 +194,81 @@ object PlanAudit {
     stringHits ++ windowHits ++ broadcastHits
   }
 
+  /** Scan census of an EXECUTED plan: `multi-scan` when scans +
+    * generates >= 5 with zero exchange reuse. Call after running `df`,
+    * so cached subplans print their final adaptive plans. */
+  private def multiScan(df: DataFrame): Seq[String] = {
+    val s = df.queryExecution.executedPlan.toString
+    def n(node: String) = node.r.findAllIn(s).length
+    if (n("FileScan") + n("Generate") >= 5 && n("ReusedExchange") == 0)
+      Seq("multi-scan")
+    else Nil
+  }
+
+  /** One flagged plan shape: the query, the hit kind (the key in
+    * [[graft.PlanAuditExceptions]]) and its reviewed justification, if
+    * any. */
+  final case class Hit(query: String, kind: String, why: Option[String])
+
+  /** The outcome of one [[gate]] run over `queries` registered queries. */
+  final case class GateResult(hits: Seq[Hit], errors: Seq[(String, String)],
+                              queries: Int) {
+    def unreviewed: Seq[Hit] = hits.filter(_.why.isEmpty)
+    def ok: Boolean = unreviewed.isEmpty && errors.isEmpty
+    def summary: String =
+      s"${hits.size - unreviewed.size} reviewed hits, ${unreviewed.size} " +
+        s"NEW, ${errors.size} failed queries — over $queries queries" +
+        (if (ok) "" else ": " + (unreviewed.map(h => s"${h.query}: ${h.kind}")
+          ++ errors.map { case (q, e) => s"$q threw $e" }).mkString("; "))
+  }
+
+  /** Audit every registered query against `sfDir` and review each hit
+    * against [[graft.PlanAuditExceptions]]. Each query starts and ends
+    * with no cached data, persisted RDDs, streams or loaded state
+    * stores, so its plan does not depend on what ran before it. */
+  def gate(spark: SparkSession, sfDir: String): GateResult = {
+    val reviewed = graft.SparkEntry.planAuditExceptions
+    val queries = graft.SparkEntry.queries.toSeq.sortBy(_._1)
+    val hits = Seq.newBuilder[Hit]
+    val errors = Seq.newBuilder[(String, String)]
+    reset(spark)
+    queries.foreach { case (name, fn) =>
+      try {
+        val df = fn(spark, sfDir)
+        val kinds = audit(df) ++ (
+          if (graft.Queries.lifecycle(name)) Nil
+          else {
+            df.write.format("noop").mode("overwrite").save()
+            multiScan(df)
+          })
+        kinds.foreach(k =>
+          hits += Hit(name, k, reviewed.get(name).flatMap(_.get(k))))
+      } catch { case NonFatal(e) =>
+        errors += name -> (s"${e.getClass.getSimpleName}: " +
+          Option(e.getMessage).getOrElse("").take(120))
+      } finally reset(spark)
+    }
+    GateResult(hits.result(), errors.result(), queries.size)
+  }
+
+  private def reset(spark: SparkSession): Unit = {
+    spark.streams.active.foreach(q => Try(q.stop()))
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = false))
+    Try(org.apache.spark.sql.graft.bridge.unloadStateStores())
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val spark: SparkSession = graft.GraftSession.create()
     spark.sparkContext.setLogLevel("ERROR")
-    var newHits = 0
-    var reviewedHits = 0
-    graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      try {
-        val hits = audit(fn(spark, sfDir))
-        hits.foreach { h =>
-          reviewed.get(name).flatMap(_.get(h)) match {
-            case Some(why) =>
-              reviewedHits += 1
-              println(s"[audit] $name: $h — OK ($why)")
-            case None =>
-              newHits += 1
-              println(s"[audit] $name: $h — NEW (unreviewed)")
-          }
-        }
-      } catch { case e: Throwable =>
-        println(s"[audit] $name: PLAN-ERROR ${e.getClass.getSimpleName}: " +
-          s"${Option(e.getMessage).getOrElse("").take(120)}")
-      }
-      try spark.streams.active.foreach(_.stop()) catch { case _: Throwable => }
-    }
-    println(s"[audit] done: $reviewedHits reviewed hits, $newHits NEW — " +
-      s"over ${graft.SparkEntry.queries.size} queries")
+    val result = gate(spark, sfDir)
     spark.stop()
-    if (newHits > 0) sys.exit(1)
+    result.hits.foreach(h => println(s"[audit] ${h.query}: ${h.kind} — " +
+      h.why.fold("NEW (unreviewed)")(why => s"OK ($why)")))
+    result.errors.foreach { case (q, e) => println(s"[audit] $q: PLAN-ERROR $e") }
+    println(s"[audit] done: ${result.summary}")
+    if (!result.ok) sys.exit(1)
   }
 }

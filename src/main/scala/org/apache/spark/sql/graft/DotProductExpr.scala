@@ -14,7 +14,7 @@ import org.apache.spark.sql.types._
   * codegen — each evaluation interprets two lambda chains and
   * allocates an intermediate array. At candidate-pair volumes that is
   * the measured bottleneck: 156M pair evaluations at 64 dims ran 408s
-  * interpreted (Stress case 6). This expression compiles to a plain
+  * interpreted. This expression compiles to a plain
   * primitive `for` loop inside the generated stage.
   *
   * Value-identical to the HOF spelling on well-formed input: elements

@@ -37,7 +37,7 @@ object StableHash64Expr {
   // a synchronized provider lookup + allocation, and this hash runs
   // once per SHINGLE in the minhash family — the per-row lookup was
   // measurable across the whole dedup/sampling bench tier (same fix
-  // MaskPreserveExpr got in r11)
+  // MaskPreserveExpr got)
   private val md5 = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =
       java.security.MessageDigest.getInstance("MD5")

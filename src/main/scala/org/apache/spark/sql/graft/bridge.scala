@@ -53,7 +53,7 @@ object bridge {
     * own InMemoryFileIndex (`execution.datasources` is private API
     * surface, hence bridged): above the parallel-discovery threshold
     * (32 dirs) the listing fans out as a Spark job over executors
-    * instead of a driver-side sequential walk. Measured (r17): a
+    * instead of a driver-side sequential walk. Measured: a
     * 250-partition-dir index cost 3.0 s per `fs.listFiles(path, true)`
     * driver walk vs ~0.5 s parallel — and Sinks.compact walked it
     * twice. Returns (path, bytes) for every data file (hidden/_ files
@@ -66,7 +66,7 @@ object bridge {
   }
 
   /** List a parquet lake ONCE and return both the leaf files and a
-    * DataFrame reading through that same listing (r18): a compaction
+    * DataFrame reading through that same listing: a compaction
     * pass previously listed the lake for its before-stats and then
     * `spark.read.parquet` re-listed it for partition discovery — two
     * distributed listing jobs over the same unmutated tree (measured

@@ -75,6 +75,42 @@ class TransferYamlSpec extends SparkSpec {
         |transformations:
         |  - not_a_transformer: { }
         |""".stripMargin))
+    // bad typed values, a misspelled cleanup and parts < 1 fail at parse
+    // time; each message names the block, the key and the value
+    def transfer(src: String, extra: String) =
+      s"""type: SNAPSHOT_ONLY
+         |src: $src
+         |dst: { kind: console }
+         |$extra
+         |""".stripMargin
+    def tr(block: String) = transfer("{ kind: sample, rows: 1 }",
+      s"transformations:\n  - $block")
+    val csv = "kind: csv, path: /x.csv"
+    val jdbc = "kind: jdbc, url: 'jdbc:x', table: t"
+    Seq(
+      transfer(s"{ $csv, header: maybe }", "") -> Seq("src", "header", "maybe"),
+      transfer(s"{ $jdbc, lower_bound: low }", "") ->
+        Seq("src", "lower_bound", "low"),
+      transfer(s"{ $jdbc, upper_bound: 1.5 }", "") ->
+        Seq("src", "upper_bound", "1.5"),
+      transfer(s"{ $jdbc, num_partitions: many }", "") ->
+        Seq("src", "num_partitions", "many"),
+      transfer("{ kind: sample, rows: ten }", "") -> Seq("src", "rows", "ten"),
+      transfer("{ kind: sample }", "") -> Seq("src", "rows"),
+      transfer("{ kind: sample, rows: 1 }", "cleanup: truncat") ->
+        Seq("cleanup", "truncat"),
+      tr("sharder: { columns: [id], parts: four }") ->
+        Seq("sharder", "parts", "four"),
+      tr("sharder: { columns: [id], parts: 4, stable: sure }") ->
+        Seq("sharder", "stable", "sure"),
+      tr("sharder: { columns: [id], parts: 0 }") -> Seq("sharder", "parts", "0"),
+      tr("batch_splitter: { parts: -1 }") ->
+        Seq("batch_splitter", "parts", "-1"),
+      tr("batch_splitter: { parts: x }") -> Seq("batch_splitter", "parts", "x")
+    ).foreach { case (yaml, names) =>
+      val e = intercept[IllegalArgumentException](TransferYaml.fromString(yaml))
+      assert(names.forall(e.getMessage.contains), s"${e.getMessage} <- $yaml")
+    }
   }
 
   test("mask_field config errors name the transformer and the key") {

@@ -56,9 +56,12 @@ class BitextSpec extends SparkSpec {
     // same planted perfect pair without ever scoring A x B
     val exact = Similarity.bitextMine(a, b, "v", "id", marginFloor = 1.0)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val lsh = Similarity.bitextMineLsh(a, b, "v", "id",
-        marginFloor = 1.0, planes = 4)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    val mined = Similarity.bitextMineLsh(a, b, "v", "id",
+      marginFloor = 1.0, planes = 4)
+    val plan = mined.queryExecution.executedPlan.toString
+    assert(!plan.contains("CartesianProduct") &&
+      !plan.contains("BroadcastNestedLoopJoin"), plan)
+    val lsh = mined.select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(lsh.contains((1L, 11L)))
     assert(lsh.subsetOf(exact) || exact.subsetOf(lsh) ||
       (lsh intersect exact).nonEmpty)

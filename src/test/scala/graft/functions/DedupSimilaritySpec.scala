@@ -794,6 +794,59 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(literal == loop)
   }
 
+  test("sq8 quantize and PQ encode are pure projections: no Exchange " +
+    "on the corpus path") {
+    val e = graft.Tables.load(spark, sf(), "embeddings")
+    for (df <- Seq(Similarity.quantizeInt8(e, "embedding", "vec_id"),
+                   Similarity.pqEncode(e, "embedding", "vec_id"))) {
+      val plan = df.queryExecution.executedPlan.toString
+      assert(!plan.contains("Exchange"), plan)
+      assert(df.count() == e.count())
+    }
+  }
+
+  test("prefix and containment joins stay exact when every doc shares " +
+    "one universal hot shingle") {
+    // Jaccard: 20 planted pairs (2p, 2p+1) differing in the tail token
+    // (J = 0.8) under a header every doc shares; rarity-ordered prefixes
+    // never hold the header's shingles, and the answer is exactly the
+    // planted set
+    val words = Seq("alpha", "beta", "gamma", "delta", "eps", "zeta")
+    val jdocs = (0 until 40).map { d =>
+      (d.toLong, ("the common header shares" +: words.map(w => s"$w${d / 2}") :+
+        s"tail${d % 2}").mkString(" "))
+    }.toDF("doc_id", "text")
+    val planted = (0 until 20).map(p => (2L * p, 2L * p + 1)).toSet
+    val jp = Dedup.prefixJaccardPairs(jdocs, "text", "doc_id",
+        shingleN = 3, theta = 0.5)
+      .select("id_a", "id_b").as[(Long, Long)].collect()
+      .map { case (a, b) => (math.min(a, b), math.max(a, b)) }
+    assert(jp.toSet == planted && jp.length == planted.size, jp.toSeq)
+    // containment: 30 sources open with the same 3 common tokens; every
+    // 3rd has a quote (id + 1000) of its 6 rare tokens. Exactly the 10
+    // quote -> source links reach theta = 0.8, one-shot and incremental
+    // over 3 arrivals that split quotes from their sources
+    val src = (0 until 30).map { d =>
+      (d.toLong, ("common0 common1 common2" +: (0 until 6).map(i => s"r${d}x$i"))
+        .mkString(" "))
+    }
+    val quotes = src.collect { case (d, t) if d % 3 == 0 =>
+      (d + 1000L, t.split(" ").drop(3).mkString(" ")) }
+    val cdocs = (src ++ quotes).toDF("doc_id", "text")
+    val links = quotes.map { case (q, _) => (q, q - 1000L) }.toSet
+    def quoteLinks(df: org.apache.spark.sql.DataFrame) =
+      df.filter(col("id_a") >= 1000L).select("id_a", "id_b")
+        .as[(Long, Long)].collect().toSeq
+    assert(quoteLinks(Dedup.prefixContainmentPairs(cdocs, "text", "doc_id",
+      shingleN = 3, theta = 0.8)).toSet == links)
+    val idx = java.nio.file.Files.createTempDirectory("graft_hot_cont")
+      .toString + "/idx"
+    val inc = (0 to 2).flatMap(m => quoteLinks(Dedup.containmentIndexUpdate(
+      idx, cdocs.filter(pmod(col("doc_id"), lit(3)) === m), "text", "doc_id",
+      shingleN = 3, theta = 0.8)))
+    assert(inc.toSet == links && inc.length == links.size, inc)
+  }
+
   test("large-k ivf assignment: zero Exchange, codegen survives k=1024") {
     val e = graft.Tables.load(spark, sf(), "embeddings")
     val cents = Similarity.syntheticCentroids(spark, 1024, 64, "embedding")
