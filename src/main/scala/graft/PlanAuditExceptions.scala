@@ -6,7 +6,9 @@ package graft
   * specific — "small" is not a bound; "k rows by construction" is.
   * Populated by running the audit and reviewing each hit; a hit not
   * listed here fails the gate (`PlanGateSpec`, and `PlanAudit`'s exit
-  * code).
+  * code), and so does an entry that no longer matches a hit of its
+  * query (a stale review must not pre-approve a shape the query may
+  * grow back).
   *
   * The plan-shape categories (PLANS.md "Plan audit" reviews):
   *   1. one-row broadcast stat frames through BNLJ — the canonical
@@ -35,7 +37,7 @@ object PlanAuditExceptions {
   /** C1: crossJoin(broadcast(one-row stats)) + the 1-row aggregate
     * that produces it. */
   private val oneRowStatQueries = Seq("apply_truncates", "bm25_search",
-    "class_terms", "classifier_eval", "collocations", "curriculum_shards",
+    "class_terms", "collocations", "curriculum_shards",
     "doc_tfidf", "dsir_select", "dsir_weights", "funnel_windowed",
     "hybrid_rrf", "lm_score", "nb_classify", "quantile_gate",
     // quantile_pipeline chains gate -> winsorize over ONE shared
@@ -134,8 +136,6 @@ object PlanAuditExceptions {
       gb("LogicalRDD[token,df]") ->
         ("df frame keyed by the query's tokens: query-vocabulary-sized " +
           "(corpus tokens pruned to the query vocab before the shuffle)")),
-    "classifier_eval" -> Map(gb(Rel) ->
-      "per-class stat frame: one row per label (label-domain-sized)"),
     "contrastive_pairs" -> Map(ub(Rel) ->
       "8-query fixture side; positives/negatives are k-bounded"),
     "decontaminate" -> Map(gb(Rel) ->

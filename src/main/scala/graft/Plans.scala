@@ -49,69 +49,7 @@ object Plans {
     sb ++= "buckets (StreamingSpec asserts both). `dedup_canonical` is\n"
     sb ++= "also multi-job by construction (label-propagation fixpoint,\n"
     sb ++= "one balanced node-id shuffle per round, converges in\n"
-    sb ++= "O(component diameter) rounds on shallow dup clusters).\n\n"
-    sb ++= "Measured perf notes (round 5, sf0.1 local[32]):\n\n"
-    sb ++= "- The r4 parser 'regressions' (mysql_binlog_parse 4.2->8.1s,\n"
-    sb ++= "  native_parse 3.1->5.7s) were a fixture artifact, not engine\n"
-    sb ++= "  cost: a synthetic queue wire built from one small parquet\n"
-    sb ++= "  file inherits ONE input split, serializing the whole parse\n"
-    sb ++= "  chain on one core, and r4's added E2E queries crowded that\n"
-    sb ++= "  single-core chain further. Real queue sources deliver N\n"
-    sb ++= "  partitions; repartitioning wire fixtures to cluster\n"
-    sb ++= "  parallelism (Queries.qw) restores the parallel parse path:\n"
-    sb ++= "  mysql_binlog_parse 1.2s, native_parse 1.1s - both ~3x\n"
-    sb ++= "  FASTER than their r3 times.\n"
-    sb ++= "- Bench measurements are now isolated per query (streams\n"
-    sb ++= "  stopped + cache cleared between queries) and the transfer\n"
-    sb ++= "  KPI is the median of 3 runs.\n"
-    sb ++= "- Higher-order array lambdas (aggregate/zip_with/transform)\n"
-    sb ++= "  NEVER enter whole-stage codegen. The cosine inner loop was\n"
-    sb ++= "  rebuilt as a native expression (graft_dot, DotProductExpr\n"
-    sb ++= "  with doGenCode): 156M candidate-pair cosines 408s -> 13s\n"
-    sb ++= "  (30x), ivfTopK 100q vs 500k corpus 35s -> 5s. Same IEEE\n"
-    sb ++= "  accumulation order, so all ANN oracles still hash-match.\n"
-    sb ++= "- Two companion traps measured on the SQ8 path: (a) feeding a\n"
-    sb ++= "  COMPUTED array (the dequant transform) into multi-centroid\n"
-    sb ++= "  assignment re-evaluates it per centroid after projection\n"
-    sb ++= "  collapse - materialize reconstructions first (>10min -> 46s);\n"
-    sb ++= "  (b) the optimizer's isnotnull(join key) duplicated the whole\n"
-    sb ++= "  16-centroid assignment under the probe join, tipping the\n"
-    sb ++= "  stage past janino's method limit into interpreted fallback -\n"
-    sb ++= "  KnownNotNull on the provably-non-null cell id keeps the stage\n"
-    sb ++= "  codegen'd (SQ8 ivfTopK 230s -> 3.8s, 60x). The interpreted\n"
-    sb ++= "  fallback of graft_dot also hoists its type dispatch out of\n"
-    sb ++= "  the element loop, so even fallen-back stages stay sane.\n"
-    sb ++= "- Session noise is real on this shared VM: of three full-bench\n"
-    sb ++= "  runs, the first showed a 2-10x inflated band across ~20\n"
-    sb ++= "  alphabetically-contiguous queries (confluent_http 49.9s vs\n"
-    sb ++= "  2.1-3.6s in four other sessions; total 338s) that no targeted\n"
-    sb ++= "  rerun - warm cache, cold cache, same predecessors - could\n"
-    sb ++= "  reproduce. Clean runs: 137.6s/112 queries KPI 552k, then\n"
-    sb ++= "  130.8s/118 queries KPI 691k rows/s with the round-5 operators\n"
-    sb ++= "  included and no query above 7.6s (r4: 165.6s/109 queries,\n"
-    sb ++= "  529k; r3 KPI 588k). Round-5 close runs: 177.4s/143 queries\n"
-    sb ++= "  KPI 704k rows/s, then 191.2s/151 queries KPI 630k after the\n"
-    sb ++= "  final 8 operators landed (KPI median-of-3 varies 630-704k\n"
-    sb ++= "  across sessions on this shared VM; both ends well above r3's\n"
-    sb ++= "  588k). mysql_binlog_parse 1.3s and native_parse 1.2s (the r4\n"
-    sb ++= "  'regressions' stay fixed); no query above 11.4s; the 14 new\n"
-    sb ++= "  layout/sketch/join/verification operators cost 0.3-3s each\n"
-    sb ++= "  at sf0.1. Final round-5 runs with the trigram index, the\n"
-    sb ++= "  incremental rollup, and the Delta COW merge included:\n"
-    sb ++= "  213.4s/153 queries KPI 652k, then 218.0s/154 KPI 584k\n"
-    sb ++= "  (KPI band this round: 584-704k across sessions on the\n"
-    sb ++= "  shared VM). 0 errors both runs; trigram_pruned_scan 1.4s\n"
-    sb ++= "  (fixture rewrite + index build + probe), incremental_rollup\n"
-    sb ++= "  0.9s, delta_merge 2.7s (two commits + COW upsert + COW\n"
-    sb ++= "  delete + log-replay read), parsers still flat\n"
-    sb ++= "  (mysql_binlog_parse 1.5s, native_parse 1.3s), heaviest\n"
-    sb ++= "  query 11.6s (replicate_stream / dedup_canonical, multi-job\n"
-    sb ++= "  E2E by construction). Last runs of the round: 231.2s/157\n"
-    sb ++= "  queries KPI 592k, then 224.6s/158 KPI 531k with heavy_keys\n"
-    sb ++= "  included (KPI band across all round-5 sessions on this\n"
-    sb ++= "  shared VM: 531-704k; r4 was 529k). 0 errors everywhere;\n"
-    sb ++= "  delta_cdf 2.7s (three commits + full-outer snapshot diff),\n"
-    sb ++= "  skew_profile 0.7s, gap_fill 0.7s, heavy_keys 0.6s.\n"
+    sb ++= "O(component diameter) rounds on shallow dup clusters).\n"
     headliners.foreach { name =>
       val plan = Queries.all(name)(spark, sfDir)
         .queryExecution.executedPlan.toString

@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   * base (each a key-partitioned hash join whose probe side is the
   * delta — broadcast when the batch is small), plus one |ΔV|-sized
   * consolidation shuffle. At lake scale both base states live
-  * key-bucketed (the [[Rollup.foldBucketed]] layout), so the
+  * key-bucketed (the [[graft.sinks.BucketedState]] layout), so the
   * delta-vs-base joins co-locate and touch only the buckets the batch
   * keys hash to; `A_prev ⋈ B_prev` is never recomputed.
   *
@@ -81,7 +81,7 @@ object IncrementalJoin {
     * through untouched (an anti-join against the broadcast-small set
     * of delta keys — no shuffle of the view), and only the touched
     * slice unions with the delta and re-consolidates. With the view
-    * stored key-bucketed (the [[Rollup.foldBucketed]] layout) the
+    * stored key-bucketed (the [[graft.sinks.BucketedState]] layout) the
     * pass-through is also scan-pruned to the delta's buckets. */
   def applyDelta(view: DataFrame, d: DataFrame,
                  keys: Seq[String]): DataFrame = {

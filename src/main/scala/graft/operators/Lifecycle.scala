@@ -25,7 +25,8 @@ import org.apache.spark.sql.functions._
   *     fresh — the from-scratch recovery task.
   *
   * Scale shape: all data movement is per-table distributed merges
-  * ([[CdcStream.mergeBatch]]'s bucketed, batch-pruned fold); the
+  * ([[CdcStream.mergeBatch]] into a [[graft.sinks.BucketedState]]: a
+  * batch rewrites only the buckets its keys touch); the
   * table LIST is planning metadata (tables, not rows).
   */
 object Lifecycle {

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.model.{CdcEnvelope => E}
-import graft.sinks.Swap
+import graft.sinks.{BucketedState, Swap}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -247,8 +247,9 @@ object Rollup {
     spark.read.parquet(statePath)
   }
 
-  private val BucketCol = graft.streaming.CdcStream.BucketCol
   private val Marker = "_graft_batch"
+  /** The writer call named by [[readBucketed]] when it refuses a root. */
+  private val Writer = "Rollup.foldBucketed"
 
   /** The batch id the marker records, if any. */
   private def markedBatch(fs: org.apache.hadoop.fs.FileSystem,
@@ -261,13 +262,36 @@ object Rollup {
       finally in.close()
     }
 
+  /** Recover the bucketed state at `statePath` and tell whether it
+    * already holds batch `batchId` (a replay to skip). A fold reached its
+    * commit point once its marker (the last swapped sidecar) records the
+    * batch id the swap manifest was written for, or once the sentinel is
+    * down (the only record of an unmarked fold): then only the teardown
+    * crashed and is resumed — rolling back would restore pre-fold
+    * buckets under a post-fold marker, and the replayed batch would be
+    * skipped and lost. Otherwise the swap is rolled back and the batch
+    * replays once. */
+  private def recoverFolded(spark: org.apache.spark.sql.SparkSession,
+                            statePath: String, batchId: Long): Boolean = {
+    val fs = BucketedState.fsOf(spark, statePath)
+    def marked = markedBatch(fs, new org.apache.hadoop.fs.Path(statePath, Marker))
+    BucketedState.recover(spark, statePath, b => b >= 0 && marked.contains(b))
+    batchId >= 0 && marked.contains(batchId)
+  }
+
+  /** The marker sidecar: staged beside the rewritten buckets and swapped
+    * in last. An unmarked fold (batchId = -1) moves the old marker aside
+    * and replaces it with nothing. */
+  private def marker(batchId: Long) =
+    Seq(Marker -> Some(batchId.toString).filter(_ => batchId >= 0))
+
   /** [[fold]] for HIGH-cardinality rollups (per-user, per-document):
     * the flat fold rewrites the whole group-cardinality-sized state
     * every batch, which stops being acceptable once groups number in
-    * the billions. This variant lays the state out as
-    * `statePath/__bucket=i/` dirs keyed by a stable group-key hash
-    * (the same md5 layout [[graft.streaming.CdcStream.mergeBatch]]
-    * uses for replication state) and a fold
+    * the billions. This variant keeps the state in the
+    * [[graft.sinks.BucketedState]] layout, `statePath/__bucket=i/` dirs
+    * keyed by a stable group-key hash (the layout the replication MERGE
+    * uses), and a fold
     *
     *   - aggregates the BATCH into a signed delta (map-side combined),
     *   - reads ONLY the buckets its delta touches,
@@ -277,8 +301,7 @@ object Rollup {
     * so rewrite I/O scales with the batch's key spread, never total
     * group cardinality. Unlike the replication MERGE (last-write-wins,
     * idempotent under replay) an aggregate fold is NOT idempotent, so
-    * the replay marker swaps WITH the buckets: both are children of one
-    * [[graft.sinks.Swap]] children swap, the marker moved in last. The
+    * the replay marker swaps WITH the buckets as their last sidecar. The
     * swap manifest's header records this fold's batch id: recovery
     * compares it with the root marker to tell a crash mid-swap (roll
     * back, batch replays and folds once) from a crash mid-cleanup after
@@ -291,19 +314,19 @@ object Rollup {
                    groupKeys: Seq[String], metrics: Seq[String],
                    numBuckets: Int = 64, batchId: Long = -1L): DataFrame = {
     val d = delta(retractionBatch, groupKeys, metrics)
-      .withColumn(BucketCol,
-        graft.streaming.CdcStream.bucketOf(groupKeys, numBuckets))
-    foldBucketedCore(spark, statePath, groupKeys, numBuckets, batchId,
-      delta(retractionBatch, groupKeys, metrics).schema, d) {
-      case None =>
-        d.drop(BucketCol)
-          .withColumn("n_rows", when(col("n_rows") < 0, raise_error(
+    if (!recoverFolded(spark, statePath, batchId))
+      BucketedState.rewrite(statePath, groupKeys, numBuckets, d,
+          batch = batchId) { existing =>
+        // no touched bucket exists yet: the delta IS their state
+        // (negative counts raise)
+        val next = existing.fold(d.withColumn("n_rows",
+            when(col("n_rows") < 0, raise_error(
               lit("rollup: batch retracts rows absent from the state")))
-            .otherwise(col("n_rows")))
-          .filter(col("n_rows") > 0)
-      case Some(existing) =>
-        merge(existing, d.drop(BucketCol), groupKeys, metrics)
-    }
+              .otherwise(col("n_rows"))).filter(col("n_rows") > 0))(
+          merge(_, d, groupKeys, metrics))
+        BucketedState.Rewrite(next, marker(batchId))
+      }
+    readBucketed(spark, statePath, Some(d.schema))
   }
 
   /** [[foldBucketed]] with extrema maintenance — the bucketed-state
@@ -325,111 +348,37 @@ object Rollup {
     // bootstrap stand-in (foldWithExtrema handles an empty state —
     // created-and-retracted groups go through base repair)
     val emptyState = initWithExtrema(base.limit(0), groupKeys, metrics)
-    val batchKeyed = retractionBatch.withColumn(BucketCol,
-      graft.streaming.CdcStream.bucketOf(groupKeys, numBuckets))
-    foldBucketedCore(spark, statePath, groupKeys, numBuckets, batchId,
-      emptyState.schema, batchKeyed) { existing =>
-      // batchKeyed (the core's persisted probe) minus the layout column
-      // IS the retraction batch — reuse the cache instead of rescanning
-      foldWithExtrema(existing.getOrElse(emptyState),
-        batchKeyed.drop(BucketCol), base, groupKeys, metrics)
-    }
+    if (!recoverFolded(spark, statePath, batchId))
+      // the batch is the probe: foldWithExtrema reads it back from the
+      // probe's cache instead of rescanning it
+      BucketedState.rewrite(statePath, groupKeys, numBuckets,
+          retractionBatch, batch = batchId) { existing =>
+        BucketedState.Rewrite(foldWithExtrema(existing.getOrElse(emptyState),
+          retractionBatch, base, groupKeys, metrics), marker(batchId))
+      }
+    readBucketed(spark, statePath, Some(emptyState.schema))
   }
 
-  /** The shared bucketed-state fold machinery: crash recovery, replay
-    * detection, touched-bucket discovery from `probe` (any frame
-    * carrying [[BucketCol]] for every touched group), the
-    * `next(existingAffectedState)` computation, and the bucket swap. `next` receives None on bootstrap (no affected
-    * bucket exists yet), otherwise the affected buckets' state without
-    * the layout column, and returns the replacement rows for exactly
-    * those buckets' groups. */
-  private def foldBucketedCore(spark: org.apache.spark.sql.SparkSession,
-                               statePath: String, groupKeys: Seq[String],
-                               numBuckets: Int, batchId: Long,
-                               stateSchema: org.apache.spark.sql.types.StructType,
-                               probe: DataFrame)
-                              (next: Option[DataFrame] => DataFrame)
-      : DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(statePath)
-    val fs = root.getFileSystem(conf)
-    val bak = new org.apache.hadoop.fs.Path(statePath + ".bak")
-    val tmp = new org.apache.hadoop.fs.Path(statePath + ".tmp")
-    val marker = new org.apache.hadoop.fs.Path(root, Marker)
-
-    // crash recovery. A fold reached its commit point once its marker
-    // (the last swapped child) records the batch id the swap manifest
-    // was written for, or once the sentinel is down (the only record of
-    // an unmarked fold): then only the teardown crashed and is resumed
-    // — rolling back would restore pre-fold buckets under a post-fold
-    // marker, and the replayed batch would be skipped and lost.
-    // Otherwise the swap is rolled back and the batch replays once.
-    Swap.recoverChildren(fs, root, tmp, bak,
-      committed = b => b >= 0 && markedBatch(fs, marker).contains(b))
-    // stateSchema is analysis-only (no job): lets the two internal
-    // reads below return a typed empty frame when a fold has retracted
-    // the entire state (marker present, no buckets)
-    val expectedSchema = Some(stateSchema)
-    if (batchId >= 0 && markedBatch(fs, marker).contains(batchId))
-      return readBucketed(spark, statePath, expectedSchema)
-
-    val d = probe.persist()
-    // the touched-bucket set is <= numBuckets rows — driver-cheap
-    val affected = d.select(BucketCol).distinct()
-      .collect().map(_.getInt(0)).toSeq.sorted
-    val existingPaths = affected
-      .map(i => new org.apache.hadoop.fs.Path(root, s"$BucketCol=$i"))
-      .filter(fs.exists(_)).map(_.toString)
-    val nextState = next(
-      if (existingPaths.isEmpty) None
-      else Some(spark.read.option("basePath", statePath)
-        .parquet(existingPaths: _*).drop(BucketCol)))
-    // repartition on the bucket BEFORE partitionBy (tasks x buckets
-    // small-file explosion otherwise), keys sorted within for stats
-    val out = nextState.withColumn(BucketCol,
-      graft.streaming.CdcStream.bucketOf(groupKeys, numBuckets))
-    out.repartition(
-        math.min(numBuckets,
-          spark.sessionState.conf.numShufflePartitions),
-        col(BucketCol))
-      .sortWithinPartitions((col(BucketCol) +: groupKeys.map(col)): _*)
-      .write.partitionBy(BucketCol).parquet(tmp.toString)
-    d.unpersist()
-
-    // the marker is staged beside the buckets and swapped in last: an
-    // unmarked fold (batchId = -1) moves the old marker aside and
-    // replaces it with nothing
-    if (batchId >= 0) {
-      val o = fs.create(new org.apache.hadoop.fs.Path(tmp, Marker))
-      try o.write(batchId.toString.getBytes("UTF-8")) finally o.close()
-    }
-    Swap.installChildren(fs, root, tmp, bak,
-      affected.map(i => s"$BucketCol=$i") :+ Marker, batch = batchId)
-    readBucketed(spark, statePath, expectedSchema)
-  }
-
-  /** Read a bucketed rollup state without its layout column. An absent
-    * or empty dir is an empty state (bootstrap not yet run): when
-    * `schema` gives the expected post-read shape (group keys + n_rows +
-    * sum columns) an empty frame with that schema is returned;
-    * without it a pre-bootstrap probe fails loudly rather than letting
+  /** Read a bucketed rollup state without its layout column. Refuses a
+    * half-swapped state, naming the paths
+    * ([[graft.sinks.BucketedState.requireSettled]]); the next fold
+    * recovers it. An absent or empty dir is an empty state (bootstrap
+    * not yet run, or every group retracted): when `schema` gives the
+    * expected post-read shape (group keys + n_rows + sum columns) an
+    * empty frame with that schema is returned; without it a
+    * pre-bootstrap probe fails loudly rather than letting
     * `spark.read.parquet` throw its opaque path/infer error. */
   def readBucketed(spark: org.apache.spark.sql.SparkSession,
                    statePath: String,
                    schema: Option[org.apache.spark.sql.types.StructType] =
-                     None): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(statePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasBuckets = fs.exists(root) && fs.listStatus(root)
-      .exists(_.getPath.getName.startsWith(s"$BucketCol="))
-    if (hasBuckets) spark.read.parquet(statePath).drop(BucketCol)
-    else schema match {
-      case Some(s) =>
-        spark.createDataFrame(spark.sparkContext
-          .emptyRDD[org.apache.spark.sql.Row], s)
-      case None => throw new IllegalStateException(
-        s"rollup: no bucketed state at $statePath (bootstrap not yet " +
-          "run) — pass the expected schema to read it as empty")
-    }
-  }
+                     None): DataFrame =
+    BucketedState.read(spark, statePath, Writer, empty = Some(() =>
+      schema match {
+        case Some(s) =>
+          spark.createDataFrame(spark.sparkContext
+            .emptyRDD[org.apache.spark.sql.Row], s)
+        case None => throw new IllegalStateException(
+          s"rollup: no bucketed state at $statePath (bootstrap not yet " +
+            "run) — pass the expected schema to read it as empty")
+      }))
 }

@@ -9,8 +9,9 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *  - a whole directory ([[recoverDir]] / [[installDir]]): compaction,
   *    index rebuilds, the flat rollup fold, z-order manifests;
   *  - a named set of a root's children ([[recoverChildren]] /
-  *    [[installChildren]]): the CDC bucket merge with its meta, the
-  *    bucketed rollup fold with its batch marker;
+  *    [[installChildren]], [[settled]] for readers): the bucketed state
+  *    of [[BucketedState]] (the CDC merge with its meta, the bucketed
+  *    rollup fold with its batch marker);
   *  - one small file ([[writeText]] / [[readText]], [[replaceFile]]):
   *    scan cursors, Delta checkpoints.
   *
@@ -101,6 +102,14 @@ object Swap {
     * cannot tell which root children the interrupted swap moved in. */
   def unlisted(fs: FileSystem, bak: Path): Boolean =
     fs.exists(bak) && !fs.exists(new Path(bak, Manifest))
+
+  /** True when the root whose children backup is `bak` holds exactly the
+    * state before or after a swap: no `bak` at all, or a `bak` that
+    * holds the commit sentinel (every staged child moved in, only the
+    * teardown is left). Any other `bak` means the root may hold a mix
+    * until [[recoverChildren]] runs. Reads only. */
+  def settled(fs: FileSystem, bak: Path): Boolean =
+    !fs.exists(bak) || fs.exists(new Path(bak, Sentinel))
 
   /** Tear `bak` down in an order recovery can always read: backups
     * first, then the manifest, then the sentinel, then the dir. The

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.model.{CdcEnvelope => E}
 import graft.operators.Collapse
-import graft.sinks.Swap
+import graft.sinks.{BucketedState, Swap}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
@@ -46,30 +46,10 @@ object CdcStream {
       }
   }
 
-  /** PK-hash bucket column of the incremental state layout. */
-  val BucketCol = "__bucket"
   /** Default bucket count for new state dirs. At warehouse scale this is
     * the unit of rewrite I/O — size it so one bucket fits a rewrite job
     * (e.g. 1024 buckets over 100 TB = ~100 GB per bucket). */
   val DefaultBuckets = 32
-
-  /** Sentinel for a NULL PK component in the rendered key tuple:
-    * concat_ws silently DROPS nulls, which would land null-keyed rows in
-    * a different bucket than [[lookup]] probes and let composite keys
-    * with nulls collide with distinct keys. The NUL prefix cannot appear
-    * in a cast-to-string value. */
-  private[streaming] val NullKey = "\u0000null"
-
-  /** Stable bucket of a row: md5-derived hash of the rendered PK tuple
-    * (engine-stable, skew-free — see [[graft.functions.Hashing]]). NULL
-    * components render as [[NullKey]] — identically here and in the
-    * driver-side [[lookup]] rendering, so null-keyed rows bucket where
-    * lookup probes. */
-  def bucketOf(pks: Seq[String], n: Int): org.apache.spark.sql.Column =
-    pmod(graft.functions.Hashing.hex8ToLong(
-      concat_ws("\u0001",
-        pks.map(c => coalesce(col(c).cast("string"), lit(NullKey))): _*)),
-      lit(n.toLong)).cast("int")
 
   /** State-dir metadata pinning the bucket count and column set so every
     * batch agrees on the layout and bucket schemas stay homogeneous.
@@ -87,17 +67,13 @@ object CdcStream {
   private final case class StateMeta(numBuckets: Int, columns: Seq[String],
       schema: Option[org.apache.spark.sql.types.StructType] = None)
 
-  private def fsOf(spark: SparkSession): org.apache.hadoop.fs.FileSystem =
-    org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-
   private val MetaName = "_graft_meta.json"
-
-  private def metaPath(dir: String) =
-    new org.apache.hadoop.fs.Path(dir, MetaName)
+  /** The writer call named by readers that refuse a half-swapped state. */
+  private val Writer = "CdcStream.mergeBatch"
 
   private def readMeta(fs: org.apache.hadoop.fs.FileSystem,
                        dir: String): Option[StateMeta] = {
-    val p = metaPath(dir)
+    val p = new org.apache.hadoop.fs.Path(dir, MetaName)
     if (!fs.exists(p)) None
     else {
       val in = fs.open(p)
@@ -123,105 +99,90 @@ object CdcStream {
     }
   }
 
-  /** The meta is staged into the swap's temp dir and moves in with the
-    * buckets, so it is never overwritten in place. */
-  private def writeMeta(fs: org.apache.hadoop.fs.FileSystem,
-                        p: org.apache.hadoop.fs.Path, meta: StateMeta): Unit = {
-    val out = fs.create(p, true)
+  /** The meta's file text. The meta is a sidecar of the bucket swap:
+    * staged beside the rewritten buckets and moved in last, so it is
+    * never overwritten in place. */
+  private def metaJson(meta: StateMeta): String = {
     val schemaField = meta.schema.map { s =>
       s""","schemaB64":"${java.util.Base64.getEncoder
         .encodeToString(s.json.getBytes("UTF-8"))}""""
     }.getOrElse("")
-    val json = s"""{"numBuckets":${meta.numBuckets},"columns":[""" +
+    s"""{"numBuckets":${meta.numBuckets},"columns":[""" +
       meta.columns.map("\"" + _ + "\"").mkString(",") + s"]$schemaField}"
-    try out.write(json.getBytes("UTF-8")) finally out.close()
   }
 
-  /** Readers do not recover a merge swap; only [[mergeBatch]] does. A
-    * state dir without its meta while `<stateDir>.bak` exists is a swap
-    * that died mid-flight: some buckets and the meta sit in the backup,
-    * and reading the dir would silently return the buckets left in
-    * place. Refuse it, naming both paths. */
-  private def requireSettled(fs: org.apache.hadoop.fs.FileSystem,
-                             stateDir: String): Unit =
-    if (!fs.exists(metaPath(stateDir)) &&
-        fs.exists(new org.apache.hadoop.fs.Path(stateDir + ".bak")))
-      throw new IllegalStateException(
-        s"$stateDir is half-swapped: it has no $MetaName and " +
-          s"$stateDir.bak holds the backup of an interrupted merge. The " +
-          s"next mergeBatch into $stateDir recovers the state; read it " +
-          s"after that.")
+  /** Buckets may sit at different drift generations (lazy migration), so
+    * a state read must union their schemas, not inherit whichever file
+    * the reader samples first. With the meta's typed union schema that
+    * union is known: reads pass it and skip the footer-inference
+    * mergeSchema job (lagging buckets surface null for columns they
+    * predate either way, see [[StateMeta]]); a meta without one falls
+    * back to mergeSchema. */
+  private def stateReader(meta: Option[StateMeta])
+      (r: org.apache.spark.sql.DataFrameReader) =
+    meta.flatMap(_.schema).fold(r.option("mergeSchema", "true"))(r.schema)
 
   /** Read the merged state back without the layout's bucket column.
     * Schema-merging: under lazy DDL migration bucket dirs may sit at
     * different drift generations; the union schema surfaces null for
     * columns a lagging bucket predates. Throws on a half-swapped state
-    * dir (see [[requireSettled]]). */
-  def readState(spark: SparkSession, stateDir: String): DataFrame = {
-    val fs = fsOf(spark)
-    requireSettled(fs, stateDir)
-    // typed meta schema: skip the footer-inference/mergeSchema
-    // job — the union schema is already known; lagging buckets surface
-    // null for columns they predate either way (see [[StateMeta]])
-    val schema = readMeta(fs, stateDir).flatMap(_.schema)
-    val df = schema match {
-      case Some(s) => spark.read.schema(s).parquet(stateDir)
-      case None => spark.read.option("mergeSchema", "true").parquet(stateDir)
-    }
-    if (df.columns.contains(BucketCol)) df.drop(BucketCol) else df
-  }
+    * dir, naming the paths ([[BucketedState.requireSettled]]). */
+  def readState(spark: SparkSession, stateDir: String): DataFrame =
+    BucketedState.read(spark, stateDir, Writer,
+      stateReader(readMeta(BucketedState.fsOf(spark, stateDir), stateDir)))
 
-  /** Point lookup: compute the key's bucket on the DRIVER (same md5
-    * hash as [[bucketOf]]) and scan ONLY that bucket dir — I/O is
-    * state/numBuckets, and the PK-sorted files prune further via
-    * parquet min/max stats. Key values must render like Spark's
-    * string cast (integral/string keys do). Under lazy DDL migration
-    * the result carries the BUCKET's schema generation (a bucket dir
-    * is always internally homogeneous — rewrites replace it whole);
-    * a lagging bucket simply lacks columns it predates, the same
-    * contract as a pre-drift read of the whole state. Throws on a
-    * half-swapped state dir, as [[readState]] does. */
+  /** Point lookup: compute the key's bucket on the DRIVER
+    * ([[BucketedState.bucketOfKey]], the twin of the layout's hash) and
+    * scan ONLY that bucket dir — I/O is state/numBuckets, and the
+    * PK-sorted files prune further via parquet min/max stats. Key values
+    * must render like Spark's string cast (integral/string keys do).
+    * Under lazy DDL migration the result carries the BUCKET's schema
+    * generation (a bucket dir is always internally homogeneous —
+    * rewrites replace it whole); a lagging bucket simply lacks columns
+    * it predates, the same contract as a pre-drift read of the whole
+    * state. Throws on a half-swapped state dir, as [[readState]] does. */
   def lookup(spark: SparkSession, stateDir: String, pks: Seq[String],
              key: Seq[Any]): DataFrame = {
     require(pks.length == key.length, "one value per key column")
-    val fs = fsOf(spark)
-    requireSettled(fs, stateDir)
+    val fs = BucketedState.fsOf(spark, stateDir)
+    BucketedState.requireSettled(fs, stateDir, Writer)
     val n = readMeta(fs, stateDir).map(_.numBuckets).getOrElse(
       throw new IllegalArgumentException(s"$stateDir is not a bucketed state"))
-    val rendered = key
-      .map(v => if (v == null) NullKey else String.valueOf(v))
-      .mkString("\u0001")
-    val b = math.floorMod(graft.functions.Hashing.hex8ToLongJvm(rendered), n.toLong)
-    val bucketDir = new org.apache.hadoop.fs.Path(stateDir, s"$BucketCol=$b")
+    val dir = BucketedState.bucketDir(stateDir, BucketedState.bucketOfKey(key, n))
     // an absent bucket dir means no rows hash there: an empty result in
     // the state schema, not an error
     val df =
-      if (fs.exists(bucketDir)) spark.read.parquet(bucketDir.toString)
+      if (fs.exists(dir)) spark.read.parquet(dir.toString)
       else readState(spark, stateDir).limit(0)
     // null-safe equality: a null key value must MATCH null cells, not
     // filter everything (=== with null is null)
     pks.zip(key).foldLeft(df) { case (d, (k, v)) => d.filter(col(k) <=> lit(v)) }
   }
 
-  /** Upsert-MERGE a collapsed micro-batch into a PK-hash-bucketed parquet
-    * state dir. Idempotent: replaying a batch converges to the same state
-    * (PK last-write-wins by (__lsn, __counter)), which is what makes
-    * checkpoint-replay exactly-once.
+  /** Upsert-MERGE a micro-batch into a PK-hash-bucketed parquet state
+    * dir ([[BucketedState]]). Idempotent: replaying a batch converges to
+    * the same state (PK last-write-wins by (__lsn, __counter)), which is
+    * what makes checkpoint-replay exactly-once.
     *
     * Incremental by construction: the state is laid out as
     * `stateDir/__bucket=i/` dirs keyed by a stable PK hash, and a batch
     * rewrites ONLY the buckets containing its keys — rewrite I/O scales
     * with the batch's key spread, not total state size (the flat-layout
     * predecessor rewrote the whole state every batch). Per-batch plan:
-    * one read over the affected buckets + one partitioned write; the
-    * rewritten buckets and the new meta then replace the old ones in one
-    * [[graft.sinks.Swap]] children swap, so a crash at any step leaves
-    * the pre-batch or the post-batch state, and the replayed batch
-    * converges because the merge itself is idempotent. At warehouse scale the same
-    * batch function lands on a Delta/Iceberg MERGE INTO — the collapse
-    * step, key discipline and bucket-pruned rewrite are identical
-    * (reference semantics: pkg/sink_factory/sink_factory.go:100-133
-    * middleware ordering, Collapse before write change_item_collapse.go:48).
+    * one small query for the touched-bucket set, then ONE last-write-wins
+    * over (the touched buckets re-entered as older-than-everything
+    * inserts) ∪ (the batch's raw row events) and one partitioned write.
+    * `max_by` over (__lsn, __counter) is associative, so this equals
+    * collapsing the batch first and merging the result, without the
+    * extra shuffle. The rewritten buckets and the new meta then replace
+    * the old ones in one [[graft.sinks.Swap]] children swap, so a crash
+    * at any step leaves the pre-batch or the post-batch state, and the
+    * replayed batch converges because the merge itself is idempotent. At
+    * warehouse scale the same batch function lands on a Delta/Iceberg
+    * MERGE INTO — the last-write-wins rule, key discipline and
+    * bucket-pruned rewrite are identical (reference semantics:
+    * pkg/sink_factory/sink_factory.go:100-133 middleware ordering,
+    * Collapse before write change_item_collapse.go:48).
     *
     * Schema drift (DDL adding columns, change_item.go DDL kinds) migrates
     * LAZILY, per bucket: a drifting batch rewrites only the buckets its
@@ -251,9 +212,8 @@ object CdcStream {
       if (batch0.columns.contains(E.Kind)) batch0
       else E.fromSnapshot(batch0, lit(0L))
     val spark = batch.sparkSession
-    val fs = fsOf(spark)
+    val fs = BucketedState.fsOf(spark, stateDir)
     val root = new org.apache.hadoop.fs.Path(stateDir)
-    val tmp = new org.apache.hadoop.fs.Path(stateDir + ".tmp")
     val bak = new org.apache.hadoop.fs.Path(stateDir + ".bak")
     // a .bak without a swap manifest that holds flat part-* files is an
     // interrupted legacy migration in the older layout: it does not
@@ -261,18 +221,14 @@ object CdcStream {
     // replay debris (the flat snapshot is the pre-batch state)
     if (Swap.unlisted(fs, bak) && fs.listStatus(bak)
         .exists(_.getPath.getName.startsWith("part-")))
-      fs.listStatus(root).filter(_.getPath.getName.startsWith(BucketCol))
+      fs.listStatus(root).filter(_.getPath.getName.startsWith(BucketedState.BucketCol))
         .foreach(st => fs.delete(st.getPath, true))
     // a swap that died mid-flight never reached the checkpoint, so its
     // batch replays: recovery restores the pre-batch buckets and meta
     // (or finishes a committed teardown) before anything is read
-    Swap.recoverChildren(fs, root, tmp, bak)
+    BucketedState.recover(spark, stateDir)
     val meta = readMeta(fs, stateDir)
     val n = meta.map(_.numBuckets).getOrElse(numBuckets)
-
-    val collapsed = Collapse.lastWriteWins(
-      batch.filter(E.isRowEvent(col(E.Kind))), pks).persist()
-    val dataCols = E.dataCols(collapsed)
 
     // legacy flat layout: state exists but predates the bucketed meta —
     // the only full migration left (the LAYOUT changes, not just the
@@ -281,105 +237,51 @@ object CdcStream {
       fs.listStatus(root).exists(s => s.isFile &&
         s.getPath.getName.startsWith("part-"))
 
-    val affected: Seq[Int] =
-      if (legacy) 0 until n
-      else collapsed.select(bucketOf(pks, n).as(BucketCol))
-        .distinct().collect().map(_.getInt(0)).toSeq.sorted
-
-    val existing: Option[DataFrame] =
-      if (legacy) Some(spark.read.parquet(stateDir))
-      else {
-        val paths = affected
-          .map(i => new org.apache.hadoop.fs.Path(stateDir, s"$BucketCol=$i"))
-          .filter(fs.exists(_)).map(_.toString)
-        if (paths.isEmpty) None
-        // affected buckets may sit at different drift generations
-        // (lazy migration) — the read must union their schemas, not
-        // inherit whichever file the reader samples first. With a
-        // typed meta schema that union is KNOWN: pass it
-        // explicitly and skip the per-batch mergeSchema footer sweep
-        // (the parquet reader nulls out columns a lagging file
-        // predates — identical semantics, one fewer job per batch).
-        else {
-          val rd = spark.read.option("basePath", stateDir)
-          val rd2 = meta.flatMap(_.schema) match {
-            case Some(s) => rd.schema(s)
-            case None => rd.option("mergeSchema", "true")
-          }
-          Some(rd2.parquet(paths: _*).drop(BucketCol))
-        }
-      }
-
-    val merged = existing match {
-      case None => collapsed
-      case Some(cur) =>
-        // current state re-enters as older-than-everything inserts.
-        // unionByName with allowMissingColumns absorbs mid-stream schema
-        // drift (DDL adding/dropping columns): new columns backfill null
-        // in old state, dropped columns null out in new events —
-        // Delta-style mergeSchema semantics (SURVEY §1.4 DDL mapping).
-        val asEvents = cur.withColumn(E.Kind, lit(E.Insert))
+    // the batch's raw row events, projected to data columns + ordering:
+    // the probe whose keys name the touched buckets AND the new side of
+    // the one last-write-wins below (read back from the probe's cache)
+    val rows = batch.filter(E.isRowEvent(col(E.Kind)))
+    val events = rows.select(
+      (E.dataCols(rows) ++ Seq(E.Kind, E.Lsn, E.Counter)).map(col): _*)
+    // a legacy dir is read whole, and its flat files are swapped out
+    BucketedState.rewrite(stateDir, pks, n, events, stateReader(meta),
+        flat = if (legacy) Some(spark.read.parquet(stateDir)) else None) { existing =>
+      // current state re-enters as older-than-everything inserts.
+      // unionByName with allowMissingColumns absorbs mid-stream schema
+      // drift (DDL adding/dropping columns): new columns backfill null
+      // in old state, dropped columns null out in new events —
+      // Delta-style mergeSchema semantics (SURVEY §1.4 DDL mapping).
+      val merged = Collapse.lastWriteWins(existing.fold(events)(cur =>
+        cur.withColumn(E.Kind, lit(E.Insert))
           .withColumn(E.Lsn, lit(Long.MinValue))
           .withColumn(E.Counter, lit(0))
-        val projected = collapsed.select(
-          (dataCols.map(col) :+ col(E.Kind) :+ col(E.Lsn) :+ col(E.Counter)): _*)
-        Collapse.lastWriteWins(
-          asEvents.unionByName(projected, allowMissingColumns = true), pks)
-    }
-    // union of old-state and new-batch data columns (schema drift)
-    val outCols = E.dataCols(merged)
-    val out = merged.filter(col(E.Kind) =!= E.Delete)
-      .select(outCols.map(col): _*)
-      .withColumn(BucketCol, bucketOf(pks, n))
+          .unionByName(events, allowMissingColumns = true)), pks)
+      // union of old-state and new-batch data columns (schema drift)
+      val outCols = E.dataCols(merged)
+      val out = merged.filter(col(E.Kind) =!= E.Delete)
+        .select(outCols.map(col): _*)
 
-    // the meta column set is the LOGICAL union across drifts: untouched
-    // buckets may lag it on disk until a batch touches them
-    val prevCols = meta.map(_.columns).getOrElse(Nil)
-    val logicalCols = prevCols ++ outCols.filterNot(prevCols.contains)
-    // typed union schema: this write's data schema wins for the columns
-    // it carries (it already absorbed every affected bucket's drift via
-    // the schema-union read above); columns only the previous meta's
-    // schema knew — dropped by DDL but still present in lagging buckets
-    // — are retained so reads keep surfacing them as null
-    val outSchema = org.apache.spark.sql.types.StructType(
-      out.schema.filter(_.name != BucketCol).map(_.copy(nullable = true)))
-    val unionSchema = meta.flatMap(_.schema) match {
-      case Some(prev) =>
-        val names = outSchema.fieldNames.toSet
-        org.apache.spark.sql.types.StructType(
-          outSchema.fields ++ prev.fields.filterNot(f => names(f.name)))
-      case None => outSchema
+      // the meta column set is the LOGICAL union across drifts: untouched
+      // buckets may lag it on disk until a batch touches them
+      val prevCols = meta.map(_.columns).getOrElse(Nil)
+      val logicalCols = prevCols ++ outCols.filterNot(prevCols.contains)
+      // typed union schema: this write's data schema wins for the columns
+      // it carries (it already absorbed every affected bucket's drift via
+      // the schema-union read above); columns only the previous meta's
+      // schema knew — dropped by DDL but still present in lagging buckets
+      // — are retained so reads keep surfacing them as null
+      val outSchema = out.schema.map(_.copy(nullable = true))
+      val names = outSchema.map(_.name).toSet
+      val unionSchema = org.apache.spark.sql.types.StructType(outSchema ++
+        meta.flatMap(_.schema).toSeq.flatMap(_.fields.filterNot(f => names(f.name))))
+      // bake the schema only when it covers every logical column: a
+      // previous meta without one cannot say what a drift column living
+      // only in untouched buckets looks like, and baking a partial schema
+      // would hide that column from every later read — stay on mergeSchema
+      val typed = Some(unionSchema)
+        .filter(u => logicalCols.forall(u.fieldNames.toSet))
+      BucketedState.Rewrite(out, Seq(MetaName -> Some(metaJson(StateMeta(n, logicalCols, typed)))))
     }
-    // bake the schema only when it covers every logical column: a
-    // previous meta without one cannot say what a drift column living
-    // only in untouched buckets looks like, and baking a partial schema
-    // would hide that column from every later read — stay on mergeSchema
-    val typed = Some(unionSchema)
-      .filter(u => logicalCols.forall(u.fieldNames.toSet))
-
-    // write-then-swap: rewritten buckets and the new meta are staged in
-    // a temp dir, then swapped in as children of the state dir —
-    // untouched buckets are never read or written. A legacy dir's flat
-    // files are children too, moved aside and replaced by nothing.
-    // repartition on the bucket BEFORE partitionBy: otherwise every
-    // shuffle task writes a file into every bucket dir (tasks x buckets
-    // files per batch — a small-file explosion at cluster scale)
-    out.repartition(math.min(n, out.sparkSession.sessionState.conf.numShufflePartitions),
-        col(BucketCol))
-      // PK-sorted files: parquet min/max stats become selective, so a
-      // point lookup inside a bucket prunes to one row group
-      .sortWithinPartitions((col(BucketCol) +: pks.map(col)): _*)
-      .write.partitionBy(BucketCol).parquet(tmp.toString)
-    writeMeta(fs, new org.apache.hadoop.fs.Path(tmp, MetaName),
-      StateMeta(n, logicalCols, typed))
-    val flatFiles =
-      if (legacy) fs.listStatus(root).filter(_.isFile)
-        .map(_.getPath.getName).toSeq
-      else Nil
-    Swap.installChildren(fs, root, tmp, bak,
-      flatFiles ++ affected.map(i => s"$BucketCol=$i") :+ MetaName)
-    collapsed.unpersist()
-    ()
   }
 
   /** Multi-table batch routing: split an enveloped batch on its

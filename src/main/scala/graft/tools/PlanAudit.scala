@@ -47,7 +47,8 @@ import scala.util.control.NonFatal
   * filter-selected query side; fixture-fed parsers broadcast a local
   * relation) — every such site lives in [[graft.PlanAuditExceptions]]
   * with its bound justification. [[gate]] fails on any hit NOT listed
-  * there and on any query that throws. `PlanGateSpec` runs it over
+  * there, on any listed entry of a query it ran that matched no hit
+  * (stale), and on any query that throws. `PlanGateSpec` runs it over
   * every registered query at sf0.001 in the test suite; `main` runs the
   * same gate at any scale and exits 1 when it fails.
   * Usage: `sbt "runMain graft.tools.PlanAudit [sfDir]"`.
@@ -210,15 +211,19 @@ object PlanAudit {
     * any. */
   final case class Hit(query: String, kind: String, why: Option[String])
 
-  /** The outcome of one [[gate]] run over `queries` registered queries. */
+  /** The outcome of one [[gate]] run over `queries` registered queries.
+    * `stale` lists the reviewed (query, kind) entries of queries that
+    * ran without throwing but matched no hit. */
   final case class GateResult(hits: Seq[Hit], errors: Seq[(String, String)],
-                              queries: Int) {
+                              stale: Seq[(String, String)], queries: Int) {
     def unreviewed: Seq[Hit] = hits.filter(_.why.isEmpty)
-    def ok: Boolean = unreviewed.isEmpty && errors.isEmpty
+    def ok: Boolean = unreviewed.isEmpty && errors.isEmpty && stale.isEmpty
     def summary: String =
       s"${hits.size - unreviewed.size} reviewed hits, ${unreviewed.size} " +
-        s"NEW, ${errors.size} failed queries — over $queries queries" +
+        s"NEW, ${stale.size} stale, ${errors.size} failed queries — over " +
+        s"$queries queries" +
         (if (ok) "" else ": " + (unreviewed.map(h => s"${h.query}: ${h.kind}")
+          ++ stale.map { case (q, k) => s"$q: $k is reviewed but matched no hit" }
           ++ errors.map { case (q, e) => s"$q threw $e" }).mkString("; "))
   }
 
@@ -248,7 +253,12 @@ object PlanAudit {
           Option(e.getMessage).getOrElse("").take(120))
       } finally reset(spark)
     }
-    GateResult(hits.result(), errors.result(), queries.size)
+    val (hit, failed) = (hits.result(), errors.result())
+    val found = hit.map(h => (h.query, h.kind)).toSet
+    val ran = queries.map(_._1).toSet -- failed.map(_._1)
+    val stale = reviewed.toSeq.filter(e => ran(e._1)).flatMap { case (q, kinds) =>
+      kinds.keys.filterNot(k => found((q, k))).map(q -> _) }.sorted
+    GateResult(hit, failed, stale, queries.size)
   }
 
   private def reset(spark: SparkSession): Unit = {
@@ -267,6 +277,8 @@ object PlanAudit {
     spark.stop()
     result.hits.foreach(h => println(s"[audit] ${h.query}: ${h.kind} — " +
       h.why.fold("NEW (unreviewed)")(why => s"OK ($why)")))
+    result.stale.foreach { case (q, k) =>
+      println(s"[audit] $q: $k — STALE (reviewed, no hit)") }
     result.errors.foreach { case (q, e) => println(s"[audit] $q: PLAN-ERROR $e") }
     println(s"[audit] done: ${result.summary}")
     if (!result.ok) sys.exit(1)

@@ -1,54 +1,20 @@
 package graft.functions
 
-import scala.collection.mutable
-
-import graft.SparkSpec
+import graft.{JobBudget, SparkSpec}
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.bridge
 
 /** Job budget of one standing-index arrival: the Spark jobs started
   * inside one call of [[Dedup.bandIndexUpdate]] and of
   * [[Dedup.containmentIndexUpdate]], on a new index (bootstrap) and on
   * one that already holds a batch. Job counts repeat exactly from run
   * to run, so they pin the per-arrival fixed cost: a plan change that
-  * adds a job fails here before it shows as wall time. */
+  * adds a job fails here before it shows as wall time ([[JobBudget]]). */
 class IndexJobBudgetSpec extends SparkSpec {
 
-  /** (SQL execution id, the operators of its last stage) of every job
-    * `body` starts. */
-  private def jobsOf(body: => Unit): Seq[(String, String)] = {
-    val seen = mutable.ArrayBuffer.empty[(String, String)]
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = seen.synchronized {
-        seen += ((Option(e.properties)
-            .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
-            .getOrElse("-"),
-          e.stageInfos.lastOption.toSeq
-            .flatMap(_.rddInfos.flatMap(_.scope.map(_.name)))
-            .filterNot(_.startsWith("WholeStageCodegen")).distinct
-            .mkString("/")))
-      }
-    }
-    assert(bridge.drainListenerBus(spark, 10000))
-    spark.sparkContext.addSparkListener(l)
-    try body
-    finally {
-      assert(bridge.drainListenerBus(spark, 10000))
-      spark.sparkContext.removeSparkListener(l)
-    }
-    seen.synchronized(seen.toList)
-  }
-
-  /** The jobs grouped by execution (`-`: jobs outside any SQL
-    * execution), in start order, for a failure message. */
-  private def breakdown(jobs: Seq[(String, String)]): String =
-    jobs.map(_._1).distinct.map { ex =>
-      val in = jobs.filter(_._1 == ex).map(_._2)
-      s"\n  execution $ex, ${in.size} jobs: ${in.mkString(" | ")}"
-    }.mkString
+  private def jobsOf(body: => Unit) = JobBudget.jobsOf(spark)(body)
+  private def breakdown(jobs: Seq[(String, String)]) = JobBudget.breakdown(jobs)
 
   /** Jobs of a bootstrap and of a post-bootstrap call of `update`,
     * which runs one arrival (its second argument) into the index at its

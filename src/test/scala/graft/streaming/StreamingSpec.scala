@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.model.{CdcEnvelope => E}
+import graft.sinks.BucketedState
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import java.nio.file.Files
@@ -49,7 +50,7 @@ class StreamingSpec extends SparkSpec {
       val root = java.nio.file.Paths.get(state)
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.list(root).iterator().asScala
-        .filter(p => p.getFileName.toString.startsWith(CdcStream.BucketCol))
+        .filter(p => p.getFileName.toString.startsWith(BucketedState.BucketCol))
         .map { b =>
           b.getFileName.toString ->
             java.nio.file.Files.list(b).iterator().asScala.map(f =>
@@ -111,12 +112,12 @@ class StreamingSpec extends SparkSpec {
     assert(hit.select("v").as[String].collect().toSeq == Seq("v42"))
     // the plan touches exactly one bucket dir's files
     val dirs = hit.inputFiles.map(f =>
-      f.split("/").find(_.startsWith(CdcStream.BucketCol)).get).toSet
+      f.split("/").find(_.startsWith(BucketedState.BucketCol)).get).toSet
     assert(dirs.size == 1, s"lookup scanned $dirs")
     // driver-side bucket matches the layout's bucket expression
     val expected = spark.range(42, 43).select(
-      CdcStream.bucketOf(Seq("id"), 16)).first().getInt(0)
-    assert(dirs.head == s"${CdcStream.BucketCol}=$expected")
+      BucketedState.bucketOf(Seq("id"), 16)).first().getInt(0)
+    assert(dirs.head == s"${BucketedState.BucketCol}=$expected")
   }
 
   test("lookup agrees with the layout for composite keys") {
@@ -142,7 +143,7 @@ class StreamingSpec extends SparkSpec {
     val root = java.nio.file.Paths.get(state)
     import scala.jdk.CollectionConverters._
     val bucket = java.nio.file.Files.list(root).iterator().asScala
-      .filter(_.getFileName.toString.startsWith(CdcStream.BucketCol))
+      .filter(_.getFileName.toString.startsWith(BucketedState.BucketCol))
       .toSeq.head
     val bak = java.nio.file.Paths.get(state + ".bak")
     java.nio.file.Files.createDirectories(bak)
@@ -156,35 +157,70 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("readers refuse a half-swapped state until mergeBatch recovers it") {
-    val state = tmp() + "/th"
+    import scala.jdk.CollectionConverters._
+    import java.nio.file.{Files => F, Path => P}
+    /** A children swap that died mid-flight: `moved` children of `state`
+      * sit in `<state>.bak`, nothing staged has moved in. */
+    def crash(state: String)(moved: Seq[P] => Seq[P]): Unit = {
+      val root = java.nio.file.Paths.get(state)
+      val bak = java.nio.file.Paths.get(state + ".bak")
+      F.createDirectories(bak)
+      val buckets = F.list(root).iterator().asScala
+        .filter(_.getFileName.toString.startsWith(BucketedState.BucketCol))
+        .toSeq.sortBy(_.getFileName.toString)
+      moved(buckets).foreach(p => F.move(p, bak.resolve(p.getFileName)))
+    }
+    def refused(state: String, writer: String)(reads: (String, () => Any)*): Unit =
+      for ((name, read) <- reads) {
+        val e = intercept[IllegalStateException](read())
+        assert(e.getMessage.contains(s"$state ") &&
+          e.getMessage.contains(s"$state.bak") &&
+          e.getMessage.contains(writer), s"$name: ${e.getMessage}")
+      }
     val snap = spark.range(0, 200)
       .select(col("id"), concat(lit("v"), col("id")).as("v"))
-    CdcStream.mergeBatch(snap, state, Seq("id"), numBuckets = 8)
+    val n = 8
+    val key5 = s"${BucketedState.BucketCol}=${BucketedState.bucketOfKey(Seq(5L), n)}"
     // the children swap moves the batch's buckets, then the meta, into
-    // .bak before it moves the staged ones in: crash in between
-    import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get(state)
-    val bak = java.nio.file.Paths.get(state + ".bak")
-    java.nio.file.Files.createDirectories(bak)
-    val bucket = java.nio.file.Files.list(root).iterator().asScala
-      .filter(_.getFileName.toString.startsWith(CdcStream.BucketCol))
-      .toSeq.head
-    Seq(bucket, root.resolve("_graft_meta.json"))
-      .foreach(p => java.nio.file.Files.move(p, bak.resolve(p.getFileName)))
-    for ((name, read) <- Seq[(String, () => Any)](
-        "readState" -> (() => CdcStream.readState(spark, state)),
-        "lookup" -> (() => CdcStream.lookup(spark, state, Seq("id"), Seq(5L))))) {
-      val e = intercept[IllegalStateException](read())
-      assert(e.getMessage.contains(s"$state ") &&
-        e.getMessage.contains(s"$state.bak") &&
-        e.getMessage.contains("mergeBatch"), s"$name: ${e.getMessage}")
+    // .bak before it moves the staged ones in. Crash after the meta
+    // moved (meta gone), and crash while the old meta is still live
+    // (two buckets gone, the meta in place)
+    for ((label, moved) <- Seq[(String, Seq[P] => Seq[P])](
+        "meta moved" -> (bs => Seq(bs.head, bs.head.getParent.resolve("_graft_meta.json"))),
+        "meta live" -> (bs => bs.filter(_.getFileName.toString == key5) ++
+          bs.find(_.getFileName.toString != key5)))) {
+      val state = tmp() + "/th"
+      CdcStream.mergeBatch(snap, state, Seq("id"), numBuckets = n)
+      crash(state)(moved)
+      refused(state, "mergeBatch")(
+        s"$label readState" -> (() => CdcStream.readState(spark, state)),
+        s"$label lookup" -> (() => CdcStream.lookup(spark, state, Seq("id"), Seq(5L))))
+      CdcStream.mergeBatch(batch((5L, "v5c", "update", 9L)), state, Seq("id"))
+      val out = CdcStream.readState(spark, state)
+      assert(out.count() == 200, s"$label: rows lost across crash recovery")
+      assert(CdcStream.lookup(spark, state, Seq("id"), Seq(5L))
+        .select("v").as[String].collect().toSeq == Seq("v5c"))
+      assert(!F.exists(java.nio.file.Paths.get(state + ".bak")))
     }
-    CdcStream.mergeBatch(batch((5L, "v5c", "update", 9L)), state, Seq("id"))
-    val out = CdcStream.readState(spark, state)
-    assert(out.count() == 200, "rows lost across crash recovery")
-    assert(CdcStream.lookup(spark, state, Seq("id"), Seq(5L))
-      .select("v").as[String].collect().toSeq == Seq("v5c"))
-    assert(!java.nio.file.Files.exists(bak))
+
+    // the bucketed rollup shares the layout and the reader: a fold that
+    // died with two buckets in .bak and its batch marker still live
+    val rollup = tmp() + "/rh"
+    val changes = spark.range(0, 40).select(
+      lit(null).cast("struct<grp:string,v:bigint>").as("before"),
+      struct(concat(lit("g"), (col("id") % 10).cast("string")).as("grp"),
+        col("id").as("v")).as("after"),
+      lit(E.Insert).as(E.Kind), col("id").as(E.Lsn), lit(0).as(E.Counter))
+    val retr = graft.operators.Rollup.retractions(changes)
+    graft.operators.Rollup.foldBucketed(spark, rollup, retr, Seq("grp"),
+      Seq("v"), numBuckets = n, batchId = 0L)
+    crash(rollup)(_.take(2))
+    refused(rollup, "foldBucketed")(
+      "readBucketed" -> (() => graft.operators.Rollup.readBucketed(spark, rollup)))
+    // the replay of batch 0 recovers the state and is skipped
+    val st = graft.operators.Rollup.foldBucketed(spark, rollup, retr,
+      Seq("grp"), Seq("v"), numBuckets = n, batchId = 0L)
+    assert(st.count() == 10 && st.agg(sum("n_rows")).head().getLong(0) == 40L)
   }
 
   test("legacy flat state migrates into buckets on first contact") {
@@ -199,7 +235,7 @@ class StreamingSpec extends SparkSpec {
     // flat files are gone, bucket dirs exist
     val names = new java.io.File(state).listFiles().map(_.getName).toSeq
     assert(!names.exists(_.startsWith("part-")), s"flat files remain: $names")
-    assert(names.exists(_.startsWith(CdcStream.BucketCol)))
+    assert(names.exists(_.startsWith(BucketedState.BucketCol)))
   }
 
   test("crash mid-legacy-migration leaves the flat snapshot recoverable") {
@@ -219,7 +255,7 @@ class StreamingSpec extends SparkSpec {
     val debris = tmp() + "/debris"
     Seq((999L, "zz")).toDF("id", "v").write.parquet(debris)
     java.nio.file.Files.move(java.nio.file.Paths.get(debris),
-      root.resolve(s"${CdcStream.BucketCol}=0"))
+      root.resolve(s"${BucketedState.BucketCol}=0"))
     // replay: recovery must restore the flat snapshot, discard the
     // half-swapped bucket, then run the migration + merge
     CdcStream.mergeBatch(batch((5L, "v5c", "update", 9L)), state, Seq("id"))
@@ -253,9 +289,9 @@ class StreamingSpec extends SparkSpec {
     CdcStream.mergeBatch(batch((2L, "b", "insert", 1L)), state, Seq("id"),
       numBuckets = 64)
     val dirs = new java.io.File(state).listFiles()
-      .filter(_.getName.startsWith(CdcStream.BucketCol))
+      .filter(_.getName.startsWith(BucketedState.BucketCol))
       .map(_.getName).toSeq
-    val buckets = dirs.map(_.stripPrefix(CdcStream.BucketCol + "=").toInt)
+    val buckets = dirs.map(_.stripPrefix(BucketedState.BucketCol + "=").toInt)
     assert(buckets.forall(_ < 4), s"bucket ids $buckets exceed pinned count 4")
     assert(CdcStream.readState(spark, state).count() == 2)
   }
@@ -284,7 +320,7 @@ class StreamingSpec extends SparkSpec {
         .select(col("id"), concat(lit("v"), col("id")).as("v")),
       state, Seq("id"), numBuckets = n)
     def bucket(id: Long): Int = spark.range(id, id + 1)
-      .select(CdcStream.bucketOf(Seq("id"), n)).first().getInt(0)
+      .select(BucketedState.bucketOf(Seq("id"), n)).first().getInt(0)
     // drift column w arrives on key 5 only, so only its bucket holds it
     CdcStream.mergeBatch(Seq((5L, "v5", 55L)).toDF("id", "v", "w")
       .withColumn(E.Kind, lit("update")).withColumn(E.Lsn, lit(1L))
@@ -317,7 +353,7 @@ class StreamingSpec extends SparkSpec {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.list(java.nio.file.Paths.get(state))
         .iterator().asScala
-        .filter(_.getFileName.toString.startsWith(CdcStream.BucketCol))
+        .filter(_.getFileName.toString.startsWith(BucketedState.BucketCol))
         .map { b =>
           b.getFileName.toString ->
             java.nio.file.Files.list(b).iterator().asScala.map(f =>
