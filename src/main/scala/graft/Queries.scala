@@ -21,6 +21,18 @@ object Queries {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)
 
+  /** This JVM's working root for the fixtures, states and indexes the
+    * queries write, created on first use and deleted at exit. A fixed
+    * path would be shared by every JVM running queries at once, and one
+    * run would read another's half-written index. */
+  private lazy val workRoot: String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_queries").toFile
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(dir))
+    dir.toString
+  }
+
+  private def tmp(rel: String): String = s"$workRoot/$rel"
+
   /** Planted 9×8 grayscale PPM payload for the image-dedup rows:
     * md5-chain pixels shared per doc_id-div-4 cluster, ONE
     * +128-perturbed pixel per doc (flips ≤2 dHash gradient bits). The
@@ -449,7 +461,7 @@ object Queries {
         .orderBy("l_orderkey", "l_linenumber")),
 
     "incremental_scan" -> ((s, dir) => {
-      val stateDir = "/tmp/graft_state"
+      val stateDir = tmp("graft_state")
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(stateDir))
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(stateDir, "events.event_id.cursor"), "1000")
@@ -464,7 +476,7 @@ object Queries {
 
     // ---- §2.2 file-format readers ------------------------------------
     "read_csv" -> ((s, dir) => {
-      val path = "/tmp/graft_io/csv_region"
+      val path = tmp("graft_io/csv_region")
       graft.sinks.Sinks.csv(
         t(s, dir, "region"), path, delimiter = ";",
         policy = graft.sinks.Sinks.Drop)
@@ -479,7 +491,7 @@ object Queries {
       // columnar-format fidelity: orders through an ORC write/read
       // cycle with a pushed-down filter; the oracle reads the parquet
       // original, so a hash match proves the roundtrip is lossless
-      val path = "/tmp/graft_io/orc_orders"
+      val path = tmp("graft_io/orc_orders")
       graft.sinks.Sinks.orc(t(s, dir, "orders"), path,
         policy = graft.sinks.Sinks.Drop)
       Readers.orc(s, path)
@@ -495,7 +507,7 @@ object Queries {
       // The oracle reads the parquet original, so a hash match proves
       // the roundtrip lossless including the local-timestamp logical
       // type carried by o_orderdate.
-      val path = "/tmp/graft_io/avro_orders"
+      val path = tmp("graft_io/avro_orders")
       graft.sources.AvroIO.write(t(s, dir, "orders"), path)
       graft.sources.AvroIO.read(s, path)
         .filter(col("o_orderstatus") === "O")
@@ -505,7 +517,7 @@ object Queries {
     }),
 
     "read_jsonline" -> ((s, dir) => {
-      val path = "/tmp/graft_io/json_nation"
+      val path = tmp("graft_io/json_nation")
       graft.sinks.Sinks.jsonLines(t(s, dir, "nation"), path,
         policy = graft.sinks.Sinks.Drop)
       Readers.jsonLines(s, path, schema = Some(StructType(Seq(
@@ -516,7 +528,7 @@ object Queries {
     }),
 
     "read_nginx" -> ((s, dir) => {
-      val path = "/tmp/graft_io/nginx_log"
+      val path = tmp("graft_io/nginx_log")
       val lines = t(s, dir, "region").select(format_string(
         "10.0.0.%d - u%d [01/Jan/2024:00:00:00 +0000] \"GET /r/%s HTTP/1.1\" 200 %d",
         col("r_regionkey"), col("r_regionkey"),
@@ -853,10 +865,10 @@ object Queries {
       // then the v0→v2 diff must read back exactly the planted changes
       // — updates with both images, inserts/deletes with one. The
       // oracle derives the same changelog from the fixture formulas.
-      val path = "/tmp/graft_delta_cdf/orders"
+      val path = tmp("graft_delta_cdf/orders")
       val fs = org.apache.hadoop.fs.FileSystem.get(
         s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path("/tmp/graft_delta_cdf"), true)
+      fs.delete(new org.apache.hadoop.fs.Path(tmp("graft_delta_cdf")), true)
       val o = t(s, dir, "orders").select("o_orderkey", "o_totalprice")
       graft.sources.DeltaLite.write(o, path)
       val ups = o.filter(col("o_orderkey") % 10 === 1)
@@ -977,10 +989,10 @@ object Queries {
       import graft.operators.Rollup
       val keys = Seq("o_custkey")
       val mets = Seq("o_totalprice")
-      val statePath = "/tmp/graft_rollup_bucketed/state"
+      val statePath = tmp("graft_rollup_bucketed/state")
       val fs = new org.apache.hadoop.fs.Path(statePath)
         .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path("/tmp/graft_rollup_bucketed"), true)
+      fs.delete(new org.apache.hadoop.fs.Path(tmp("graft_rollup_bucketed")), true)
       val o = t(s, dir, "orders").withColumn("o_totalprice",
         col("o_totalprice").cast(DecimalType(18, 2)))
       val img = struct(col("o_custkey"), col("o_totalprice"))
@@ -1023,10 +1035,10 @@ object Queries {
       import graft.operators.Rollup
       val keys = Seq("o_custkey")
       val mets = Seq("o_totalprice")
-      val statePath = "/tmp/graft_rollup_mmbk/state"
+      val statePath = tmp("graft_rollup_mmbk/state")
       val fs = new org.apache.hadoop.fs.Path(statePath)
         .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path("/tmp/graft_rollup_mmbk"), true)
+      fs.delete(new org.apache.hadoop.fs.Path(tmp("graft_rollup_mmbk")), true)
       val o = t(s, dir, "orders").withColumn("o_totalprice",
         col("o_totalprice").cast(DecimalType(18, 2)))
       val img = struct(col("o_custkey"), col("o_totalprice"))
@@ -1134,7 +1146,7 @@ object Queries {
       // table's min orderkey) is present at every scale factor; oracle
       // filters the original table directly — the index changes which
       // files are READ, never the result.
-      val path = "/tmp/graft_bloom/lineitem"
+      val path = tmp("graft_bloom/lineitem")
       val l = t(s, dir, "lineitem")
         .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
       l.repartition(16, col("l_orderkey"))
@@ -1154,7 +1166,7 @@ object Queries {
       // files holding every trigram of the needle. Oracle filters the
       // original table — the index changes which files are read, never
       // the result.
-      val path = "/tmp/graft_trgm/documents"
+      val path = tmp("graft_trgm/documents")
       val d = t(s, dir, "documents").select("doc_id", "text")
       d.repartition(16, col("doc_id"))
         .write.mode("overwrite").parquet(path)
@@ -1215,7 +1227,7 @@ object Queries {
       // (ZOrderLakeSpec asserts the file-count pruning; this row proves
       // the pruned read loses no rows). Oracle is a plain filter+agg
       // over the original table.
-      val path = "/tmp/graft_zorder/lineitem"
+      val path = tmp("graft_zorder/lineitem")
       val l = t(s, dir, "lineitem").select(
         pmod(col("l_partkey"), lit(1024L)).as("x"),
         pmod(col("l_suppkey"), lit(1024L)).as("y"),
@@ -1429,7 +1441,7 @@ object Queries {
       // O(index scan + batch)) and then appends its own rows. The
       // union of discovered pairs must equal a one-shot full
       // recompute — which is exactly what the oracle does in SQL.
-      val base = "/tmp/graft_bandindex"
+      val base = tmp("graft_bandindex")
       val fs = org.apache.hadoop.fs.FileSystem.get(
         s.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(base), true)
@@ -1448,7 +1460,7 @@ object Queries {
       // cumulative union still equals the one-shot full recompute
       // (dedup_lsh_incremental's oracle, shared). File-count collapse
       // is spec-asserted; this row gates the ANSWER across the swap.
-      val base = "/tmp/graft_bandindex_compact"
+      val base = tmp("graft_bandindex_compact")
       val fs = org.apache.hadoop.fs.FileSystem.get(
         s.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(base), true)
@@ -1477,7 +1489,7 @@ object Queries {
       // file source + foreachBatch — NO stateful operator, so no state
       // store ever opens; the standing state lives in the band-index
       // lake itself, maintained by bandIndexUpdate.)
-      val base = "/tmp/graft_streamlsh"
+      val base = tmp("graft_streamlsh")
       val fs = org.apache.hadoop.fs.FileSystem.get(
         s.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(base), true)
@@ -2273,7 +2285,7 @@ object Queries {
       // then a probe: the answer must equal the one-shot ivfTopK over
       // the union — ann_ivf_topk's own oracle, which is exactly what
       // the hash-match proves.
-      val base = "/tmp/graft_ivf_idx"
+      val base = tmp("graft_ivf_idx")
       org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
         .delete(new org.apache.hadoop.fs.Path(base), true)
       val e = t(s, dir, "embeddings")
@@ -2297,7 +2309,7 @@ object Queries {
       // ann_ivf_incremental, which is precisely what compaction must
       // not disturb. File-count collapse is spec-asserted
       // (DedupSimilaritySpec); this row gates the ANSWER.
-      val base = "/tmp/graft_ivf_idx_compact"
+      val base = tmp("graft_ivf_idx_compact")
       org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
         .delete(new org.apache.hadoop.fs.Path(base), true)
       val e = t(s, dir, "embeddings")
@@ -2379,7 +2391,7 @@ object Queries {
       // and the cumulative pair union must equal the one-shot
       // embeddingNearDups over the full corpus (embed_near_dups'
       // oracle, shared — the equivalence IS the contract).
-      val base = "/tmp/graft_embindex"
+      val base = tmp("graft_embindex")
       val fs = org.apache.hadoop.fs.FileSystem.get(
         s.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(base), true)
@@ -2399,7 +2411,7 @@ object Queries {
       // probe's answers exactly those of the uncompacted twin — the
       // cumulative union still equals the one-shot recompute (same
       // shared oracle). File-count collapse is spec-asserted.
-      val base = "/tmp/graft_embindex_compact"
+      val base = tmp("graft_embindex_compact")
       val fs = org.apache.hadoop.fs.FileSystem.get(
         s.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(base), true)
@@ -2559,7 +2571,7 @@ object Queries {
     "confluent_decode" -> ((s, dir) => {
       // two-schema topic: even keys encoded with v1, odd with v2 (adds
       // status); all decoded against reader v2 via Avro schema resolution
-      val reg = "/tmp/graft_registry"
+      val reg = tmp("graft_registry")
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(reg))
       val v1 = """{"type":"record","name":"order","fields":[{"name":"id","type":"long"},{"name":"price","type":"double"}]}"""
       val v2 = """{"type":"record","name":"order","fields":[{"name":"id","type":"long"},{"name":"price","type":"double"},{"name":"status","type":"string","default":""}]}"""
@@ -2678,12 +2690,12 @@ object Queries {
     "queue_roundtrip" -> ((s, dir) => {
       // the queue serde loop end-to-end: CDC envelope -> JSON wire ->
       // file-queue spool -> queue read -> parse -> bucketed MERGE state
-      val qbase = "/tmp/graft_queue"
-      val state = "/tmp/graft_queue_state/orders"
+      val qbase = tmp("graft_queue")
+      val state = tmp("graft_queue_state/orders")
       val fs = org.apache.hadoop.fs.FileSystem.get(
         s.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(qbase), true)
-      fs.delete(new org.apache.hadoop.fs.Path("/tmp/graft_queue_state"), true)
+      fs.delete(new org.apache.hadoop.fs.Path(tmp("graft_queue_state")), true)
       val src = t(s, dir, "orders").withColumn(E.Kind, ordersKind)
         .select(col("o_orderkey").as("k"), col("o_totalprice").as("val"),
           col(E.Kind), col("o_orderkey").as(E.Lsn))
@@ -2733,7 +2745,7 @@ object Queries {
       // The feed (every third event delivered twice) stages to parquet
       // and rides a file-source stream — no driver-side collect, state
       // and sink distributed.
-      val base = "/tmp/graft_wmdedup"
+      val base = tmp("graft_wmdedup")
       val fs = org.apache.hadoop.fs.FileSystem.get(
         s.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(base), true)
@@ -2760,7 +2772,7 @@ object Queries {
       // join. Events ride a file-source stream; the dimension table is
       // BROADCAST per micro-batch (no shuffle on the stream side, no
       // state store — stateless enrich scales with batch size only).
-      val base = "/tmp/graft_stream_enrich"
+      val base = tmp("graft_stream_enrich")
       val fs = org.apache.hadoop.fs.FileSystem.get(
         s.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(base), true)
@@ -2857,10 +2869,10 @@ object Queries {
       // rotated sink layout end-to-end: daily partition dirs, O(1)
       // retention expiry (directory deletes, no rewrite), read-back of
       // the surviving periods
-      val path = "/tmp/graft_rotator/events"
+      val path = tmp("graft_rotator/events")
       val fs = org.apache.hadoop.fs.FileSystem.get(
         s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path("/tmp/graft_rotator"), true)
+      fs.delete(new org.apache.hadoop.fs.Path(tmp("graft_rotator")), true)
       graft.sinks.Rotator.write(t(s, dir, "events").select("event_id", "ts"),
         "ts", graft.sinks.Rotator.Daily, path, graft.sinks.Sinks.Drop)
       graft.sinks.Rotator.expire(s, path, keep = 3)
@@ -2875,10 +2887,10 @@ object Queries {
       // lake maintenance end-to-end: a micro-batched sink leaves 48
       // small files; compaction bin-packs them (crash-safe two-phase
       // swap) and the read-back must be byte-identical content
-      val path = "/tmp/graft_compact/lake"
+      val path = tmp("graft_compact/lake")
       val fs = org.apache.hadoop.fs.FileSystem.get(
         s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path("/tmp/graft_compact"), true)
+      fs.delete(new org.apache.hadoop.fs.Path(tmp("graft_compact")), true)
       t(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
         .repartition(48).write.parquet(path)
@@ -2892,10 +2904,10 @@ object Queries {
       // the trcli surface end-to-end: YAML config -> parsed Transfer ->
       // runSnapshot (source read, transformer chain fold, cleanup-aware
       // sink write) -> sink read-back
-      val out = "/tmp/graft_cfg_transfer/out"
+      val out = tmp("graft_cfg_transfer/out")
       val fs = org.apache.hadoop.fs.FileSystem.get(
         s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path("/tmp/graft_cfg_transfer"), true)
+      fs.delete(new org.apache.hadoop.fs.Path(tmp("graft_cfg_transfer")), true)
       val yaml =
         s"""type: SNAPSHOT_ONLY
            |src: { kind: parquet, path: $dir/orders.parquet }
@@ -2917,7 +2929,7 @@ object Queries {
       // TWO refs) written as real model files, DAG-resolved and
       // materialized in dependency order; the view chain stays lazy so
       // Catalyst fuses it, the table model cuts through parquet
-      val proj = new java.io.File("/tmp/graft_dbt/project")
+      val proj = new java.io.File(tmp("graft_dbt/project"))
       val models = new java.io.File(proj, "models")
       models.mkdirs()
       def w(n: String, sql: String): Unit =
@@ -2939,7 +2951,7 @@ object Queries {
       graft.operators.Dbt.runProject(s, proj.toString, "report",
           (sch, tbl) => { require(sch == "raw" && tbl == "documents",
             s"unexpected source ($sch,$tbl)"); t(s, dir, "documents") },
-          targetDir = Some("/tmp/graft_dbt/target"))
+          targetDir = Some(tmp("graft_dbt/target")))
         .orderBy("lang")
     }),
 
@@ -2947,7 +2959,7 @@ object Queries {
       // multi-table batch routing: one enveloped batch splits on __table
       // and MERGEs into per-table bucketed state dirs; all states read
       // back must reassemble the input exactly
-      val base = "/tmp/graft_multitable"
+      val base = tmp("graft_multitable")
       val fs = org.apache.hadoop.fs.FileSystem.get(
         s.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(base), true)
@@ -3056,10 +3068,10 @@ object Queries {
     "cleanup_policy" -> ((s, dir) => {
       // cleanup-policy semantics on a file sink: Drop re-creates, then a
       // Disabled (append-only) activation adds rows instead of clearing
-      val path = "/tmp/graft_cleanup/orders"
+      val path = tmp("graft_cleanup/orders")
       val fs = org.apache.hadoop.fs.FileSystem.get(
         s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path("/tmp/graft_cleanup"), true)
+      fs.delete(new org.apache.hadoop.fs.Path(tmp("graft_cleanup")), true)
       val o = t(s, dir, "orders").select(col("o_orderkey").as("k"),
         col("o_totalprice").cast(DoubleType).as("val"))
       graft.sinks.Sinks.parquet(o, path, graft.sinks.Sinks.Drop)
@@ -3241,7 +3253,7 @@ object Queries {
       // MemoryStream spelling collected the fixture to the driver and
       // was the bench's worst superlinear query at sf1 (135s isolated;
       // the operator itself is a few seconds).
-      val base = "/tmp/graft_guard"
+      val base = tmp("graft_guard")
       val fs = org.apache.hadoop.fs.FileSystem.get(
         s.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(base), true)
@@ -3298,10 +3310,10 @@ object Queries {
       // key range (what makes min/max stats selective at lake scale).
       // Disjointness is asserted from the actual file footprint; the
       // hash compare proves data fidelity of the round-trip.
-      val path = "/tmp/graft_sorted/orders"
+      val path = tmp("graft_sorted/orders")
       val fs = org.apache.hadoop.fs.FileSystem.get(
         s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path("/tmp/graft_sorted"), true)
+      fs.delete(new org.apache.hadoop.fs.Path(tmp("graft_sorted")), true)
       val o = t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_totalprice").cast("double").as("val"))
       graft.sinks.Sinks.sortedParquet(o, path, Seq("o_orderkey"),
@@ -3332,7 +3344,7 @@ object Queries {
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       import s.implicits._
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val base = "/tmp/graft_replicate"
+      val base = tmp("graft_replicate")
       val state = s"$base/state/orders"
       val fs = org.apache.hadoop.fs.FileSystem.get(
         s.sparkContext.hadoopConfiguration)
@@ -3388,7 +3400,7 @@ object Queries {
       // the composed loop (fresh-sf10 in PLANS.md), where
       // replicate_stream's MemoryStream harness OOMs by construction.
       // Same final state, same oracle.
-      val base = "/tmp/graft_replicate_fs"
+      val base = tmp("graft_replicate_fs")
       val state = s"$base/state/orders"
       val qdir = s"$base/queue"
       val fs = org.apache.hadoop.fs.FileSystem.get(
@@ -3457,10 +3469,10 @@ object Queries {
     "delta_roundtrip" -> ((s, dir) => {
       // two versioned Delta commits (public protocol), replayed by the
       // log reader
-      val path = "/tmp/graft_delta/orders"
+      val path = tmp("graft_delta/orders")
       val fs = org.apache.hadoop.fs.FileSystem.get(
         s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path("/tmp/graft_delta"), true)
+      fs.delete(new org.apache.hadoop.fs.Path(tmp("graft_delta")), true)
       val o = t(s, dir, "orders")
         .select("o_orderkey", "o_totalprice", "o_orderstatus")
       graft.sources.DeltaLite.write(o.filter(col("o_orderkey") % 2 === 0), path)
@@ -3473,10 +3485,10 @@ object Queries {
       // three micro-batches plus a crash-replay of batch 1 carrying a
       // poison payload — the replayed (appId, version) pair must skip,
       // so every order lands exactly once and the poison never commits
-      val path = "/tmp/graft_delta_txnq/orders"
+      val path = tmp("graft_delta_txnq/orders")
       val fs = org.apache.hadoop.fs.FileSystem.get(
         s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path("/tmp/graft_delta_txnq"), true)
+      fs.delete(new org.apache.hadoop.fs.Path(tmp("graft_delta_txnq")), true)
       val o = t(s, dir, "orders")
         .select("o_orderkey", "o_totalprice", "o_orderstatus")
       val app = "graft_replication"
@@ -3498,10 +3510,10 @@ object Queries {
       // v0 (log surgery only — no data movement), read the head. The
       // pre-restore version stays time-travelable; the oracle sees only
       // the v0 slice
-      val path = "/tmp/graft_delta_restore/orders"
+      val path = tmp("graft_delta_restore/orders")
       val fs = org.apache.hadoop.fs.FileSystem.get(
         s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path("/tmp/graft_delta_restore"), true)
+      fs.delete(new org.apache.hadoop.fs.Path(tmp("graft_delta_restore")), true)
       val o = t(s, dir, "orders")
         .select("o_orderkey", "o_totalprice", "o_orderstatus")
       graft.sources.DeltaLite.write(o.filter(col("o_orderkey") % 4 === 0), path)
@@ -3518,10 +3530,10 @@ object Queries {
       // appends, then an overwrite that logically removes them); reading
       // version 1 must reconstruct exactly the pre-overwrite state from
       // the immutable data files + truncated log replay
-      val path = "/tmp/graft_delta_tt/orders"
+      val path = tmp("graft_delta_tt/orders")
       val fs = org.apache.hadoop.fs.FileSystem.get(
         s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path("/tmp/graft_delta_tt"), true)
+      fs.delete(new org.apache.hadoop.fs.Path(tmp("graft_delta_tt")), true)
       val o = t(s, dir, "orders")
         .select("o_orderkey", "o_totalprice", "o_orderstatus")
       graft.sources.DeltaLite.write(o.filter(col("o_orderkey") % 4 === 0), path)
@@ -3544,10 +3556,10 @@ object Queries {
       // only grp-matching files are opened). The oracle filters the
       // original table — pruning changes which files are READ, never
       // the result.
-      val path = "/tmp/graft_delta_part/orders"
+      val path = tmp("graft_delta_part/orders")
       val fs = org.apache.hadoop.fs.FileSystem.get(
         s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path("/tmp/graft_delta_part"), true)
+      fs.delete(new org.apache.hadoop.fs.Path(tmp("graft_delta_part")), true)
       val o = t(s, dir, "orders")
         .select("o_orderkey", "o_orderpriority", "o_totalprice")
       graft.sources.DeltaLite.write(o, path,
@@ -3564,10 +3576,10 @@ object Queries {
       // The unified read-back serves the log's schema — pre-evolution
       // files surface NULL for the new column — which the oracle
       // reproduces with a CASE over the same key split.
-      val path = "/tmp/graft_delta_evolve/orders"
+      val path = tmp("graft_delta_evolve/orders")
       val fs = org.apache.hadoop.fs.FileSystem.get(
         s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path("/tmp/graft_delta_evolve"), true)
+      fs.delete(new org.apache.hadoop.fs.Path(tmp("graft_delta_evolve")), true)
       val o = t(s, dir, "orders")
       graft.sources.DeltaLite.write(
         o.filter(col("o_orderkey") % 4 =!= 0)
@@ -3584,7 +3596,7 @@ object Queries {
       // (written by a non-Delta writer) becomes a Delta table by
       // LISTING, not rewriting — then a partition-pruned transactional
       // read serves one status from the log's partitionValues
-      val path = "/tmp/graft_io/delta_convert"
+      val path = tmp("graft_io/delta_convert")
       t(s, dir, "orders").write.mode("overwrite")
         .partitionBy("o_orderstatus").parquet(path)
       graft.sources.DeltaLite.convert(s, path)
@@ -3605,10 +3617,10 @@ object Queries {
       // containing touched rows are rewritten — the spec asserts the
       // untouched file survives; here the oracle recomputes the final
       // table state from the same formulas.
-      val path = "/tmp/graft_delta_mrg/orders"
+      val path = tmp("graft_delta_mrg/orders")
       val fs = org.apache.hadoop.fs.FileSystem.get(
         s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path("/tmp/graft_delta_mrg"), true)
+      fs.delete(new org.apache.hadoop.fs.Path(tmp("graft_delta_mrg")), true)
       val o = t(s, dir, "orders")
         .select("o_orderkey", "o_totalprice", "o_orderstatus")
       graft.sources.DeltaLite.write(o.filter(col("o_orderkey") % 2 === 0), path)
@@ -3632,10 +3644,10 @@ object Queries {
       // bucketed incremental MERGE end-to-end: snapshot batch, then a
       // CDC batch of disjoint updates/deletes; the final state is read
       // back from the bucketed layout (only touched buckets rewritten)
-      val state = "/tmp/graft_state_merge/orders"
+      val state = tmp("graft_state_merge/orders")
       val fs = org.apache.hadoop.fs.FileSystem.get(
         s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path("/tmp/graft_state_merge"), true)
+      fs.delete(new org.apache.hadoop.fs.Path(tmp("graft_state_merge")), true)
       val snap = t(s, dir, "orders")
         .select(col("o_orderkey").as("k"), col("o_totalprice").as("val"))
       graft.streaming.CdcStream.mergeBatch(snap, state, Seq("k"),
@@ -3661,10 +3673,10 @@ object Queries {
       // delete batch merged copy-on-write under a txn watermark, then
       // the same batch REPLAYED with a poison payload — exactly-once
       // means the lake equals the collapse and the poison never lands
-      val path = "/tmp/graft_delta_cdc/orders"
+      val path = tmp("graft_delta_cdc/orders")
       val fs = org.apache.hadoop.fs.FileSystem.get(
         s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path("/tmp/graft_delta_cdc"), true)
+      fs.delete(new org.apache.hadoop.fs.Path(tmp("graft_delta_cdc")), true)
       val D = graft.sources.DeltaLite
       val app = "graft_lake_repl"
       val snap = t(s, dir, "orders")
@@ -4339,7 +4351,7 @@ object Queries {
       // are spec-tested. The read-back of both states must equal the
       // oracle's replay of exactly these phases.
       import graft.operators.{Lifecycle, TableFilter}
-      val base = "/tmp/graft_lifecycle"
+      val base = tmp("graft_lifecycle")
       org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
         .delete(new org.apache.hadoop.fs.Path(base), true)
       val pks = Seq("k")
@@ -4503,7 +4515,7 @@ object Queries {
       // which is what the hash-match proves. The index never shuffles:
       // batch prefixes probe it map-side, its stored fixed-order ranks
       // serve the reverse direction scan-side.
-      val base = "/tmp/graft_containment_idx"
+      val base = tmp("graft_containment_idx")
       org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
         .delete(new org.apache.hadoop.fs.Path(base), true)
       val d = t(s, dir, "documents").filter(col("doc_id") < 150)
@@ -4531,7 +4543,7 @@ object Queries {
       // naive all-pairs oracle). The fresh-sf10 ladder measures WHY:
       // without cadence the three per-update probe reads turn
       // listing-bound (PLANS.md).
-      val base = "/tmp/graft_containment_idx_cpt"
+      val base = tmp("graft_containment_idx_cpt")
       org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
         .delete(new org.apache.hadoop.fs.Path(base), true)
       val d = t(s, dir, "documents").filter(col("doc_id") < 150)
@@ -4562,7 +4574,7 @@ object Queries {
       // the cumulative union over any grouping of the arrival stream
       // equals the one-shot batch operator (shared naive all-pairs
       // oracle; the fresh-sf10 ladder measures the k× scan saving).
-      val base = "/tmp/graft_containment_idx_many"
+      val base = tmp("graft_containment_idx_many")
       org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
         .delete(new org.apache.hadoop.fs.Path(base), true)
       val d = t(s, dir, "documents").filter(col("doc_id") < 150)
@@ -4593,7 +4605,7 @@ object Queries {
       // and updates resume against the rebuilt lake (the law spec
       // also exercises a planes CHANGE, which the pinned-planes
       // oracle here cannot).
-      val base = "/tmp/graft_embindex_rebuild"
+      val base = tmp("graft_embindex_rebuild")
       val fs = org.apache.hadoop.fs.FileSystem.get(
         s.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(base), true)
@@ -4716,7 +4728,7 @@ object Queries {
       // mode — write I/O ∝ touched partitions, untouched dirs never
       // rewritten); the oracle replays the final state as a CASE over
       // the base table
-      val base = "/tmp/graft_dyn_part"
+      val base = tmp("graft_dyn_part")
       val fs = org.apache.hadoop.fs.FileSystem.get(
         s.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(base), true)

@@ -123,12 +123,24 @@ object Collapse {
     * aggregate gets map-side partial combine, so a hot key (one PK
     * dominating a CDC burst) is reduced before the shuffle instead of
     * funneling every duplicate through one window task — the skew story
-    * at scale. No per-partition sort either. */
+    * at scale. No per-partition sort either. The combine does not hold
+    * inside the bucketed merge ([[graft.sinks.BucketedState.rewrite]]):
+    * there the input is already clustered by the write's one Exchange,
+    * so the whole aggregate runs after it, with nothing reduced before
+    * the shuffle.
+    *
+    * The key columns come from the grouping, the rest from the newest
+    * row: an aggregate that sorts its input (as `max_by` over a struct
+    * does) then hands its key ordering on to what follows it. */
   def lastWriteWins(df: DataFrame, pks: Seq[String]): DataFrame = {
-    val row = struct(df.columns.map(col).toIndexedSeq: _*)
+    def key(c: String) = pks.find(_.equalsIgnoreCase(c))
+    val rest = df.columns.filter(key(_).isEmpty).toIndexedSeq
     df.groupBy(pks.map(col): _*)
-      .agg(max_by(row, ord).as("__r"))
-      .select(col("__r.*"))
+      .agg(max_by(struct(rest.map(col): _*), ord).as("__r"))
+      .select(df.columns.toIndexedSeq.map(c => key(c) match {
+        case Some(k) => if (k == c) col(k) else col(k).as(c)
+        case None => col("__r").getField(c).as(c)
+      }): _*)
   }
 
   /** Split PK-changing updates into delete(old)+insert(new) pairs

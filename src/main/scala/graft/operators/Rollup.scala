@@ -88,12 +88,19 @@ object Rollup {
     * keeps each metric's native numeric type so sums line up with
     * [[init]]'s for the merge union. */
   def delta(retractionBatch: DataFrame, groupKeys: Seq[String],
-            metrics: Seq[String]): DataFrame = {
+            metrics: Seq[String]): DataFrame =
+    signed(retractionBatch, groupKeys, metrics).groupBy(groupKeys.map(col): _*)
+      .agg(sum(col("n_rows")).as("n_rows"),
+        metrics.map(m => sum(col(s"sum_$m")).as(s"sum_$m")): _*)
+
+  /** Each retraction as a one-row signed delta in the state's shape:
+    * `n_rows` is its sign, `sum_<m>` its metric, negated for a delete.
+    * Summing these per group is [[delta]]. */
+  private def signed(retractionBatch: DataFrame, groupKeys: Seq[String],
+                     metrics: Seq[String]): DataFrame = {
     val s = sign
-    retractionBatch.groupBy(groupKeys.map(col): _*)
-      .agg(sum(s).as("n_rows"),
-        metrics.map(m =>
-          sum(when(s > 0, col(m)).otherwise(-col(m))).as(s"sum_$m")): _*)
+    retractionBatch.select(groupKeys.map(col) ++ (s.as("n_rows") +:
+      metrics.map(m => when(s > 0, col(m)).otherwise(-col(m)).as(s"sum_$m"))): _*)
   }
 
   /** Fold a delta into the state: one keyed shuffle of state ∪ delta.
@@ -101,11 +108,15 @@ object Rollup {
     * columns are cast back to the state's own types so chained merges
     * cannot walk decimal precision upward generation by generation. */
   def merge(state: DataFrame, deltaDf: DataFrame,
-            groupKeys: Seq[String], metrics: Seq[String]): DataFrame = {
-    val sumTypes = metrics.map(m =>
-      m -> state.schema(s"sum_$m").dataType).toMap
-    val merged = state.unionByName(deltaDf)
-      .groupBy(groupKeys.map(col): _*)
+            groupKeys: Seq[String], metrics: Seq[String]): DataFrame =
+    sumGroups(state.unionByName(deltaDf), groupKeys, metrics, state.schema)
+
+  /** [[merge]]'s aggregate over a union of state and delta rows, grouped
+    * by `groupCols`, with the sums cast to their type in `stateSchema`. */
+  private def sumGroups(union: DataFrame, groupCols: Seq[String],
+                        metrics: Seq[String],
+                        stateSchema: org.apache.spark.sql.types.StructType): DataFrame = {
+    val merged = union.groupBy(groupCols.map(col): _*)
       .agg(sum(col("n_rows")).as("n_rows"),
         metrics.map(m => sum(col(s"sum_$m")).as(s"sum_$m")): _*)
     val checked = merged.withColumn("n_rows",
@@ -113,9 +124,9 @@ object Rollup {
         lit("rollup: group count went negative — changelog retracts "),
         lit("rows absent from the state")))).otherwise(col("n_rows")))
     checked.filter(col("n_rows") > 0)
-      .select((groupKeys.map(col) :+ col("n_rows")) ++
-        metrics.map(m =>
-          col(s"sum_$m").cast(sumTypes(m)).as(s"sum_$m")): _*)
+      .select((groupCols.map(col) :+ col("n_rows")) ++
+        metrics.map(m => col(s"sum_$m")
+          .cast(stateSchema(s"sum_$m").dataType).as(s"sum_$m")): _*)
   }
 
   /** Aggregate state WITH extrema — [[init]]'s additive columns plus
@@ -293,10 +304,13 @@ object Rollup {
     * keyed by a stable group-key hash (the layout the replication MERGE
     * uses), and a fold
     *
-    *   - aggregates the BATCH into a signed delta (map-side combined),
-    *   - reads ONLY the buckets its delta touches,
-    *   - merges and rewrites ONLY those buckets behind a crash-safe
-    *     bucket swap —
+    *   - turns the BATCH into signed rows (one per retraction) and
+    *     finds the buckets they touch in one pass,
+    *   - reads ONLY those buckets,
+    *   - sums the signed rows into the touched groups in one shuffle,
+    *     the bucket write's own (sums are associative, so this is
+    *     [[merge]] of the batch's [[delta]] without the delta's shuffle),
+    *   - rewrites ONLY those buckets behind a crash-safe bucket swap —
     *
     * so rewrite I/O scales with the batch's key spread, never total
     * group cardinality. Unlike the replication MERGE (last-write-wins,
@@ -313,20 +327,25 @@ object Rollup {
                    statePath: String, retractionBatch: DataFrame,
                    groupKeys: Seq[String], metrics: Seq[String],
                    numBuckets: Int = 64, batchId: Long = -1L): DataFrame = {
-    val d = delta(retractionBatch, groupKeys, metrics)
+    // every fold writes the delta's schema (the sums are cast to it), so
+    // both reads pin it instead of inferring it from a footer. The sum
+    // types therefore follow the batch's metric types; a stream's batches
+    // share one schema, so they stay those the first fold wrote
+    val schema = delta(retractionBatch, groupKeys, metrics).schema
+    // the batch's signed rows are the probe, and are summed with the
+    // touched state in one aggregate after the layout's one Exchange:
+    // sums are associative, so this is merge(state, delta) without the
+    // delta's own shuffle; with no touched bucket yet the rows alone
+    // make their state (negative counts raise)
+    val rows = signed(retractionBatch, groupKeys, metrics)
     if (!recoverFolded(spark, statePath, batchId))
-      BucketedState.rewrite(statePath, groupKeys, numBuckets, d,
-          batch = batchId) { existing =>
-        // no touched bucket exists yet: the delta IS their state
-        // (negative counts raise)
-        val next = existing.fold(d.withColumn("n_rows",
-            when(col("n_rows") < 0, raise_error(
-              lit("rollup: batch retracts rows absent from the state")))
-              .otherwise(col("n_rows"))).filter(col("n_rows") > 0))(
-          merge(_, d, groupKeys, metrics))
-        BucketedState.Rewrite(next, marker(batchId))
+      BucketedState.rewrite(statePath, groupKeys, numBuckets, rows,
+          reader = _.schema(schema), batch = batchId) { (existing, layout) =>
+        BucketedState.Rewrite(sumGroups(layout.cluster(existing.fold(rows)(
+          _.unionByName(rows))), layout.groupCols, metrics, schema),
+          marker(batchId))
       }
-    readBucketed(spark, statePath, Some(d.schema))
+    readBucketed(spark, statePath, Some(schema))
   }
 
   /** [[foldBucketed]] with extrema maintenance — the bucketed-state
@@ -352,9 +371,11 @@ object Rollup {
       // the batch is the probe: foldWithExtrema reads it back from the
       // probe's cache instead of rescanning it
       BucketedState.rewrite(statePath, groupKeys, numBuckets,
-          retractionBatch, batch = batchId) { existing =>
-        BucketedState.Rewrite(foldWithExtrema(existing.getOrElse(emptyState),
-          retractionBatch, base, groupKeys, metrics), marker(batchId))
+          retractionBatch, reader = _.schema(emptyState.schema),
+          batch = batchId) { (existing, layout) =>
+        BucketedState.Rewrite(layout.cluster(foldWithExtrema(
+          existing.getOrElse(emptyState), retractionBatch, base, groupKeys,
+          metrics)), marker(batchId))
       }
     readBucketed(spark, statePath, Some(emptyState.schema))
   }
@@ -362,17 +383,19 @@ object Rollup {
   /** Read a bucketed rollup state without its layout column. Refuses a
     * half-swapped state, naming the paths
     * ([[graft.sinks.BucketedState.requireSettled]]); the next fold
-    * recovers it. An absent or empty dir is an empty state (bootstrap
-    * not yet run, or every group retracted): when `schema` gives the
-    * expected post-read shape (group keys + n_rows + sum columns) an
-    * empty frame with that schema is returned; without it a
-    * pre-bootstrap probe fails loudly rather than letting
-    * `spark.read.parquet` throw its opaque path/infer error. */
+    * recovers it. `schema`, when given, is the state's post-read shape
+    * (group keys + n_rows + sum columns): the read passes it instead of
+    * inferring one from a parquet footer (a Spark job per read). An
+    * absent or empty dir is an empty state (bootstrap not yet run, or
+    * every group retracted): with `schema` an empty frame of that schema
+    * is returned; without it a pre-bootstrap probe fails loudly rather
+    * than letting `spark.read.parquet` throw its opaque path/infer error. */
   def readBucketed(spark: org.apache.spark.sql.SparkSession,
                    statePath: String,
                    schema: Option[org.apache.spark.sql.types.StructType] =
                      None): DataFrame =
-    BucketedState.read(spark, statePath, Writer, empty = Some(() =>
+    BucketedState.read(spark, statePath, Writer,
+      reader = r => schema.fold(r)(r.schema), empty = Some(() =>
       schema match {
         case Some(s) =>
           spark.createDataFrame(spark.sparkContext

@@ -168,13 +168,17 @@ object CdcStream {
     * `stateDir/__bucket=i/` dirs keyed by a stable PK hash, and a batch
     * rewrites ONLY the buckets containing its keys — rewrite I/O scales
     * with the batch's key spread, not total state size (the flat-layout
-    * predecessor rewrote the whole state every batch). Per-batch plan:
-    * one small query for the touched-bucket set, then ONE last-write-wins
-    * over (the touched buckets re-entered as older-than-everything
-    * inserts) ∪ (the batch's raw row events) and one partitioned write.
-    * `max_by` over (__lsn, __counter) is associative, so this equals
-    * collapsing the batch first and merging the result, without the
-    * extra shuffle. The rewritten buckets and the new meta then replace
+    * predecessor rewrote the whole state every batch). Per-batch plan,
+    * three Spark jobs: one pass over the batch's row events for the
+    * touched-bucket set (it also builds their cache); then ONE plan with
+    * ONE Exchange, the layout's clustering of (the touched buckets
+    * re-entered as older-than-everything inserts) ∪ (the row events) on
+    * the bucket, followed by ONE last-write-wins grouped by (bucket,
+    * pks) and the partitioned write. `max_by` over (__lsn, __counter) is
+    * associative, so this equals collapsing the batch first and merging
+    * the result; the bucket is a function of the pks, so grouping by it
+    * too changes no row, and the write reuses the aggregate's
+    * clustering and order. The rewritten buckets and the new meta then replace
     * the old ones in one [[graft.sinks.Swap]] children swap, so a crash
     * at any step leaves the pre-batch or the post-batch state, and the
     * replayed batch converges because the merge itself is idempotent. At
@@ -245,21 +249,24 @@ object CdcStream {
       (E.dataCols(rows) ++ Seq(E.Kind, E.Lsn, E.Counter)).map(col): _*)
     // a legacy dir is read whole, and its flat files are swapped out
     BucketedState.rewrite(stateDir, pks, n, events, stateReader(meta),
-        flat = if (legacy) Some(spark.read.parquet(stateDir)) else None) { existing =>
+        flat = if (legacy) Some(spark.read.parquet(stateDir)) else None) {
+        (existing, layout) =>
       // current state re-enters as older-than-everything inserts.
       // unionByName with allowMissingColumns absorbs mid-stream schema
       // drift (DDL adding/dropping columns): new columns backfill null
       // in old state, dropped columns null out in new events —
       // Delta-style mergeSchema semantics (SURVEY §1.4 DDL mapping).
-      val merged = Collapse.lastWriteWins(existing.fold(events)(cur =>
+      // The union is clustered once, by the layout; the bucket is a
+      // function of the pks, so grouping by it too keeps one row per key
+      val merged = Collapse.lastWriteWins(layout.cluster(existing.fold(events)(cur =>
         cur.withColumn(E.Kind, lit(E.Insert))
           .withColumn(E.Lsn, lit(Long.MinValue))
           .withColumn(E.Counter, lit(0))
-          .unionByName(events, allowMissingColumns = true)), pks)
+          .unionByName(events, allowMissingColumns = true))), layout.groupCols)
       // union of old-state and new-batch data columns (schema drift)
-      val outCols = E.dataCols(merged)
+      val outCols = E.dataCols(merged).filterNot(layout.columns.contains)
       val out = merged.filter(col(E.Kind) =!= E.Delete)
-        .select(outCols.map(col): _*)
+        .select((layout.columns ++ outCols).map(col): _*)
 
       // the meta column set is the LOGICAL union across drifts: untouched
       // buckets may lag it on disk until a batch touches them
@@ -270,7 +277,7 @@ object CdcStream {
       // the schema-union read above); columns only the previous meta's
       // schema knew — dropped by DDL but still present in lagging buckets
       // — are retained so reads keep surfacing them as null
-      val outSchema = out.schema.map(_.copy(nullable = true))
+      val outSchema = outCols.map(out.schema(_).copy(nullable = true))
       val names = outSchema.map(_.name).toSet
       val unionSchema = org.apache.spark.sql.types.StructType(outSchema ++
         meta.flatMap(_.schema).toSeq.flatMap(_.fields.filterNot(f => names(f.name))))

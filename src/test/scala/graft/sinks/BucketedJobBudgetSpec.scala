@@ -1,25 +1,30 @@
 package graft.sinks
 
+import scala.collection.mutable
+
 import graft.{JobBudget, SparkSpec}
 import graft.model.{CdcEnvelope => E}
 import graft.operators.Rollup
 import graft.streaming.CdcStream
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
-/** Job budget of one batch into a [[BucketedState]]: the Spark jobs
-  * started inside one post-bootstrap [[CdcStream.mergeBatch]] call and
-  * one post-bootstrap [[Rollup.foldBucketed]] call. Every frame is
-  * defined before counting, and the state already holds a batch, so the
-  * count is what each later micro-batch pays ([[JobBudget]]).
+/** Cost of one batch into a [[BucketedState]]: the Spark jobs started
+  * inside one post-bootstrap [[CdcStream.mergeBatch]] call and one
+  * post-bootstrap [[Rollup.foldBucketed]] call, and the Exchanges in the
+  * physical plan of each batch's write. Every frame is defined before
+  * counting, and the state already holds a batch, so the count is what
+  * each later micro-batch pays ([[JobBudget]]).
   *
-  * CDC merge, 6: the probe's cache build, the touched-bucket distinct
-  * and its collect; the one last-write-wins shuffle, the bucket
-  * repartition and the write. Rollup fold, 9: the delta aggregate's
-  * shuffle, the probe's cache build, the distinct and its collect; two
-  * footer reads (the touched buckets and the settled state are read
-  * with inferred schemas); the merge shuffle, the bucket repartition
-  * and the write. */
+  * Both, 3: the touched set (one pass over the probe, which also builds
+  * its cache), the shuffle of the one Exchange, and the write. The CDC
+  * probe is the batch's row events; the rollup's is the batch's signed
+  * rows, so no delta aggregate runs ahead of the merge. Both reads of a
+  * rollup state pass its schema, so no footer is inferred. */
 class BucketedJobBudgetSpec extends SparkSpec {
 
   private def dir(name: String): String =
@@ -31,40 +36,99 @@ class BucketedJobBudgetSpec extends SparkSpec {
     JobBudget.jobsOf(spark)(next)
   }
 
-  test("CDC merge batch job budget: post-bootstrap 6") {
+  /** Every node of a physical plan, through a command's inner plan,
+    * adaptive plans and their query stages. A cached relation's own plan
+    * is not entered: it ran before the write. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case s: QueryStageExec => nodes(s.plan)
+    case other => (other.children ++ other.innerChildren.collect {
+      case c: SparkPlan => c }).flatMap(nodes)
+  })
+
+  private def exchanges(p: SparkPlan): Int =
+    nodes(p).count(_.isInstanceOf[ShuffleExchangeLike])
+
+  /** Executed plans of the parquet writes `body` runs. */
+  private def writePlans(body: => Unit): Seq[SparkPlan] = {
+    val seen = mutable.ArrayBuffer.empty[SparkPlan]
+    val l = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (nodes(qe.executedPlan).exists(_.nodeName == "WriteFiles"))
+          seen.synchronized(seen += qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    assert(org.apache.spark.sql.graft.bridge.drainListenerBus(spark, 10000))
+    spark.listenerManager.register(l)
+    try body
+    finally {
+      assert(org.apache.spark.sql.graft.bridge.drainListenerBus(spark, 10000))
+      spark.listenerManager.unregister(l)
+    }
+    seen.synchronized(seen.toList)
+  }
+
+  private lazy val snapshot = spark.range(0, 4000)
+    .select(col("id"), concat(lit("v"), col("id")).as("v"))
+  // 200 events over 150 keys spread across every bucket: updates,
+  // deletes, and inserts of new keys, some keys changed twice
+  private lazy val events: DataFrame = spark.range(0, 200).select(
+    (col("id") % 150 * 31).as("id"),
+    concat(lit("w"), col("id")).as("v"),
+    when(col("id") % 7 === 0, lit(E.Delete))
+      .when(col("id") % 150 * 31 >= 4000, lit(E.Insert))
+      .otherwise(lit(E.Update)).as(E.Kind),
+    (col("id") + 1).as(E.Lsn), lit(0).as(E.Counter))
+
+  private def changes(from: Long, until: Long, kind: String): DataFrame =
+    Rollup.retractions(spark.range(from, until).select(
+      lit(null).cast("struct<grp:string,v:bigint>").as("before"),
+      struct(concat(lit("g"), (col("id") % 40).cast("string")).as("grp"),
+        col("id").as("v")).as("after"),
+      lit(kind).as(E.Kind), col("id").as(E.Lsn), lit(0).as(E.Counter)))
+
+  private def fold(state: String, batch: DataFrame, id: Long): Unit =
+    Rollup.foldBucketed(spark, state, batch, Seq("grp"), Seq("v"),
+      numBuckets = 8, batchId = id)
+
+  test("CDC merge batch job budget: post-bootstrap 3") {
     val state = dir("mergejobs")
-    val snapshot = spark.range(0, 4000)
-      .select(col("id"), concat(lit("v"), col("id")).as("v"))
-    // 200 events over 150 keys spread across every bucket: updates,
-    // deletes, and inserts of new keys, some keys changed twice
-    val events: DataFrame = spark.range(0, 200).select(
-      (col("id") % 150 * 31).as("id"),
-      concat(lit("w"), col("id")).as("v"),
-      when(col("id") % 7 === 0, lit(E.Delete))
-        .when(col("id") % 150 * 31 >= 4000, lit(E.Insert))
-        .otherwise(lit(E.Update)).as(E.Kind),
-      (col("id") + 1).as(E.Lsn), lit(0).as(E.Counter))
     val jobs = budget(CdcStream.mergeBatch(snapshot, state, Seq("id"), numBuckets = 8)) {
       CdcStream.mergeBatch(events, state, Seq("id"))
     }
-    assert(jobs.size == 6, JobBudget.breakdown(jobs))
+    assert(jobs.size == 3, JobBudget.breakdown(jobs))
   }
 
-  test("bucketed rollup fold job budget: post-bootstrap 9") {
+  test("bucketed rollup fold job budget: post-bootstrap 3") {
     val state = dir("foldjobs")
-    def changes(from: Long, until: Long, kind: String): DataFrame =
-      Rollup.retractions(spark.range(from, until).select(
-        lit(null).cast("struct<grp:string,v:bigint>").as("before"),
-        struct(concat(lit("g"), (col("id") % 40).cast("string")).as("grp"),
-          col("id").as("v")).as("after"),
-        lit(kind).as(E.Kind), col("id").as(E.Lsn), lit(0).as(E.Counter)))
-    val boot = changes(0, 400, E.Insert)
-    val next = changes(400, 460, E.Insert)
-    val jobs = budget(Rollup.foldBucketed(spark, state, boot, Seq("grp"),
-        Seq("v"), numBuckets = 8, batchId = 0L)) {
-      Rollup.foldBucketed(spark, state, next, Seq("grp"), Seq("v"),
-        numBuckets = 8, batchId = 1L)
+    val jobs = budget(fold(state, changes(0, 400, E.Insert), 0L)) {
+      fold(state, changes(400, 460, E.Insert), 1L)
     }
-    assert(jobs.size == 9, JobBudget.breakdown(jobs))
+    assert(jobs.size == 3, JobBudget.breakdown(jobs))
+  }
+
+  test("one Exchange in the write plan of a CDC merge batch and a rollup fold") {
+    val merge = dir("mergeplan")
+    CdcStream.mergeBatch(snapshot, merge, Seq("id"), numBuckets = 8)
+    val mergeWrites = writePlans(CdcStream.mergeBatch(events, merge, Seq("id")))
+    val fst = dir("foldplan")
+    fold(fst, changes(0, 400, E.Insert), 0L)
+    val foldWrites = writePlans(fold(fst, changes(400, 460, E.Insert), 1L))
+    for ((what, plans) <- Seq("merge" -> mergeWrites, "fold" -> foldWrites)) {
+      assert(plans.size == 1, s"$what: ${plans.size} writes")
+      assert(exchanges(plans.head) == 1, s"$what:\n${plans.head}")
+    }
+  }
+
+  test("the layout spreads 32 buckets over 4 write tasks as 8/8/8/8") {
+    // pins Spark's hash partitioner: the slots are precomputed with
+    // murmur3(slot, 42), which HashPartitioning must still use
+    val keyed = spark.range(0, 2000).toDF("id")
+    val tasks = new BucketedState.Layout(Seq("id"), 32, 4).cluster(keyed)
+      .select(col(BucketedState.BucketCol).as("b"), spark_partition_id().as("p"))
+      .distinct().collect().map(r => r.getInt(0) -> r.getInt(1))
+    assert(tasks.map(_._1).sorted.toSeq == (0 until 32))
+    assert(tasks.forall { case (b, p) => p == b % 4 }, tasks.sorted.mkString(" "))
+    assert(tasks.groupBy(_._2).values.map(_.length).toSeq == Seq(8, 8, 8, 8))
   }
 }

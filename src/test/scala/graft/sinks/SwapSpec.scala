@@ -265,6 +265,54 @@ class SwapSpec extends AnyFunSuite {
     for (l <- childLayouts) falseRenameSweep(childrenCase(l))
   }
 
+  // ---------------- a CDC merge batch, end to end ----------------
+
+  test("a CDC merge batch replayed after a crash at every swap step converges") {
+    val spark = graft.SparkSpec.session
+    import spark.implicits._
+    import graft.model.{CdcEnvelope => E}
+    import graft.streaming.CdcStream
+    spark.sparkContext.hadoopConfiguration.set("fs.crashy.impl", classOf[CrashyFs].getName)
+    val expected = mutable.Map[Long, String]()
+    (0L until 80L).foreach(k => expected(k) = s"v$k")
+    // updates, deletes, new keys and repeated keys, over all 4 buckets
+    val events = (1 to 60).map { i =>
+      val k = (i * 7 % 100).toLong
+      val kind = if (i % 6 == 0) E.Delete
+        else if (expected.contains(k)) E.Update else E.Insert
+      if (kind == E.Delete) expected.remove(k) else expected(k) = s"w$i"
+      (k, if (kind == E.Delete) null else s"w$i", kind, i.toLong)
+    }
+    val batch = events.toDF("id", "v", E.Kind, E.Lsn).withColumn(E.Counter, org.apache.spark.sql.functions.lit(0))
+    val pre = newDir()
+    CdcStream.mergeBatch(spark.range(0, 80).selectExpr("id", "concat('v', id) AS v"),
+      new File(pre, "state").toString, Seq("id"), numBuckets = 4)
+    /** A copy of the pre-batch state, under the crashy scheme. */
+    def fresh(): (File, String) = {
+      val d = newDir()
+      org.apache.commons.io.FileUtils.copyDirectory(new File(pre, "state"), new File(d, "state"))
+      (d, s"crashy://${d.getAbsolutePath}/state")
+    }
+    def state(root: String) = CdcStream.readState(spark, root).select("id", "v")
+      .as[(Long, String)].collect().toMap
+    val (_, ref) = fresh()
+    val steps = CrashyFs.run(ref, Int.MaxValue)(CdcStream.mergeBatch(batch, ref, Seq("id")))
+    assert(state(ref) == expected.toMap)
+    assert(steps.size > 10 && steps.exists(_.endsWith("_graft_done")), steps.mkString("\n"))
+    for (k <- 1 to steps.size) {
+      val (d, root) = fresh()
+      val where = s"crash at step $k (${steps(k - 1)})"
+      val err = intercept[Throwable](
+        CrashyFs.run(root, k)(CdcStream.mergeBatch(batch, root, Seq("id"))))
+      assert(Iterator.iterate(err)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[Crash]), s"$where: $err")
+      // the batch never reached the checkpoint, so it replays
+      CdcStream.mergeBatch(batch, root, Seq("id"))
+      assert(state(root) == expected.toMap, s"$where: replay diverged")
+      assert(!new File(d, "state.bak").exists() && !new File(d, "state.tmp").exists(), where)
+    }
+  }
+
   // ---------------- small file ----------------
 
   private def fileCase(bootstrap: Boolean): () => Case = () => {
@@ -322,6 +370,62 @@ class SwapSpec extends AnyFunSuite {
 
 object SwapSpec {
   final class Crash extends RuntimeException("injected crash")
+
+  /** The local filesystem under the `crashy:` scheme, so a Spark writer
+    * can be handed a faulty one by path. Inside [[CrashyFs.run]] it
+    * counts the swap steps on one state root — every create, mkdirs,
+    * rename or delete of the root, a child of the root, `<root>.bak` or
+    * anything in it, and the drop of `<root>.tmp` — and throws [[Crash]]
+    * at the `failAt`-th. Spark's own write into `<root>.tmp` is not
+    * counted. */
+  final class CrashyFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+    override def getUri: java.net.URI = CrashyFs.Uri
+    override def getScheme: String = CrashyFs.Uri.getScheme
+
+    private def step(op: String, paths: Path*): Unit = CrashyFs.step(op, paths)
+
+    override def rename(src: Path, dst: Path): Boolean = {
+      step("rename", src, dst); super.rename(src, dst)
+    }
+    override def delete(p: Path, recursive: Boolean): Boolean = {
+      step("delete", p); super.delete(p, recursive)
+    }
+    override def mkdirs(p: Path, perm: FsPermission): Boolean = {
+      step("mkdirs", p); super.mkdirs(p, perm)
+    }
+    override def create(p: Path, perm: FsPermission, overwrite: Boolean,
+                        bufferSize: Int, replication: Short, blockSize: Long,
+                        progress: Progressable): FSDataOutputStream = {
+      step("create", p)
+      super.create(p, perm, overwrite, bufferSize, replication, blockSize, progress)
+    }
+  }
+
+  object CrashyFs {
+    val Uri: java.net.URI = java.net.URI.create("crashy:///")
+    private var armed: Option[(String, Int)] = None
+    private val log = mutable.ArrayBuffer.empty[String]
+
+    /** Run `body` with `root`'s swap steps counted, crashing at step
+    * `failAt`; the steps taken, in order. */
+    def run(root: String, failAt: Int)(body: => Unit): Seq[String] = {
+      synchronized { armed = Some((new Path(root).toUri.getPath, failAt)); log.clear() }
+      try body finally synchronized { armed = None }
+      synchronized(log.toList)
+    }
+
+    private def step(op: String, paths: Seq[Path]): Unit = synchronized {
+      for ((root, failAt) <- armed) {
+        val ps = paths.map(_.toUri.getPath)
+        def swapped(p: String) = p == root || new Path(p).getParent.toUri.getPath == root ||
+          p == root + ".bak" || p.startsWith(root + ".bak/")
+        if (ps.exists(swapped) || (op == "delete" && ps == Seq(root + ".tmp"))) {
+          log += (op +: ps).mkString(" ")
+          if (log.size == failAt) throw new Crash
+        }
+      }
+    }
+  }
 
   /** Counts every mutating call (create, mkdirs, rename, delete) and
     * fails the `failAt`-th: by throwing [[Crash]], or — with

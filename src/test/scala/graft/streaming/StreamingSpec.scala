@@ -238,6 +238,44 @@ class StreamingSpec extends SparkSpec {
     assert(names.exists(_.startsWith(BucketedState.BucketCol)))
   }
 
+  test("legacy migration and DDL drift batches equal a naive last-write-wins") {
+    val state = tmp() + "/tlw"
+    // naive replay: key -> (v, extra), event by event
+    val table = scala.collection.mutable.Map[Long, (String, Option[Long])]()
+    (0L until 60L).foreach(k => table(k) = (s"v$k", None))
+    spark.range(0, 60)
+      .select(col("id"), concat(lit("v"), col("id")).as("v"))
+      .write.parquet(state)                       // pre-bucketed layout
+    def events(from: Long, drift: Boolean) = (0 until 40).map { i =>
+      val lsn = from + i
+      val k = (i * 7 % 75).toLong                 // repeats, new keys
+      val kind = if (i % 5 == 0) "delete" else if (table.contains(k)) "update" else "insert"
+      val extra = if (drift && kind != "delete") Some(lsn * 10) else None
+      if (kind == "delete") table.remove(k) else table(k) = (s"w$lsn", extra)
+      (k, if (kind == "delete") null else s"w$lsn", extra, kind, lsn)
+    }
+    def check(round: String) = {
+      val st = CdcStream.readState(spark, state)
+      val extra = if (st.columns.contains("extra")) col("extra")
+        else lit(null).cast("bigint")
+      val got = st.select(col("id"), col("v"), extra)
+        .as[(Long, String, Option[Long])].collect().map(r => r._1 -> (r._2, r._3)).toMap
+      assert(got == table.toMap, s"$round diverged")
+    }
+    // the migration batch: every bucket counts as touched, the flat state
+    // is read whole, and it goes through the same clustered merge
+    CdcStream.mergeBatch(events(1, drift = false).map(e => (e._1, e._2, e._4, e._5))
+      .toDF("id", "v", E.Kind, E.Lsn).withColumn(E.Counter, lit(0)),
+      state, Seq("id"), numBuckets = 8)
+    assert(!new java.io.File(state).listFiles().exists(_.getName.startsWith("part-")))
+    check("legacy migration")
+    // DDL drift: a column the state has never seen, on some keys only
+    val drift = events(100, drift = true)
+    CdcStream.mergeBatch(drift.toDF("id", "v", "extra", E.Kind, E.Lsn)
+      .withColumn(E.Counter, lit(0)), state, Seq("id"))
+    check("drift")
+  }
+
   test("crash mid-legacy-migration leaves the flat snapshot recoverable") {
     val state = tmp() + "/tlc"
     spark.range(0, 50)
