@@ -38,6 +38,9 @@ object GraftSession {
       // storage dominates.
       .config("spark.sql.parquet.compression.codec", "lz4")
       .config("spark.ui.enabled", "false")
+      // `file:` paths set each new file's and directory's mode in-process
+      // instead of forking `chmod` (graft.sinks.NioLocalFileSystem)
+      .config("spark.hadoop.fs.file.impl", classOf[graft.sinks.NioLocalFileSystem].getName)
 
   /** Streaming state off-heap — apply to a builder for any deployment
     * whose stateful streams outgrow executor heap: the default

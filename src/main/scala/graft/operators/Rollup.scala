@@ -88,19 +88,12 @@ object Rollup {
     * keeps each metric's native numeric type so sums line up with
     * [[init]]'s for the merge union. */
   def delta(retractionBatch: DataFrame, groupKeys: Seq[String],
-            metrics: Seq[String]): DataFrame =
-    signed(retractionBatch, groupKeys, metrics).groupBy(groupKeys.map(col): _*)
-      .agg(sum(col("n_rows")).as("n_rows"),
-        metrics.map(m => sum(col(s"sum_$m")).as(s"sum_$m")): _*)
-
-  /** Each retraction as a one-row signed delta in the state's shape:
-    * `n_rows` is its sign, `sum_<m>` its metric, negated for a delete.
-    * Summing these per group is [[delta]]. */
-  private def signed(retractionBatch: DataFrame, groupKeys: Seq[String],
-                     metrics: Seq[String]): DataFrame = {
+            metrics: Seq[String]): DataFrame = {
     val s = sign
-    retractionBatch.select(groupKeys.map(col) ++ (s.as("n_rows") +:
-      metrics.map(m => when(s > 0, col(m)).otherwise(-col(m)).as(s"sum_$m"))): _*)
+    retractionBatch.groupBy(groupKeys.map(col): _*)
+      .agg(sum(s).as("n_rows"),
+        metrics.map(m =>
+          sum(when(s > 0, col(m)).otherwise(-col(m))).as(s"sum_$m")): _*)
   }
 
   /** Fold a delta into the state: one keyed shuffle of state ∪ delta.
@@ -304,13 +297,11 @@ object Rollup {
     * keyed by a stable group-key hash (the layout the replication MERGE
     * uses), and a fold
     *
-    *   - turns the BATCH into signed rows (one per retraction) and
-    *     finds the buckets they touch in one pass,
-    *   - reads ONLY those buckets,
-    *   - sums the signed rows into the touched groups in one shuffle,
-    *     the bucket write's own (sums are associative, so this is
-    *     [[merge]] of the batch's [[delta]] without the delta's shuffle),
-    *   - rewrites ONLY those buckets behind a crash-safe bucket swap —
+    *   - aggregates the BATCH into a signed delta (map-side combined),
+    *   - reads ONLY the buckets its delta touches,
+    *   - sums the delta into the touched groups in one shuffle, the
+    *     bucket write's own, and rewrites ONLY those buckets behind a
+    *     crash-safe bucket swap —
     *
     * so rewrite I/O scales with the batch's key spread, never total
     * group cardinality. Unlike the replication MERGE (last-write-wins,
@@ -327,25 +318,21 @@ object Rollup {
                    statePath: String, retractionBatch: DataFrame,
                    groupKeys: Seq[String], metrics: Seq[String],
                    numBuckets: Int = 64, batchId: Long = -1L): DataFrame = {
+    val d = delta(retractionBatch, groupKeys, metrics)
     // every fold writes the delta's schema (the sums are cast to it), so
     // both reads pin it instead of inferring it from a footer. The sum
     // types therefore follow the batch's metric types; a stream's batches
     // share one schema, so they stay those the first fold wrote
-    val schema = delta(retractionBatch, groupKeys, metrics).schema
-    // the batch's signed rows are the probe, and are summed with the
-    // touched state in one aggregate after the layout's one Exchange:
-    // sums are associative, so this is merge(state, delta) without the
-    // delta's own shuffle; with no touched bucket yet the rows alone
-    // make their state (negative counts raise)
-    val rows = signed(retractionBatch, groupKeys, metrics)
     if (!recoverFolded(spark, statePath, batchId))
-      BucketedState.rewrite(statePath, groupKeys, numBuckets, rows,
-          reader = _.schema(schema), batch = batchId) { (existing, layout) =>
-        BucketedState.Rewrite(sumGroups(layout.cluster(existing.fold(rows)(
-          _.unionByName(rows))), layout.groupCols, metrics, schema),
+      BucketedState.rewrite(statePath, groupKeys, numBuckets, d,
+          reader = _.schema(d.schema), batch = batchId) { (existing, layout) =>
+        // with no touched bucket yet the delta alone makes their state
+        // (negative counts raise)
+        BucketedState.Rewrite(sumGroups(layout.cluster(existing.fold(d)(
+          _.unionByName(d))), layout.groupCols, metrics, d.schema),
           marker(batchId))
       }
-    readBucketed(spark, statePath, Some(schema))
+    readBucketed(spark, statePath, Some(d.schema))
   }
 
   /** [[foldBucketed]] with extrema maintenance — the bucketed-state

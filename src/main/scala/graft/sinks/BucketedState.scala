@@ -5,7 +5,6 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, DataFrameReader, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import org.apache.spark.unsafe.hash.Murmur3_x86_32
 
 /** The bucketed state layout, end to end: a root directory whose rows
   * live in `__bucket=i/` children keyed by a stable hash of the row key,
@@ -26,7 +25,9 @@ import org.apache.spark.unsafe.hash.Murmur3_x86_32
   *    logic, which clusters its rows through the layout's one Exchange;
   *    it writes the result key-sorted into `<root>.tmp` with the sidecars
   *    staged last, and swaps the touched buckets and sidecars in as one
-  *    set. A batch is three Spark jobs: touched set, shuffle, write;
+  *    set. A batch is three Spark jobs: touched set, shuffle, write
+  *    (a probe with a shuffle in its lineage, like the rollup's delta,
+  *    adds the jobs that build its cache);
   *  - [[read]] and [[requireSettled]] serve readers, which never
   *    recover: a root whose swap is not settled is refused.
   */
@@ -34,10 +35,6 @@ object BucketedState {
 
   /** The bucket column: the partition key of the layout's children. */
   val BucketCol = "__bucket"
-
-  /** The slot column: the int a batch's one Exchange hashes ([[Layout]]).
-    * It lives only inside the write plan; no file holds it. */
-  val SlotCol = "__slot"
 
   /** Sentinel for a NULL key component in the rendered key tuple:
     * concat_ws silently DROPS nulls, which would land null-keyed rows in
@@ -79,51 +76,33 @@ object BucketedState {
       new Path(root + ".tmp"), bakOf(root), committed)
 
   /** The batch's one clustering step, handed to the caller's row logic.
-    * [[cluster]] adds [[BucketCol]] and [[SlotCol]] and repartitions on
-    * the slot into `k = min(n, shufflePartitions)` partitions: the only
-    * shuffle the write needs. A caller aggregates the clustered rows
-    * grouped by [[groupCols]] (layout columns first, then the keys); the
-    * slot hash partitioning satisfies that grouping, so Spark adds no
-    * second Exchange, and an aggregate that sorts its input hands the
-    * write rows already in bucket-then-key order. */
+    * [[cluster]] adds [[BucketCol]] and repartitions on it into
+    * `k = min(n, shufflePartitions)` partitions: the only shuffle the
+    * write needs. A caller aggregates the clustered rows grouped by
+    * [[groupCols]] (the bucket, then the keys); the bucket hash
+    * partitioning satisfies that grouping, so Spark adds no second
+    * Exchange, and an aggregate that sorts its input hands the write rows
+    * already in bucket-then-key order.
+    *
+    * The aggregate therefore runs on the `k` write tasks. With more
+    * shuffle partitions than buckets (`p > n`, e.g. a cluster sized at
+    * 2-3 partitions per core), a batch that touches every bucket (the
+    * bootstrap, a legacy migration, a spread batch) aggregates on `n`
+    * tasks where a separate aggregate shuffle would use `p`; it still
+    * writes on `n`, as it did before. */
   final class Layout private[sinks] (keys: Seq[String], n: Int, k: Int) {
-    private val slotIds = slots(k)
-
-    /** The layout columns, in grouping and sort order. */
-    val columns: Seq[String] = Seq(BucketCol, SlotCol)
-
-    /** The caller's grouping: the layout columns, then the keys. */
-    def groupCols: Seq[String] = columns ++ keys
+    /** The caller's grouping: the bucket, then the keys. */
+    def groupCols: Seq[String] = BucketCol +: keys
 
     def cluster(rows: DataFrame): DataFrame =
-      rows.withColumn(BucketCol, bucketOf(keys, n))
-        .withColumn(SlotCol, element_at(typedLit(slotIds.toSeq),
-          pmod(col(BucketCol), lit(k)) + 1))
-        .repartition(k, col(SlotCol))
-  }
-
-  /** One slot per residue `r < k`: an int whose Spark hash partition
-    * (`pmod(murmur3(slot, 42), k)`, `HashPartitioning`'s partition id) is
-    * `r`. Bucket `b` gets the slot of `b % k`, so its rows land in
-    * partition `b % k` and the buckets spread evenly over the write tasks
-    * (hashing the bucket id itself collides: 32 buckets over 4 tasks
-    * measured 5/10/7/10). About `k ln k` hashes. */
-  private def slots(k: Int): Array[Int] = {
-    val out = Array.fill(k)(-1)
-    var (left, s) = (k, 0)
-    while (left > 0) {
-      val r = math.floorMod(Murmur3_x86_32.hashInt(s, 42), k)
-      if (out(r) < 0) { out(r) = s; left -= 1 }
-      s += 1
-    }
-    out
+      rows.withColumn(BucketCol, bucketOf(keys, n)).repartition(k, col(BucketCol))
   }
 
   /** What replaces the touched buckets: their new rows, which carry the
-    * key columns and both [[Layout.columns]] (take them from a grouping,
-    * not from an aggregated struct, so the aggregate's ordering reaches
-    * the write), and the sidecar files staged after them, in swap order.
-    * A sidecar with no text replaces its live namesake by nothing. */
+    * key columns and [[BucketCol]] (take them from a grouping, not from
+    * an aggregated struct, so the aggregate's ordering reaches the
+    * write), and the sidecar files staged after them, in swap order. A
+    * sidecar with no text replaces its live namesake by nothing. */
   final case class Rewrite(rows: DataFrame,
                            sidecars: Seq[(String, Option[String])])
 
@@ -159,7 +138,10 @@ object BucketedState {
     * Per batch: one job for the touched set, then one plan with one
     * Exchange (the layout's clustering, before `partitionBy`: otherwise
     * every task writes a file into every bucket dir, tasks × buckets
-    * files per batch). Rows are key-sorted within each bucket, so parquet
+    * files per batch). The caller's aggregate runs after that Exchange,
+    * on the `min(n, shufflePartitions)` write tasks (see [[Layout]] for
+    * what that costs when there are more shuffle partitions than
+    * buckets). Rows are key-sorted within each bucket, so parquet
     * min/max stats prune a point read inside it. Untouched buckets are
     * never read or written. `batch` heads the swap manifest. */
   def rewrite(root: String, keys: Seq[String], n: Int, probe: DataFrame,
@@ -180,9 +162,9 @@ object BucketedState {
         if (paths.isEmpty) None
         else Some(reader(spark.read.option("basePath", root))
           .parquet(paths.map(_.toString): _*).drop(BucketCol))), layout)
-      require(layout.columns.forall(rows.columns.contains),
+      require(rows.columns.contains(BucketCol),
         s"rows rewritten into $root must be clustered through the batch's Layout")
-      rows.sortWithinPartitions(layout.groupCols.map(col): _*).drop(SlotCol)
+      rows.sortWithinPartitions(layout.groupCols.map(col): _*)
         .write.partitionBy(BucketCol).parquet(tmp.toString)
       for ((name, Some(text)) <- sidecars) {
         val out = fs.create(new Path(tmp, name))

@@ -264,9 +264,9 @@ object CdcStream {
           .withColumn(E.Counter, lit(0))
           .unionByName(events, allowMissingColumns = true))), layout.groupCols)
       // union of old-state and new-batch data columns (schema drift)
-      val outCols = E.dataCols(merged).filterNot(layout.columns.contains)
+      val outCols = E.dataCols(merged).filterNot(_ == BucketedState.BucketCol)
       val out = merged.filter(col(E.Kind) =!= E.Delete)
-        .select((layout.columns ++ outCols).map(col): _*)
+        .select((BucketedState.BucketCol +: outCols).map(col): _*)
 
       // the meta column set is the LOGICAL union across drifts: untouched
       // buckets may lag it on disk until a batch touches them
