@@ -2970,11 +2970,7 @@ object Queries {
         .withColumn(E.Kind, lit(E.Insert))
         .withColumn(E.Lsn, col("k")).withColumn(E.Counter, lit(0))
       val tables = graft.streaming.CdcStream.mergeMultiTable(env, base, Seq("k"))
-      tables.map { tn =>
-        val safe = tn.replaceAll("[^A-Za-z0-9_.-]", "_")
-        graft.streaming.CdcStream.readState(s, s"$base/$safe")
-          .withColumn(E.Table, lit(tn))
-      }.reduce(_.unionByName(_)).orderBy("k")
+      graft.operators.Lifecycle.readAll(s, base, tables).orderBy("k")
     }),
 
     "toast_coalesce" -> ((s, dir) => {

@@ -113,8 +113,12 @@ object TransferRunner {
     * (Kafka / file-queue mirror direction — the reference's db→queue
     * transfers). Returns the started query. */
   def runReplication(spark: SparkSession, t: Transfer,
-                     pks: Seq[String]): org.apache.spark.sql.streaming.StreamingQuery = {
-    val src = source(spark, t.source)
+                     pks: Seq[String]): org.apache.spark.sql.streaming.StreamingQuery =
+    replicate(t, pks, source(spark, t.source))
+
+  /** [[runReplication]] of the streaming source `src`. */
+  private def replicate(t: Transfer, pks: Seq[String],
+                        src: DataFrame): org.apache.spark.sql.streaming.StreamingQuery = {
     require(src.isStreaming, "replication requires a streaming source")
     val chain = TransformerChain(t.transformers)
     val out = chain(src)
@@ -158,19 +162,15 @@ object TransferRunner {
 
   /** SNAPSHOT_AND_INCREMENT: snapshot first, then hand off to the
     * stream (reference: worker/tasks/start_job.go transition). The
-    * snapshot lands through the same Merge sink so replication resumes
-    * idempotently on top of it. */
+    * snapshot lands through the same Merge sink, and the stream
+    * replicates into it exactly as [[runReplication]] does (checkpoint
+    * `t.checkpointDir`, else `<path>_checkpoint`; dead-letter rows to
+    * `t.errorsOutput`), so replication resumes idempotently on top of
+    * the snapshot. */
   def runBoth(spark: SparkSession, t: Transfer, pks: Seq[String],
               stream: DataFrame): org.apache.spark.sql.streaming.StreamingQuery = {
-    val snapCfg = t.copy(transferType = TransferType.SnapshotOnly)
-    runSnapshot(spark, snapCfg)
-    val ckpt = t.checkpointDir.getOrElse("/tmp/graft_ckpt")
-    val stateDir = t.sink match {
-      case SinkConfig.Merge(path, _) => path
-      case other => throw new IllegalArgumentException(s"need Merge sink, got $other")
-    }
-    streaming.CdcStream.replicate(
-      TransformerChain(t.transformers)(stream), stateDir, ckpt, pks,
-      streaming.CdcStream.Bufferer()).start()
+    require(t.sink.isInstanceOf[SinkConfig.Merge], s"need Merge sink, got ${t.sink}")
+    runSnapshot(spark, t.copy(transferType = TransferType.SnapshotOnly))
+    replicate(t, pks, stream)
   }
 }

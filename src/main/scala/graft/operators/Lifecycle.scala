@@ -31,23 +31,13 @@ import org.apache.spark.sql.functions._
   */
 object Lifecycle {
 
-  private def safe(t: String) = t.replaceAll("[^A-Za-z0-9_.-]", "_")
-
   /** Apply one enveloped multi-table batch under the current filter:
-    * out-of-set tables drop, in-set tables merge into their state. */
-  def applyBatch(batch0: DataFrame, base: String, pks: Seq[String],
-                 filter: TableFilter): Seq[String] = {
-    // materialize once: the filter probe, the downstream table
-    // listing, and every per-table merge all reuse these blocks
-    val batch = batch0.persist()
-    try {
-      val tables = batch.select(E.Table).distinct()
-        .collect().map(_.getString(0)).filter(filter.matches).sorted.toSeq
-      if (tables.isEmpty) Nil
-      else CdcStream.mergeMultiTable(
-        batch.filter(col(E.Table).isin(tables: _*)), base, pks)
-    } finally { batch.unpersist() }
-  }
+    * out-of-set tables drop, in-set tables merge into their state
+    * (one [[CdcStream.mergeMultiTable]] over the filtered batch). */
+  def applyBatch(batch: DataFrame, base: String, pks: Seq[String],
+                 filter: TableFilter): Seq[String] =
+    CdcStream.mergeMultiTable(batch.filter(filter.matches(col(E.Table))),
+      base, pks)
 
   /** Widen the table set: snapshot-load each added table's current
     * content into its own state dir, return the widened filter.
@@ -73,7 +63,7 @@ object Lifecycle {
                 added: Seq[(String, DataFrame)]): TableFilter = {
     added.foreach { case (table, snapshot) =>
       CdcStream.mergeBatch(E.fromSnapshot(snapshot, lit(0L)),
-        s"$base/${safe(table)}", pks)
+        CdcStream.tableDir(base, table), pks)
     }
     val names = added.map(_._1)
     val quoted = names.map(java.util.regex.Pattern.quote)
@@ -106,9 +96,9 @@ object Lifecycle {
     val fs = org.apache.hadoop.fs.FileSystem
       .get(spark.sparkContext.hadoopConfiguration)
     tables.foreach { case (table, snapshot) =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$base/${safe(table)}"), true)
+      fs.delete(new org.apache.hadoop.fs.Path(CdcStream.tableDir(base, table)), true)
       CdcStream.mergeBatch(E.fromSnapshot(snapshot, lit(0L)),
-        s"$base/${safe(table)}", pks)
+        CdcStream.tableDir(base, table), pks)
     }
   }
 
@@ -117,7 +107,7 @@ object Lifecycle {
   def readAll(spark: SparkSession, base: String,
               tables: Seq[String]): DataFrame =
     tables.map { t =>
-      CdcStream.readState(spark, s"$base/${safe(t)}")
+      CdcStream.readState(spark, CdcStream.tableDir(base, t))
         .withColumn(E.Table, lit(t))
     }.reduce(_.unionByName(_))
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types.StructType
 
 /** The engine's operator unit: a declarative DataFrame -> DataFrame step.
@@ -63,4 +64,12 @@ final case class TableFilter(include: Seq[String] = Nil,
   def matches(table: String): Boolean =
     (include.isEmpty || include.exists(m(_, table))) &&
       !exclude.exists(m(_, table))
+
+  /** [[matches]] over a column of table names: the same anchored
+    * patterns, through `rlike` (Java regex, like `matches`). */
+  def matches(table: Column): Column = {
+    def m(p: String) = table.rlike(s"^(?:$p)$$")
+    val included = if (include.isEmpty) lit(true) else include.map(m).reduce(_ || _)
+    exclude.foldLeft(included)((c, p) => c && !m(p))
+  }
 }

@@ -1,5 +1,6 @@
 package graft.sources
 
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
@@ -14,7 +15,9 @@ import org.apache.spark.sql.types._
   * (Hive-style directory layout + partitionValues per add action, the
   * layout every mainstream Delta writer emits) with partition-pruned
   * reads; column mapping/DVs are out of scope and rejected loudly
-  * rather than misread.
+  * rather than misread. Row-level writes ([[deleteWhere]], [[upsert]],
+  * [[mergeCdc]]) share one copy-on-write step ([[copyOnWrite]]); every
+  * tenth version also writes a checkpoint.
   */
 object DeltaLite {
 
@@ -185,8 +188,8 @@ object DeltaLite {
 
     val ckptVersion: Option[Long] = graft.sinks.Swap.readText(fs,
         new org.apache.hadoop.fs.Path(logDir, "_last_checkpoint"))
-      .flatMap(""""version"\s*:\s*(\d+)""".r.findFirstMatchIn(_))
-      .map(_.group(1).toLong)
+      .flatMap(text => Option(mapper.readTree(text).get("version")))
+      .map(_.asLong)
       .filter(v => asOf.forall(v <= _))
     asOf.foreach { v =>
       val committed = ckptVersion.contains(v) || fs.exists(
@@ -266,6 +269,9 @@ object DeltaLite {
   private case object ActOther extends Action
 
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** Every this many versions a commit also writes a checkpoint. */
+  private val CheckpointInterval = 10
 
   /** One log action, parsed with a REAL JSON parser: a substring scan
     * misreads external writers' commitInfo lines whose
@@ -374,7 +380,6 @@ object DeltaLite {
     * table's recorded partitioning (passing a different one raises). */
   def write(df: DataFrame, tablePath: String,
             overwrite: Boolean = false,
-            checkpointInterval: Int = 10,
             partitionBy: Seq[String] = Nil,
             mergeSchema: Boolean = false,
             txn: Option[(String, Long)] = None): Long = {
@@ -413,8 +418,7 @@ object DeltaLite {
         else Nil,
       // overwrite re-targets whatever is active at the winning version,
       // so a lost race is never a conflict — recompute and go again
-      abortOnRemoveConflict = false,
-      checkpointInterval, pcols,
+      abortOnRemoveConflict = false, pcols,
       mintedId = existing.flatMap(_.meta).map(_.id).filter(_.nonEmpty),
       baseVersion = base, txn = txn)
   }
@@ -428,8 +432,7 @@ object DeltaLite {
     * point of the migration path (a 100 TB lake converts in seconds).
     * After conversion every DeltaLite op (append, merge, time travel,
     * vacuum, optimize) works against the adopted files. */
-  def convert(spark: SparkSession, tablePath: String,
-              checkpointInterval: Int = 10): Long = {
+  def convert(spark: SparkSession, tablePath: String): Long = {
     val fs = tableFs(spark, tablePath)
     val logDir = new org.apache.hadoop.fs.Path(s"$tablePath/_delta_log")
     require(!fs.exists(logDir), s"$tablePath is already a Delta table")
@@ -471,7 +474,7 @@ object DeltaLite {
       .parquet(tablePath).schema
     commitRetrying(spark, tablePath, schema, adds.toSeq,
       removesThunk = () => Nil, abortOnRemoveConflict = true,
-      checkpointInterval, pcols, mintedId = None, baseVersion = -1L)
+      pcols, mintedId = None, baseVersion = -1L)
   }
 
   private def tableFs(spark: SparkSession, tablePath: String) =
@@ -594,7 +597,6 @@ object DeltaLite {
                              adds: Seq[(String, Long, Map[String, String])],
                              removesThunk: () => Seq[String],
                              abortOnRemoveConflict: Boolean,
-                             checkpointInterval: Int,
                              partitionColumns: Seq[String],
                              mintedId: Option[String],
                              baseVersion: Long,
@@ -639,7 +641,7 @@ object DeltaLite {
         .getOrElse(freshId)
       try {
         writeCommit(spark, tablePath, version, schema, adds, removes,
-          checkpointInterval, partitionColumns, tableId, txn)
+          partitionColumns, tableId, txn)
         return version
       } catch {
         case e: java.io.IOException if fs.exists(commitPath(tablePath, version)) =>
@@ -651,51 +653,59 @@ object DeltaLite {
   }
 
   /** Emit one commit of add+remove actions at `version`
-    * (create-exclusive: racing writers lose), then checkpoint on the
-    * configured cadence. */
+    * (create-exclusive: racing writers lose), then checkpoint every
+    * [[CheckpointInterval]] versions. Each action line is built by the
+    * same `mapper` that [[parseLine]] reads it with, so any string a
+    * caller passes (partition value, txn appId) is escaped the way the
+    * reader expects. */
   private def writeCommit(spark: SparkSession, tablePath: String,
                           version: Long, schema: StructType,
                           adds: Seq[(String, Long, Map[String, String])],
                           removes: Seq[String],
-                          checkpointInterval: Int,
                           partitionColumns: Seq[String],
                           tableId: String,
                           txn: Option[(String, Long)] = None): Unit = {
     val fs = tableFs(spark, tablePath)
     val logDir = new org.apache.hadoop.fs.Path(s"$tablePath/_delta_log")
-    def js(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c => c.toString
-    } + "\""
+    def action(kind: String)(fill: ObjectNode => Unit): String = {
+      val line = mapper.createObjectNode()
+      fill(line.putObject(kind))
+      mapper.writeValueAsString(line)
+    }
     val now = System.currentTimeMillis()
     val actions = Seq.newBuilder[String]
     if (version == 0L)
-      actions += """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}"""
+      actions += action("protocol")(
+        _.put("minReaderVersion", 1).put("minWriterVersion", 2))
     // the txn action rides IN the same commit as its data files —
     // that atomicity is the whole exactly-once guarantee
     txn.foreach { case (appId, v) =>
-      actions +=
-        s"""{"txn":{"appId":${js(appId)},"version":$v,"lastUpdated":$now}}"""
+      actions += action("txn")(
+        _.put("appId", appId).put("version", v).put("lastUpdated", now))
     }
     // metaData rides on every commit (protocol-legal replacement, so the
     // log stays self-describing across schema evolution) — with the
     // table's STABLE id, not a per-commit UUID
-    actions += s"""{"metaData":{"id":${js(tableId)},""" +
-      s""""format":{"provider":"parquet","options":{}},""" +
-      s""""schemaString":${js(schema.json)},""" +
-      s""""partitionColumns":[${partitionColumns.map(js).mkString(",")}],""" +
-      s""""configuration":{},"createdTime":$now}}"""
+    actions += action("metaData") { m =>
+      m.put("id", tableId)
+      m.putObject("format").put("provider", "parquet").putObject("options")
+      m.put("schemaString", schema.json)
+      val pcols = m.putArray("partitionColumns")
+      partitionColumns.foreach(c => pcols.add(c))
+      m.putObject("configuration")
+      m.put("createdTime", now)
+    }
     removes.foreach { p =>
-      actions += s"""{"remove":{"path":${js(p)},"deletionTimestamp":$now,"dataChange":true}}"""
+      actions += action("remove")(
+        _.put("path", p).put("deletionTimestamp", now).put("dataChange", true))
     }
     adds.foreach { case (name, len, pv) =>
-      val pvJson = pv.map { case (k, v) =>
-        s"${js(k)}:${if (v == null) "null" else js(v)}"
-      }.mkString("{", ",", "}")
-      actions += s"""{"add":{"path":${js(name)},"partitionValues":$pvJson,""" +
-        s""""size":$len,"modificationTime":$now,"dataChange":true}}"""
+      actions += action("add") { a =>
+        a.put("path", name)
+        val pvNode = a.putObject("partitionValues")
+        pv.foreach { case (k, v) => pvNode.put(k, v) } // null -> JSON null
+        a.put("size", len).put("modificationTime", now).put("dataChange", true)
+      }
     }
     if (!fs.exists(logDir)) fs.mkdirs(logDir)
     val commit = commitPath(tablePath, version)
@@ -728,8 +738,7 @@ object DeltaLite {
       val out = fs.create(commit, false)
       try out.write(payload) finally out.close()
     }
-    if (checkpointInterval > 0 && version > 0 &&
-        version % checkpointInterval == 0)
+    if (version > 0 && version % CheckpointInterval == 0)
       checkpoint(spark, tablePath, version, schema)
   }
 
@@ -743,105 +752,93 @@ object DeltaLite {
     new java.net.URI(uri).getPath.stripPrefix(root).stripPrefix("/")
   }
 
-  /** Read specific table files partition-aware (absolute URIs). */
-  private def readUris(spark: SparkSession, tablePath: String, rep: Replay,
-                       uris: Seq[String]): DataFrame = {
+  /** The one copy-on-write step of the row-level writers
+    * ([[deleteWhere]], [[upsert]], [[mergeCdc]]), which say only what
+    * differs: which rows `touches` a file, which of a touched file's
+    * rows `keep` keeps, what rows are `added`, and the optional
+    * streaming `txn` watermark. The step replays the head, finds the
+    * touched files with one scan carrying `input_file_name` (driver
+    * state ≤ one string per touched file), stages the touched files'
+    * kept rows and the added rows, and commits the new files with
+    * removes of the touched ones as ONE version through
+    * [[commitRetrying]] (its OCC conflict check and txn re-check
+    * included). Untouched files are never rewritten — on a lake
+    * clustered by key or predicate locality a call rewrites a sliver
+    * of the table, never the whole of it. With `added`, a table that
+    * does not exist yet is created by writing it. Returns the committed
+    * version, or -1 when nothing is touched and nothing is added (no
+    * empty commit) or a racing writer already committed `txn`. */
+  private def copyOnWrite(spark: SparkSession, tablePath: String,
+                          touches: DataFrame => DataFrame,
+                          keep: DataFrame => DataFrame,
+                          added: Option[DataFrame],
+                          txn: Option[(String, Long)] = None): Long = {
+    val fs = tableFs(spark, tablePath)
+    val base = nextVersion(fs, tablePath) - 1L
+    if (base < 0L && added.isDefined)
+      return write(added.get, tablePath, txn = txn)
+    val rep = replayAt(spark, tablePath, None)
+    require(rep.adds.nonEmpty || added.isDefined,
+      s"Delta table at $tablePath has no active files")
+    val cur = readFiles(spark, tablePath, rep, rep.adds)
+    val touchedUris = touches(cur.withColumn("__file",
+        org.apache.spark.sql.functions.input_file_name()))
+      .select("__file").distinct().collect().map(_.getString(0)).toSeq
+    if (touchedUris.isEmpty && added.isEmpty) return -1L
+    val touched = touchedUris.map(relPath(fs, tablePath, _)).toSet
+    val touchedAdds = rep.adds.filter(a => touched(a.path))
+    require(touchedAdds.size == touched.size, s"touched files missing " +
+      s"from the log at $tablePath: ${touched -- touchedAdds.map(_.path)}")
     val pcols = rep.meta.map(_.partitionColumns).getOrElse(Nil)
-    if (pcols.isEmpty)
-      spark.read.option("mergeSchema", "true").parquet(uris: _*)
-    else {
-      val schema = declaredSchema(rep).getOrElse(throw new IllegalStateException(
-        s"partitioned table at $tablePath has no schemaString in its log"))
-      spark.read.schema(schema).option("basePath", tablePath)
-        .parquet(uris: _*)
-        .select(schema.fieldNames.toIndexedSeq
-          .map(org.apache.spark.sql.functions.col): _*)
-    }
+    val survivors =
+      if (touched.isEmpty) Nil
+      else stageIn(keep(readFiles(spark, tablePath, rep, touchedAdds)),
+        fs, tablePath, base + 1L, tag = "k", partitionBy = pcols)
+    val staged = added.toSeq.flatMap(
+      stageIn(_, fs, tablePath, base + 1L, tag = "u", partitionBy = pcols))
+    commitRetrying(spark, tablePath, added.fold(cur.schema)(_.schema),
+      survivors ++ staged, () => touchedAdds.map(_.path),
+      abortOnRemoveConflict = true, pcols, mintedId = rep.meta.map(_.id),
+      baseVersion = base, txn = txn)
   }
 
   /** Copy-on-write DELETE (row-level delete under the public protocol,
-    * without deletion vectors): only files CONTAINING matching rows are
-    * rewritten — on a lake clustered by the predicate column (time,
-    * z-order) a retention delete rewrites a sliver of the table, never
-    * the whole of it. The touched-file probe is one scan carrying
-    * input_file_name; driver state is ≤ one string per file. Returns
-    * the committed version, or -1 when no row matched (no commit
-    * written — the delete is a no-op, not an empty commit). */
+    * without deletion vectors): only files CONTAINING a row whose
+    * `predicate` is TRUE are rewritten, keeping every row whose
+    * predicate is FALSE or NULL — SQL DELETE semantics. Returns the
+    * committed version, or -1 when no row matched (no commit written —
+    * the delete is a no-op, not an empty commit). */
   def deleteWhere(spark: SparkSession, tablePath: String,
-                  predicate: org.apache.spark.sql.Column,
-                  checkpointInterval: Int = 10): Long = {
-    val fs = tableFs(spark, tablePath)
-    val base = nextVersion(fs, tablePath) - 1L
-    val rep = replayAt(spark, tablePath, None)
-    require(rep.adds.nonEmpty, s"Delta table at $tablePath has no active files")
-    val cur = readFiles(spark, tablePath, rep, rep.adds)
-    val touchedUris = cur
-      .withColumn("__file", org.apache.spark.sql.functions.input_file_name())
-      .filter(predicate).select("__file").distinct()
-      .collect().map(_.getString(0)).toSeq
-    if (touchedUris.isEmpty) return -1L
-    val touchedNames = touchedUris.map(relPath(fs, tablePath, _))
-    val pcols = rep.meta.map(_.partitionColumns).getOrElse(Nil)
-    val keep = readUris(spark, tablePath, rep, touchedUris)
-      .filter(org.apache.spark.sql.functions.not(predicate))
-    val moved = stageIn(keep, fs, tablePath, base + 1L, partitionBy = pcols)
-    commitRetrying(spark, tablePath, cur.schema, moved,
-      () => touchedNames, abortOnRemoveConflict = true,
-      checkpointInterval, pcols, mintedId = rep.meta.map(_.id),
-      baseVersion = base)
+                  predicate: org.apache.spark.sql.Column): Long = {
+    import org.apache.spark.sql.functions.{coalesce, lit, not}
+    copyOnWrite(spark, tablePath, touches = _.filter(predicate),
+      keep = _.filter(not(coalesce(predicate, lit(false)))), added = None)
   }
 
   /** Copy-on-write MERGE (PK upsert): files holding rows whose key
     * matches an update are rewritten without those rows; the update
     * batch itself lands as new files, so unmatched keys become inserts
-    * by construction. Untouched files are never rewritten — cost ∝
-    * touched files + batch size, not table size. `updates` must be
-    * PK-unique (collapse the changelog first,
-    * [[graft.operators.Collapse]]). */
+    * by construction. `updates` must be PK-unique (collapse the
+    * changelog first, [[graft.operators.Collapse]]). Upserting into a
+    * table that does not exist yet creates it. */
   def upsert(spark: SparkSession, tablePath: String, updates: DataFrame,
-             pks: Seq[String], checkpointInterval: Int = 10): Long = {
+             pks: Seq[String]): Long = {
     require(pks.nonEmpty, "upsert requires primary keys")
-    val fs = tableFs(spark, tablePath)
-    val base = nextVersion(fs, tablePath) - 1L
-    if (base < 0L)
-      return write(updates, tablePath, checkpointInterval = checkpointInterval)
-    val rep = replayAt(spark, tablePath, None)
-    val pcols = rep.meta.map(_.partitionColumns).getOrElse(Nil)
-    val cur = readFiles(spark, tablePath, rep, rep.adds)
-    val keyFrame = updates
-      .select(pks.map(org.apache.spark.sql.functions.col): _*).distinct()
-    val touchedUris = cur
-      .withColumn("__file", org.apache.spark.sql.functions.input_file_name())
-      .join(keyFrame, pks, "left_semi")
-      .select("__file").distinct().collect().map(_.getString(0)).toSeq
-    val touchedNames = touchedUris.map(relPath(fs, tablePath, _))
-    val survivors =
-      if (touchedUris.isEmpty) Nil
-      else stageIn(readUris(spark, tablePath, rep, touchedUris)
-        .join(keyFrame, pks, "left_anti"),
-        fs, tablePath, base + 1L, tag = "k", partitionBy = pcols)
-    val added = stageIn(updates, fs, tablePath, base + 1L, tag = "u",
-      partitionBy = pcols)
-    commitRetrying(spark, tablePath, updates.schema, survivors ++ added,
-      () => touchedNames, abortOnRemoveConflict = true,
-      checkpointInterval, pcols, mintedId = rep.meta.map(_.id),
-      baseVersion = base)
+    val keys = updates.select(pks.map(org.apache.spark.sql.functions.col): _*)
+      .distinct()
+    copyOnWrite(spark, tablePath, touches = _.join(keys, pks, "left_semi"),
+      keep = _.join(keys, pks, "left_anti"), added = Some(updates))
   }
 
   /** Exactly-once CDC merge into a Delta table — the replication
     * loop's foreachBatch body when the target is a LAKE table rather
     * than the engine's bucketed state dir: the enveloped batch
     * collapses last-write-wins per key, surviving upserts replace
-    * their keys, deletes drop theirs, and the rewrite commits as ONE
-    * version optionally carrying the streaming txn watermark — a
-    * replayed micro-batch skips whole. Copy-on-write at file
-    * granularity: only files CONTAINING affected keys are rewritten
-    * (one input_file_name probe; driver state ≤ one string per touched
-    * file), so on a lake clustered by key locality a batch rewrites a
-    * sliver of the table, never the whole of it. */
+    * their keys, deletes drop theirs, and the copy-on-write rewrite
+    * commits as ONE version optionally carrying the streaming txn
+    * watermark — a replayed micro-batch skips whole (-1). */
   def mergeCdc(spark: SparkSession, tablePath: String, batch0: DataFrame,
-               pks: Seq[String], txn: Option[(String, Long)] = None,
-               checkpointInterval: Int = 10): Long = {
+               pks: Seq[String], txn: Option[(String, Long)] = None): Long = {
     import org.apache.spark.sql.functions._
     require(pks.nonEmpty, "mergeCdc requires primary keys")
     val E = graft.model.CdcEnvelope
@@ -856,31 +853,10 @@ object DeltaLite {
     val dataCols = E.dataCols(collapsed)
     val upserts = collapsed.filter(col(E.Kind) =!= E.Delete)
       .select(dataCols.map(col): _*)
-    val fs = tableFs(spark, tablePath)
-    val base = nextVersion(fs, tablePath) - 1L
-    if (base < 0L)
-      return write(upserts, tablePath,
-        checkpointInterval = checkpointInterval, txn = txn)
-    val rep = replayAt(spark, tablePath, None)
-    val pcols = rep.meta.map(_.partitionColumns).getOrElse(Nil)
-    val cur = readFiles(spark, tablePath, rep, rep.adds)
     // affected keys = upserted AND deleted — both evict their old rows
-    val keyFrame = collapsed.select(pks.map(col): _*).distinct()
-    val touchedUris = cur.withColumn("__file", input_file_name())
-      .join(keyFrame, pks, "left_semi")
-      .select("__file").distinct().collect().map(_.getString(0)).toSeq
-    val touchedNames = touchedUris.map(relPath(fs, tablePath, _))
-    val survivors =
-      if (touchedUris.isEmpty) Nil
-      else stageIn(readUris(spark, tablePath, rep, touchedUris)
-        .join(keyFrame, pks, "left_anti"),
-        fs, tablePath, base + 1L, tag = "k", partitionBy = pcols)
-    val added = stageIn(upserts, fs, tablePath, base + 1L, tag = "u",
-      partitionBy = pcols)
-    commitRetrying(spark, tablePath, upserts.schema, survivors ++ added,
-      () => touchedNames, abortOnRemoveConflict = true,
-      checkpointInterval, pcols, mintedId = rep.meta.map(_.id),
-      baseVersion = base, txn = txn)
+    val keys = collapsed.select(pks.map(col): _*).distinct()
+    copyOnWrite(spark, tablePath, touches = _.join(keys, pks, "left_semi"),
+      keep = _.join(keys, pks, "left_anti"), added = Some(upserts), txn)
   }
 
   /** Protocol-committed small-file compaction (the lakehouse OPTIMIZE):
@@ -894,27 +870,22 @@ object DeltaLite {
     * empty commit). Complements the layout-preserving compactor in
     * [[graft.sinks.Sinks]], which targets plain (log-less) lakes. */
   def optimize(spark: SparkSession, tablePath: String,
-               targetBytes: Long = 128L * 1024 * 1024,
-               checkpointInterval: Int = 10): Long = {
+               targetBytes: Long = 128L * 1024 * 1024): Long = {
     val fs = tableFs(spark, tablePath)
     val base = nextVersion(fs, tablePath) - 1L
     val rep = replayAt(spark, tablePath, None)
-    val small = rep.adds.map(_.path).filter { f =>
-      fs.getFileStatus(new org.apache.hadoop.fs.Path(s"$tablePath/$f"))
-        .getLen < targetBytes
-    }
+    val small = rep.adds.map(a => a -> fs.getFileStatus(
+        new org.apache.hadoop.fs.Path(s"$tablePath/${a.path}")).getLen)
+      .filter(_._2 < targetBytes)
     if (small.size < 2) return -1L
-    val totalBytes = small.map(f =>
-      fs.getFileStatus(new org.apache.hadoop.fs.Path(s"$tablePath/$f"))
-        .getLen).sum
+    val totalBytes = small.map(_._2).sum
     val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
     val pcols = rep.meta.map(_.partitionColumns).getOrElse(Nil)
-    val packed = readUris(spark, tablePath, rep,
-      small.map(f => s"$tablePath/$f")).coalesce(nOut)
+    val packed = readFiles(spark, tablePath, rep, small.map(_._1)).coalesce(nOut)
     val moved = stageIn(packed, fs, tablePath, base + 1L, partitionBy = pcols)
     commitRetrying(spark, tablePath, packed.schema, moved,
-      () => small, abortOnRemoveConflict = true,
-      checkpointInterval, pcols, mintedId = rep.meta.map(_.id),
+      () => small.map(_._1.path), abortOnRemoveConflict = true,
+      pcols, mintedId = rep.meta.map(_.id),
       baseVersion = base)
   }
 
@@ -939,13 +910,13 @@ object DeltaLite {
     * (restart overlap) are resolved inside the OCC retry loop: the
     * loser sees the winner's watermark and skips. */
   def writeTxn(df: DataFrame, tablePath: String, appId: String,
-               txnVersion: Long, checkpointInterval: Int = 10,
+               txnVersion: Long,
                partitionBy: Seq[String] = Nil,
                mergeSchema: Boolean = false): Long = {
     val spark = df.sparkSession
     if (lastTxnVersion(spark, tablePath, appId).exists(_ >= txnVersion))
       return -1L
-    write(df, tablePath, overwrite = false, checkpointInterval,
+    write(df, tablePath, overwrite = false,
       partitionBy, mergeSchema, txn = Some((appId, txnVersion)))
   }
 
@@ -958,8 +929,7 @@ object DeltaLite {
     * pure log surgery, no data movement. Fails loudly when a restored
     * file was physically vacuumed; returns -1 without writing an empty
     * commit when the head already matches the target. */
-  def restore(spark: SparkSession, tablePath: String, version: Long,
-              checkpointInterval: Int = 10): Long = {
+  def restore(spark: SparkSession, tablePath: String, version: Long): Long = {
     val fs = tableFs(spark, tablePath)
     val base = nextVersion(fs, tablePath) - 1L
     require(base >= 0, s"not a Delta table at $tablePath")
@@ -976,14 +946,11 @@ object DeltaLite {
         s"$version: data file ${a.path} was vacuumed")
       (a.path, fs.getFileStatus(p).getLen, a.partitionValues)
     }
-    val schema = target.meta.flatMap(_.schemaJson)
-      .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[StructType])
-      .getOrElse(throw new IllegalStateException(
+    val schema = declaredSchema(target).getOrElse(throw new IllegalStateException(
         s"version $version at $tablePath recorded no schemaString"))
     val pcols = target.meta.map(_.partitionColumns).getOrElse(Nil)
     commitRetrying(spark, tablePath, schema, adds, () => removes,
-      abortOnRemoveConflict = true, checkpointInterval, pcols,
+      abortOnRemoveConflict = true, pcols,
       mintedId = head.meta.map(_.id).filter(_.nonEmpty),
       baseVersion = base)
   }

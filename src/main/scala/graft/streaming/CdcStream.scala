@@ -291,14 +291,24 @@ object CdcStream {
     }
   }
 
+  /** The state directory of table `table` under `baseDir`: table names
+    * may contain '/' (table_splitter routes) and other characters a
+    * directory name should not, so every character outside
+    * `[A-Za-z0-9_.-]` becomes '_'. The one rule the multi-table writers
+    * and readers ([[mergeMultiTable]], [[graft.operators.Lifecycle]])
+    * share. */
+  def tableDir(baseDir: String, table: String): String =
+    s"$baseDir/${table.replaceAll("[^A-Za-z0-9_.-]", "_")}"
+
   /** Multi-table batch routing: split an enveloped batch on its
     * `__table` column and MERGE each group into its own state directory
-    * (reference: SplitByTableID + per-table sink pipelines,
-    * load_snapshot.go builds one sink per table part; table_splitter/
-    * rename_tables feed this column). Table names may contain '/'
-    * (table_splitter routes) — sanitized into the directory name.
-    * The distinct-table list is tiny (tables, not rows); each per-table
-    * merge is a full distributed job. */
+    * ([[tableDir]]; reference: SplitByTableID + per-table sink
+    * pipelines, load_snapshot.go builds one sink per table part;
+    * table_splitter/rename_tables feed this column). Two tables of one
+    * batch whose names map to the same directory fail the batch before
+    * any merge rather than mix into one state. The distinct-table list
+    * is tiny (tables, not rows); each per-table merge is a full
+    * distributed job. Returns the batch's tables, sorted. */
   def mergeMultiTable(batch0: DataFrame, baseDir: String,
                       pks: Seq[String]): Seq[String] = {
     require(batch0.columns.contains(E.Table), s"missing ${E.Table}")
@@ -309,10 +319,13 @@ object CdcStream {
     try {
       val tables = batch.select(E.Table).distinct()
         .collect().map(_.getString(0)).toSeq.sorted
+      tables.groupBy(tableDir(baseDir, _)).foreach { case (dir, ts) =>
+        require(ts.size == 1,
+          s"tables ${ts.mkString(", ")} map to one state directory $dir")
+      }
       tables.foreach { t =>
-        val safe = t.replaceAll("[^A-Za-z0-9_.-]", "_")
         mergeBatch(batch.filter(col(E.Table) === t).drop(E.Table),
-          s"$baseDir/$safe", pks)
+          tableDir(baseDir, t), pks)
       }
       tables
     } finally { batch.unpersist() }

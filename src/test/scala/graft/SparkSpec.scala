@@ -11,19 +11,12 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
+  /** The engine's own session ([[GraftSession.builder]] settings and
+    * [[GraftSession.init]] registrations) on four local cores. */
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.init(
+      GraftSession.builder("local[4]", 4).appName("graft-test").getOrCreate())
     s.sparkContext.setLogLevel("WARN")
-    // same registrations a GraftSession.create() session carries
-    s.experimental.extraOptimizations ++= Seq(graft.plans.RangeJoinRewrite)
-    graft.functions.GraftFunctions.register(s)
     s
   }
 }

@@ -140,6 +140,40 @@ class TransferRunnerSpec extends SparkSpec {
     assert(errs == Seq("{bad"))
   }
 
+  test("snapshot-and-increment: snapshot rows then stream events land in one " +
+    "last-write-wins state, each transfer under its own checkpoint") {
+    import graft.model.{CdcEnvelope => E}
+    import org.apache.spark.sql.types._
+    val dir = tmp()
+    val snapshot = Seq((1L, "a"), (2L, "b"), (3L, "c"))
+    snapshot.toDF("id", "v").write.parquet(dir + "/snap")
+    val events = Seq((2L, "b2", E.Update, 10L), (3L, null, E.Delete, 11L),
+      (4L, "d", E.Insert, 12L), (4L, "d2", E.Update, 13L), (1L, "a2", E.Update, 14L))
+    events.toDF("id", "v", E.Kind, E.Lsn).withColumn(E.Counter, lit(0))
+      .coalesce(1).write.json(dir + "/events")
+    val expected = events.sortBy(_._4).foldLeft(snapshot.toMap) {
+      case (m, (k, _, E.Delete, _)) => m - k
+      case (m, (k, v, _, _)) => m + (k -> v)
+    }
+    val eventSchema = StructType(Seq(StructField("id", LongType),
+      StructField("v", StringType), StructField(E.Kind, StringType),
+      StructField(E.Lsn, LongType), StructField(E.Counter, IntegerType)))
+    // two transfers over the same event files: a shared checkpoint would
+    // hand the second one the first one's offsets, and it would skip them
+    for (name <- Seq("one", "two")) {
+      val state = s"$dir/$name"
+      val t = Transfer(TransferType.SnapshotAndIncrement,
+        SourceConfig.Parquet(dir + "/snap"), SinkConfig.Merge(state, Seq("id")))
+      val q = TransferRunner.runBoth(spark, t, Seq("id"),
+        spark.readStream.schema(eventSchema).json(dir + "/events"))
+      try q.processAllAvailable() finally q.stop()
+      val got = graft.streaming.CdcStream.readState(spark, state)
+        .select("id", "v").as[(Long, String)].collect().toMap
+      assert(got == expected, name)
+      assert(Files.isDirectory(java.nio.file.Paths.get(state + "_checkpoint")), name)
+    }
+  }
+
   test("check/describe validate sources and report canonical types") {
     val ok = TransferRunner.check(spark,
       SourceConfig.Parquet(sf() + "/region.parquet"))

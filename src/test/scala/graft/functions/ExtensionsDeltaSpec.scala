@@ -176,8 +176,7 @@ class ExtensionsDeltaSpec extends SparkSpec {
   test("DeltaLite checkpoints every N commits and reads from the newest one") {
     val table = Files.createTempDirectory("graft_delta_c").toString + "/t"
     for (i <- 0 until 25)
-      DeltaLite.write(Seq((i.toLong, s"v$i")).toDF("id", "v"), table,
-        checkpointInterval = 10)
+      DeltaLite.write(Seq((i.toLong, s"v$i")).toDF("id", "v"), table)
     val log = Paths.get(table, "_delta_log")
     // checkpoints at v10 and v20, _last_checkpoint pointing at 20
     assert(Files.exists(log.resolve("00000000000000000010.checkpoint.parquet")))
@@ -198,8 +197,7 @@ class ExtensionsDeltaSpec extends SparkSpec {
       .as[(Long, String)].collect().toSeq.sortBy(_._1)
     assert(afterCleanup == all, "checkpoint replay lost rows")
     // appends still version past the cleaned-up log
-    assert(DeltaLite.write(Seq((99L, "x")).toDF("id", "v"), table,
-      checkpointInterval = 10) == 25L)
+    assert(DeltaLite.write(Seq((99L, "x")).toDF("id", "v"), table) == 25L)
     assert(DeltaLite.read(spark, table).count() == 26)
   }
 
@@ -364,14 +362,20 @@ class ExtensionsDeltaSpec extends SparkSpec {
     def rows() = DeltaLite.read(spark, table)
       .as[(Long, String)].collect().toSeq.sortBy(_._1)
     assert(rows() == Seq((1L, "a"), (2L, "b"), (3L, "c")))
-    // roll enough commits that a checkpoint folds the txn history away
-    // from the JSON tail — the watermark must persist THROUGH it
+    // roll enough commits (versions 3-13) that the v10 checkpoint folds
+    // the txn history away from the JSON tail — the watermark must
+    // persist THROUGH it
     for (i <- 2 to 12)
       DeltaLite.writeTxn(Seq((10L + i, s"x$i")).toDF("id", "v"), table,
-        "app1", i.toLong, checkpointInterval = 5)
+        "app1", i.toLong)
+    assert(Files.readString(Paths.get(table, "_delta_log", "_last_checkpoint"))
+      .contains("\"version\":10"))
     assert(DeltaLite.writeTxn(Seq((98L, "poison")).toDF("id", "v"), table,
-      "app1", 12L, checkpointInterval = 5) == -1L)
+      "app1", 12L) == -1L)
     assert(DeltaLite.lastTxnVersion(spark, table, "app1").contains(12L))
+    // app2 committed only at v2, so its watermark now lives only in
+    // the checkpoint
+    assert(DeltaLite.lastTxnVersion(spark, table, "app2").contains(0L))
     assert(!rows().exists(_._2.startsWith("poison")))
   }
 
@@ -410,8 +414,7 @@ class ExtensionsDeltaSpec extends SparkSpec {
   test("DeltaLite time travel ignores checkpoints newer than the target") {
     val table = Files.createTempDirectory("graft_delta_ttc").toString + "/t"
     for (i <- 0 until 15)
-      DeltaLite.write(Seq((i.toLong, s"v$i")).toDF("id", "v"), table,
-        checkpointInterval = 10)
+      DeltaLite.write(Seq((i.toLong, s"v$i")).toDF("id", "v"), table)
     // _last_checkpoint points at v10; reading v5 must replay JSON only
     val at5 = DeltaLite.readAt(spark, table, 5L)
       .as[(Long, String)].collect().toSeq.sortBy(_._1)

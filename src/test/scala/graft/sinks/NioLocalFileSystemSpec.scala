@@ -91,16 +91,18 @@ class NioLocalFileSystemSpec extends AnyFunSuite {
     val c = new Configuration()
     c.set("fs.file.impl", classOf[NioLocalFileSystem].getName)
     assert(FileSystem.newInstance(URI.create("file:///"), c).isInstanceOf[NioLocalFileSystem])
+    // the engine's session writes `file:` paths through it
     val spark = graft.SparkSpec.session
+    assert(FileSystem.get(URI.create("file:///"), spark.sparkContext.hadoopConfiguration)
+      .isInstanceOf[NioLocalFileSystem])
     val (stock, nio) = (newDir(), newDir())
     val df = spark.range(0, 200).selectExpr("id", "id % 4 AS p", "concat('v', id) AS v")
-    df.write.partitionBy("p").parquet(s"$stock/t")
-    // uncached, so the write's own options pick the filesystem
-    val opts = Map("fs.file.impl" -> classOf[NioLocalFileSystem].getName,
-      "fs.file.impl.disable.cache" -> "true")
-    df.write.options(opts).partitionBy("p").parquet(s"$nio/t")
-    val back = spark.read.options(opts).parquet(s"$nio/t")
+    df.write.partitionBy("p").parquet(s"$nio/t")
+    val back = spark.read.parquet(s"$nio/t")
     assert(back.selectExpr("id", "p", "v").collect().toSet == df.collect().toSet)
+    // uncached, so the write's own options pick Hadoop's stock filesystem
+    df.write.options(Map("fs.file.impl" -> classOf[LocalFileSystem].getName,
+      "fs.file.impl.disable.cache" -> "true")).partitionBy("p").parquet(s"$stock/t")
     def layout(root: java.io.File) = modes(new java.io.File(root, "t")).map {
       case (k, v) => k.replaceAll("part-[^/]*", "part") -> v }
     assert(layout(nio) == layout(stock))

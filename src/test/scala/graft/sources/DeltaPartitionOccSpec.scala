@@ -147,6 +147,33 @@ class DeltaPartitionOccSpec extends SparkSpec {
     assert(DeltaLite.tableMeta(spark, table).get.id == ids.head.get)
   }
 
+  test("deleteWhere keeps the rows whose predicate is NULL") {
+    val table = tmp()
+    // one file holding both rows, so the matching row's file is rewritten
+    Seq((1L, null.asInstanceOf[String]), (2L, "x")).toDF("id", "v")
+      .coalesce(1).write.mode("overwrite").parquet(table + "_src")
+    DeltaLite.write(spark.read.parquet(table + "_src"), table)
+    assert(DeltaLite.activeFiles(spark, table).size == 1)
+    assert(DeltaLite.deleteWhere(spark, table, col("v") === "x") == 1L)
+    assert(DeltaLite.read(spark, table).as[(Long, Option[String])].collect()
+      .toSeq == Seq((1L, None)))
+  }
+
+  test("partition values and txn appIds with control characters round-trip the log") {
+    val table = tmp()
+    DeltaLite.write(Seq((1L, "a\tb"), (2L, "c")).toDF("id", "grp"), table,
+      partitionBy = Seq("grp"))
+    assert(DeltaLite.activeAdds(spark, table).map(_._2("grp")).toSet == Set("a\tb", "c"))
+    // another append, then a txn append whose appId holds a tab and a CR
+    DeltaLite.write(Seq((3L, "a\tb")).toDF("id", "grp"), table)
+    assert(DeltaLite.writeTxn(Seq((4L, "c")).toDF("id", "grp"), table,
+      "app\t1\r", 0L) == 2L)
+    assert(DeltaLite.lastTxnVersion(spark, table, "app\t1\r").contains(0L))
+    assert(DeltaLite.read(spark, table).as[(Long, String)].collect().sortBy(_._1)
+      .toSeq == Seq((1L, "a\tb"), (2L, "c"), (3L, "a\tb"), (4L, "c")))
+    assert(DeltaLite.readPruned(spark, table, _("grp") == "a\tb").count() == 2)
+  }
+
   test("replay never misparses commitInfo text as an add action") {
     val table = tmp()
     Seq((1L, "a")).toDF("id", "v").coalesce(1).write.parquet(table + "/f1")
@@ -178,14 +205,14 @@ class DeltaPartitionOccSpec extends SparkSpec {
     intercept[java.util.ConcurrentModificationException] {
       DeltaLite.commitRetrying(spark, table, schema, adds = Nil,
         removesThunk = () => Seq(f0), abortOnRemoveConflict = true,
-        checkpointInterval = 0, partitionColumns = Nil,
+        partitionColumns = Nil,
         mintedId = Some("t"), baseVersion = 0L)
     }
     // a winner touching a DIFFERENT file is not a conflict: the loser
     // re-commits at the next version
     val v = DeltaLite.commitRetrying(spark, table, schema, adds = Nil,
       removesThunk = () => Seq("some-other-file.parquet"),
-      abortOnRemoveConflict = true, checkpointInterval = 0,
+      abortOnRemoveConflict = true,
       partitionColumns = Nil, mintedId = Some("t"), baseVersion = 0L)
     assert(v == 2L)
   }

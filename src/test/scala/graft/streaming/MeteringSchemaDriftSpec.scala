@@ -56,4 +56,19 @@ class MeteringSchemaDriftSpec extends SparkSpec {
       .as[Long].collect().toSeq.sorted
     assert(o == Seq(1L, 3L))
   }
+
+  test("two tables of one batch that map to one state directory fail, naming both") {
+    val base = Files.createTempDirectory("graft_multi_clash").toString
+    val batch = Seq((1L, "a", "orders/O"), (2L, "b", "orders_O"))
+      .toDF("id", "v", E.Table)
+      .withColumn(E.Kind, lit("insert")).withColumn(E.Lsn, lit(1L))
+      .withColumn(E.Counter, lit(0))
+    val e = intercept[IllegalArgumentException] {
+      CdcStream.mergeMultiTable(batch, base, Seq("id"))
+    }
+    assert(e.getMessage.contains("orders/O") && e.getMessage.contains("orders_O"),
+      e.getMessage)
+    // nothing merged: no state directory was written
+    assert(!Files.exists(java.nio.file.Paths.get(base, "orders_O")))
+  }
 }
