@@ -177,48 +177,47 @@ object Dedup {
     * textbook construction (one digest per shingle instead of k).
     * P is the first prime above 2^32; (2j+1) keeps multipliers odd.
     * Fully deterministic and reproducible in any engine. */
-  val MinhashP: Long = 4294967311L
-  val MinhashB: Long = 2654435761L
+  val MinhashP: Long = org.apache.spark.sql.graft.MinhashBandsExpr.P
+  val MinhashB: Long = org.apache.spark.sql.graft.MinhashBandsExpr.B
   def permute(h: Column, j: Int): Column =
     pmod(h * (2L * j + 1) + lit(j.toLong * MinhashB % MinhashP), lit(MinhashP))
 
-  /** MinHash signature: sig[j] = min over shingles of h_j(hash(shingle)).
-    * Computed as a per-row expression — zero shuffle until the band
-    * join; bulk scoring uses the explode form in [[lshBands]].
-    *
-    * Shingles are DEDUPED before hashing: the min-reduction is
-    * duplicate-blind (min over the multiset == min over the set), so
-    * repeated shingles — common in real text — would only repeat the
-    * md5, the family's dominant CPU cost. Value-identical in any
-    * engine for the same reason. */
-  def minhashSignature(text: Column, k: Int, shingleN: Int): Column = {
-    val hs = transform(array_distinct(shingles(text, shingleN)),
-      s => Hashing.hex8ToLong(s))
-    transform(sequence(lit(0), lit(k - 1)), j =>
-      array_min(transform(hs, h =>
-        pmod(h * (j * 2 + 1) + pmod(j * lit(MinhashB), lit(MinhashP)),
-          lit(MinhashP)))))
-  }
-
-  /** LSH banding: split the k-long signature into `bands` bands of
-    * k/bands rows each; docs sharing any band hash are candidates.
+  /** LSH banding: split the k-long MinHash signature into `bands` bands
+    * of k/bands rows each; docs sharing any band hash are candidates.
     * Returns (idCol, band, band_hash) — the join key space.
     *
-    * Implemented explode -> groupBy rather than nested array lambdas:
-    * shingles are computed once per document, the k seeded hashes once
-    * per shingle, and the min-reduction is a map-side-combined
-    * aggregation. (The pure-expression form re-evaluates the shingle
-    * array inside every lambda — measured 40x slower at sf0.1.) */
+    * One explode over the native per-document kernel
+    * ([[org.apache.spark.sql.graft.MinhashBandsExpr]]): distinct
+    * shingles, one md5 per shingle, k permutation minima and the band
+    * md5s are computed inside the input row, so band rows cost no
+    * shuffle. Band rows are PER INPUT ROW: a document id that appears
+    * in several input rows gets one band set per row (it is a member
+    * of every bucket any of its texts falls in), and every pairing
+    * operator over these rows drops a pair of an id with itself. With
+    * unique ids the rows are byte-identical to the explode → `groupBy`
+    * spelling [[lshBandsComposed]] (law-tested). */
   def lshBands(df: DataFrame, textCol: String, idCol: String,
                k: Int = 16, shingleN: Int = 3, bands: Int = 4): DataFrame = {
     require(k % bands == 0, "k must divide into bands")
+    val kernel = org.apache.spark.sql.graft.bridge.column(
+      org.apache.spark.sql.graft.MinhashBandsExpr(
+        org.apache.spark.sql.graft.bridge.expression(col(textCol)),
+        k, shingleN, bands))
+    df.select(col(idCol), explode(kernel).as("__b"))
+      .select(col(idCol), col("__b.band").as("band"),
+        col("__b.band_hash").as("band_hash"))
+  }
+
+  /** The explode → hash → `groupBy(id)` spelling [[lshBands]] replaced
+    * (kept for the parity law test): one row per distinct shingle, k
+    * permutation columns, k map-side-combined min aggregates keyed on
+    * the doc id — a whole Exchange for a per-document reduction. It
+    * merges a repeated id's texts into one signature. */
+  private[graft] def lshBandsComposed(df: DataFrame, textCol: String,
+                                      idCol: String, k: Int, shingleN: Int,
+                                      bands: Int): DataFrame = {
+    require(k % bands == 0, "k must divide into bands")
     val r = k / bands
-    // one row per shingle, k hash columns per row, k map-side-combined
-    // min aggregates: a single shuffle keyed on the doc id, row count
-    // = shingle count (not k * shingles)
-    // deduped before the explode: the per-doc min is duplicate-blind,
-    // so repeated shingles only repeat the md5 (the dominant cost) and
-    // inflate the aggregation input — value-identical either way
     val sh = df.select(col(idCol),
       explode(array_distinct(shingles(col(textCol), shingleN))).as("__s"))
     val hashed = sh.select(
@@ -268,11 +267,13 @@ object Dedup {
 
   /** In-bucket pair expansion of [[minhashCandidates]]: one shuffle
     * keyed on (band, band_hash), each surviving bucket's sorted id
-    * array expands to its combinations. */
+    * array expands to its combinations. An id is one member of a
+    * bucket however many of its rows fall in it (see [[lshBands]]), so
+    * the bucket size counts distinct ids and no id pairs with itself. */
   private def bucketPairs(b: DataFrame, idCol: String,
                           maxBucketSize: Int): DataFrame =
     combinations(b.groupBy("band", "band_hash")
-      .agg(sort_array(collect_list(col(idCol))).as("__ids"))
+      .agg(array_distinct(sort_array(collect_list(col(idCol)))).as("__ids"))
       .filter(size(col("__ids")).between(2, maxBucketSize)), "__ids")
       .distinct()
 
@@ -333,33 +334,35 @@ object Dedup {
           s.spark.read.schema(rows.schema).parquet(indexPath)
             .join(broadcast(rows.select(keys.map(col): _*)), keys,
               "left_semi")
-        // ONE aggregation over the slice and the batch rows per bucket:
-        // the bucket's TOTAL size decides the cap (over-cap buckets are
-        // dropped, as a one-shot recompute would drop them) and its
-        // batch ids make the pairs. Index ids are only counted, never
-        // collected, so a hot index bucket is never materialized; the
-        // index-side pairs come from the slice joined to the kept
-        // buckets' batch ids, broadcast.
+        // A new index's pairs are the batch's own in-bucket pairs. On an
+        // existing one, ONE aggregation over the slice and the batch
+        // rows per bucket: the bucket's TOTAL row count decides the cap
+        // (over-cap buckets are dropped, as a one-shot recompute would
+        // drop them) and its batch ids make the pairs. Index ids are
+        // only counted, never collected, so a hot index bucket is never
+        // materialized. The kept buckets broadcast once, and every slice
+        // and batch row joins them: an index row pairs with each batch
+        // id but its own (an id already in the index that arrives again
+        // is no pair with itself), a batch row with each greater batch
+        // id.
         def probe(rows: DataFrame, g: Unit,
-                  slice: Option[StandingIndex.Slice]) = {
-          val idx = slice.map(_.df)
-          val batch = rows.withColumn("__new", lit(true))
-          val buckets = idx
-            .fold(batch)(_.withColumn("__new", lit(false)).unionByName(batch))
-            .groupBy(keys.map(col): _*)
-            .agg(sort_array(collect_list(when(col("__new"), col("id"))))
-              .as("__ids"), count(lit(1)).as("__tot"))
-            .filter(col("__tot") <= maxBucketSize)
-            .drop("__tot")
-          val within = combinations(buckets, "__ids")
-          // an id already in the index that arrives again is no pair
-          // with itself
-          val cross = idx.map(_.join(broadcast(buckets), keys)
-            .select(col("id"), explode(col("__ids")).as("__new_id"))
-            .filter(col("id") =!= col("__new_id"))
-            .select(least(col("id"), col("__new_id")).as("id_a"),
-              greatest(col("id"), col("__new_id")).as("id_b")))
-          cross.fold(within)(within.unionByName).distinct()
+                  slice: Option[StandingIndex.Slice]) = slice match {
+          case None => bucketPairs(rows, "id", maxBucketSize)
+          case Some(idx) =>
+            val all = idx.df.withColumn("__new", lit(false))
+              .unionByName(rows.withColumn("__new", lit(true)))
+            val buckets = all.groupBy(keys.map(col): _*)
+              .agg(collect_list(when(col("__new"), col("id"))).as("__ids"),
+                count(lit(1)).as("__tot"))
+              .filter(col("__tot") <= maxBucketSize)
+              .drop("__tot")
+            all.join(broadcast(buckets), keys)
+              .select(col("id"), col("__new"), explode(col("__ids")).as("__b"))
+              .filter(when(col("__new"), col("__b") > col("id"))
+                .otherwise(col("__b") =!= col("id")))
+              .select(least(col("id"), col("__b")).as("id_a"),
+                greatest(col("id"), col("__b")).as("id_b"))
+              .distinct()
         }
         def append(s: StandingIndex.Scope, rows: DataFrame) =
           rows.write.mode("append").parquet(indexPath)
@@ -735,8 +738,10 @@ object Dedup {
     val boot = sh.groupBy("s").agg(count(lit(1)).as("__df"))
     StandingIndex.update(newDocs.sparkSession, Seq(postingsPath, dfordPath),
       new StandingIndex.Kind[Unit] {
-        // per-shingle frozen df for the batch's vocabulary, probed
-        // map-side by the batch's distinct shingles and broadcast;
+        // per-shingle frozen df for the batch's vocabulary: the frozen
+        // table semi-joined map-side to the batch's shingles (no
+        // distinct: a semi join keeps each table row once however many
+        // postings share its shingle) and broadcast;
         // shingles unseen at bootstrap default to df 0 (rare →
         // prefix-eligible, always lossless). On a new index the frozen
         // df IS this batch's df, so the in-memory frame stands in for a
@@ -746,9 +751,14 @@ object Dedup {
         def rows(s: StandingIndex.Scope) = {
           val dford =
             if (s.exists) s.spark.read.schema(boot.schema).parquet(dfordPath)
-              .join(broadcast(sh.select("s").distinct()), Seq("s"))
+              .join(broadcast(sh.select("s")), Seq("s"), "left_semi")
             else s.persist(boot)
-          rankPostings(sh.join(broadcast(dford), Seq("s"), "left")
+          // shuffled by doc id ahead of the frozen-df join: the ranking
+          // window needs that shuffle anyway, and here its map side runs
+          // in the same wave as the vocabulary broadcast instead of
+          // waiting for the frozen-df broadcast
+          rankPostings(sh.repartition(col("id"))
+            .join(broadcast(dford), Seq("s"), "left")
             .withColumn("__df", coalesce(col("__df"), lit(0L))))
         }
         // Fail-fast bound on the batch-side broadcasts: everything the
@@ -797,20 +807,18 @@ object Dedup {
         //     batch vocab (out-of-vocab shingles cannot change |A ∩ B|,
         //     every intersect meets a batch-doc array, and the
         //     denominator is the STORED __n).
-        // So the slice is lake ⨝ broadcast(vocab), each row tagged with
-        // whether its shingle is in the batch's prefix vocab (__pref0)
-        // and whether it sits in its own doc's prefix at θ (__lpref). A
-        // universal shingle contributes at most one row per lake doc:
-        // linear in lake docs, never pair-quadratic. Every append wrote
-        // the batch rows' schema, so the read passes it.
-        def slice(s: StandingIndex.Scope, rows: DataFrame, g: Unit) = {
-          val vocab = rows.groupBy("s")
-            .agg(max(when(col("__rk") <= pl, 1).otherwise(0)).as("__pref0"))
+        // So the slice is the lake semi-joined to a broadcast of the
+        // batch's shingles (no vocabulary aggregate: a semi join needs
+        // no distinct build side), each row tagged with whether it sits
+        // in its own doc's prefix at θ (__lpref). A universal shingle
+        // contributes at most one row per lake doc: linear in lake docs,
+        // never pair-quadratic. Every append wrote the batch rows'
+        // schema, so the read passes it.
+        def slice(s: StandingIndex.Scope, rows: DataFrame, g: Unit) =
           s.spark.read.schema(rows.schema).parquet(postingsPath)
-            .join(broadcast(vocab), Seq("s"))
-            .select(col("s"), col("id").as("__lid"), col("__pref0"),
+            .join(broadcast(rows.select("s")), Seq("s"), "left_semi")
+            .select(col("s"), col("id").as("__lid"),
               (col("__rk") <= pl).as("__lpref"), col("__n").as("__ln"))
-        }
         def probe(rows: DataFrame, g: Unit,
                   slice: Option[StandingIndex.Slice]) = {
           // `matched` is vocab-RESTRICTED, not vocab-bounded: a batch
@@ -845,11 +853,20 @@ object Dedup {
           // the new-contained direction needs the BATCH posting in its
           // doc's prefix and the old-contained direction the LAKE row in
           // its doc's prefix, folded into per-pair flags by the one
-          // aggregation. A new index has only the batch rows.
+          // aggregation. The lake rows are filtered BEFORE that join: the
+          // ones in their own doc's prefix, plus the ones whose shingle
+          // is in the batch's prefix vocabulary (a semi join to a
+          // broadcast of the batch's prefix shingles). A hot shingle is
+          // in neither, so it never pairs every lake doc with every batch
+          // doc inside the join. A row in both halves only repeats a
+          // flag the aggregation takes the max of. A new index has only
+          // the batch rows.
           val nn = rows.filter(bpref).select(col("s"), col("id").as("__lid"),
             lit(true).as("__lpref"), lit(true).as("__nn"))
           val cand = matched
-            .fold(nn)(_.filter(col("__pref0") === 1 || col("__lpref"))
+            .fold(nn)(m => m.filter(col("__lpref"))
+              .unionByName(m.join(broadcast(rows.filter(bpref).select("s")),
+                Seq("s"), "left_semi"))
               .select(col("s"), col("__lid"), col("__lpref"),
                 lit(false).as("__nn"))
               .unionByName(nn))
@@ -861,37 +878,40 @@ object Dedup {
             .agg(max(col("__bpref") && !col("__nn")).as("__d0"),
               max(col("__lpref")).as("__d1"))
           // per-doc sorted distinct-shingle arrays, raw shingle strings,
-          // not hashes (exactness is the contract): every batch doc, and
-          // the lake docs some candidate pair names, restricted to the
-          // batch vocab. The verify intersects two docs' arrays, so
-          // nothing pair-expanded is built: verifying through
-          // pair-expanded broadcasts measured 0.5M candidate pairs per
-          // direction from a 1.67k-doc batch at a 42k-doc lake on the
-          // fresh-sf10 ladder, a 32M-row broadcast and 58 s per
-          // direction, where this form takes 2-15 s per update.
-          val batchDocs = rows.select(col("id").as("__doc"), col("s"),
-            col("__n").as("__dn"), lit(true).as("__nn"))
-          val arrays = matched
-            .fold(batchDocs)(_.select(col("__lid").as("__doc"), col("s"),
-                col("__ln").as("__dn"), lit(false).as("__nn"))
-              .join(broadcast(cand.filter(!col("__nn"))
-                .select(col("__lid").as("__doc")).distinct()), Seq("__doc"))
-              .unionByName(batchDocs))
-            .groupBy(col("__doc"), col("__nn"))
+          // not hashes (exactness is the contract): every batch doc and
+          // every slice doc, restricted to the batch vocab. The verify
+          // intersects two docs' arrays, so nothing pair-expanded is
+          // built: verifying through pair-expanded broadcasts measured
+          // 0.5M candidate pairs per direction from a 1.67k-doc batch at
+          // a 42k-doc lake on the fresh-sf10 ladder, a 32M-row broadcast
+          // and 58 s per direction, where this form takes 2-15 s per
+          // update. The lake arrays cover the whole slice, not just the
+          // docs some candidate names: that shuffle is linear in the
+          // slice (capped above), while restricting it needs the
+          // candidate set a second time, and a persisted frame's
+          // consumers share no Exchange (each scan of it is its own
+          // query stage), so that second use recomputed the candidate
+          // join and both its broadcasts.
+          def docArrays(postings: DataFrame) = postings.groupBy(col("__doc"))
             .agg(sort_array(collect_list(col("s"))).as("__arr"),
               first(col("__dn")).as("__dn"))
+          val batchArrays = docArrays(rows.select(col("id").as("__doc"),
+            col("s"), col("__n").as("__dn")))
+          val batchOther = batchArrays.withColumn("__nn", lit(true))
+          val other = matched.fold(batchOther)(m => docArrays(m.select(
+              col("__lid").as("__doc"), col("s"), col("__ln").as("__dn")))
+            .withColumn("__nn", lit(false)).unionByName(batchOther))
           // one array_intersect per (batch doc, other doc) pair scores
           // BOTH directions: |A ∩ B| is symmetric, only the denominator
           // (the contained side's stored n) differs. The other side's
           // join comes first, so whatever it shuffles carries no
           // broadcast batch array.
           val scored = cand
-            .join(arrays.select(col("__doc").as("__lid"), col("__nn"),
+            .join(other.select(col("__doc").as("__lid"), col("__nn"),
               col("__arr").as("__oarr"), col("__dn").as("__on")),
               Seq("__lid", "__nn"))
-            .join(broadcast(arrays.filter(col("__nn")).select(
-              col("__doc").as("__bid"), col("__arr").as("__barr"),
-              col("__dn").as("__bn"))), Seq("__bid"))
+            .join(broadcast(batchArrays.select(col("__doc").as("__bid"),
+              col("__arr").as("__barr"), col("__dn").as("__bn"))), Seq("__bid"))
             .withColumn("__isz",
               size(array_intersect(col("__barr"), col("__oarr")))
                 .cast("double"))
@@ -997,7 +1017,8 @@ object Dedup {
     * row-content-preserving, and the postings' stored frozen-df ranks
     * (`__rk`, `__n`) ride the rows, so probes before and after answer
     * identically (spec + shared oracle); the bootstrap-frozen `dford/`
-    * table is rewritten the same way. Crash-safe swap throughout
+    * table is compacted the same way, which rewrites it only until it is
+    * one file (it is never appended to). Crash-safe swap throughout
     * ([[graft.sinks.Sinks.compact]]). Run off the update path. */
   def containmentIndexCompact(spark: org.apache.spark.sql.SparkSession,
                               indexPath: String,

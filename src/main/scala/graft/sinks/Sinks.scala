@@ -222,6 +222,11 @@ object Sinks {
     * at `<path>.__compact_bak` until the swap completes — a crash at any
     * point leaves either the old tree or the new one, never a mix, and
     * the next pass recovers it on entry.
+    *
+    * The decision is made from the listing alone: a directory with at
+    * most one parquet file, no larger than `targetBytes`, has nothing
+    * to merge and returns its stats without reading a footer,
+    * rewriting or swapping (recovery still runs first).
     */
   def compact(spark: org.apache.spark.sql.SparkSession, path: String,
               targetBytes: Long = 128L << 20,
@@ -239,14 +244,17 @@ object Sinks {
     def leafParquet(): Seq[Long] =
       org.apache.spark.sql.graft.bridge.listLeafFiles(spark, path)
         .collect { case (p, len) if p.endsWith(".parquet") => len }
-    // ONE listing feeds both the before-stats and the rewrite's read:
-    // spark.read.parquet would re-list the unmutated tree for
-    // partition discovery — a second distributed listing job per pass
-    val (df, allFiles) =
-      org.apache.spark.sql.graft.bridge.parquetWithListing(spark, path)
-    val files = allFiles.collect {
+    // ONE listing feeds the before-stats, the skip decision and the
+    // rewrite's read: spark.read.parquet would re-list the unmutated
+    // tree for partition discovery — a second distributed listing job
+    // per pass
+    val listing = org.apache.spark.sql.graft.bridge.listParquet(spark, path)
+    val files = listing.files.collect {
       case (p, len) if p.endsWith(".parquet") => len }
     val totalBytes = files.sum
+    if (files.size <= 1 && totalBytes <= targetBytes)
+      return CompactionStats(files.size, totalBytes, files.size)
+    val df = listing.read()
     if (partitionCols.isEmpty) {
       val nOut = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes)
       df.coalesce(nOut.toInt).write.parquet(tmp.toString)

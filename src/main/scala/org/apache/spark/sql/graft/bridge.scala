@@ -65,30 +65,42 @@ object bridge {
     idx.allFiles().map(f => (f.getPath.toString, f.getLen))
   }
 
-  /** List a parquet lake ONCE and return both the leaf files and a
-    * DataFrame reading through that same listing: a compaction
-    * pass previously listed the lake for its before-stats and then
+  /** A parquet lake listed ONCE: its leaf files now, and a DataFrame
+    * reading through that same listing on demand. A compaction pass
+    * previously listed the lake for its before-stats and then
     * `spark.read.parquet` re-listed it for partition discovery — two
     * distributed listing jobs over the same unmutated tree (measured
     * ~0.4 s each on a 250-dir index; at lake scale each is a full
-    * object-store sweep). Partition columns are discovered from the
+    * object-store sweep). `read()` infers the schema from the footers
+    * (a Spark job) only when it is called, so a caller can decide from
+    * the files alone. Partition columns are discovered from the
     * directory layout exactly as `spark.read.parquet` would. */
-  def parquetWithListing(spark: SparkSession, path: String)
-      : (org.apache.spark.sql.DataFrame, Seq[(String, Long)]) = {
-    import org.apache.spark.sql.execution.datasources._
+  final class ParquetListing private[bridge] (
+      cs: org.apache.spark.sql.classic.SparkSession,
+      idx: org.apache.spark.sql.execution.datasources.InMemoryFileIndex,
+      path: String) {
+    private val statuses = idx.allFiles()
+    /** (path, bytes) of every data file (hidden/_ files excluded). */
+    val files: Seq[(String, Long)] =
+      statuses.map(f => (f.getPath.toString, f.getLen))
+    def read(): org.apache.spark.sql.DataFrame = {
+      import org.apache.spark.sql.execution.datasources._
+      val fmt = new parquet.ParquetFileFormat
+      val dataSchema = fmt.inferSchema(cs, Map.empty, statuses).getOrElse(
+        throw new IllegalArgumentException(
+          s"listParquet: no parquet schema inferable at $path"))
+      val rel = HadoopFsRelation(idx, idx.partitionSchema, dataSchema,
+        bucketSpec = None, fmt, Map.empty)(cs)
+      org.apache.spark.sql.classic.Dataset.ofRows(cs, LogicalRelation(rel))
+    }
+  }
+
+  def listParquet(spark: SparkSession, path: String): ParquetListing = {
     val cs = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val idx = new InMemoryFileIndex(
-      cs, Seq(new org.apache.hadoop.fs.Path(path)), Map.empty, None)
-    val files = idx.allFiles()
-    val fmt = new parquet.ParquetFileFormat
-    val dataSchema = fmt.inferSchema(cs, Map.empty, files).getOrElse(
-      throw new IllegalArgumentException(
-        s"parquetWithListing: no parquet schema inferable at $path"))
-    val rel = HadoopFsRelation(idx, idx.partitionSchema, dataSchema,
-      bucketSpec = None, fmt, Map.empty)(cs)
-    val df = org.apache.spark.sql.classic.Dataset.ofRows(
-      cs, LogicalRelation(rel))
-    (df, files.map(f => (f.getPath.toString, f.getLen)))
+    new ParquetListing(cs,
+      new org.apache.spark.sql.execution.datasources.InMemoryFileIndex(
+        cs, Seq(new org.apache.hadoop.fs.Path(path)), Map.empty, None),
+      path)
   }
 
   /** Wrap a logical plan back into a DataFrame. */

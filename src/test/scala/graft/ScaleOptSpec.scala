@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** Evidence that engine plans pick up Spark's runtime scale
   * optimizations — the mechanisms that matter at 100 TB but are easy
@@ -33,7 +32,7 @@ class ScaleOptSpec extends SparkSpec {
   }
 
   test("dynamic partition pruning reaches the partitioned fact scan") {
-    val dir = Files.createTempDirectory("graft_dpp").toString + "/fact"
+    val dir = tempDir("graft_dpp") + "/fact"
     spark.range(20000).select(col("id"), (col("id") % 20).as("k"),
         md5(col("id").cast("string")).as("payload"))
       .write.partitionBy("k").parquet(dir)
@@ -53,7 +52,7 @@ class ScaleOptSpec extends SparkSpec {
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "1",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
-      val base = Files.createTempDirectory("graft_bloom").toString
+      val base = tempDir("graft_bloom")
       spark.range(200000).select(col("id").as("k"),
           md5(col("id").cast("string")).as("payload"))
         .write.parquet(s"$base/fact")

@@ -1,5 +1,10 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
+import scala.collection.mutable
+import scala.util.Try
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -8,6 +13,19 @@ import org.scalatest.BeforeAndAfterAll
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
+
+  private val tempDirs = mutable.Buffer.empty[Path]
+
+  /** A new empty directory under `java.io.tmpdir` whose name starts with
+    * `prefix`; it and everything under it are deleted after the suite. */
+  def tempDir(prefix: String): String = tempDirs.synchronized {
+    tempDirs += Files.createTempDirectory(prefix)
+    tempDirs.last.toString
+  }
+
+  override def afterAll(): Unit =
+    try tempDirs.synchronized(tempDirs.foreach(SparkSpec.deleteTree))
+    finally super.afterAll()
 }
 
 object SparkSpec {
@@ -18,5 +36,14 @@ object SparkSpec {
       GraftSession.builder("local[4]", 4).appName("graft-test").getOrCreate())
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** Delete `root` and everything under it, deepest first, without
+    * following links; best effort, as a cleanup must not fail a suite. */
+  def deleteTree(root: Path): Unit = Try {
+    val paths = Files.walk(root)
+    try paths.sorted(java.util.Comparator.reverseOrder[Path]())
+      .forEach(p => { Try(Files.deleteIfExists(p)); () })
+    finally paths.close()
   }
 }

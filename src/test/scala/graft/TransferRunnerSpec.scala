@@ -11,7 +11,7 @@ import java.nio.file.Files
 class TransferRunnerSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(): String = Files.createTempDirectory("graft_tr").toString
+  private def tmp(): String = tempDir("graft_tr")
 
   test("snapshot transfer: parquet -> transform chain -> parquet with cleanup") {
     val out = tmp() + "/dst"

@@ -2,13 +2,12 @@ package graft.config
 
 import graft.SparkSpec
 import graft.operators.{Transformers => T}
-import java.nio.file.Files
 
 class TransferYamlSpec extends SparkSpec {
   import spark.implicits._
 
   test("yaml config parses into a full Transfer and runs end to end") {
-    val out = Files.createTempDirectory("graft_yaml").toString + "/dst"
+    val out = tempDir("graft_yaml") + "/dst"
     val yaml =
       s"""type: SNAPSHOT_ONLY
          |src:

@@ -839,8 +839,7 @@ class DedupSimilaritySpec extends SparkSpec {
         .as[(Long, Long)].collect().toSeq
     assert(quoteLinks(Dedup.prefixContainmentPairs(cdocs, "text", "doc_id",
       shingleN = 3, theta = 0.8)).toSet == links)
-    val idx = java.nio.file.Files.createTempDirectory("graft_hot_cont")
-      .toString + "/idx"
+    val idx = tempDir("graft_hot_cont") + "/idx"
     val inc = (0 to 2).flatMap(m => quoteLinks(Dedup.containmentIndexUpdate(
       idx, cdocs.filter(pmod(col("doc_id"), lit(3)) === m), "text", "doc_id",
       shingleN = 3, theta = 0.8)))
@@ -1019,7 +1018,7 @@ class DedupSimilaritySpec extends SparkSpec {
 
   test("incremental band index: update union equals full recompute; " +
       "batch broadcasts, index side never shuffles") {
-    val dir = java.nio.file.Files.createTempDirectory("bandidx").toString
+    val dir = tempDir("bandidx")
     val idx = s"$dir/idx"
     val corpus = spark.read.parquet(sf() + "/documents.parquet")
       .select("doc_id", "text")
@@ -1259,7 +1258,7 @@ class DedupSimilaritySpec extends SparkSpec {
   }
 
   test("incremental band index caps hot buckets on the TOTAL bucket size") {
-    val dir = java.nio.file.Files.createTempDirectory("bandidxcap").toString
+    val dir = tempDir("bandidxcap")
     val idx = s"$dir/idx"
     // 8 exact copies arriving 4 + 4: a cap of 6 must kill the bucket
     // in the second update (4 indexed + 4 new > 6) but keep the first
@@ -1289,8 +1288,7 @@ class DedupSimilaritySpec extends SparkSpec {
 
   test("band index: an id already indexed that arrives again pairs with " +
     "the others in its buckets, never with itself") {
-    val idx = java.nio.file.Files.createTempDirectory("bandreid").toString +
-      "/idx"
+    val idx = tempDir("bandreid") + "/idx"
     assert(bandUpdate(idx, Seq(1L -> textT, 2L -> textT, 3L -> textU)) ==
       Set((1L, 2L)))
     // 2 arrives again with its text, 3 with a new one; 5 joins 3's old
@@ -1300,18 +1298,31 @@ class DedupSimilaritySpec extends SparkSpec {
   }
 
   test("band index: the same id twice in one batch is one document") {
-    val idx = java.nio.file.Files.createTempDirectory("bandtwice").toString +
-      "/idx"
+    val idx = tempDir("bandtwice") + "/idx"
     assert(bandUpdate(idx, Seq(7L -> textT, 7L -> textT, 8L -> textT,
       9L -> textV, 9L -> textV)) == Set((7L, 8L)))
     assert(bandUpdate(idx, Seq(10L -> textT, 10L -> textT, 11L -> textV)) ==
       Set((7L, 10L), (8L, 10L), (9L, 11L)))
   }
 
+  test("band rows are per input row: an id repeated with different " +
+    "texts joins each text's buckets and never pairs with itself") {
+    // 7 carries both T and U; 8 shares T, 9 shares U
+    val once = Seq(7L -> textT, 7L -> textU, 8L -> textT, 9L -> textU)
+    val expected = Set((7L, 8L), (7L, 9L))
+    assert(Dedup.minhashCandidates(once.toDF("doc_id", "text"), "text",
+      "doc_id").as[(Long, Long)].collect().toSet == expected)
+    val idx = tempDir("bandrows") + "/idx"
+    assert(bandUpdate(idx, once) == expected)
+    // 7 arrives again with T and V: in T's buckets its index rows meet
+    // its own batch row (no pair) and 8's and 11's (pairs)
+    assert(bandUpdate(idx, Seq(7L -> textT, 7L -> textV, 10L -> textV,
+      11L -> textT)) == Set((7L, 8L), (7L, 10L), (7L, 11L), (8L, 11L)))
+  }
+
   test("band index: a bucket that crosses maxBucketSize mid-stream keeps " +
     "its early pairs and yields none once over the cap") {
-    val idx = java.nio.file.Files.createTempDirectory("bandcross").toString +
-      "/idx"
+    val idx = tempDir("bandcross") + "/idx"
     // the T bucket grows 3 → 4 (at the cap of 4, kept) → 5 → 6 (over)
     assert(bandUpdate(idx, Seq(0L -> textT, 1L -> textT, 2L -> textT), 4) ==
       Set((0L, 1L), (0L, 2L), (1L, 2L)))

@@ -81,6 +81,37 @@ class ExtensionsDeltaSpec extends SparkSpec {
     assert(nr(1).getSeq[String](0) == nr(1).getSeq[String](1))
   }
 
+  test("graft_minhash_bands: the band kernel's rows equal the " +
+      "explode/groupBy spelling on the fixture corpus and adversaries") {
+    val docs = graft.Tables.load(spark, sf(), "documents")
+      .select(col("doc_id"), col("text"))
+    // empty text, one token, fewer tokens than n, repeated shingles,
+    // tabs and newlines (leading/trailing "" tokens), multibyte, null
+    val edges = Seq[(Long, String)](-1L -> "", -2L -> "word", -3L -> "two words",
+      -4L -> "a b a b a b a b", -5L -> "x x x x x x", -6L -> "\ta b\nc\t",
+      -7L -> "line one\nline two\n\nline three", -8L -> " \t ",
+      -9L -> "héllo wörld déjà vu encore", -10L -> null).toDF("doc_id", "text")
+    for (df <- Seq(docs, edges);
+         (k, n, bands) <- Seq((16, 3, 4), (8, 1, 2), (12, 5, 3))) {
+      val native = Dedup.lshBands(df, "text", "doc_id", k, n, bands)
+      val composed = Dedup.lshBandsComposed(df, "text", "doc_id", k, n, bands)
+      // same schema (names, types, nullability, order): index lakes
+      // written by either stay readable
+      assert(native.schema == composed.schema)
+      def rows(b: org.apache.spark.sql.DataFrame) =
+        b.as[(Long, Int, String)].collect().toSeq.sorted
+      val (a, c) = (rows(native), rows(composed))
+      assert(a.nonEmpty && a == c, s"k=$k n=$n bands=$bands: " +
+        a.diff(c).take(3).mkString("; ") + " || " + c.diff(a).take(3).mkString("; "))
+    }
+    // codegen: the generator's child stays whole-stage compiled, and no
+    // Exchange is left in the band rows
+    val plan = Dedup.lshBands(docs, "text", "doc_id")
+      .queryExecution.executedPlan.toString
+    assert(plan.linesIterator.next().startsWith("*("), plan)
+    assert(!plan.contains("Exchange"), plan)
+  }
+
   test("graft_dot: native dot product equals HOF spelling, stays codegen'd") {
     GraftFunctions.register(spark)
     import spark.implicits._
@@ -152,7 +183,7 @@ class ExtensionsDeltaSpec extends SparkSpec {
   }
 
   test("DeltaLite reads a hand-built Delta log (add/remove replay)") {
-    val table = Files.createTempDirectory("graft_delta").toString
+    val table = tempDir("graft_delta")
     // two data files, second commit removes the first
     Seq((1L, "a")).toDF("id", "v").coalesce(1).write.parquet(table + "/f1")
     Seq((2L, "b")).toDF("id", "v").coalesce(1).write.parquet(table + "/f2")
@@ -174,7 +205,7 @@ class ExtensionsDeltaSpec extends SparkSpec {
   }
 
   test("DeltaLite checkpoints every N commits and reads from the newest one") {
-    val table = Files.createTempDirectory("graft_delta_c").toString + "/t"
+    val table = tempDir("graft_delta_c") + "/t"
     for (i <- 0 until 25)
       DeltaLite.write(Seq((i.toLong, s"v$i")).toDF("id", "v"), table)
     val log = Paths.get(table, "_delta_log")
@@ -202,7 +233,7 @@ class ExtensionsDeltaSpec extends SparkSpec {
   }
 
   test("DeltaLite checkpoint labeled v replays AT v, not HEAD") {
-    val table = Files.createTempDirectory("graft_delta_ckv").toString + "/t"
+    val table = tempDir("graft_delta_ckv") + "/t"
     for (i <- 0 until 6)
       DeltaLite.write(Seq((i.toLong, s"v$i")).toDF("id", "v"), table)
     // a checkpoint racing behind two already-landed OCC commits: the
@@ -219,7 +250,7 @@ class ExtensionsDeltaSpec extends SparkSpec {
   }
 
   test("DeltaLite writes versioned commits; append and overwrite round-trip") {
-    val table = Files.createTempDirectory("graft_delta_w").toString + "/t"
+    val table = tempDir("graft_delta_w") + "/t"
     val v0 = DeltaLite.write(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), table)
     assert(v0 == 0L)
     val v1 = DeltaLite.write(Seq((3L, "c")).toDF("id", "v"), table)
@@ -303,7 +334,7 @@ class ExtensionsDeltaSpec extends SparkSpec {
   }
 
   test("DeltaLite time travel: readAt reconstructs each committed version") {
-    val table = Files.createTempDirectory("graft_delta_tt").toString + "/t"
+    val table = tempDir("graft_delta_tt") + "/t"
     DeltaLite.write(Seq((1L, "a")).toDF("id", "v"), table)
     DeltaLite.write(Seq((2L, "b")).toDF("id", "v"), table)
     DeltaLite.write(Seq((9L, "z")).toDF("id", "v"), table, overwrite = true)
@@ -319,7 +350,7 @@ class ExtensionsDeltaSpec extends SparkSpec {
 
   test("DeltaLite restore re-activates an old version as a NEW commit; " +
       "history survives") {
-    val table = Files.createTempDirectory("graft_delta_rs").toString + "/t"
+    val table = tempDir("graft_delta_rs") + "/t"
     DeltaLite.write(Seq((1L, "a")).toDF("id", "v"), table)
     DeltaLite.write(Seq((2L, "b")).toDF("id", "v"), table)
     DeltaLite.write(Seq((9L, "z")).toDF("id", "v"), table, overwrite = true)
@@ -345,7 +376,7 @@ class ExtensionsDeltaSpec extends SparkSpec {
 
   test("DeltaLite writeTxn: replayed batches skip, watermark survives " +
       "checkpoints, apps are independent") {
-    val table = Files.createTempDirectory("graft_delta_txn").toString + "/t"
+    val table = tempDir("graft_delta_txn") + "/t"
     assert(DeltaLite.writeTxn(Seq((1L, "a")).toDF("id", "v"), table,
       "app1", 0L) == 0L)
     assert(DeltaLite.writeTxn(Seq((2L, "b")).toDF("id", "v"), table,
@@ -381,7 +412,7 @@ class ExtensionsDeltaSpec extends SparkSpec {
 
   test("DeltaLite mergeCdc: upserts replace, deletes drop, replay " +
       "skips, untouched files survive") {
-    val table = Files.createTempDirectory("graft_delta_mc").toString + "/t"
+    val table = tempDir("graft_delta_mc") + "/t"
     import org.apache.spark.sql.functions.{col, lit}
     val E = graft.model.CdcEnvelope
     // snapshot lands as two files so key-locality is observable
@@ -412,7 +443,7 @@ class ExtensionsDeltaSpec extends SparkSpec {
   }
 
   test("DeltaLite time travel ignores checkpoints newer than the target") {
-    val table = Files.createTempDirectory("graft_delta_ttc").toString + "/t"
+    val table = tempDir("graft_delta_ttc") + "/t"
     for (i <- 0 until 15)
       DeltaLite.write(Seq((i.toLong, s"v$i")).toDF("id", "v"), table)
     // _last_checkpoint points at v10; reading v5 must replay JSON only
@@ -424,7 +455,7 @@ class ExtensionsDeltaSpec extends SparkSpec {
   }
 
   test("DeltaLite vacuum deletes only files outside the retention set") {
-    val table = Files.createTempDirectory("graft_delta_vac").toString + "/t"
+    val table = tempDir("graft_delta_vac") + "/t"
     DeltaLite.write(Seq((1L, "a")).toDF("id", "v"), table)
     DeltaLite.write(Seq((2L, "b")).toDF("id", "v"), table)
     DeltaLite.write(Seq((9L, "z")).toDF("id", "v"), table, overwrite = true)
@@ -450,7 +481,7 @@ class ExtensionsDeltaSpec extends SparkSpec {
   }
 
   test("DeltaLite deleteWhere rewrites only files containing matches") {
-    val table = Files.createTempDirectory("graft_delta_del").toString + "/t"
+    val table = tempDir("graft_delta_del") + "/t"
     // two single-file commits: ids 0-9 and 10-19
     DeltaLite.write(spark.range(0, 10).toDF("id").coalesce(1), table)
     DeltaLite.write(spark.range(10, 20).toDF("id").coalesce(1), table)
@@ -471,7 +502,7 @@ class ExtensionsDeltaSpec extends SparkSpec {
   }
 
   test("DeltaLite upsert replaces matched keys and appends new ones") {
-    val table = Files.createTempDirectory("graft_delta_ups").toString + "/t"
+    val table = tempDir("graft_delta_ups") + "/t"
     DeltaLite.write(Seq((1L, "a"), (2L, "b")).toDF("id", "v")
       .coalesce(1), table)
     DeltaLite.write(Seq((3L, "c"), (4L, "d")).toDF("id", "v")
@@ -488,7 +519,7 @@ class ExtensionsDeltaSpec extends SparkSpec {
     assert(out == Seq((1L, "a"), (2L, "b"), (3L, "C9"), (4L, "d"),
       (9L, "new")))
     // upsert into an empty table bootstraps it
-    val t2 = Files.createTempDirectory("graft_delta_ups2").toString + "/t"
+    val t2 = tempDir("graft_delta_ups2") + "/t"
     assert(DeltaLite.upsert(spark, t2,
       Seq((1L, "x")).toDF("id", "v"), Seq("id")) == 0L)
     assert(DeltaLite.read(spark, t2).count() == 1)
@@ -496,7 +527,7 @@ class ExtensionsDeltaSpec extends SparkSpec {
 
   test("DeltaLite changesBetween diffs versions; the feed folds into a rollup") {
     import graft.operators.Rollup
-    val table = Files.createTempDirectory("graft_delta_cdf").toString + "/t"
+    val table = tempDir("graft_delta_cdf") + "/t"
     DeltaLite.write(Seq((1L, "g1", 10.0), (2L, "g1", 20.0), (3L, "g2", 5.0))
       .toDF("id", "g", "v"), table)                       // v0
     DeltaLite.upsert(spark,
@@ -528,7 +559,7 @@ class ExtensionsDeltaSpec extends SparkSpec {
   }
 
   test("DeltaLite optimize bin-packs small files, preserving rows and history") {
-    val table = Files.createTempDirectory("graft_delta_opt").toString + "/t"
+    val table = tempDir("graft_delta_opt") + "/t"
     for (i <- 0 until 8)
       DeltaLite.write(spark.range(i * 10, i * 10 + 10).toDF("id")
         .coalesce(1), table)

@@ -1,16 +1,16 @@
 package graft.functions
 
 import graft.{JobBudget, SparkSpec}
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Job budget of one standing-index arrival: the Spark jobs started
   * inside one call of [[Dedup.bandIndexUpdate]] and of
   * [[Dedup.containmentIndexUpdate]], on a new index (bootstrap) and on
-  * one that already holds a batch. Job counts repeat exactly from run
-  * to run, so they pin the per-arrival fixed cost: a plan change that
-  * adds a job fails here before it shows as wall time ([[JobBudget]]). */
+  * one that already holds a batch; and of a compaction with nothing to
+  * merge. Job counts repeat exactly from run to run, so they pin the
+  * per-arrival fixed cost: a plan change that adds a job fails here
+  * before it shows as wall time ([[JobBudget]]). */
 class IndexJobBudgetSpec extends SparkSpec {
 
   private def jobsOf(body: => Unit) = JobBudget.jobsOf(spark)(body)
@@ -23,29 +23,55 @@ class IndexJobBudgetSpec extends SparkSpec {
     * not counted. */
   private def arrivals(name: String)(update: (String, DataFrame) => Unit)
       : (Seq[(String, String)], Seq[(String, String)]) = {
-    val idx = java.nio.file.Files.createTempDirectory(s"graft_$name")
-      .toString + "/idx"
+    val idx = tempDir(s"graft_$name") + "/idx"
     val docs = graft.Tables.load(spark, sf(), "documents")
       .select(col("doc_id"), col("text"))
     val Seq(even, odd) = Seq(0, 1).map(m => docs.filter(col("doc_id") % 2 === m))
-    try (jobsOf(update(idx, even)), jobsOf(update(idx, odd)))
-    finally FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      .delete(new Path(idx).getParent, true)
+    (jobsOf(update(idx, even)), jobsOf(update(idx, odd)))
   }
 
-  test("band-index arrival job budget: bootstrap 6, post-bootstrap 10") {
+  test("band-index arrival job budget: bootstrap 5, post-bootstrap 8") {
     val (boot, next) = arrivals("bandjobs") { (idx, b) =>
       Dedup.bandIndexUpdate(idx, b, "text", "doc_id"); ()
     }
-    assert((boot.size, next.size) == ((6, 10)),
+    assert((boot.size, next.size) == ((5, 8)),
       s"bootstrap: ${breakdown(boot)} || post-bootstrap: ${breakdown(next)}")
   }
 
-  test("containment-index arrival job budget: bootstrap 11, post-bootstrap 18") {
+  test("containment-index arrival job budget: bootstrap 11, post-bootstrap 14") {
     val (boot, next) = arrivals("contjobs") { (idx, b) =>
       Dedup.containmentIndexUpdate(idx, b, "text", "doc_id"); ()
     }
-    assert((boot.size, next.size) == ((11, 18)),
+    assert((boot.size, next.size) == ((11, 14)),
       s"bootstrap: ${breakdown(boot)} || post-bootstrap: ${breakdown(next)}")
+  }
+
+  test("a compaction leaves a directory with nothing to merge alone: no " +
+    "job, the containment index's dford/ part file untouched") {
+    val idx = tempDir("graft_contcompact") + "/idx"
+    val docs = graft.Tables.load(spark, sf(), "documents")
+      .select(col("doc_id"), col("text"))
+    val thirds = (0 until 3).map(m => docs.filter(col("doc_id") % 3 === m))
+    /** (name, mtime) of each parquet file under `dir`. */
+    def parts(dir: String): Set[(String, Long)] =
+      new java.io.File(s"$idx/$dir").listFiles()
+        .filter(_.getName.endsWith(".parquet"))
+        .map(f => (f.getName, f.lastModified())).toSet
+    thirds.take(2).foreach(b =>
+      Dedup.containmentIndexUpdate(idx, b, "text", "doc_id"))
+    Dedup.containmentIndexCompact(spark, idx)
+    val (dford, postings) = (parts("dford"), parts("postings"))
+    assert(dford.size == 1 && postings.size == 1, s"$dford $postings")
+    // both directories now hold one file: nothing to merge, no job
+    val again = jobsOf(Dedup.containmentIndexCompact(spark, idx))
+    assert(again.isEmpty, breakdown(again))
+    assert(parts("dford") == dford && parts("postings") == postings)
+    // an arrival appends to postings/ only: the next compaction merges
+    // postings/ and leaves the once-written dford/ as it was
+    Dedup.containmentIndexUpdate(idx, thirds(2), "text", "doc_id")
+    val stats = Dedup.containmentIndexCompact(spark, idx)
+    assert(stats.filesBefore > 1 && stats.filesAfter == 1, stats)
+    assert(parts("postings") != postings)
+    assert(parts("dford") == dford)
   }
 }

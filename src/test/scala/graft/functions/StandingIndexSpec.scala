@@ -54,8 +54,7 @@ class StandingIndexSpec extends SparkSpec {
                     arrive: (String, Int) => Set[Seq[Any]],
                     compact: String => Unit,
                     rows: String => Seq[Long]): Unit = {
-    val base = java.nio.file.Files.createTempDirectory(s"graft_$name")
-      .toString
+    val base = tempDir(s"graft_$name")
     val ref = feed(s"$base/ref", compact, arrive, compact)
     assert(ref.nonEmpty, "vacuous: the arrivals discover no pairs")
     val refRows = rows(s"$base/ref")

@@ -67,7 +67,7 @@ class TypeMappingSpec extends SparkSpec {
       .toDF("c_int8", "c_int64", "c_uint64", "c_double", "c_string",
         "c_bool", "c_ts", "c_dt", "c_bytes")
     val strict = strictify(df, target)
-    val dir = java.nio.file.Files.createTempDirectory("graft_types").toString + "/t"
+    val dir = tempDir("graft_types") + "/t"
     strict.write.parquet(dir)
     val back = spark.read.parquet(dir)
     // every canonical type survives the storage round trip

@@ -97,8 +97,7 @@ class CompositionOpsSpec extends SparkSpec {
   }
 
   test("dynamic partition overwrite leaves untouched partition files alone") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_dynpart").toString + "/t"
+    val base = tempDir("graft_dynpart") + "/t"
     val df = Seq((1L, "a", "g1"), (2L, "b", "g2")).toDF("k", "v", "grp")
     df.write.partitionBy("grp").parquet(base)
     def files(g: String) = new java.io.File(s"$base/grp=$g")

@@ -78,8 +78,8 @@ class RollupSpec extends SparkSpec {
   test("fold maintains parquet state across streaming micro-batches") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft_rollup")
-    val statePath = root.toString + "/state"
+    val root = tempDir("graft_rollup")
+    val statePath = root + "/state"
     // (kind, lsn, bgrp, bv, agrp, av); empty group string = null image
     val mem = MemoryStream[(String, Long, String, Long, String, Long)]
     val stream = mem.toDF().toDF(E.Kind, E.Lsn, "bg", "bv", "ag", "av")
@@ -91,7 +91,7 @@ class RollupSpec extends SparkSpec {
         Rollup.fold(spark, statePath, Rollup.retractions(b),
           Seq("grp"), Seq("v"), batchId = id); ()
       }
-      .option("checkpointLocation", root.toString + "/ckpt")
+      .option("checkpointLocation", root + "/ckpt")
       .start()
     try {
       mem.addData((E.Insert, 1L, "", 0L, "a", 10L),
@@ -109,8 +109,8 @@ class RollupSpec extends SparkSpec {
   }
 
   test("fold with a batchId is exactly-once under replay") {
-    val root = java.nio.file.Files.createTempDirectory("graft_rollup_rep")
-    val statePath = root.toString + "/state"
+    val root = tempDir("graft_rollup_rep")
+    val statePath = root + "/state"
     val b1 = change(E.Insert, 1, nullImg, img(lit("a"), lit(10L)))
     Rollup.fold(spark, statePath, Rollup.retractions(b1),
       Seq("grp"), Seq("v"), batchId = 0L)
@@ -127,8 +127,8 @@ class RollupSpec extends SparkSpec {
   }
 
   test("fold recovers the pre-fold state from a crashed swap") {
-    val root = java.nio.file.Files.createTempDirectory("graft_rollup_bak")
-    val statePath = root.toString + "/state"
+    val root = tempDir("graft_rollup_bak")
+    val statePath = root + "/state"
     val b1 = change(E.Insert, 1, nullImg, img(lit("a"), lit(10L)))
     Rollup.fold(spark, statePath, Rollup.retractions(b1),
       Seq("grp"), Seq("v"))
@@ -300,8 +300,8 @@ class RollupSpec extends SparkSpec {
     math.floorMod(graft.functions.Hashing.hex8ToLongJvm(key), n.toLong)
 
   test("bucketed fold rewrites ONLY the buckets its batch touches") {
-    val root = java.nio.file.Files.createTempDirectory("graft_rollup_bk")
-    val statePath = root.toString + "/state"
+    val root = tempDir("graft_rollup_bk")
+    val statePath = root + "/state"
     val n = 8
     val fs = new org.apache.hadoop.fs.Path(statePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -341,8 +341,8 @@ class RollupSpec extends SparkSpec {
   }
 
   test("bucketed fold recovers the pre-fold state from a crashed swap") {
-    val root = java.nio.file.Files.createTempDirectory("graft_rollup_bkc")
-    val statePath = root.toString + "/state"
+    val root = tempDir("graft_rollup_bkc")
+    val statePath = root + "/state"
     val n = 4
     val fs = new org.apache.hadoop.fs.Path(statePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -368,8 +368,8 @@ class RollupSpec extends SparkSpec {
 
   test("crashed swap with a folded FRESH bucket does not double-count " +
       "on replay") {
-    val root = java.nio.file.Files.createTempDirectory("graft_rollup_bkf")
-    val statePath = root.toString + "/state"
+    val root = tempDir("graft_rollup_bkf")
+    val statePath = root + "/state"
     val n = 4
     val fs = new org.apache.hadoop.fs.Path(statePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -415,8 +415,8 @@ class RollupSpec extends SparkSpec {
     // rollback would delete the committed fresh bucket (irrestorable)
     // and keep the post-fold marker, so the replay is skipped and the
     // fresh key's data silently lost.
-    val root = java.nio.file.Files.createTempDirectory("graft_rollup_bkt")
-    val statePath = root.toString + "/state"
+    val root = tempDir("graft_rollup_bkt")
+    val statePath = root + "/state"
     val n = 4
     val fs = new org.apache.hadoop.fs.Path(statePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -449,8 +449,8 @@ class RollupSpec extends SparkSpec {
     // committed-but-half-torn .bak, deleting the committed fresh bucket
     // it can no longer restore. The _graft_done sentinel (stamped at the
     // commit point, deleted last) is what recovery must key on.
-    val root = java.nio.file.Files.createTempDirectory("graft_rollup_bks")
-    val statePath = root.toString + "/state"
+    val root = tempDir("graft_rollup_bks")
+    val statePath = root + "/state"
     val n = 4
     val fs = new org.apache.hadoop.fs.Path(statePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -483,8 +483,8 @@ class RollupSpec extends SparkSpec {
 
   test("bucketed fold that retracts the whole state returns a typed " +
       "empty frame") {
-    val root = java.nio.file.Files.createTempDirectory("graft_rollup_bke")
-    val statePath = root.toString + "/state"
+    val root = tempDir("graft_rollup_bke")
+    val statePath = root + "/state"
     val b1 = change(E.Insert, 1, nullImg, img(lit("a"), lit(10L)))
     Rollup.foldBucketed(spark, statePath, Rollup.retractions(b1),
       Seq("grp"), Seq("v"), numBuckets = 4, batchId = 0L)
@@ -502,8 +502,8 @@ class RollupSpec extends SparkSpec {
 
   test("bucketed extrema fold: fold+repair == recompute, only touched " +
       "buckets rewrite") {
-    val root = java.nio.file.Files.createTempDirectory("graft_rollup_bkm")
-    val statePath = root.toString + "/state"
+    val root = tempDir("graft_rollup_bkm")
+    val statePath = root + "/state"
     val n = 8
     val fs = new org.apache.hadoop.fs.Path(statePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -558,8 +558,7 @@ class RollupSpec extends SparkSpec {
 
   test("readBucketed pre-bootstrap: empty with a schema, loud without") {
     import org.apache.spark.sql.types._
-    val p = java.nio.file.Files.createTempDirectory("graft_rollup_rb")
-      .toString + "/none"
+    val p = tempDir("graft_rollup_rb") + "/none"
     val sch = StructType(Seq(StructField("grp", StringType),
       StructField("n_rows", LongType), StructField("sum_v", LongType)))
     val empty = Rollup.readBucketed(spark, p, Some(sch))

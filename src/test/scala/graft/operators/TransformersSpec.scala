@@ -172,8 +172,7 @@ class TransformersSpec extends SparkSpec {
   }
 
   test("dbt: project runs in dependency order, table model hits parquet") {
-    val proj = java.nio.file.Files
-      .createTempDirectory("dbt_spec").toFile
+    val proj = new java.io.File(tempDir("dbt_spec"))
     val models = new java.io.File(proj, "models"); models.mkdirs()
     def w(n: String, sql: String): Unit = java.nio.file.Files.write(
       new java.io.File(models, n).toPath, sql.getBytes("UTF-8"))
@@ -194,8 +193,7 @@ class TransformersSpec extends SparkSpec {
   }
 
   test("dbt transformer exposes the transfer frame as source('transfer', view)") {
-    val proj = java.nio.file.Files
-      .createTempDirectory("dbt_tr").toFile
+    val proj = new java.io.File(tempDir("dbt_tr"))
     new java.io.File(proj, "models").mkdirs()
     java.nio.file.Files.write(
       new java.io.File(proj, "models/agg.sql").toPath,

@@ -196,7 +196,7 @@ class ParsersSpec extends SparkSpec {
   }
 
   test("blank parser ships queue messages under the fixed schema") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_blank").toString
+    val dir = tempDir("graft_blank")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "p0.txt"), "l1\nl2")
     val out = BlankParser.fromQueue(
       graft.sources.Readers.fileQueue(spark, dir, "logs"))
@@ -221,7 +221,7 @@ class ParsersSpec extends SparkSpec {
   }
 
   test("confluent registry decode resolves mixed writer schemas") {
-    val reg = java.nio.file.Files.createTempDirectory("graft_reg").toString
+    val reg = tempDir("graft_reg")
     val v1 = """{"type":"record","name":"r","fields":[{"name":"id","type":"long"}]}"""
     val v2 = """{"type":"record","name":"r","fields":[{"name":"id","type":"long"},{"name":"tag","type":"string","default":"none"}]}"""
     java.nio.file.Files.writeString(java.nio.file.Paths.get(reg, "1.avsc"), v1)

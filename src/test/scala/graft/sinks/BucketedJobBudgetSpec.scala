@@ -30,7 +30,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
 class BucketedJobBudgetSpec extends SparkSpec {
 
   private def dir(name: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_$name").toString + "/state"
+    tempDir(s"graft_$name") + "/state"
 
   /** Jobs of `next` after `boot` ran. */
   private def budget(boot: => Unit)(next: => Unit): Seq[(String, String)] = {

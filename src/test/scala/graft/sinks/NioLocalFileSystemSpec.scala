@@ -11,17 +11,16 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.io.nativeio.NativeIO
-import org.scalatest.funsuite.AnyFunSuite
 
 /** [[NioLocalFileSystem]] behaves as Hadoop's local filesystem does
   * (same modes, same checksum files, a partitioned Spark write), without
   * a `chmod` child per file. */
-class NioLocalFileSystemSpec extends AnyFunSuite {
+class NioLocalFileSystemSpec extends graft.SparkSpec {
 
   private val conf = new Configuration()
 
   private def newDir(): java.io.File =
-    Files.createTempDirectory("graft_niofs").toFile
+    new java.io.File(tempDir("graft_niofs"))
 
   private def modes(root: java.io.File): Map[String, String] = {
     val s = Files.walk(root.toPath)

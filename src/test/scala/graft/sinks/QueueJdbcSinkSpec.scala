@@ -63,7 +63,7 @@ class QueueJdbcSinkSpec extends SparkSpec {
   }
 
   test("file-queue spool round-trips through the queue reader") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_kq").toString
+    val dir = tempDir("graft_kq")
     KafkaSink.writeFileQueue(cdc((1L, "a", "insert", 1L), (2L, "b", "update", 2L)),
       dir, "topicA", keyCols = Seq("id"))
     val q = graft.sources.Readers.fileQueue(spark, s"$dir/topicA", "topicA")
@@ -75,7 +75,7 @@ class QueueJdbcSinkSpec extends SparkSpec {
   test("streamed replication mirrors micro-batches into a growing file queue") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_mirror").toString
+    val dir = tempDir("graft_mirror")
     val mem = MemoryStream[(Long, String, String, Long)]
     val stream = mem.toDF().toDF("id", "v", E.Kind, E.Lsn)
       .withColumn(E.Counter, lit(0))

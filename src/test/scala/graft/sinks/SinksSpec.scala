@@ -1,6 +1,5 @@
 package graft.sinks
 
-import java.nio.file.Files
 
 import scala.collection.mutable
 
@@ -13,7 +12,7 @@ import org.apache.spark.sql.graft.bridge
 class SinksSpec extends SparkSpec {
 
   private def tmp(): String =
-    Files.createTempDirectory("graft_sinks").toString
+    tempDir("graft_sinks")
 
   /** SQL execution id of every job `body` starts, in start order. */
   private def jobsOf(body: => Unit): Seq[Option[String]] = {

@@ -10,7 +10,6 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, FilterFileSystem, FSDataOutputStream, Path}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Crash-point properties of [[Swap]]: for every mutating step k of each
   * protocol (staging included), the process dies at step k; re-entering
@@ -18,14 +17,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * A second sweep also kills the recovery itself at each of its steps.
   * Faults come from [[SwapSpec.Faulty]], a FilterFileSystem handed to
   * Swap in place of the real one. */
-class SwapSpec extends AnyFunSuite {
+class SwapSpec extends graft.SparkSpec {
   import SwapSpec._
 
   // Hadoop's checksummed local filesystem, the default for file: paths;
   // like HDFS its rename will not replace an existing file
   private val raw: FileSystem = FileSystem.getLocal(new Configuration())
 
-  private def newDir(): File = Files.createTempDirectory("graft_swap").toFile
+  private def newDir(): File = new File(tempDir("graft_swap"))
 
   private def put(fs: FileSystem, p: Path, text: String): Unit = {
     val out = fs.create(p, true)

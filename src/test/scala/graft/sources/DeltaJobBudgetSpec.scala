@@ -23,7 +23,7 @@ class DeltaJobBudgetSpec extends SparkSpec {
   import spark.implicits._
 
   private def dir(name: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_$name").toString + "/t"
+    tempDir(s"graft_$name") + "/t"
 
   /** A table of two files: ids 0-9 and 10-19. */
   private def twoFiles(name: String): String = {
@@ -61,7 +61,7 @@ class DeltaJobBudgetSpec extends SparkSpec {
   }
 
   test("multi-table applyBatch job budget: post-bootstrap 9") {
-    val base = java.nio.file.Files.createTempDirectory("graft_applyjobs").toString
+    val base = tempDir("graft_applyjobs")
     val f = Lifecycle.addTables(base, Seq("k"), TableFilter(),
       Seq("a" -> Seq((1L, "a1"), (2L, "a2")).toDF("k", "v"),
           "b" -> Seq((10L, "b1")).toDF("k", "v")))

@@ -12,7 +12,7 @@ class DeltaPartitionOccSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(): String =
-    Files.createTempDirectory("graft_delta_p").toString + "/t"
+    tempDir("graft_delta_p") + "/t"
 
   test("partitioned write/read round-trip; pruned read opens only matching dirs") {
     val table = tmp()

@@ -4,13 +4,12 @@ import graft.SparkSpec
 import graft.sinks.Sinks
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import java.nio.file.Files
 
 class SourcesSinksSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(): String =
-    Files.createTempDirectory("graft_test").toString
+    tempDir("graft_test")
 
   test("csv round trip with custom delimiter preserves content") {
     val region = graft.Tables.load(spark, sf(), "region")

@@ -9,7 +9,7 @@ class MeteringSchemaDriftSpec extends SparkSpec {
   import spark.implicits._
 
   test("merge sink absorbs mid-stream schema drift (DDL added column)") {
-    val state = Files.createTempDirectory("graft_drift").toString + "/t"
+    val state = tempDir("graft_drift") + "/t"
     val b1 = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
       .withColumn(E.Kind, lit("insert")).withColumn(E.Lsn, lit(1L))
       .withColumn(E.Counter, lit(0))
@@ -43,7 +43,7 @@ class MeteringSchemaDriftSpec extends SparkSpec {
   }
 
   test("multi-table batch routes each table to its own merged state") {
-    val base = Files.createTempDirectory("graft_multi").toString
+    val base = tempDir("graft_multi")
     val batch = Seq(
       (1L, "a", "orders/O"), (2L, "b", "orders/F"), (3L, "c", "orders/O"))
       .toDF("id", "v", E.Table)
@@ -58,7 +58,7 @@ class MeteringSchemaDriftSpec extends SparkSpec {
   }
 
   test("two tables of one batch that map to one state directory fail, naming both") {
-    val base = Files.createTempDirectory("graft_multi_clash").toString
+    val base = tempDir("graft_multi_clash")
     val batch = Seq((1L, "a", "orders/O"), (2L, "b", "orders_O"))
       .toDF("id", "v", E.Table)
       .withColumn(E.Kind, lit("insert")).withColumn(E.Lsn, lit(1L))

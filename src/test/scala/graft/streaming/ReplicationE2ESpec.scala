@@ -6,7 +6,6 @@ import graft.operators.Collapse
 import graft.parsers.Wal2Json
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import java.nio.file.Files
 
 /** Full replication path end-to-end: wal2json wire messages -> parse ->
   * PK-change split -> collapse -> checkpointed foreachBatch MERGE.
@@ -35,7 +34,7 @@ class ReplicationE2ESpec extends SparkSpec {
     val parsed = Wal2Json.receive(mem.toDF().toDF("value"), "value",
       rowSchema, pkCols = Seq("id"))
     val pipeline = parsed // transform chain entry point
-    val base = Files.createTempDirectory("graft_repl").toString
+    val base = tempDir("graft_repl")
     val state = base + "/state"
     val q = pipeline.writeStream
       .option("checkpointLocation", base + "/ckpt")

@@ -11,7 +11,7 @@ class StreamingSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(): String =
-    Files.createTempDirectory("graft_stream").toString
+    tempDir("graft_stream")
 
   private def batch(rows: (Long, String, String, Long)*) =
     rows.toSeq.toDF("id", "v", E.Kind, E.Lsn)
@@ -510,7 +510,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("file queue reader exposes queue metadata with stable offsets") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_fq").toString
+    val dir = tempDir("graft_fq")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "p0.txt"), "a\nb\nc")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "p1.txt"), "x\ny")
     val q = graft.sources.Readers.fileQueue(spark, dir, "t0")
