@@ -2699,8 +2699,7 @@ object Queries {
       val src = t(s, dir, "orders").withColumn(E.Kind, ordersKind)
         .select(col("o_orderkey").as("k"), col("o_totalprice").as("val"),
           col(E.Kind), col("o_orderkey").as(E.Lsn))
-      graft.sinks.KafkaSink.writeFileQueue(src, qbase, "orders",
-        keyCols = Seq("k"))
+      graft.sinks.KafkaSink.writeFileQueue(src, qbase, "orders")
       val q = Readers.fileQueue(s, s"$qbase/orders", "orders")
       val schema = StructType(Seq(
         StructField("k", LongType), StructField("val", DoubleType),
@@ -3420,8 +3419,7 @@ object Queries {
         lit(0.0).as("val"), lit("delete").as(E.Kind),
         (col("k") * 10 + 2).as(E.Lsn))
       def publish(df: org.apache.spark.sql.DataFrame): Unit =
-        graft.sinks.KafkaSink.appendFileQueue(df, qdir, "orders",
-          keyCols = Seq("k"))
+        graft.sinks.KafkaSink.appendFileQueue(df, qdir, "orders")
       publish(inserts)
       val wire = graft.sources.Readers.fileQueueStream(s, qdir, "orders")
       val payload = from_json(col("value"),

@@ -60,9 +60,8 @@ object TransferRunner {
       case SinkConfig.Kafka(bootstrap, topic, fmt, keyCols) =>
         sinks.KafkaSink.writeBatch(df, bootstrap, topic, keyCols,
           wireFormat(fmt))
-      case SinkConfig.FileQueue(dir, topic, fmt, keyCols) =>
-        sinks.KafkaSink.writeFileQueue(df, dir, topic, keyCols,
-          wireFormat(fmt))
+      case SinkConfig.FileQueue(dir, topic, fmt) =>
+        sinks.KafkaSink.writeFileQueue(df, dir, topic, wireFormat(fmt))
       case SinkConfig.Jdbc(url, table, props) =>
         sinks.JdbcSink.write(df, url, table, cleanup, props)
       case SinkConfig.Delta(path) =>
@@ -98,62 +97,53 @@ object TransferRunner {
   def runSnapshot(spark: SparkSession, t: Transfer, table: String = ""): Unit = {
     val src = source(spark, t.source)
     val chain = TransformerChain(t.transformers)
-    val out = chain(src, table)
-    t.errorsOutput match {
-      case ErrorsOutput.ToPath(p) =>
-        chain.errors(src, table).foreach(Sinks.parquet(_, p, Sinks.Disabled))
-      case ErrorsOutput.DevNull => ()
-    }
-    write(out, t.sink, t.cleanup)
+    errorsPath(t).foreach(p =>
+      chain.errors(src, table).foreach(Sinks.parquet(_, p, Sinks.Disabled)))
+    write(chain(src, table), t.sink, t.cleanup)
+  }
+
+  private def errorsPath(t: Transfer): Option[String] = t.errorsOutput match {
+    case ErrorsOutput.ToPath(p) => Some(p)
+    case ErrorsOutput.DevNull => None
   }
 
   /** Replication: `trcli replicate` for INCREMENT_ONLY (reference:
     * runtime/local/replication.go:83). The source must be streaming; the
-    * sink is either a Merge target (warehouse direction) or a queue
-    * (Kafka / file-queue mirror direction — the reference's db→queue
-    * transfers). Returns the started query. */
-  def runReplication(spark: SparkSession, t: Transfer,
-                     pks: Seq[String]): org.apache.spark.sql.streaming.StreamingQuery =
-    replicate(t, pks, source(spark, t.source))
+    * sink is either a Merge target (warehouse direction), keyed on its
+    * `primaryKeys`, or a queue (Kafka / file-queue mirror direction — the
+    * reference's db→queue transfers), keyed on its `keyCols`. Returns the
+    * started query. */
+  def runReplication(spark: SparkSession,
+                     t: Transfer): org.apache.spark.sql.streaming.StreamingQuery =
+    replicate(t, source(spark, t.source))
 
-  /** [[runReplication]] of the streaming source `src`. */
-  private def replicate(t: Transfer, pks: Seq[String],
+  /** [[runReplication]] of the streaming source `src`. A Merge target
+    * replicates through [[streaming.CdcStream.replicate]], which applies
+    * the chain per micro-batch and routes its quarantine rows to
+    * `t.errorsOutput`. */
+  private def replicate(t: Transfer,
                         src: DataFrame): org.apache.spark.sql.streaming.StreamingQuery = {
     require(src.isStreaming, "replication requires a streaming source")
     val chain = TransformerChain(t.transformers)
-    val out = chain(src)
     t.sink match {
-      // dead-letter routing in the stream: transformers apply per
-      // micro-batch so quarantine rows land next to the state (the
-      // reference's ErrorsOutput=sink behavior during replication)
-      case SinkConfig.Merge(path, _)
-          if t.errorsOutput.isInstanceOf[ErrorsOutput.ToPath] =>
-        val ErrorsOutput.ToPath(errPath) = t.errorsOutput: @unchecked
-        val ckpt = t.checkpointDir.getOrElse(path + "_checkpoint")
-        src.writeStream
-          .option("checkpointLocation", ckpt)
-          .trigger(streaming.CdcStream.Bufferer().trigger)
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            chain.errors(batch).foreach(
-              sinks.Sinks.parquet(_, errPath, sinks.Sinks.Disabled))
-            streaming.CdcStream.mergeBatch(chain(batch), path, pks)
-          }.start()
-      case SinkConfig.Merge(path, _) =>
-        val ckpt = t.checkpointDir.getOrElse(path + "_checkpoint")
-        streaming.CdcStream.replicate(out, path, ckpt, pks,
-          streaming.CdcStream.Bufferer()).start()
+      case SinkConfig.Merge(path, pks) =>
+        streaming.CdcStream.replicate(src, path,
+          t.checkpointDir.getOrElse(path + "_checkpoint"), pks,
+          chain = chain, errorsPath = errorsPath(t)).start()
       case SinkConfig.Kafka(bootstrap, topic, fmt, keyCols) =>
-        val ckpt = t.checkpointDir.getOrElse(s"/tmp/graft_ckpt_$topic")
-        sinks.KafkaSink.streamWriter(out, bootstrap, topic, ckpt,
-          if (keyCols.nonEmpty) keyCols else pks, wireFormat(fmt)).start()
-      case SinkConfig.FileQueue(dir, topic, fmt, keyCols) =>
+        // a topic-derived default would be shared by every transfer to
+        // the topic, and each would resume from the others' offsets
+        val ckpt = t.checkpointDir.getOrElse(throw new IllegalArgumentException(
+          s"replication to Kafka topic $topic needs a checkpoint directory " +
+            "(Transfer.checkpointDir, YAML key 'checkpoint')"))
+        sinks.KafkaSink.streamWriter(chain(src), bootstrap, topic, ckpt,
+          keyCols, wireFormat(fmt)).start()
+      case SinkConfig.FileQueue(dir, topic, fmt) =>
         val ckpt = t.checkpointDir.getOrElse(s"$dir/${topic}_checkpoint")
-        val keys = if (keyCols.nonEmpty) keyCols else pks
-        out.writeStream
+        chain(src).writeStream
           .option("checkpointLocation", ckpt)
           .foreachBatch { (batch: DataFrame, _: Long) =>
-            sinks.KafkaSink.appendFileQueue(batch, dir, topic, keys,
-              wireFormat(fmt))
+            sinks.KafkaSink.appendFileQueue(batch, dir, topic, wireFormat(fmt))
           }.start()
       case other => throw new IllegalArgumentException(
         s"replication requires a Merge or queue sink, got $other")
@@ -167,10 +157,10 @@ object TransferRunner {
     * `t.checkpointDir`, else `<path>_checkpoint`; dead-letter rows to
     * `t.errorsOutput`), so replication resumes idempotently on top of
     * the snapshot. */
-  def runBoth(spark: SparkSession, t: Transfer, pks: Seq[String],
+  def runBoth(spark: SparkSession, t: Transfer,
               stream: DataFrame): org.apache.spark.sql.streaming.StreamingQuery = {
     require(t.sink.isInstanceOf[SinkConfig.Merge], s"need Merge sink, got ${t.sink}")
-    runSnapshot(spark, t.copy(transferType = TransferType.SnapshotOnly))
-    replicate(t, pks, stream)
+    runSnapshot(spark, t)
+    replicate(t, stream)
   }
 }

@@ -1,6 +1,6 @@
 package graft.config
 
-import graft.operators.{TableFilter, Transformer}
+import graft.operators.Transformer
 import graft.sinks.Sinks
 
 /** Transfer configuration: the engine's public "what to move, how"
@@ -62,11 +62,11 @@ object SinkConfig {
   final case class Kafka(bootstrap: String, topic: String,
                          format: String = "json",
                          keyCols: Seq[String] = Nil) extends SinkConfig
-  /** File-backed queue sink: same wire frame as Kafka, spooled as line
-    * files in [[graft.sources.Readers.fileQueue]] layout. */
+  /** File-backed queue sink: the Kafka wire frame's payload, spooled as
+    * line files in [[graft.sources.Readers.fileQueue]] layout (a line
+    * carries no key). */
   final case class FileQueue(dir: String, topic: String,
-                             format: String = "json",
-                             keyCols: Seq[String] = Nil) extends SinkConfig
+                             format: String = "json") extends SinkConfig
   /** JDBC table sink (pg/mysql/greenplum write direction). */
   final case class Jdbc(url: String, table: String,
                         properties: Map[String, String] = Map.empty)
@@ -84,7 +84,6 @@ final case class Transfer(
     source: SourceConfig,
     sink: SinkConfig,
     transformers: Seq[Transformer] = Nil,
-    tables: TableFilter = TableFilter(),
     cleanup: Sinks.CleanupPolicy = Sinks.Drop,
     errorsOutput: ErrorsOutput = ErrorsOutput.DevNull,
     checkpointDir: Option[String] = None)

@@ -102,20 +102,26 @@ object TransferYaml {
         m.getOrElse("delimiter", ",").toString)
       case "jsonl" => SinkConfig.JsonLines(m("path").toString)
       case "console" => SinkConfig.Console
-      case "merge" => SinkConfig.Merge(m("path").toString,
-        asList(m("primary_keys")).map(_.toString))
+      case "merge" => SinkConfig.Merge(m("path").toString, primaryKeys(m))
       case "kafka" => SinkConfig.Kafka(m("bootstrap").toString,
         m("topic").toString,
         m.getOrElse("format", "json").toString,
         m.get("key_columns").map(asList(_).map(_.toString)).getOrElse(Nil))
       case "file_queue" => SinkConfig.FileQueue(m("dir").toString,
         m("topic").toString,
-        m.getOrElse("format", "json").toString,
-        m.get("key_columns").map(asList(_).map(_.toString)).getOrElse(Nil))
+        m.getOrElse("format", "json").toString)
       case "jdbc" => SinkConfig.Jdbc(m("url").toString, m("table").toString)
       case "delta" => SinkConfig.Delta(m("path").toString)
       case other => throw new IllegalArgumentException(s"sink kind $other")
     }
+
+  /** A merge block's keys. Without a key every row would hash to one
+    * bucket and the merge would keep one row per bucket, so a missing,
+    * null or empty `primary_keys` fails at parse. */
+  private def primaryKeys(m: Map[String, Any]): Seq[String] =
+    m.get("primary_keys").filter(_ != null).map(asList(_).map(_.toString))
+      .filter(_.nonEmpty).getOrElse(throw new IllegalArgumentException(
+        "dst: merge needs a non-empty list under key 'primary_keys'"))
 
   /** One transformer block: { <type-id>: { ...config } } — the same
     * shape as the reference's transformation YAML. */

@@ -67,12 +67,4 @@ object CdcEnvelope {
       .withColumn(Lsn, lsn.cast(LongType))
       .withColumn(Counter, lit(0))
       .withColumn(UpdatedCols, lit(null).cast(ArrayType(StringType)))
-
-  /** Envelope from explicit kind/lsn columns (e.g. parsed Debezium). */
-  def fromChangeLog(df: DataFrame, kind: Column, lsn: Column,
-                    counter: Column = lit(0)): DataFrame =
-    df.withColumn(Kind, kind)
-      .withColumn(Lsn, lsn.cast(LongType))
-      .withColumn(Counter, counter.cast(IntegerType))
-      .withColumn(UpdatedCols, lit(null).cast(ArrayType(StringType)))
 }

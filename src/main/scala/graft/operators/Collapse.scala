@@ -210,12 +210,6 @@ object Collapse {
       .drop("__cut")
   }
 
-  /** Group a multi-table envelope per table id (reference:
-    * changeitem/utils.go:130 SplitByTableID): returns the per-table
-    * routing column values; downstream writers partition on it. */
-  def splitByTable(df: DataFrame): DataFrame =
-    df.repartition(col(E.Table))
-
   /** Group by transaction boundaries (reference: changeitem/utils.go:138
     * SplitByID): tags each row with its transaction ordinal so a sink can
     * apply whole transactions.

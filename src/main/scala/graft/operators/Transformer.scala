@@ -11,6 +11,8 @@ import org.apache.spark.sql.types.StructType
   * `ResultSchema`, `Apply`). Differences by design:
   *   - `apply` is lazy plan construction (Catalyst optimizes the whole
   *     chain); the reference applies each transformer eagerly per batch.
+  *   - `ResultSchema` needs no method: the applied plan's `schema`
+  *     resolves without running it.
   *   - per-item error routing becomes a side-output DataFrame
   *     (`errors`), mirroring ErrorsOutput=sink|devnull
   *     (pkg/transformer/abstract.go:50-60).
@@ -21,14 +23,6 @@ trait Transformer extends Serializable {
   /** Whether this operator applies to the given table/schema
     * (reference: transformer.go:34 `Suitable`). */
   def suitable(table: String, schema: StructType): Boolean = true
-
-  /** Output schema for a given input schema, without running the plan
-    * (reference: transformer.go:36 `ResultSchema`). Default: derive from a
-    * plan built over an empty frame — exact and cheap in Spark. */
-  def resultSchema(spark: org.apache.spark.sql.SparkSession,
-                   in: StructType): StructType =
-    apply(spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], in)).schema
 
   def apply(df: DataFrame): DataFrame
 

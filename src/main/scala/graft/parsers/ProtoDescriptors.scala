@@ -40,8 +40,6 @@ object ProtoWire {
     tag(field, 5) ++ (0 until 4).map(i => ((bits >>> (8 * i)) & 0xff).toByte)
   def dbl(field: Int, d: Double): Array[Byte] =
     fixed64(field, java.lang.Double.doubleToLongBits(d))
-  def flt(field: Int, f: Float): Array[Byte] =
-    fixed32(field, java.lang.Float.floatToIntBits(f))
   /** Packed repeated varints (proto3 default encoding for repeated
     * numerics): one length-delimited blob of concatenated varints. */
   def packedVarints(field: Int, vs: Seq[Long]): Array[Byte] =

@@ -16,8 +16,8 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * exactly like the reference's hash-by-key topic sharding. The broker
   * write itself is `format("kafka")` (the spark-sql-kafka package — not
   * bundled in this sandbox, so the option plumbing is config-tested and
-  * the serde loop is proven by the file-queue round-trip, which shares
-  * this wire frame).
+  * the serde loop is proven by the file-queue round-trip, which writes
+  * this wire frame's value).
   */
 object KafkaSink {
 
@@ -77,23 +77,21 @@ object KafkaSink {
       .options(kafkaOptions(bootstrap, extra))
       .option("checkpointLocation", checkpointDir)
 
-  /** File-queue publish: the same wire frame written as line files in
-    * [[graft.sources.Readers.fileQueue]] layout — the sandbox-runnable
-    * queue transport (and a useful spool format in its own right). */
+  /** File-queue publish: the wire frame's payload written as line files
+    * in [[graft.sources.Readers.fileQueue]] layout — the sandbox-runnable
+    * queue transport (and a useful spool format in its own right). A line
+    * carries only the value, so the file queue has no key. */
   def writeFileQueue(df: DataFrame, dir: String, topic: String,
-                     keyCols: Seq[String] = Nil,
                      fmt: WireFormat = JsonWire): Unit =
-    wireFrame(df, topic, keyCols, fmt)
-      .select(col("value").cast("string"))
-      .write.mode("overwrite").text(s"$dir/$topic")
+    queueLines(df, fmt).write.mode("overwrite").text(s"$dir/$topic")
 
   /** Append one micro-batch to the file queue (the replication-loop
     * direction: each batch lands as new line files, so consumers see a
     * growing partitioned log). */
   def appendFileQueue(df: DataFrame, dir: String, topic: String,
-                      keyCols: Seq[String] = Nil,
                       fmt: WireFormat = JsonWire): Unit =
-    wireFrame(df, topic, keyCols, fmt)
-      .select(col("value").cast("string"))
-      .write.mode("append").text(s"$dir/$topic")
+    queueLines(df, fmt).write.mode("append").text(s"$dir/$topic")
+
+  private def queueLines(df: DataFrame, fmt: WireFormat): DataFrame =
+    df.select(valueExpr(df, fmt).cast("string").as("value"))
 }

@@ -304,13 +304,4 @@ object Sinks {
     val use = if (cols.nonEmpty) cols else E.dataCols(df)
     df.select(csvLine(use.map(col), delimiter).as("value"))
   }
-
-  /** Debezium envelope serializer — see [[graft.parsers.Debezium.emit]]. */
-  def serializeDebezium(df: DataFrame): DataFrame =
-    graft.parsers.Debezium.emit(df, E.dataCols(df))
-
-  /** Mirror/raw serializer: pass the raw payload column through
-    * (format `Mirror`/`RawColumn`). */
-  def serializeRaw(df: DataFrame, rawCol: String): DataFrame =
-    df.select(col(rawCol).cast("binary").as("value"))
 }

@@ -1,8 +1,8 @@
 package graft.streaming
 
 import graft.model.{CdcEnvelope => E}
-import graft.operators.Collapse
-import graft.sinks.{BucketedState, Swap}
+import graft.operators.{Collapse, TransformerChain}
+import graft.sinks.{BucketedState, Sinks, Swap}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
@@ -211,6 +211,9 @@ object CdcStream {
     * schema, changes). */
   def mergeBatch(batch0: DataFrame, stateDir: String, pks: Seq[String],
                  numBuckets: Int = DefaultBuckets): Unit = {
+    // with no key, every row would hash to one bucket and the
+    // last-write-wins would keep one row per bucket
+    require(pks.nonEmpty, s"mergeBatch into $stateDir needs at least one primary key")
     // plain (non-enveloped) frames merge as snapshot inserts
     val batch =
       if (batch0.columns.contains(E.Kind)) batch0
@@ -331,17 +334,41 @@ object CdcStream {
     } finally { batch.unpersist() }
   }
 
-  /** The replication loop: stream -> transform -> checkpointed
-    * foreachBatch MERGE (reference: §3.2 RunReplication). Restart policy
-    * is the streaming query restart; offsets live in the checkpoint. */
+  /** The replication loop: a checkpointed `foreachBatch` that applies one
+    * idempotent [[mergeBatch]] per micro-batch (reference: §3.2
+    * RunReplication, runtime/local/replication.go:83). The offsets live in
+    * the checkpoint, and a restart replays the last uncommitted batch,
+    * which the merge absorbs: that is what makes the loop exactly-once.
+    * It is the one streaming writer for a Merge target.
+    *
+    * `chain` runs per micro-batch, on the batch the stream delivers, so it
+    * may hold batch-only operators. With `errorsPath` set, and only when
+    * the chain can reject rows, the batch is persisted once: its
+    * quarantine rows are appended to `errorsPath` as parquet (the
+    * reference's ErrorsOutput=sink, pkg/transformer/abstract.go:50-60),
+    * the transformed rows are merged, and the cache is dropped, so the
+    * source is scanned once per batch. Otherwise the batch is merged as it
+    * comes, with no cache and no extra job. `bufferer` sets the trigger;
+    * its row and byte limits are source options
+    * ([[Bufferer.sourceOptions]]). */
   def replicate(stream: DataFrame, stateDir: String, checkpointDir: String,
                 pks: Seq[String],
-                bufferer: Bufferer = Bufferer()): DataStreamWriter[org.apache.spark.sql.Row] =
+                bufferer: Bufferer = Bufferer(),
+                chain: TransformerChain = TransformerChain(Nil),
+                errorsPath: Option[String] = None): DataStreamWriter[org.apache.spark.sql.Row] =
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(bufferer.trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        mergeBatch(batch, stateDir, pks)
+        errorsPath match {
+          case Some(path) if chain.errors(batch).isDefined =>
+            val raw = batch.persist()
+            try {
+              chain.errors(raw).foreach(Sinks.parquet(_, path, Sinks.Disabled))
+              mergeBatch(chain(raw), stateDir, pks)
+            } finally raw.unpersist()
+          case _ => mergeBatch(chain(batch), stateDir, pks)
+        }
       }
 
   /** Per-key LSN monotonicity guard: drops events at or below the

@@ -27,6 +27,13 @@ object JobBudget {
             .mkString("/")))
       }
     }
+    listening(spark, l)(body)
+    seen.synchronized(seen.toList)
+  }
+
+  /** Run `body` with `l` registered, draining the listener bus before
+    * and after, so `l` sees every event of `body` and no other. */
+  def listening(spark: SparkSession, l: SparkListener)(body: => Unit): Unit = {
     assert(bridge.drainListenerBus(spark, 10000))
     spark.sparkContext.addSparkListener(l)
     try body
@@ -34,7 +41,6 @@ object JobBudget {
       assert(bridge.drainListenerBus(spark, 10000))
       spark.sparkContext.removeSparkListener(l)
     }
-    seen.synchronized(seen.toList)
   }
 
   /** The jobs grouped by execution (`-`: jobs outside any SQL

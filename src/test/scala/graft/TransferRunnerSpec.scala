@@ -13,6 +13,55 @@ class TransferRunnerSpec extends SparkSpec {
 
   private def tmp(): String = tempDir("graft_tr")
 
+  private val idV = org.apache.spark.sql.types.StructType.fromDDL("id BIGINT, v STRING")
+
+  /** Drop a file of `lines` into the streamed directory `dir`, written
+    * under a hidden name first so a running query never lists it half
+    * written. */
+  private def spool(dir: String, file: String, lines: String*): Unit = {
+    val d = java.nio.file.Paths.get(dir)
+    Files.createDirectories(d)
+    Files.move(Files.writeString(d.resolve("." + file), lines.mkString("\n")),
+      d.resolve(file))
+  }
+
+  private def state(dir: String): Seq[(Long, String)] =
+    graft.streaming.CdcStream.readState(spark, dir)
+      .select("id", "v").as[(Long, String)].collect().toSeq.sortBy(_._1)
+
+  /** The stages `body` runs that scan a text file. A stage counts when it
+    * updates the row counter of a text scan node of some SQL execution's
+    * plan: a stage that reads a cache built from the scan names the node
+    * in its plan but never runs it. */
+  private def textScanStages(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+      SparkListenerStageCompleted}
+    import org.apache.spark.sql.execution.SparkPlanInfo
+    import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate,
+      SparkListenerSQLExecutionStart}
+    val scanCounters = scala.collection.mutable.Set.empty[Long]
+    val stageCounters = scala.collection.mutable.ArrayBuffer.empty[Set[Long]]
+    def scans(p: SparkPlanInfo): Unit = {
+      if (p.nodeName.toLowerCase.startsWith("scan text"))
+        scanCounters ++= p.metrics.filter(_.name == "number of output rows")
+          .map(_.accumulatorId)
+      p.children.foreach(scans)
+    }
+    val l = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        synchronized { stageCounters += e.stageInfo.accumulables.keySet.toSet }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = synchronized {
+        e match {
+          case s: SparkListenerSQLExecutionStart => scans(s.sparkPlanInfo)
+          case u: SparkListenerSQLAdaptiveExecutionUpdate => scans(u.sparkPlanInfo)
+          case _ =>
+        }
+      }
+    }
+    JobBudget.listening(spark, l)(body)
+    l.synchronized(stageCounters.count(_.exists(scanCounters)))
+  }
+
   test("snapshot transfer: parquet -> transform chain -> parquet with cleanup") {
     val out = tmp() + "/dst"
     val t = Transfer(
@@ -116,28 +165,78 @@ class TransferRunnerSpec extends SparkSpec {
   }
 
   test("streamed replication routes quarantine rows to the dead-letter path") {
-    import org.apache.spark.sql.types._
     val dir = tmp()
     val in = dir + "/in"
-    Files.createDirectories(java.nio.file.Paths.get(in))
-    Files.writeString(java.nio.file.Paths.get(in, "b1.jsonl"),
-      """{"id": 1, "v": "a"}""" + "\n{bad\n" + """{"id": 2, "v": "b"}""")
+    spool(in, "b1.jsonl", """{"id": 1, "v": "a"}""", "{bad", """{"id": 2, "v": "b"}""")
     val t = Transfer(
       TransferType.IncrementOnly,
       SourceConfig.TextStream(in),
       SinkConfig.Merge(dir + "/state", Seq("id")),
-      transformers = Seq(T.JsonParser("value", StructType(Seq(
-        StructField("id", LongType), StructField("v", StringType))))),
+      transformers = Seq(T.JsonParser("value", idV)),
       errorsOutput = ErrorsOutput.ToPath(dir + "/errs"),
       checkpointDir = Some(dir + "/ckpt"))
-    val q = TransferRunner.runReplication(spark, t, Seq("id"))
-    try q.processAllAvailable() finally q.stop()
-    val state = graft.streaming.CdcStream.readState(spark, dir + "/state")
-      .select("id", "v").as[(Long, String)].collect().toSeq.sortBy(_._1)
-    assert(state == Seq((1L, "a"), (2L, "b")))
+    // the error split and the merge share one scan of the batch's file
+    val scans = textScanStages {
+      val q = TransferRunner.runReplication(spark, t)
+      try q.processAllAvailable() finally q.stop()
+    }
+    assert(scans == 1)
+    assert(state(dir + "/state") == Seq((1L, "a"), (2L, "b")))
     val errs = spark.read.parquet(dir + "/errs")
       .select("value").as[String].collect().toSeq
     assert(errs == Seq("{bad"))
+  }
+
+  test("snapshot-and-increment routes the snapshot's and the stream's " +
+    "quarantine rows to one dead-letter path") {
+    val dir = tmp()
+    Seq("""{"id": 1, "v": "a"}""", "{bad1", """{"id": 2, "v": "b"}""")
+      .toDF("value").write.parquet(dir + "/snap")
+    spool(dir + "/in", "b1.jsonl", """{"id": 2, "v": "b2"}""", "{bad2",
+      """{"id": 3, "v": "c"}""")
+    val t = Transfer(TransferType.SnapshotAndIncrement,
+      SourceConfig.Parquet(dir + "/snap"), SinkConfig.Merge(dir + "/state", Seq("id")),
+      transformers = Seq(T.JsonParser("value", idV)),
+      errorsOutput = ErrorsOutput.ToPath(dir + "/errs"),
+      checkpointDir = Some(dir + "/ckpt"))
+    val q = TransferRunner.runBoth(spark, t, spark.readStream.text(dir + "/in"))
+    try q.processAllAvailable() finally q.stop()
+    assert(state(dir + "/state") == Seq((1L, "a"), (2L, "b2"), (3L, "c")))
+    val errs = spark.read.parquet(dir + "/errs")
+      .select("value").as[String].collect().toSeq.sorted
+    assert(errs == Seq("{bad1", "{bad2"))
+  }
+
+  test("a yaml transfer replicates keyed on its merge block's primary_keys") {
+    val dir = tmp()
+    val in = dir + "/in"
+    spool(in, "b1.jsonl", """{"id": 1, "v": "a"}""", """{"id": 2, "v": "b"}""")
+    val t = TransferYaml.fromString(
+      s"""type: INCREMENT_ONLY
+         |src: { kind: text_stream, dir: "$in" }
+         |dst: { kind: merge, path: "$dir/state", primary_keys: [id] }
+         |checkpoint: "$dir/ckpt"
+         |transformations:
+         |  - jsonparser: { column: value, schema: "id BIGINT, v STRING" }
+         |""".stripMargin)
+    val q = TransferRunner.runReplication(spark, t)
+    try {
+      q.processAllAvailable()
+      // a second batch updates one key and adds one
+      spool(in, "b2.jsonl", """{"id": 1, "v": "a2"}""", """{"id": 3, "v": "c"}""")
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(state(dir + "/state") == Seq((1L, "a2"), (2L, "b"), (3L, "c")))
+    assert(graft.streaming.CdcStream.lookup(spark, dir + "/state", Seq("id"), Seq(1L))
+      .select("v").as[String].collect().toSeq == Seq("a2"))
+  }
+
+  test("replication to a kafka sink needs its own checkpoint directory") {
+    val t = Transfer(TransferType.IncrementOnly, SourceConfig.TextStream(tmp()),
+      SinkConfig.Kafka("broker:9092", "mirror", keyCols = Seq("id")))
+    val e = intercept[IllegalArgumentException](TransferRunner.runReplication(spark, t))
+    assert(e.getMessage.contains("mirror") && e.getMessage.contains("'checkpoint'"),
+      e.getMessage)
   }
 
   test("snapshot-and-increment: snapshot rows then stream events land in one " +
@@ -164,7 +263,7 @@ class TransferRunnerSpec extends SparkSpec {
       val state = s"$dir/$name"
       val t = Transfer(TransferType.SnapshotAndIncrement,
         SourceConfig.Parquet(dir + "/snap"), SinkConfig.Merge(state, Seq("id")))
-      val q = TransferRunner.runBoth(spark, t, Seq("id"),
+      val q = TransferRunner.runBoth(spark, t,
         spark.readStream.schema(eventSchema).json(dir + "/events"))
       try q.processAllAvailable() finally q.stop()
       val got = graft.streaming.CdcStream.readState(spark, state)

@@ -112,6 +112,14 @@ class TransferYamlSpec extends SparkSpec {
     }
   }
 
+  test("a merge block without primary keys fails at parse naming the key") {
+    for (keys <- Seq("", ", primary_keys: []", ", primary_keys: null")) {
+      val e = intercept[IllegalArgumentException](TransferYaml.fromString(
+        s"src: { kind: sample, rows: 1 }\ndst: { kind: merge, path: /x$keys }"))
+      assert(e.getMessage.contains("primary_keys"), s"${e.getMessage} <- $keys")
+    }
+  }
+
   test("mask_field config errors name the transformer and the key") {
     def maskYaml(body: String) =
       s"""type: SNAPSHOT_ONLY

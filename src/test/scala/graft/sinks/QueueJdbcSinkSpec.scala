@@ -65,7 +65,7 @@ class QueueJdbcSinkSpec extends SparkSpec {
   test("file-queue spool round-trips through the queue reader") {
     val dir = tempDir("graft_kq")
     KafkaSink.writeFileQueue(cdc((1L, "a", "insert", 1L), (2L, "b", "update", 2L)),
-      dir, "topicA", keyCols = Seq("id"))
+      dir, "topicA")
     val q = graft.sources.Readers.fileQueue(spark, s"$dir/topicA", "topicA")
     val vals = q.select("value").as[String].collect().toSeq.sorted
     assert(vals.size == 2)
@@ -82,7 +82,7 @@ class QueueJdbcSinkSpec extends SparkSpec {
     val q = stream.writeStream
       .option("checkpointLocation", s"$dir/ckpt")
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-        KafkaSink.appendFileQueue(b, dir, "mirror", Seq("id"))
+        KafkaSink.appendFileQueue(b, dir, "mirror")
       }.start()
     try {
       mem.addData((1L, "a", "insert", 1L))
@@ -108,7 +108,7 @@ class QueueJdbcSinkSpec extends SparkSpec {
       """src: { kind: parquet, path: /x }
         |dst: { kind: file_queue, dir: /q, topic: t }
         |""".stripMargin)
-    assert(f.sink == SinkConfig.FileQueue("/q", "t", "json", Nil))
+    assert(f.sink == SinkConfig.FileQueue("/q", "t", "json"))
     val j = TransferYaml.fromString(
       """src: { kind: parquet, path: /x }
         |dst: { kind: jdbc, url: "jdbc:derby:memory:db", table: t1 }

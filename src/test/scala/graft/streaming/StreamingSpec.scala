@@ -29,6 +29,16 @@ class StreamingSpec extends SparkSpec {
     assert(out == Seq((1L, "a2"), (3L, "c")))
   }
 
+  test("mergeBatch refuses an empty key list, naming the state dir") {
+    // with no key every row hashes to one bucket, and the merge would
+    // keep one row per bucket
+    val state = tmp() + "/nokey"
+    val e = intercept[IllegalArgumentException](CdcStream.mergeBatch(
+      batch((1L, "a", "insert", 0L), (2L, "b", "insert", 1L)), state, Nil))
+    assert(e.getMessage.contains(state), e.getMessage)
+    assert(!Files.exists(java.nio.file.Paths.get(state)))
+  }
+
   test("mergeBatch is idempotent under replay (exactly-once on restart)") {
     val state = tmp() + "/t2"
     val b = batch((1L, "x", "insert", 0L), (1L, "y", "update", 1L))
