@@ -3645,7 +3645,7 @@ object Queries {
       val snap = t(s, dir, "orders")
         .select(col("o_orderkey").as("k"), col("o_totalprice").as("val"))
       graft.streaming.CdcStream.mergeBatch(snap, state, Seq("k"),
-        numBuckets = 16)
+        numBuckets = Some(16))
       val changes = t(s, dir, "orders")
         .filter(col("o_orderkey") % 3 === 0 || col("o_orderkey") % 7 === 0)
         .select(col("o_orderkey").as("k"),

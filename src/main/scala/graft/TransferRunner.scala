@@ -93,14 +93,11 @@ object TransferRunner {
 
   /** Snapshot upload: `trcli activate/upload` for SNAPSHOT_ONLY
     * (reference: worker/tasks/load_snapshot.go:88 LoadSnapshot). Applies
-    * the transformer chain, routes quarantine rows, writes the sink. */
-  def runSnapshot(spark: SparkSession, t: Transfer, table: String = ""): Unit = {
-    val src = source(spark, t.source)
-    val chain = TransformerChain(t.transformers)
-    errorsPath(t).foreach(p =>
-      chain.errors(src, table).foreach(Sinks.parquet(_, p, Sinks.Disabled)))
-    write(chain(src, table), t.sink, t.cleanup)
-  }
+    * the transformer chain, writes the sink and routes quarantine rows,
+    * from one scan of the source ([[TransformerChain.routed]]). */
+  def runSnapshot(spark: SparkSession, t: Transfer, table: String = ""): Unit =
+    TransformerChain(t.transformers).routed(source(spark, t.source), errorsPath(t),
+      table)(write(_, t.sink, t.cleanup))
 
   private def errorsPath(t: Transfer): Option[String] = t.errorsOutput match {
     case ErrorsOutput.ToPath(p) => Some(p)

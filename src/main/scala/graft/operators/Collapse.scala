@@ -116,18 +116,16 @@ object Collapse {
   }
 
   /** Last-write-wins collapse for full-row events (the common
-    * snapshot-replay / upsert-merge case): keep the newest event per key.
-    * This is the fast path used by the streaming MERGE sink.
+    * snapshot-replay / upsert-merge case): keep the newest event per key,
+    * for input in any partitioning.
     *
     * Implemented as `max_by` AGGREGATION, not a row_number window: the
     * aggregate gets map-side partial combine, so a hot key (one PK
     * dominating a CDC burst) is reduced before the shuffle instead of
     * funneling every duplicate through one window task — the skew story
-    * at scale. No per-partition sort either. The combine does not hold
-    * inside the bucketed merge ([[graft.sinks.BucketedState.rewrite]]):
-    * there the input is already clustered by the write's one Exchange,
-    * so the whole aggregate runs after it, with nothing reduced before
-    * the shuffle.
+    * at scale. Input already clustered on the keys has nothing to reduce
+    * before a shuffle, and there the partial pass only copies a struct
+    * per row: use [[lastWriteWinsClustered]].
     *
     * The key columns come from the grouping, the rest from the newest
     * row: an aggregate that sorts its input (as `max_by` over a struct
@@ -141,6 +139,22 @@ object Collapse {
         case Some(k) => if (k == c) col(k) else col(k).as(c)
         case None => col("__r").getField(c).as(c)
       }): _*)
+  }
+
+  /** [[lastWriteWins]] for rows already clustered so that each group of
+    * `groupCols` sits in one partition (clustered on any of them, as
+    * [[graft.sinks.BucketedState.Layout]] clusters on the bucket), with
+    * the key columns among `groupCols`: one pass inside each
+    * partition, `row_number` over `groupCols` ordered by
+    * `(__lsn, __counter)` descending, keeping row 1. Spark plans it as one
+    * Sort and a `WindowGroupLimit` with no Exchange and no aggregate, and
+    * its `(groupCols, newest first)` order reaches what follows, so a
+    * write sorted by `groupCols` needs no sort of its own. */
+  def lastWriteWinsClustered(df: DataFrame, groupCols: Seq[String]): DataFrame = {
+    val newest = Window.partitionBy(groupCols.map(col): _*)
+      .orderBy(col(E.Lsn).desc, col(E.Counter).desc)
+    df.withColumn("__rn", row_number().over(newest))
+      .filter(col("__rn") === 1).drop("__rn")
   }
 
   /** Split PK-changing updates into delete(old)+insert(new) pairs

@@ -283,11 +283,12 @@ object Rollup {
     batchId >= 0 && marked.contains(batchId)
   }
 
-  /** The marker sidecar: staged beside the rewritten buckets and swapped
-    * in last. An unmarked fold (batchId = -1) moves the old marker aside
-    * and replaces it with nothing. */
-  private def marker(batchId: Long) =
-    Seq(Marker -> Some(batchId.toString).filter(_ => batchId >= 0))
+  /** The marker sidecar, whatever the fold's byte change: staged beside
+    * the rewritten buckets and swapped in last. An unmarked fold
+    * (batchId = -1) moves the old marker aside and replaces it with
+    * nothing. */
+  private def marker(batchId: Long): Long => Seq[(String, Option[String])] =
+    _ => Seq(Marker -> Some(batchId.toString).filter(_ => batchId >= 0))
 
   /** [[fold]] for HIGH-cardinality rollups (per-user, per-document):
     * the flat fold rewrites the whole group-cardinality-sized state
@@ -324,8 +325,9 @@ object Rollup {
     // types therefore follow the batch's metric types; a stream's batches
     // share one schema, so they stay those the first fold wrote
     if (!recoverFolded(spark, statePath, batchId))
-      BucketedState.rewrite(statePath, groupKeys, numBuckets, d,
-          reader = _.schema(d.schema), batch = batchId) { (existing, layout) =>
+      BucketedState.rewrite(statePath, groupKeys,
+          BucketedState.Buckets(numBuckets), d, reader = _.schema(d.schema),
+          batch = batchId) { (existing, layout) =>
         // with no touched bucket yet the delta alone makes their state
         // (negative counts raise)
         BucketedState.Rewrite(sumGroups(layout.cluster(existing.fold(d)(
@@ -357,9 +359,9 @@ object Rollup {
     if (!recoverFolded(spark, statePath, batchId))
       // the batch is the probe: foldWithExtrema reads it back from the
       // probe's cache instead of rescanning it
-      BucketedState.rewrite(statePath, groupKeys, numBuckets,
-          retractionBatch, reader = _.schema(emptyState.schema),
-          batch = batchId) { (existing, layout) =>
+      BucketedState.rewrite(statePath, groupKeys,
+          BucketedState.Buckets(numBuckets), retractionBatch,
+          reader = _.schema(emptyState.schema), batch = batchId) { (existing, layout) =>
         BucketedState.Rewrite(layout.cluster(foldWithExtrema(
           existing.getOrElse(emptyState), retractionBatch, base, groupKeys,
           metrics)), marker(batchId))

@@ -47,6 +47,29 @@ final case class TransformerChain(steps: Seq[Transformer]) {
     }
     errs.reduceOption(_ unionByName (_, allowMissingColumns = true))
   }
+
+  /** Hand the chained `df` to `use`, and append the rows the chain
+    * rejects to `errorsPath` as parquet (the reference's
+    * ErrorsOutput=sink, pkg/transformer/abstract.go:50-60). With a path,
+    * and only when the chain can reject rows, `df` is persisted once, so
+    * `use` and the quarantine split read one scan of its source; `use`
+    * runs first and builds the cache, and the quarantine rows are
+    * written only when there are any, so a clean batch writes no file.
+    * Otherwise `use` gets the chained frame with no cache and no extra
+    * job. */
+  def routed[A](df: DataFrame, errorsPath: Option[String], table: String = "")
+               (use: DataFrame => A): A =
+    errorsPath match {
+      case Some(path) if errors(df, table).isDefined =>
+        val raw = df.persist()
+        try {
+          val result = use(apply(raw, table))
+          errors(raw, table).filterNot(_.isEmpty)
+            .foreach(graft.sinks.Sinks.parquet(_, path, graft.sinks.Sinks.Disabled))
+          result
+        } finally raw.unpersist()
+      case _ => use(apply(df, table))
+    }
 }
 
 /** Include/exclude table filter (reference: pkg/abstract/includeable.go and

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.model.{CdcEnvelope => E}
 import graft.operators.{Collapse, TransformerChain}
-import graft.sinks.{BucketedState, Sinks, Swap}
+import graft.sinks.{BucketedState, Swap}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
@@ -46,25 +46,25 @@ object CdcStream {
       }
   }
 
-  /** Default bucket count for new state dirs. At warehouse scale this is
-    * the unit of rewrite I/O — size it so one bucket fits a rewrite job
-    * (e.g. 1024 buckets over 100 TB = ~100 GB per bucket). */
-  val DefaultBuckets = 32
-
-  /** State-dir metadata pinning the bucket count and column set so every
-    * batch agrees on the layout and bucket schemas stay homogeneous.
-    * `schema` is the TYPED union across drifts: with it, state
-    * reads pass an explicit schema instead of mergeSchema, skipping the
-    * per-batch footer-inference job over every affected bucket — at
-    * lake scale a mergeSchema read sweeps EVERY file footer of the
-    * affected buckets before the real read even starts, and at
+  /** State-dir metadata: the bucket layout every batch agrees on
+    * ([[BucketedState.Buckets]]: base count, level and split pointer),
+    * the data bytes of the buckets, and the column set, so bucket schemas
+    * stay homogeneous. `bytes` is kept from each batch's touched-bucket
+    * listings; an older meta has none (nor a level or split pointer, so
+    * its `numBuckets` is the base count at level 0), and its buckets are
+    * then listed once. `schema` is the TYPED union across drifts: with
+    * it, state reads pass an explicit schema instead of mergeSchema,
+    * skipping the per-batch footer-inference job over every affected
+    * bucket — at lake scale a mergeSchema read sweeps EVERY file footer
+    * of the affected buckets before the real read even starts, and at
     * streaming cadence that job recurs per micro-batch. Lagging buckets
     * (lazy DDL migration) read identically either way: the parquet
     * reader surfaces null for schema columns a file predates — the
     * exact semantics mergeSchema produced. Absent when it would not
     * cover every logical column, and on older metas: readers then fall
     * back to mergeSchema. */
-  private final case class StateMeta(numBuckets: Int, columns: Seq[String],
+  private final case class StateMeta(buckets: BucketedState.Buckets,
+      bytes: Option[Long], columns: Seq[String],
       schema: Option[org.apache.spark.sql.types.StructType] = None)
 
   private val MetaName = "_graft_meta.json"
@@ -79,8 +79,11 @@ object CdcStream {
       val in = fs.open(p)
       val raw = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
       finally in.close()
-      val nb = """"numBuckets"\s*:\s*(\d+)""".r.findFirstMatchIn(raw)
-        .map(_.group(1).toInt)
+      def num(name: String): Option[Long] = s""""$name"\\s*:\\s*(\\d+)""".r
+        .findFirstMatchIn(raw).map(_.group(1).toLong)
+      val buckets = num("n0").map(n0 => BucketedState.Buckets(n0.toInt,
+          num("level").getOrElse(0L).toInt, num("split").getOrElse(0L).toInt))
+        .orElse(num("numBuckets").map(n => BucketedState.Buckets(n.toInt)))
       val cols = """"columns"\s*:\s*\[(.*?)\]""".r.findFirstMatchIn(raw)
         .map(_.group(1).split(",").map(_.trim.stripPrefix("\"")
           .stripSuffix("\"")).filter(_.nonEmpty).toSeq)
@@ -95,7 +98,7 @@ object CdcStream {
               .asInstanceOf[org.apache.spark.sql.types.StructType]
           }.toOption
         }
-      nb.map(StateMeta(_, cols.getOrElse(Nil), schema))
+      buckets.map(StateMeta(_, num("bytes"), cols.getOrElse(Nil), schema))
     }
   }
 
@@ -107,7 +110,9 @@ object CdcStream {
       s""","schemaB64":"${java.util.Base64.getEncoder
         .encodeToString(s.json.getBytes("UTF-8"))}""""
     }.getOrElse("")
-    s"""{"numBuckets":${meta.numBuckets},"columns":[""" +
+    val b = meta.buckets
+    s"""{"numBuckets":${b.count},"n0":${b.n0},"level":${b.level},""" +
+      s""""split":${b.split},"bytes":${meta.bytes.getOrElse(0L)},"columns":[""" +
       meta.columns.map("\"" + _ + "\"").mkString(",") + s"]$schemaField}"
   }
 
@@ -133,7 +138,7 @@ object CdcStream {
 
   /** Point lookup: compute the key's bucket on the DRIVER
     * ([[BucketedState.bucketOfKey]], the twin of the layout's hash) and
-    * scan ONLY that bucket dir — I/O is state/numBuckets, and the
+    * scan ONLY that bucket dir — I/O is one bucket of the state, and the
     * PK-sorted files prune further via parquet min/max stats. Key values
     * must render like Spark's string cast (integral/string keys do).
     * Under lazy DDL migration the result carries the BUCKET's schema
@@ -146,9 +151,9 @@ object CdcStream {
     require(pks.length == key.length, "one value per key column")
     val fs = BucketedState.fsOf(spark, stateDir)
     BucketedState.requireSettled(fs, stateDir, Writer)
-    val n = readMeta(fs, stateDir).map(_.numBuckets).getOrElse(
+    val buckets = readMeta(fs, stateDir).map(_.buckets).getOrElse(
       throw new IllegalArgumentException(s"$stateDir is not a bucketed state"))
-    val dir = BucketedState.bucketDir(stateDir, BucketedState.bucketOfKey(key, n))
+    val dir = BucketedState.bucketDir(stateDir, BucketedState.bucketOfKey(key, buckets))
     // an absent bucket dir means no rows hash there: an empty result in
     // the state schema, not an error
     val df =
@@ -173,20 +178,35 @@ object CdcStream {
     * touched-bucket set (it also builds their cache); then ONE plan with
     * ONE Exchange, the layout's clustering of (the touched buckets
     * re-entered as older-than-everything inserts) ∪ (the row events) on
-    * the bucket, followed by ONE last-write-wins grouped by (bucket,
-    * pks) and the partitioned write. `max_by` over (__lsn, __counter) is
+    * the bucket, one write task per bucket while there are no more
+    * buckets than shuffle partitions, followed by ONE last-write-wins
+    * ([[Collapse.lastWriteWinsClustered]]: the newest row per (bucket,
+    * pks), one sort inside the clustered partitions) and the partitioned
+    * write, which reuses that sort. Keeping the newest event per key is
     * associative, so this equals collapsing the batch first and merging
     * the result; the bucket is a function of the pks, so grouping by it
-    * too changes no row, and the write reuses the aggregate's
-    * clustering and order. The rewritten buckets and the new meta then replace
-    * the old ones in one [[graft.sinks.Swap]] children swap, so a crash
-    * at any step leaves the pre-batch or the post-batch state, and the
-    * replayed batch converges because the merge itself is idempotent. At
-    * warehouse scale the same batch function lands on a Delta/Iceberg
-    * MERGE INTO — the last-write-wins rule, key discipline and
-    * bucket-pruned rewrite are identical (reference semantics:
+    * too changes no row. The rewritten buckets and the new meta then
+    * replace the old ones in one [[graft.sinks.Swap]] children swap, so
+    * a crash at any step leaves the pre-batch or the post-batch state,
+    * and the replayed batch converges because the merge itself is
+    * idempotent. At warehouse scale the same batch function lands on a
+    * Delta/Iceberg MERGE INTO — the last-write-wins rule, key discipline
+    * and bucket-pruned rewrite are identical (reference semantics:
     * pkg/sink_factory/sink_factory.go:100-133 middleware ordering,
     * Collapse before write change_item_collapse.go:48).
+    *
+    * Bucket count: the meta's layout, else `numBuckets`, else a new
+    * state gets one bucket per shuffle partition, or one per
+    * `spark.sql.files.maxPartitionBytes` of the plan's size estimate of
+    * what its first batch writes when that is more (one per shuffle
+    * partition when the estimate is unknown). The state then grows by
+    * linear hashing ([[BucketedState.Buckets]]): the meta keeps the
+    * buckets' data bytes, and once they pass `maxPartitionBytes` per
+    * bucket, a batch splits the bucket at the split pointer into two in
+    * its own children swap, with the meta moved last and no extra Spark
+    * job; a batch splits at most one bucket. Both settings are Spark's
+    * own, read from the session; the reference likewise sizes snapshot
+    * parts from table size (sharding_storage.go `DesiredTableSize`).
     *
     * Schema drift (DDL adding columns, change_item.go DDL kinds) migrates
     * LAZILY, per bucket: a drifting batch rewrites only the buckets its
@@ -210,7 +230,7 @@ object CdcStream {
     * migrated whole on first contact (its layout, not just its
     * schema, changes). */
   def mergeBatch(batch0: DataFrame, stateDir: String, pks: Seq[String],
-                 numBuckets: Int = DefaultBuckets): Unit = {
+                 numBuckets: Option[Int] = None): Unit = {
     // with no key, every row would hash to one bucket and the
     // last-write-wins would keep one row per bucket
     require(pks.nonEmpty, s"mergeBatch into $stateDir needs at least one primary key")
@@ -235,14 +255,20 @@ object CdcStream {
     // (or finishes a committed teardown) before anything is read
     BucketedState.recover(spark, stateDir)
     val meta = readMeta(fs, stateDir)
-    val n = meta.map(_.numBuckets).getOrElse(numBuckets)
 
     // legacy flat layout: state exists but predates the bucketed meta —
     // the only full migration left (the LAYOUT changes, not just the
-    // schema; DDL drift migrates lazily per touched bucket instead)
-    val legacy = meta.isEmpty && fs.exists(root) &&
-      fs.listStatus(root).exists(s => s.isFile &&
-        s.getPath.getName.startsWith("part-"))
+    // schema; DDL drift migrates lazily per touched bucket instead).
+    // A legacy dir is read whole, and its flat files are swapped out
+    val flat =
+      if (meta.isEmpty && fs.exists(root) && fs.listStatus(root).exists(s =>
+          s.isFile && s.getPath.getName.startsWith("part-")))
+        Some(spark.read.parquet(stateDir))
+      else None
+    val target = spark.sessionState.conf.filesMaxPartitionBytes
+    val buckets = meta.map(_.buckets).orElse(numBuckets.map(BucketedState.Buckets(_)))
+      .getOrElse(BucketedState.Buckets(initialBuckets(batch0 +: flat.toSeq, target)))
+    val bytes = meta.flatMap(_.bytes).getOrElse(BucketedState.sizeOf(fs, stateDir))
 
     // the batch's raw row events, projected to data columns + ordering:
     // the probe whose keys name the touched buckets AND the new side of
@@ -250,10 +276,8 @@ object CdcStream {
     val rows = batch.filter(E.isRowEvent(col(E.Kind)))
     val events = rows.select(
       (E.dataCols(rows) ++ Seq(E.Kind, E.Lsn, E.Counter)).map(col): _*)
-    // a legacy dir is read whole, and its flat files are swapped out
-    BucketedState.rewrite(stateDir, pks, n, events, stateReader(meta),
-        flat = if (legacy) Some(spark.read.parquet(stateDir)) else None) {
-        (existing, layout) =>
+    BucketedState.rewrite(stateDir, pks, buckets, events, stateReader(meta),
+        flat = flat, grow = bytes / buckets.count > target) { (existing, layout) =>
       // current state re-enters as older-than-everything inserts.
       // unionByName with allowMissingColumns absorbs mid-stream schema
       // drift (DDL adding/dropping columns): new columns backfill null
@@ -261,7 +285,7 @@ object CdcStream {
       // Delta-style mergeSchema semantics (SURVEY §1.4 DDL mapping).
       // The union is clustered once, by the layout; the bucket is a
       // function of the pks, so grouping by it too keeps one row per key
-      val merged = Collapse.lastWriteWins(layout.cluster(existing.fold(events)(cur =>
+      val merged = Collapse.lastWriteWinsClustered(layout.cluster(existing.fold(events)(cur =>
         cur.withColumn(E.Kind, lit(E.Insert))
           .withColumn(E.Lsn, lit(Long.MinValue))
           .withColumn(E.Counter, lit(0))
@@ -290,8 +314,25 @@ object CdcStream {
       // would hide that column from every later read — stay on mergeSchema
       val typed = Some(unionSchema)
         .filter(u => logicalCols.forall(u.fieldNames.toSet))
-      BucketedState.Rewrite(out, Seq(MetaName -> Some(metaJson(StateMeta(n, logicalCols, typed)))))
+      // a drift batch also replaces the root's schema summary, so a plain
+      // parquet read of the root infers every column, not one bucket's
+      BucketedState.Rewrite(out, added => Seq(MetaName -> Some(metaJson(
+        StateMeta(layout.buckets, Some(bytes + added), logicalCols, typed)))),
+        summary = Some(unionSchema).filter(_ => meta.exists(_.columns != logicalCols)))
     }
+  }
+
+  /** The base bucket count of a new state: one per shuffle partition, so
+    * each write task gets one bucket, or one per `target` bytes of the
+    * plans' size estimates when that is more. A plan Spark cannot bound
+    * (its estimate is the default size) counts as unknown. */
+  private def initialBuckets(first: Seq[DataFrame], target: Long): Int = {
+    val conf = first.head.sparkSession.sessionState.conf
+    val sizes = first.map(_.queryExecution.optimizedPlan.stats.sizeInBytes)
+    val perTarget =
+      if (sizes.exists(_ >= conf.defaultSizeInBytes)) BigInt(0)
+      else (sizes.sum + target - 1) / target
+    math.max(conf.numShufflePartitions, perTarget.min(Int.MaxValue).toInt)
   }
 
   /** The state directory of table `table` under `baseDir`: table names
@@ -342,13 +383,12 @@ object CdcStream {
     * It is the one streaming writer for a Merge target.
     *
     * `chain` runs per micro-batch, on the batch the stream delivers, so it
-    * may hold batch-only operators. With `errorsPath` set, and only when
-    * the chain can reject rows, the batch is persisted once: its
-    * quarantine rows are appended to `errorsPath` as parquet (the
-    * reference's ErrorsOutput=sink, pkg/transformer/abstract.go:50-60),
-    * the transformed rows are merged, and the cache is dropped, so the
-    * source is scanned once per batch. Otherwise the batch is merged as it
-    * comes, with no cache and no extra job. `bufferer` sets the trigger;
+    * may hold batch-only operators. With `errorsPath` set, the chain's
+    * quarantine rows go there ([[TransformerChain.routed]]): a batch the
+    * chain can reject rows from is persisted once, so its source is
+    * scanned once, and a batch with no quarantine row writes no file.
+    * Otherwise the batch is merged as it comes, with no cache and no
+    * extra job. `bufferer` sets the trigger;
     * its row and byte limits are source options
     * ([[Bufferer.sourceOptions]]). */
   def replicate(stream: DataFrame, stateDir: String, checkpointDir: String,
@@ -360,15 +400,7 @@ object CdcStream {
       .option("checkpointLocation", checkpointDir)
       .trigger(bufferer.trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        errorsPath match {
-          case Some(path) if chain.errors(batch).isDefined =>
-            val raw = batch.persist()
-            try {
-              chain.errors(raw).foreach(Sinks.parquet(_, path, Sinks.Disabled))
-              mergeBatch(chain(raw), stateDir, pks)
-            } finally raw.unpersist()
-          case _ => mergeBatch(chain(batch), stateDir, pks)
-        }
+        chain.routed(batch, errorsPath)(mergeBatch(_, stateDir, pks))
       }
 
   /** Per-key LSN monotonicity guard: drops events at or below the

@@ -23,6 +23,13 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     tempDirs.last.toString
   }
 
+  /** `body` with the session conf `key` set to `value`, restored after. */
+  def withConf[A](key: String, value: String)(body: => A): A = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   override def afterAll(): Unit =
     try tempDirs.synchronized(tempDirs.foreach(SparkSpec.deleteTree))
     finally super.afterAll()

@@ -29,11 +29,11 @@ class TransferRunnerSpec extends SparkSpec {
     graft.streaming.CdcStream.readState(spark, dir)
       .select("id", "v").as[(Long, String)].collect().toSeq.sortBy(_._1)
 
-  /** The stages `body` runs that scan a text file. A stage counts when it
-    * updates the row counter of a text scan node of some SQL execution's
-    * plan: a stage that reads a cache built from the scan names the node
-    * in its plan but never runs it. */
-  private def textScanStages(body: => Unit): Int = {
+  /** The stages `body` runs that scan a `format` file ("text",
+    * "parquet"). A stage counts when it updates the row counter of such a
+    * scan node of some SQL execution's plan: a stage that reads a cache
+    * built from the scan names the node in its plan but never runs it. */
+  private def scanStages(format: String)(body: => Unit): Int = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
       SparkListenerStageCompleted}
     import org.apache.spark.sql.execution.SparkPlanInfo
@@ -42,7 +42,7 @@ class TransferRunnerSpec extends SparkSpec {
     val scanCounters = scala.collection.mutable.Set.empty[Long]
     val stageCounters = scala.collection.mutable.ArrayBuffer.empty[Set[Long]]
     def scans(p: SparkPlanInfo): Unit = {
-      if (p.nodeName.toLowerCase.startsWith("scan text"))
+      if (p.nodeName.toLowerCase.startsWith(s"scan $format"))
         scanCounters ++= p.metrics.filter(_.name == "number of output rows")
           .map(_.accumulatorId)
       p.children.foreach(scans)
@@ -90,6 +90,22 @@ class TransferRunnerSpec extends SparkSpec {
       errorsOutput = ErrorsOutput.ToPath(errDir))
     TransferRunner.runSnapshot(spark, t)
     assert(spark.read.parquet(errDir).select("id").as[Long].collect().toSeq == Seq(2L))
+  }
+
+  test("a snapshot with a dead-letter path scans its parquet source once") {
+    val dir = tmp()
+    Seq("""{"id": 1, "v": "a"}""", "{bad", """{"id": 2, "v": "b"}""")
+      .toDF("value").write.parquet(dir + "/src")
+    val t = Transfer(TransferType.SnapshotOnly,
+      SourceConfig.Parquet(dir + "/src"), SinkConfig.Parquet(dir + "/dst"),
+      transformers = Seq(T.JsonParser("value", idV)),
+      errorsOutput = ErrorsOutput.ToPath(dir + "/errs"))
+    // the error split and the sink write share one scan of the source
+    assert(scanStages("parquet")(TransferRunner.runSnapshot(spark, t)) == 1)
+    assert(spark.read.parquet(dir + "/dst").select("id", "v").as[(Long, String)]
+      .collect().toSeq.sortBy(_._1) == Seq((1L, "a"), (2L, "b")))
+    assert(spark.read.parquet(dir + "/errs").select("value").as[String]
+      .collect().toSeq == Seq("{bad"))
   }
 
   test("sample source transfer and merge sink") {
@@ -176,7 +192,7 @@ class TransferRunnerSpec extends SparkSpec {
       errorsOutput = ErrorsOutput.ToPath(dir + "/errs"),
       checkpointDir = Some(dir + "/ckpt"))
     // the error split and the merge share one scan of the batch's file
-    val scans = textScanStages {
+    val scans = scanStages("text") {
       val q = TransferRunner.runReplication(spark, t)
       try q.processAllAvailable() finally q.stop()
     }
@@ -185,6 +201,32 @@ class TransferRunnerSpec extends SparkSpec {
     val errs = spark.read.parquet(dir + "/errs")
       .select("value").as[String].collect().toSeq
     assert(errs == Seq("{bad"))
+  }
+
+  test("streamed replication writes no dead-letter file for a batch " +
+    "without quarantine rows") {
+    val dir = tmp()
+    val in = dir + "/in"
+    val t = Transfer(
+      TransferType.IncrementOnly,
+      SourceConfig.TextStream(in),
+      SinkConfig.Merge(dir + "/state", Seq("id")),
+      transformers = Seq(T.JsonParser("value", idV)),
+      errorsOutput = ErrorsOutput.ToPath(dir + "/errs"),
+      checkpointDir = Some(dir + "/ckpt"))
+    spool(in, "b1.jsonl", """{"id": 1, "v": "a"}""", "{bad")
+    val q = TransferRunner.runReplication(spark, t)
+    try {
+      q.processAllAvailable()
+      spool(in, "b2.jsonl", """{"id": 2, "v": "b"}""")
+      q.processAllAvailable()
+      spool(in, "b3.jsonl", """{"id": 1, "v": "a3"}""")
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(state(dir + "/state") == Seq((1L, "a3"), (2L, "b")))
+    val parts = new java.io.File(dir + "/errs").listFiles()
+      .map(_.getName).filter(_.startsWith("part-"))
+    assert(parts.length == 1, parts.toSeq)
   }
 
   test("snapshot-and-increment routes the snapshot's and the stream's " +

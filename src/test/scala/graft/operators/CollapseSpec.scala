@@ -324,6 +324,21 @@ class CollapseSpec extends SparkSpec {
     assert(!plan.contains("Window"), s"window in plan:\n$plan")
   }
 
+  test("lastWriteWinsClustered equals lastWriteWins on clustered input, " +
+    "with no Exchange and no aggregate of its own") {
+    val rnd = new scala.util.Random(41)
+    val df = (1 to 400).map(i => (rnd.nextInt(60).toLong, s"v$i",
+        if (rnd.nextBoolean()) "update" else "insert", rnd.nextInt(50).toLong, i))
+      .toDF("id", "v", E.Kind, E.Lsn, E.Counter)
+    val clustered = df.repartition(4, col("id"))
+    val out = Collapse.lastWriteWinsClustered(clustered, Seq("id"))
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.select("id", "v", E.Lsn, E.Counter).as[(Long, String, Long, Int)].collect().toSet
+    assert(rows(out) == rows(Collapse.lastWriteWins(df, Seq("id"))))
+    val plan = out.queryExecution.executedPlan.toString
+    assert("Exchange".r.findAllIn(plan).size == 1 && !plan.contains("Aggregate"), plan)
+  }
+
   test("tagTransactions ranks tx ids without a single-partition window") {
     val df = Seq((1L, "t2"), (2L, "t1"), (3L, "t2"), (4L, "t3"))
       .toDF("id", E.TxId)

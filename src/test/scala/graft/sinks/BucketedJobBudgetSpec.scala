@@ -20,9 +20,11 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * counting, and the state already holds a batch, so the count is what
   * each later micro-batch pays ([[JobBudget]]).
   *
-  * The CDC merge, 3: the touched set (one pass over the batch's row
-  * events, which also builds their cache), the shuffle of the one
-  * Exchange, and the write. The rollup fold, 5: its probe is the batch's
+  * The CDC merge, 3, also when the batch splits a bucket: the touched
+  * set (one pass over the batch's row events, which also builds their
+  * cache), the shuffle of the one Exchange, and the write. The write
+  * plan keeps the newest row per key in one Sort and a
+  * `WindowGroupLimit` after that Exchange, with no aggregate. The rollup fold, 5: its probe is the batch's
   * delta, so the delta's aggregate shuffle and, under adaptive execution,
   * the build of its cache run as jobs of their own ahead of the touched
   * set. Both reads of a rollup state pass its schema, so no footer is
@@ -95,10 +97,45 @@ class BucketedJobBudgetSpec extends SparkSpec {
 
   test("CDC merge batch job budget: post-bootstrap 3") {
     val state = dir("mergejobs")
-    val jobs = budget(CdcStream.mergeBatch(snapshot, state, Seq("id"), numBuckets = 8)) {
+    val jobs = budget(CdcStream.mergeBatch(snapshot, state, Seq("id"), numBuckets = Some(8))) {
       CdcStream.mergeBatch(events, state, Seq("id"))
     }
     assert(jobs.size == 3, JobBudget.breakdown(jobs))
+  }
+
+  /** `body` with a per-bucket size target every bucket of a test state
+    * passes (`spark.sql.files.maxPartitionBytes`), so a merge batch
+    * splits one bucket. */
+  private def splitting[A](body: => A): A =
+    withConf("spark.sql.files.maxPartitionBytes", "64")(body)
+
+  private def bucketCount(state: String): Int =
+    new java.io.File(state).listFiles().count(_.getName.startsWith(BucketedState.BucketCol))
+
+  test("CDC merge batch that splits a bucket: still 3 jobs") {
+    val state = dir("splitjobs")
+    val jobs = budget(CdcStream.mergeBatch(snapshot, state, Seq("id"), numBuckets = Some(8))) {
+      splitting(CdcStream.mergeBatch(events, state, Seq("id")))
+    }
+    assert(bucketCount(state) == 9)
+    assert(jobs.size == 3, JobBudget.breakdown(jobs))
+  }
+
+  test("the CDC merge's write plan: one Exchange, one Sort, no SortAggregate, " +
+    "with and without a split") {
+    for (split <- Seq(false, true)) {
+      val merge = dir(s"mergesort$split")
+      CdcStream.mergeBatch(snapshot, merge, Seq("id"), numBuckets = Some(8))
+      val plans = writePlans(
+        if (split) splitting(CdcStream.mergeBatch(events, merge, Seq("id")))
+        else CdcStream.mergeBatch(events, merge, Seq("id")))
+      assert(plans.size == 1, s"split=$split: ${plans.size} writes")
+      val names = nodes(plans.head).map(_.nodeName)
+      assert(exchanges(plans.head) == 1 && names.count(_ == "Sort") == 1 &&
+        names.contains("WindowGroupLimit") && !names.contains("SortAggregate"),
+        s"split=$split:\n${plans.head}")
+      assert(bucketCount(merge) == (if (split) 9 else 8))
+    }
   }
 
   test("bucketed rollup fold job budget: post-bootstrap 5") {
@@ -111,7 +148,7 @@ class BucketedJobBudgetSpec extends SparkSpec {
 
   test("one Exchange in the write plan of a CDC merge batch and a rollup fold") {
     val merge = dir("mergeplan")
-    CdcStream.mergeBatch(snapshot, merge, Seq("id"), numBuckets = 8)
+    CdcStream.mergeBatch(snapshot, merge, Seq("id"), numBuckets = Some(8))
     val mergeWrites = writePlans(CdcStream.mergeBatch(events, merge, Seq("id")))
     val fst = dir("foldplan")
     fold(fst, changes(0, 400, E.Insert), 0L)

@@ -266,14 +266,22 @@ class SwapSpec extends graft.SparkSpec {
 
   // ---------------- a CDC merge batch, end to end ----------------
 
-  test("a CDC merge batch replayed after a crash at every swap step converges") {
+  /** A CDC merge batch into a 4-bucket state, crashed at every swap step
+    * and replayed; with `split`, the session's per-bucket target is just
+    * below the pre-batch state's bytes per bucket, so the batch also
+    * splits bucket 0 into buckets 0 and 4, and a replay after the split
+    * committed (5 buckets, under the target) splits none. The split state
+    * holds enough keys that rows, not each file's fixed overhead, make
+    * its bytes. */
+  private def crashReplay(split: Boolean): Unit = {
     val spark = graft.SparkSpec.session
     import spark.implicits._
     import graft.model.{CdcEnvelope => E}
     import graft.streaming.CdcStream
     spark.sparkContext.hadoopConfiguration.set("fs.crashy.impl", classOf[CrashyFs].getName)
     val expected = mutable.Map[Long, String]()
-    (0L until 80L).foreach(k => expected(k) = s"v$k")
+    val keys = if (split) 4000L else 80L
+    (0L until keys).foreach(k => expected(k) = s"v$k")
     // updates, deletes, new keys and repeated keys, over all 4 buckets
     val events = (1 to 60).map { i =>
       val k = (i * 7 % 100).toLong
@@ -284,8 +292,8 @@ class SwapSpec extends graft.SparkSpec {
     }
     val batch = events.toDF("id", "v", E.Kind, E.Lsn).withColumn(E.Counter, org.apache.spark.sql.functions.lit(0))
     val pre = newDir()
-    CdcStream.mergeBatch(spark.range(0, 80).selectExpr("id", "concat('v', id) AS v"),
-      new File(pre, "state").toString, Seq("id"), numBuckets = 4)
+    CdcStream.mergeBatch(spark.range(0, keys).selectExpr("id", "concat('v', id) AS v"),
+      new File(pre, "state").toString, Seq("id"), numBuckets = Some(4))
     /** A copy of the pre-batch state, under the crashy scheme. */
     def fresh(): (File, String) = {
       val d = newDir()
@@ -294,22 +302,43 @@ class SwapSpec extends graft.SparkSpec {
     }
     def state(root: String) = CdcStream.readState(spark, root).select("id", "v")
       .as[(Long, String)].collect().toMap
-    val (_, ref) = fresh()
-    val steps = CrashyFs.run(ref, Int.MaxValue)(CdcStream.mergeBatch(batch, ref, Seq("id")))
-    assert(state(ref) == expected.toMap)
-    assert(steps.size > 10 && steps.exists(_.endsWith("_graft_done")), steps.mkString("\n"))
-    for (k <- 1 to steps.size) {
-      val (d, root) = fresh()
-      val where = s"crash at step $k (${steps(k - 1)})"
-      val err = intercept[Throwable](
-        CrashyFs.run(root, k)(CdcStream.mergeBatch(batch, root, Seq("id"))))
-      assert(Iterator.iterate(err)(_.getCause).takeWhile(_ != null)
-        .exists(_.isInstanceOf[Crash]), s"$where: $err")
-      // the batch never reached the checkpoint, so it replays
-      CdcStream.mergeBatch(batch, root, Seq("id"))
-      assert(state(root) == expected.toMap, s"$where: replay diverged")
-      assert(!new File(d, "state.bak").exists() && !new File(d, "state.tmp").exists(), where)
+    def buckets(d: File) = new File(d, "state").listFiles().map(_.getName)
+      .filter(_.startsWith("__bucket=")).toSet
+    val want = (0 until (if (split) 5 else 4)).map(b => s"__bucket=$b").toSet
+    // with a split: just below the pre-batch bytes per bucket
+    val target = if (!split) spark.conf.get("spark.sql.files.maxPartitionBytes")
+      else (new File(pre, "state").listFiles().filter(_.getName.startsWith("__bucket="))
+        .flatMap(_.listFiles()).filterNot(_.getName.startsWith(".")).map(_.length).sum / 4 - 1)
+        .toString
+    withConf("spark.sql.files.maxPartitionBytes", target) {
+      val (refDir, ref) = fresh()
+      val steps = CrashyFs.run(ref, Int.MaxValue)(CdcStream.mergeBatch(batch, ref, Seq("id")))
+      assert(state(ref) == expected.toMap)
+      assert(buckets(refDir) == want)
+      assert(steps.size > 10 && steps.exists(_.endsWith("_graft_done")), steps.mkString("\n"))
+      for (k <- 1 to steps.size) {
+        val (d, root) = fresh()
+        val where = s"crash at step $k (${steps(k - 1)})"
+        val err = intercept[Throwable](
+          CrashyFs.run(root, k)(CdcStream.mergeBatch(batch, root, Seq("id"))))
+        assert(Iterator.iterate(err)(_.getCause).takeWhile(_ != null)
+          .exists(_.isInstanceOf[Crash]), s"$where: $err")
+        // the batch never reached the checkpoint, so it replays
+        CdcStream.mergeBatch(batch, root, Seq("id"))
+        assert(state(root) == expected.toMap, s"$where: replay diverged")
+        assert(buckets(d) == want, s"$where: ${buckets(d)}")
+        assert(!new File(d, "state.bak").exists() && !new File(d, "state.tmp").exists(), where)
+      }
     }
+  }
+
+  test("a CDC merge batch replayed after a crash at every swap step converges") {
+    crashReplay(split = false)
+  }
+
+  test("a CDC merge batch that splits a bucket, replayed after a crash at " +
+    "every swap step, converges") {
+    crashReplay(split = true)
   }
 
   // ---------------- small file ----------------

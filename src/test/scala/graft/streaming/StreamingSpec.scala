@@ -3,6 +3,7 @@ package graft.streaming
 import graft.SparkSpec
 import graft.model.{CdcEnvelope => E}
 import graft.sinks.BucketedState
+import graft.sinks.BucketedState.Buckets
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import java.nio.file.Files
@@ -52,10 +53,10 @@ class StreamingSpec extends SparkSpec {
 
   test("mergeBatch rewrites only buckets containing batch keys") {
     val state = tmp() + "/tb"
-    // 1000-key snapshot spread over all buckets
+    // 1000-key snapshot spread over all 32 buckets
     val snap = spark.range(0, 1000)
       .select(col("id"), concat(lit("v"), col("id")).as("v"))
-    CdcStream.mergeBatch(snap, state, Seq("id"))
+    CdcStream.mergeBatch(snap, state, Seq("id"), numBuckets = Some(32))
     def listing(): Map[String, Set[(String, Long, Long)]] = {
       val root = java.nio.file.Paths.get(state)
       import scala.jdk.CollectionConverters._
@@ -105,7 +106,7 @@ class StreamingSpec extends SparkSpec {
           case (k, v, _, _) => table(k) = v
         }
         CdcStream.mergeBatch(batch(events: _*), state, Seq("id"),
-          numBuckets = 8)
+          numBuckets = Some(8))
       }
       val got = CdcStream.readState(spark, state)
         .select("id", "v").as[(Long, String)].collect().toMap
@@ -117,7 +118,7 @@ class StreamingSpec extends SparkSpec {
     val state = tmp() + "/tl"
     val snap = spark.range(0, 500)
       .select(col("id"), concat(lit("v"), col("id")).as("v"))
-    CdcStream.mergeBatch(snap, state, Seq("id"), numBuckets = 16)
+    CdcStream.mergeBatch(snap, state, Seq("id"), numBuckets = Some(16))
     val hit = CdcStream.lookup(spark, state, Seq("id"), Seq(42L))
     assert(hit.select("v").as[String].collect().toSeq == Seq("v42"))
     // the plan touches exactly one bucket dir's files
@@ -126,7 +127,7 @@ class StreamingSpec extends SparkSpec {
     assert(dirs.size == 1, s"lookup scanned $dirs")
     // driver-side bucket matches the layout's bucket expression
     val expected = spark.range(42, 43).select(
-      BucketedState.bucketOf(Seq("id"), 16)).first().getInt(0)
+      BucketedState.bucketOf(Seq("id"), Buckets(16))).first().getInt(0)
     assert(dirs.head == s"${BucketedState.BucketCol}=$expected")
   }
 
@@ -135,7 +136,7 @@ class StreamingSpec extends SparkSpec {
     val snap = spark.range(0, 100).select(
       col("id"), (col("id") % 7).as("k2"),
       concat(lit("v"), col("id")).as("v"))
-    CdcStream.mergeBatch(snap, state, Seq("id", "k2"), numBuckets = 8)
+    CdcStream.mergeBatch(snap, state, Seq("id", "k2"), numBuckets = Some(8))
     val hit = CdcStream.lookup(spark, state, Seq("id", "k2"), Seq(13L, 6L))
     assert(hit.select("v").as[String].collect().toSeq == Seq("v13"))
     // key rendering ambiguity check: ("1","23") must not alias ("12","3")
@@ -147,7 +148,7 @@ class StreamingSpec extends SparkSpec {
     val state = tmp() + "/tc"
     val snap = spark.range(0, 200)
       .select(col("id"), concat(lit("v"), col("id")).as("v"))
-    CdcStream.mergeBatch(snap, state, Seq("id"), numBuckets = 8)
+    CdcStream.mergeBatch(snap, state, Seq("id"), numBuckets = Some(8))
     // simulate a swap that died between backup and move-in: one live
     // bucket sits in .bak, missing from the state dir
     val root = java.nio.file.Paths.get(state)
@@ -190,7 +191,8 @@ class StreamingSpec extends SparkSpec {
     val snap = spark.range(0, 200)
       .select(col("id"), concat(lit("v"), col("id")).as("v"))
     val n = 8
-    val key5 = s"${BucketedState.BucketCol}=${BucketedState.bucketOfKey(Seq(5L), n)}"
+    val key5 =
+      s"${BucketedState.BucketCol}=${BucketedState.bucketOfKey(Seq(5L), Buckets(n))}"
     // the children swap moves the batch's buckets, then the meta, into
     // .bak before it moves the staged ones in. Crash after the meta
     // moved (meta gone), and crash while the old meta is still live
@@ -200,7 +202,7 @@ class StreamingSpec extends SparkSpec {
         "meta live" -> (bs => bs.filter(_.getFileName.toString == key5) ++
           bs.find(_.getFileName.toString != key5)))) {
       val state = tmp() + "/th"
-      CdcStream.mergeBatch(snap, state, Seq("id"), numBuckets = n)
+      CdcStream.mergeBatch(snap, state, Seq("id"), numBuckets = Some(n))
       crash(state)(moved)
       refused(state, "mergeBatch")(
         s"$label readState" -> (() => CdcStream.readState(spark, state)),
@@ -276,7 +278,7 @@ class StreamingSpec extends SparkSpec {
     // is read whole, and it goes through the same clustered merge
     CdcStream.mergeBatch(events(1, drift = false).map(e => (e._1, e._2, e._4, e._5))
       .toDF("id", "v", E.Kind, E.Lsn).withColumn(E.Counter, lit(0)),
-      state, Seq("id"), numBuckets = 8)
+      state, Seq("id"), numBuckets = Some(8))
     assert(!new java.io.File(state).listFiles().exists(_.getName.startsWith("part-")))
     check("legacy migration")
     // DDL drift: a column the state has never seen, on some keys only
@@ -319,7 +321,7 @@ class StreamingSpec extends SparkSpec {
     val snap = Seq((Option(1L), "a"), (Option(2L), "b"),
       (None: Option[Long], "nullkey"))
       .toDF("id", "v")
-    CdcStream.mergeBatch(snap, state, Seq("id"), numBuckets = 16)
+    CdcStream.mergeBatch(snap, state, Seq("id"), numBuckets = Some(16))
     assert(CdcStream.readState(spark, state).count() == 3)
     // the null-keyed row is findable: lookup probes the bucket the row
     // actually landed in (concat_ws would have dropped the null)
@@ -332,10 +334,10 @@ class StreamingSpec extends SparkSpec {
   test("mergeBatch pins numBuckets from the state meta across batches") {
     val state = tmp() + "/tm"
     CdcStream.mergeBatch(batch((1L, "a", "insert", 0L)), state, Seq("id"),
-      numBuckets = 4)
+      numBuckets = Some(4))
     // later caller passes a different numBuckets: the meta wins
     CdcStream.mergeBatch(batch((2L, "b", "insert", 1L)), state, Seq("id"),
-      numBuckets = 64)
+      numBuckets = Some(64))
     val dirs = new java.io.File(state).listFiles()
       .filter(_.getName.startsWith(BucketedState.BucketCol))
       .map(_.getName).toSeq
@@ -366,9 +368,9 @@ class StreamingSpec extends SparkSpec {
     CdcStream.mergeBatch(
       spark.range(0, 100)
         .select(col("id"), concat(lit("v"), col("id")).as("v")),
-      state, Seq("id"), numBuckets = n)
+      state, Seq("id"), numBuckets = Some(n))
     def bucket(id: Long): Int = spark.range(id, id + 1)
-      .select(BucketedState.bucketOf(Seq("id"), n)).first().getInt(0)
+      .select(BucketedState.bucketOf(Seq("id"), Buckets(n))).first().getInt(0)
     // drift column w arrives on key 5 only, so only its bucket holds it
     CdcStream.mergeBatch(Seq((5L, "v5", 55L)).toDF("id", "v", "w")
       .withColumn(E.Kind, lit("update")).withColumn(E.Lsn, lit(1L))
@@ -392,11 +394,11 @@ class StreamingSpec extends SparkSpec {
   test("DDL drift mid-stream migrates lazily: only touched buckets " +
     "rewritten, untouched bucket files byte-identical") {
     val state = tmp() + "/tl"
-    // 1000-key snapshot spread over all buckets
+    // 1000-key snapshot spread over all 32 buckets
     CdcStream.mergeBatch(
       spark.range(0, 1000)
         .select(col("id"), concat(lit("v"), col("id")).as("v")),
-      state, Seq("id"))
+      state, Seq("id"), numBuckets = Some(32))
     def listing(): Map[String, Set[(String, Long, Long)]] = {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.list(java.nio.file.Paths.get(state))
@@ -443,6 +445,137 @@ class StreamingSpec extends SparkSpec {
     assert(out2.filter(col("id") === 700)
       .select("v").as[String].head() == "v700b")
     assert(out2.columns.contains("extra"))
+  }
+
+  /** Each bucket dir of `state` with its files' (name, size, mtime). */
+  private def bucketListing(state: String): Map[String, Set[(String, Long, Long)]] = {
+    import scala.jdk.CollectionConverters._
+    val dirs = Files.list(java.nio.file.Paths.get(state))
+    try dirs.iterator().asScala.toList
+      .filter(_.getFileName.toString.startsWith(BucketedState.BucketCol))
+      .map { b =>
+        val files = Files.list(b)
+        try b.getFileName.toString -> files.iterator().asScala.map(f =>
+          (f.getFileName.toString, Files.size(f),
+            Files.getLastModifiedTime(f).toMillis)).toSet
+        finally files.close()
+      }.toMap
+    finally dirs.close()
+  }
+
+  private def bucketIds(state: String): Set[Int] =
+    bucketListing(state).keySet.map(_.stripPrefix(BucketedState.BucketCol + "=").toInt)
+
+  /** `body` with `spark.sql.files.maxPartitionBytes` at `bytes`, the
+    * per-bucket size past which a state splits. */
+  private def withMaxPartitionBytes[A](bytes: Long)(body: => A): A =
+    withConf("spark.sql.files.maxPartitionBytes", bytes.toString)(body)
+
+  test("a new state gets one bucket per shuffle partition, or one per " +
+    "maxPartitionBytes of its first batch when that is more") {
+    val snap = spark.range(0, 1000)
+      .select(col("id"), concat(lit("v"), col("id")).as("v"))
+    val small = tmp() + "/tn"
+    CdcStream.mergeBatch(snap, small, Seq("id"))
+    assert(bucketIds(small) == (0 until spark.conf.get("spark.sql.shuffle.partitions").toInt).toSet)
+    val estimate = snap.queryExecution.optimizedPlan.stats.sizeInBytes.toLong
+    val target = estimate / 10 + 1
+    val big = tmp() + "/tnb"
+    withMaxPartitionBytes(target)(CdcStream.mergeBatch(snap, big, Seq("id")))
+    assert(bucketIds(big) == (0 until ((estimate + target - 1) / target).toInt).toSet)
+    assert(CdcStream.readState(spark, big).count() == 1000)
+  }
+
+  test("a state grown by linear-hash splits equals the naive " +
+    "last-write-wins after every batch, and every lookup hits") {
+    val state = tmp() + "/tsplit"
+    val table = scala.collection.mutable.Map[Long, String]()
+    (0L until 200L).foreach(k => table(k) = s"v$k")
+    CdcStream.mergeBatch(spark.range(0, 200)
+      .select(col("id"), concat(lit("v"), col("id")).as("v")),
+      state, Seq("id"), numBuckets = Some(2))
+    assert(bucketIds(state) == Set(0, 1))
+    val rnd = new scala.util.Random(20261019)
+    var lsn = 0L
+    // a per-bucket target every bucket passes: each batch splits one,
+    // through level 0 (2 buckets) and level 1 (4) into level 2 (8)
+    withMaxPartitionBytes(64) {
+      for (b <- 1 to 7) {
+        val events = (1 to 40).map { _ =>
+          lsn += 1
+          val k = rnd.nextInt(260).toLong
+          if (rnd.nextInt(5) == 0) (k, null: String, "delete", lsn)
+          else (k, s"w$lsn", if (table.contains(k)) "update" else "insert", lsn)
+        }
+        events.foreach {
+          case (k, _, "delete", _) => table.remove(k)
+          case (k, v, _, _) => table(k) = v
+        }
+        CdcStream.mergeBatch(batch(events: _*), state, Seq("id"))
+        assert(bucketIds(state) == (0 until 2 + b).toSet, s"batch $b")
+        val got = CdcStream.readState(spark, state)
+          .select("id", "v").as[(Long, String)].collect().toMap
+        assert(got == table.toMap, s"batch $b diverged")
+        // lookups read one bucket: present keys hit, absent keys miss
+        for (k <- Seq.fill(12)(rnd.nextInt(260).toLong)) {
+          val hit = CdcStream.lookup(spark, state, Seq("id"), Seq(k))
+            .select("v").as[String].collect().toSeq
+          assert(hit == table.get(k).toSeq, s"batch $b, key $k")
+        }
+      }
+    }
+  }
+
+  test("bucketOf and bucketOfKey agree across linear-hash layouts, null " +
+    "components included, and a split moves rows only out of its bucket") {
+    val rnd = new scala.util.Random(7)
+    val keys = (0 until 400).map { i =>
+      (if (i % 17 == 0) None else Some(rnd.nextLong()),
+        if (i % 11 == 0) null else rnd.alphanumeric.take(rnd.nextInt(6)).mkString)
+    }
+    val df = keys.toDF("a", "b")
+    for (layout <- Seq(Buckets(1), Buckets(4), Buckets(4, 0, 3), Buckets(3, 2, 5),
+        Buckets(32, 1, 17), Buckets(5, 1, 9))) {
+      val next = layout.grown
+      val got = df.select(col("a"), col("b"),
+        BucketedState.bucketOf(Seq("a", "b"), layout),
+        BucketedState.bucketOf(Seq("a", "b"), next))
+        .as[(Option[Long], String, Int, Int)].collect()
+      assert(got.length == keys.length)
+      for ((a, b, before, after) <- got) {
+        val key = Seq(a.getOrElse(null), b)
+        assert(before == BucketedState.bucketOfKey(key, layout), s"$layout $key")
+        assert(after == BucketedState.bucketOfKey(key, next), s"$next $key")
+        assert(before >= 0 && before < layout.count && after < next.count)
+        assert(after == before ||
+          (before == layout.split && after == layout.split + layout.m), s"$layout $key")
+      }
+    }
+  }
+
+  test("a legacy 32-bucket meta keeps 32 buckets, and its untouched " +
+    "buckets stay byte-identical") {
+    val state = tmp() + "/tleg"
+    CdcStream.mergeBatch(spark.range(0, 1000)
+      .select(col("id"), concat(lit("v"), col("id")).as("v")),
+      state, Seq("id"), numBuckets = Some(32))
+    // the meta as written before the layout fields and the byte count
+    val meta = java.nio.file.Paths.get(state, "_graft_meta.json")
+    Files.writeString(meta, Files.readString(meta)
+      .replaceAll("\"(n0|level|split|bytes)\":\\d+,", ""))
+    Files.deleteIfExists(java.nio.file.Paths.get(state, "._graft_meta.json.crc"))
+    assert(!Files.readString(meta).contains("n0"), Files.readString(meta))
+    val before = bucketListing(state)
+    assert(before.size == 32)
+    CdcStream.mergeBatch(batch((5L, "v5b", "update", 1L)), state, Seq("id"))
+    val after = bucketListing(state)
+    assert(after.keySet == before.keySet)
+    val changed = before.keySet.filter(k => before(k) != after(k))
+    assert(changed == Set(s"${BucketedState.BucketCol}=" +
+      BucketedState.bucketOfKey(Seq(5L), Buckets(32))), changed)
+    assert(CdcStream.lookup(spark, state, Seq("id"), Seq(5L))
+      .select("v").as[String].collect().toSeq == Seq("v5b"))
+    assert(CdcStream.readState(spark, state).count() == 1000)
   }
 
   test("replicate runs a memory-source stream through checkpointed merge") {
