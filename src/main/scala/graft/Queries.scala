@@ -980,9 +980,9 @@ object Queries {
     "incremental_rollup_bucketed" -> ((s, dir) => {
       // HIGH-cardinality rollup maintenance (Rollup.foldBucketed):
       // per-customer aggregates laid out as hash-bucketed state dirs;
-      // the bootstrap fold populates them, the changelog fold reads
-      // and rewrites ONLY the buckets its delta touches (the flat
-      // fold's whole-state rewrite stops scaling at billions of
+      // the bootstrap fold sizes and populates them, the changelog fold
+      // reads and rewrites ONLY the buckets its delta touches (a
+      // whole-state rewrite per batch stops scaling at billions of
       // groups). The oracle recomputes the final per-customer
       // aggregate from scratch: green proves two bucket-pruned folds
       // == full recompute.
@@ -1014,10 +1014,10 @@ object Queries {
         img.as("before"), nullImg.as("after"), lit(E.Delete).as(E.Kind),
         col("o_orderkey").as(E.Lsn), lit(0).as(E.Counter))
       Rollup.foldBucketed(s, statePath, Rollup.retractions(boot),
-        keys, mets, numBuckets = 16, batchId = 0L)
+        keys, mets, batchId = 0L)
       val changes = inserts.unionByName(updates).unionByName(deletes)
       Rollup.foldBucketed(s, statePath, Rollup.retractions(changes),
-        keys, mets, numBuckets = 16, batchId = 1L)
+        keys, mets, batchId = 1L)
       Rollup.readBucketed(s, statePath)
         .select(col("o_custkey"), col("n_rows"),
           col("sum_o_totalprice").cast("double").as("total_price"))
@@ -1069,11 +1069,10 @@ object Queries {
             .otherwise(col("o_totalprice")))
         .select("o_custkey", "o_totalprice")
       Rollup.foldBucketedWithExtrema(s, statePath, Rollup.retractions(boot),
-        base0, keys, mets, numBuckets = 16, batchId = 0L)
+        base0, keys, mets, batchId = 0L)
       val changes = inserts.unionByName(updates).unionByName(deletes)
       Rollup.foldBucketedWithExtrema(s, statePath,
-        Rollup.retractions(changes), base1, keys, mets,
-        numBuckets = 16, batchId = 1L)
+        Rollup.retractions(changes), base1, keys, mets, batchId = 1L)
       Rollup.readBucketed(s, statePath)
         .select(col("o_custkey"), col("n_rows"),
           col("sum_o_totalprice").cast("double").as("total_price"),
@@ -3644,8 +3643,7 @@ object Queries {
       fs.delete(new org.apache.hadoop.fs.Path(tmp("graft_state_merge")), true)
       val snap = t(s, dir, "orders")
         .select(col("o_orderkey").as("k"), col("o_totalprice").as("val"))
-      graft.streaming.CdcStream.mergeBatch(snap, state, Seq("k"),
-        numBuckets = Some(16))
+      graft.streaming.CdcStream.mergeBatch(snap, state, Seq("k"))
       val changes = t(s, dir, "orders")
         .filter(col("o_orderkey") % 3 === 0 || col("o_orderkey") % 7 === 0)
         .select(col("o_orderkey").as("k"),

@@ -22,10 +22,6 @@ object Hashing {
   def hex8ToLongComposed(c: Column): Column =
     conv(substring(md5(c), 1, 8), 16, 10).cast(LongType)
 
-  /** Stable non-negative bucket of a string key. */
-  def stableBucket(c: Column, buckets: Int): Column =
-    pmod(hex8ToLong(c), lit(buckets))
-
   /** Driver-side twin of [[hex8ToLong]] (same md5-first-8-hex value) for
     * planning decisions — e.g. computing a key's state bucket without a
     * Spark job. */

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.model.{CdcEnvelope => E}
-import graft.sinks.{BucketedState, Swap}
+import graft.sinks.BucketedState
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -28,9 +28,11 @@ import org.apache.spark.sql.functions._
   * Scale shape: [[delta]] is one map-side-combined aggregation of the
   * BATCH (state never scanned); [[merge]] is one keyed shuffle of
   * state ∪ delta, so the cost is ∝ |state| + |batch|, independent of
-  * the base table size. Groups whose count reaches zero leave the
-  * state; a negative count raises (inconsistent changelog) rather than
-  * corrupting silently.
+  * the base table size. The persisted folds ([[foldBucketed]],
+  * [[foldBucketedWithExtrema]]) narrow |state| to the buckets the batch
+  * touches. Groups whose count reaches zero leave the state; a negative
+  * count raises (inconsistent changelog) rather than corrupting
+  * silently.
   */
 object Rollup {
 
@@ -205,98 +207,14 @@ object Rollup {
           col(s"max_$m"))): _*)
   }
 
-  /** Continuously-maintained aggregate: fold one changelog batch into
-    * a parquet-persisted state — the `foreachBatch` body of a streaming
-    * rollup. The state is group-cardinality-sized, so it is rewritten
-    * whole each fold behind a [[graft.sinks.Swap]] directory swap
-    * (stage .tmp → move live aside to .bak → move .tmp in → drop .bak);
-    * a crash at any point leaves the old state or the new one, never a
-    * torn directory. Pass foreachBatch's `batchId` for exactly-once under
-    * replay: the id is written INSIDE the new state dir before the
-    * swap, so it travels atomically with the rename — a replayed batch
-    * that already folded (crash after swap, before the streaming
-    * checkpoint committed) is detected and skipped, never applied
-    * twice. Returns the post-fold state. */
-  def fold(spark: org.apache.spark.sql.SparkSession, statePath: String,
-           retractionBatch: DataFrame, groupKeys: Seq[String],
-           metrics: Seq[String], batchId: Long = -1L): DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val live = new org.apache.hadoop.fs.Path(statePath)
-    val fs = live.getFileSystem(conf)
-    val bak = new org.apache.hadoop.fs.Path(statePath + ".bak")
-    val tmp = new org.apache.hadoop.fs.Path(statePath + ".tmp")
-    Swap.recoverDir(fs, live, tmp, bak)
-    // replay detection: the live state already carries this batch id
-    if (batchId >= 0 &&
-        markedBatch(fs, new org.apache.hadoop.fs.Path(live, Marker))
-          .contains(batchId))
-      return spark.read.parquet(statePath)
-
-    val d = delta(retractionBatch, groupKeys, metrics)
-    val next =
-      if (fs.exists(live)) merge(spark.read.parquet(statePath), d,
-        groupKeys, metrics)
-      else // bootstrap: the delta IS the state (negative counts raise)
-        d.withColumn("n_rows", when(col("n_rows") < 0, raise_error(
-            lit("rollup: bootstrap batch retracts rows absent from " +
-              "the (empty) state"))).otherwise(col("n_rows")))
-          .filter(col("n_rows") > 0)
-    next.write.mode("overwrite").parquet(tmp.toString)
-    if (batchId >= 0) {
-      // underscore-prefixed, so parquet readers ignore it like _SUCCESS
-      val out = fs.create(new org.apache.hadoop.fs.Path(tmp, Marker))
-      try out.write(batchId.toString.getBytes("UTF-8")) finally out.close()
-    }
-    Swap.installDir(fs, live, tmp, bak)
-    spark.read.parquet(statePath)
-  }
-
-  private val Marker = "_graft_batch"
   /** The writer call named by [[readBucketed]] when it refuses a root. */
   private val Writer = "Rollup.foldBucketed"
 
-  /** The batch id the marker records, if any. */
-  private def markedBatch(fs: org.apache.hadoop.fs.FileSystem,
-                          marker: org.apache.hadoop.fs.Path): Option[Long] =
-    if (!fs.exists(marker)) None
-    else {
-      val in = fs.open(marker)
-      try scala.util.Try(new String(in.readAllBytes(), "UTF-8").trim.toLong)
-        .toOption
-      finally in.close()
-    }
-
-  /** Recover the bucketed state at `statePath` and tell whether it
-    * already holds batch `batchId` (a replay to skip). A fold reached its
-    * commit point once its marker (the last swapped sidecar) records the
-    * batch id the swap manifest was written for, or once the sentinel is
-    * down (the only record of an unmarked fold): then only the teardown
-    * crashed and is resumed — rolling back would restore pre-fold
-    * buckets under a post-fold marker, and the replayed batch would be
-    * skipped and lost. Otherwise the swap is rolled back and the batch
-    * replays once. */
-  private def recoverFolded(spark: org.apache.spark.sql.SparkSession,
-                            statePath: String, batchId: Long): Boolean = {
-    val fs = BucketedState.fsOf(spark, statePath)
-    def marked = markedBatch(fs, new org.apache.hadoop.fs.Path(statePath, Marker))
-    BucketedState.recover(spark, statePath, b => b >= 0 && marked.contains(b))
-    batchId >= 0 && marked.contains(batchId)
-  }
-
-  /** The marker sidecar, whatever the fold's byte change: staged beside
-    * the rewritten buckets and swapped in last. An unmarked fold
-    * (batchId = -1) moves the old marker aside and replaces it with
-    * nothing. */
-  private def marker(batchId: Long): Long => Seq[(String, Option[String])] =
-    _ => Seq(Marker -> Some(batchId.toString).filter(_ => batchId >= 0))
-
-  /** [[fold]] for HIGH-cardinality rollups (per-user, per-document):
-    * the flat fold rewrites the whole group-cardinality-sized state
-    * every batch, which stops being acceptable once groups number in
-    * the billions. This variant keeps the state in the
-    * [[graft.sinks.BucketedState]] layout, `statePath/__bucket=i/` dirs
-    * keyed by a stable group-key hash (the layout the replication MERGE
-    * uses), and a fold
+  /** Continuously-maintained aggregate: fold one changelog batch into a
+    * persisted state, the `foreachBatch` body of a streaming rollup. The
+    * state keeps the [[graft.sinks.BucketedState]] layout,
+    * `statePath/__bucket=i/` dirs keyed by a stable group-key hash (the
+    * layout the replication MERGE uses), so that a fold
     *
     *   - aggregates the BATCH into a signed delta (map-side combined),
     *   - reads ONLY the buckets its delta touches,
@@ -304,36 +222,36 @@ object Rollup {
     *     bucket write's own, and rewrites ONLY those buckets behind a
     *     crash-safe bucket swap —
     *
-    * so rewrite I/O scales with the batch's key spread, never total
-    * group cardinality. Unlike the replication MERGE (last-write-wins,
-    * idempotent under replay) an aggregate fold is NOT idempotent, so
-    * the replay marker swaps WITH the buckets as their last sidecar. The
-    * swap manifest's header records this fold's batch id: recovery
-    * compares it with the root marker to tell a crash mid-swap (roll
-    * back, batch replays and folds once) from a crash mid-cleanup after
-    * the marker committed (resume the teardown, replay detected and
-    * skipped) — so a crash anywhere leaves either the pre-fold state +
-    * pre-fold marker or the post-fold state + post-fold marker, never a
-    * mix. */
+    * and rewrite I/O scales with the batch's key spread, never total
+    * group cardinality (billions of groups: per-user, per-document).
+    * The layout sizes a new state from the first delta and grows it by
+    * splits as the state grows, recording the count in its meta, so
+    * every fold agrees on it.
+    *
+    * Unlike the replication MERGE (last-write-wins, idempotent under
+    * replay) an aggregate fold is NOT idempotent, so pass foreachBatch's
+    * `batchId` for exactly-once under replay: the meta, swapped in last
+    * with the buckets, records it, and a replayed batch that already
+    * folded (crash after the swap, before the streaming checkpoint
+    * committed) is skipped, never applied twice. The swap manifest
+    * carries the same id, so recovery tells a crash mid-swap (roll back,
+    * the batch replays and folds once) from a crash mid-cleanup after the
+    * meta committed (finish the teardown, the replay is skipped): a crash
+    * anywhere leaves the pre-fold or the post-fold state. Returns the
+    * post-fold state. */
   def foldBucketed(spark: org.apache.spark.sql.SparkSession,
                    statePath: String, retractionBatch: DataFrame,
                    groupKeys: Seq[String], metrics: Seq[String],
-                   numBuckets: Int = 64, batchId: Long = -1L): DataFrame = {
+                   batchId: Long = -1L): DataFrame = {
     val d = delta(retractionBatch, groupKeys, metrics)
-    // every fold writes the delta's schema (the sums are cast to it), so
-    // both reads pin it instead of inferring it from a footer. The sum
-    // types therefore follow the batch's metric types; a stream's batches
-    // share one schema, so they stay those the first fold wrote
-    if (!recoverFolded(spark, statePath, batchId))
-      BucketedState.rewrite(statePath, groupKeys,
-          BucketedState.Buckets(numBuckets), d, reader = _.schema(d.schema),
-          batch = batchId) { (existing, layout) =>
-        // with no touched bucket yet the delta alone makes their state
-        // (negative counts raise)
-        BucketedState.Rewrite(sumGroups(layout.cluster(existing.fold(d)(
-          _.unionByName(d))), layout.groupCols, metrics, d.schema),
-          marker(batchId))
-      }
+    // with no touched bucket yet the delta alone makes their state
+    // (negative counts raise). Every fold writes the delta's schema (the
+    // sums are cast to it), so the final read pins it instead of
+    // inferring it from a footer
+    BucketedState.write(statePath, groupKeys, d, sizing = d, batch = batchId) {
+      (existing, layout) => sumGroups(layout.cluster(existing.fold(d)(_.unionByName(d))),
+        layout.groupCols, metrics, d.schema)
+    }
     readBucketed(spark, statePath, Some(d.schema))
   }
 
@@ -350,22 +268,19 @@ object Rollup {
                               statePath: String, retractionBatch: DataFrame,
                               base: DataFrame,
                               groupKeys: Seq[String], metrics: Seq[String],
-                              numBuckets: Int = 64,
                               batchId: Long = -1L): DataFrame = {
     // aggregation of a zero-row frame: schema-only empty state, the
     // bootstrap stand-in (foldWithExtrema handles an empty state —
     // created-and-retracted groups go through base repair)
     val emptyState = initWithExtrema(base.limit(0), groupKeys, metrics)
-    if (!recoverFolded(spark, statePath, batchId))
-      // the batch is the probe: foldWithExtrema reads it back from the
-      // probe's cache instead of rescanning it
-      BucketedState.rewrite(statePath, groupKeys,
-          BucketedState.Buckets(numBuckets), retractionBatch,
-          reader = _.schema(emptyState.schema), batch = batchId) { (existing, layout) =>
-        BucketedState.Rewrite(layout.cluster(foldWithExtrema(
-          existing.getOrElse(emptyState), retractionBatch, base, groupKeys,
-          metrics)), marker(batchId))
-      }
+    // the batch is the probe: foldWithExtrema reads it back from the
+    // probe's cache instead of rescanning it. The state is sized from the
+    // delta, as in foldBucketed
+    BucketedState.write(statePath, groupKeys, retractionBatch,
+        sizing = delta(retractionBatch, groupKeys, metrics), batch = batchId) {
+      (existing, layout) => layout.cluster(foldWithExtrema(
+        existing.getOrElse(emptyState), retractionBatch, base, groupKeys, metrics))
+    }
     readBucketed(spark, statePath, Some(emptyState.schema))
   }
 
@@ -373,8 +288,9 @@ object Rollup {
     * half-swapped state, naming the paths
     * ([[graft.sinks.BucketedState.requireSettled]]); the next fold
     * recovers it. `schema`, when given, is the state's post-read shape
-    * (group keys + n_rows + sum columns): the read passes it instead of
-    * inferring one from a parquet footer (a Spark job per read). An
+    * (group keys + n_rows + sum columns); without it the read takes the
+    * schema the state's meta records, so neither infers one from a
+    * parquet footer (a Spark job per read). An
     * absent or empty dir is an empty state (bootstrap not yet run, or
     * every group retracted): with `schema` an empty frame of that schema
     * is returned; without it a pre-bootstrap probe fails loudly rather
@@ -383,8 +299,7 @@ object Rollup {
                    statePath: String,
                    schema: Option[org.apache.spark.sql.types.StructType] =
                      None): DataFrame =
-    BucketedState.read(spark, statePath, Writer,
-      reader = r => schema.fold(r)(r.schema), empty = Some(() =>
+    BucketedState.read(spark, statePath, Writer, schema, empty = Some(() =>
       schema match {
         case Some(s) =>
           spark.createDataFrame(spark.sparkContext

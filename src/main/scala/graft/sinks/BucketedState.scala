@@ -8,33 +8,34 @@ import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.spark.sql.{Column, DataFrame, DataFrameReader, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.SparkToParquetSchemaConverter
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** The bucketed state layout, end to end: a root directory whose rows
   * live in `__bucket=i/` children keyed by a stable hash of the row key,
   * plus small sidecar files beside them. A batch rewrites only the
   * buckets its keys land in, so rewrite I/O follows the batch's key
-  * spread, never the state's size. Two writers use it: the CDC merge
-  * ([[graft.streaming.CdcStream.mergeBatch]], sidecar `_graft_meta.json`)
-  * and the bucketed rollups ([[graft.operators.Rollup.foldBucketed]],
-  * sidecar `_graft_batch`). docs/state-layout.md is the contract.
+  * spread, never the state's size. Two writers use it, the CDC merge
+  * ([[graft.streaming.CdcStream.mergeBatch]]) and the bucketed rollups
+  * ([[graft.operators.Rollup.foldBucketed]]); both hand [[write]] only
+  * their row logic. The layout policy is here: one commit record per
+  * root ([[Meta]], `_graft_meta.json`), the size of a new root, and when
+  * a batch splits a bucket. docs/state-layout.md is the contract.
   *
-  * One batch is [[recover]] → [[rewrite]] → optionally [[read]]:
+  * One batch is [[write]], optionally followed by [[read]]:
   *
-  *  - [[recover]] finishes or rolls back a [[Swap]] children swap that
-  *    died mid-flight, before anything is read;
-  *  - [[rewrite]] persists the batch's probe frame and collects its
-  *    touched bucket ids in one job, reads the existing touched buckets,
-  *    and hands them with the batch's [[Layout]] to the caller's row
-  *    logic, which clusters its rows through the layout's one Exchange;
-  *    it writes the result key-sorted into `<root>.tmp` with the sidecars
-  *    staged last, and swaps the touched buckets and sidecars in as one
-  *    set. A batch is three Spark jobs: touched set, shuffle, write
-  *    (a probe with a shuffle in its lineage, like the rollup's delta,
-  *    adds the jobs that build its cache). The bucket count may grow by
-  *    one in the same batch and swap: [[Buckets]] is the layout's linear
-  *    hashing;
+  *  - [[write]] finishes or rolls back a [[Swap]] children swap that
+  *    died mid-flight, skips a replay of the batch the meta records,
+  *    persists the batch's probe frame and collects its touched bucket
+  *    ids in one job, reads the existing touched buckets, and hands them
+  *    with the batch's [[Layout]] to the caller's row logic, which
+  *    clusters its rows through the layout's one Exchange; it writes the
+  *    result key-sorted into `<root>.tmp` with the new meta staged last,
+  *    and swaps the touched buckets and the meta in as one set. A batch
+  *    is three Spark jobs: touched set, shuffle, write (a probe with a
+  *    shuffle in its lineage, like the rollup's delta, adds the jobs that
+  *    build its cache). The bucket count may grow by one in the same
+  *    batch and swap: [[Buckets]] is the layout's linear hashing;
   *  - [[read]] and [[requireSettled]] serve readers, which never
   *    recover: a root whose swap is not settled is refused.
   */
@@ -110,14 +111,89 @@ object BucketedState {
 
   private def bakOf(root: String) = new Path(root + ".bak")
 
-  /** Swap recovery on entry; run it before reading anything under
-    * `root`. `committed` recognises a crash after a caller's commit
-    * record (a sidecar) moved in but before the swap's sentinel was
-    * written (see [[Swap.recoverChildren]]). */
-  def recover(spark: SparkSession, root: String,
-              committed: Long => Boolean = _ => false): Unit =
-    Swap.recoverChildren(fsOf(spark, root), new Path(root),
-      new Path(root + ".tmp"), bakOf(root), committed)
+  /** The root's one commit record, `_graft_meta.json`, written by both
+    * writers and staged last in every swap: the layout every batch agrees
+    * on, `bytes` (the data bytes of all buckets), the id of the batch
+    * that committed it (-1 for none: the CDC merge, an unnumbered fold),
+    * the logical column set across drifts, and the TYPED union schema.
+    *
+    * `bytes` is kept from each batch's touched-bucket listings. A meta
+    * written before it has only `numBuckets` (no level or split pointer),
+    * reads as `Buckets(numBuckets)`, and its buckets are listed once.
+    * `schema` lets reads pass an explicit schema instead of a mergeSchema
+    * sweep over every affected bucket's footer, which at streaming
+    * cadence would recur per batch; lagging buckets (lazy DDL migration)
+    * read identically either way, since the parquet reader surfaces null
+    * for columns a file predates. It is absent when it would not cover
+    * every logical column, and on older metas: reads then fall back to
+    * mergeSchema. */
+  private final case class Meta(buckets: Buckets, bytes: Option[Long], batch: Long,
+                                columns: Seq[String], schema: Option[StructType])
+
+  private val MetaName = "_graft_meta.json"
+
+  private def readMeta(fs: FileSystem, root: String): Option[Meta] = {
+    val p = new Path(root, MetaName)
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      val raw = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+      def num(name: String): Option[Long] = s""""$name"\\s*:\\s*(-?\\d+)""".r
+        .findFirstMatchIn(raw).map(_.group(1).toLong)
+      val buckets = num("n0").map(n0 => Buckets(n0.toInt,
+          num("level").getOrElse(0L).toInt, num("split").getOrElse(0L).toInt))
+        .orElse(num("numBuckets").map(n => Buckets(n.toInt)))
+      val cols = """"columns"\s*:\s*\[(.*?)\]""".r.findFirstMatchIn(raw)
+        .map(_.group(1).split(",").map(_.trim.stripPrefix("\"")
+          .stripSuffix("\"")).filter(_.nonEmpty).toSeq)
+      // base64 of StructType.json keeps the regex-parsed file free of
+      // nested quotes and braces; a parse failure degrades to None (the
+      // mergeSchema fallback), never an error
+      val schema = """"schemaB64"\s*:\s*"([A-Za-z0-9+/=]*)"""".r
+        .findFirstMatchIn(raw).flatMap(m => scala.util.Try(DataType.fromJson(
+          new String(java.util.Base64.getDecoder.decode(m.group(1)), "UTF-8"))
+          .asInstanceOf[StructType]).toOption)
+      buckets.map(Meta(_, num("bytes"), num("batch").getOrElse(-1L), cols.getOrElse(Nil), schema))
+    }
+  }
+
+  /** The meta's file text. `numBuckets`, the current count, is what a
+    * reader of the oldest format looks for. */
+  private def metaJson(m: Meta): String = {
+    val b = m.buckets
+    val batch = if (m.batch >= 0) s""""batch":${m.batch},""" else ""
+    val schema = m.schema.fold("")(s => s""","schemaB64":"${java.util.Base64.getEncoder
+      .encodeToString(s.json.getBytes("UTF-8"))}"""")
+    s"""{"numBuckets":${b.count},"n0":${b.n0},"level":${b.level},"split":${b.split},""" +
+      s""""bytes":${m.bytes.getOrElse(0L)},$batch"columns":[""" +
+      m.columns.map("\"" + _ + "\"").mkString(",") + s"]$schema}"
+  }
+
+  /** The bucket layout the meta of `root` records, if any. */
+  def layout(fs: FileSystem, root: String): Option[Buckets] = readMeta(fs, root).map(_.buckets)
+
+  /** A read of bucket files with `schema`, or with mergeSchema without one:
+    * buckets may sit at different drift generations. */
+  private def reader(schema: Option[StructType])(r: DataFrameReader): DataFrameReader =
+    schema.fold(r.option("mergeSchema", "true"))(r.schema)
+
+  /** Swap recovery on entry, before anything under `root` is read. The
+    * meta is the swap's commit record: a swap whose manifest batch id the
+    * live meta records committed before its sentinel was written, so only
+    * its teardown is finished (rolling back would pair pre-batch buckets
+    * with a post-batch meta, and the replay would be skipped and lost).
+    * A `.bak` with no manifest that holds flat `part-*` files is a legacy
+    * migration interrupted in an older layout: it does not name the
+    * bucket dirs already moved in, and all of them are replay debris (the
+    * flat snapshot is the pre-batch state). */
+  private def recover(fs: FileSystem, root: String): Unit = {
+    val (live, bak) = (new Path(root), bakOf(root))
+    if (Swap.unlisted(fs, bak) && fs.listStatus(bak).exists(_.getPath.getName.startsWith("part-")))
+      fs.listStatus(live).filter(_.getPath.getName.startsWith(BucketCol))
+        .foreach(st => fs.delete(st.getPath, true))
+    Swap.recoverChildren(fs, live, new Path(root + ".tmp"), bak,
+      b => b >= 0 && readMeta(fs, root).exists(_.batch == b))
+  }
 
   /** The batch's one clustering step, handed to the caller's row logic.
     * [[cluster]] adds [[BucketCol]] under the batch's [[buckets]] and
@@ -132,9 +208,8 @@ object BucketedState {
     *
     * The grouping therefore runs on the `k` write tasks: on fewer tasks
     * than shuffle partitions only while the state has fewer buckets than
-    * that. A CDC state that [[graft.streaming.CdcStream.mergeBatch]]
-    * sizes itself starts with at least one bucket per shuffle
-    * partition. */
+    * that. A new root starts with at least one bucket per shuffle
+    * partition ([[write]]). */
   final class Layout private[sinks] (keys: Seq[String], val buckets: Buckets, k: Int) {
     /** The caller's grouping: the bucket, then the keys. */
     def groupCols: Seq[String] = BucketCol +: keys
@@ -142,19 +217,6 @@ object BucketedState {
     def cluster(rows: DataFrame): DataFrame =
       rows.withColumn(BucketCol, bucketOf(keys, buckets)).repartitionById(k, col(BucketCol))
   }
-
-  /** What replaces the touched buckets: their new rows, which carry the
-    * key columns and [[BucketCol]] (take them from the grouping, not
-    * from an aggregated struct, so the grouping's ordering reaches the
-    * write), and the sidecar files staged after them, in swap order. The
-    * sidecars are made once the rows are written, from the bytes the
-    * batch adds to the state's data files (negative when it removes
-    * more). A sidecar with no text replaces its live namesake by
-    * nothing. `summary`, when given, replaces the state's
-    * [[SummaryName]] file, ahead of the sidecars. */
-  final case class Rewrite(rows: DataFrame,
-                           sidecars: Long => Seq[(String, Option[String])],
-                           summary: Option[StructType] = None)
 
   /** The schema summary of a root: a parquet file with no row group whose
     * footer holds the state's union schema, under the name Parquet gives
@@ -203,28 +265,53 @@ object BucketedState {
 
   /** Bytes of the data files of every bucket under `root`, from a
     * driver-side listing (no Spark job). */
-  def sizeOf(fs: FileSystem, root: String): Long =
+  private def sizeOf(fs: FileSystem, root: String): Long =
     if (!fs.exists(new Path(root))) 0L
     else fs.listStatus(new Path(root)).filter(st => st.isDirectory &&
       st.getPath.getName.startsWith(s"$BucketCol=")).map(st => dataBytes(fs, st.getPath)).sum
 
-  /** Rewrite the buckets `probe` touches. `probe` carries the key
-    * columns of every row the batch changes; it is persisted for the
-    * call (unless the caller already cached it), so `next` may read it
-    * again from the cache. `next` gets the existing rows of the touched
-    * buckets, read through `reader` with `basePath` (None when none of
-    * them exists yet), and the batch's [[Layout]]; it returns their
-    * replacement, clustered through the layout.
+  /** The base bucket count of a new root: one per shuffle partition, so
+    * each write task gets one bucket, or one per `target` bytes of the
+    * plans' size estimates when that is more. A plan Spark cannot bound
+    * counts as unknown: its estimate, or a leaf's, is the default size (a
+    * projection or aggregate over an unbounded leaf, like a stream
+    * batch's, scales that default down to a huge estimate that bounds
+    * nothing). The reference likewise sizes snapshot parts from table
+    * size (sharding_storage.go `DesiredTableSize`). */
+  private def initialBuckets(first: Seq[DataFrame], target: Long): Int = {
+    val conf = first.head.sparkSession.sessionState.conf
+    val plans = first.map(_.queryExecution.optimizedPlan)
+    val perTarget =
+      if (plans.exists(p => (p +: p.collectLeaves()).exists(
+          _.stats.sizeInBytes >= conf.defaultSizeInBytes))) BigInt(0)
+      else (plans.map(_.stats.sizeInBytes).sum + target - 1) / target
+    math.max(conf.numShufflePartitions, perTarget.min(Int.MaxValue).toInt)
+  }
+
+  /** One batch into the bucketed root. `probe` carries the key columns of
+    * every row the batch changes; it is persisted for the call (unless
+    * the caller already cached it), so `next` may read it again from the
+    * cache. `next` gets the existing rows of the touched buckets (None
+    * when none of them exists yet) and the batch's [[Layout]]; it returns
+    * their replacement, clustered through the layout.
     *
-    * `grow` splits bucket `buckets.split` in the same batch: the batch's
-    * layout is `buckets.grown`, and the split bucket and its new sibling
-    * count as touched, so the split bucket's rows are re-bucketed by the
-    * same clustering, with no job of its own. The caller records
-    * `layout.buckets` in a sidecar.
-    *
-    * `flat` is a state not bucketed yet (a legacy flat layout): every
-    * bucket counts as touched, `flat` is its current rows, and the
-    * root's flat files are swapped out for nothing.
+    *  - **Replay.** With `batch >= 0`, a root whose meta records `batch`
+    *    already holds it: the call recovers the root and returns.
+    *  - **Sizing.** A new root gets `max(p, ⌈size / maxPartitionBytes⌉)`
+    *    base buckets ([[initialBuckets]]), `size` being the plan estimate
+    *    of `sizing` (what the first batch writes) plus a legacy flat
+    *    state's. Both settings are Spark's own, read from the session.
+    *  - **Growth.** Once the meta's `bytes` pass `maxPartitionBytes` per
+    *    bucket, the batch splits bucket `split` ([[Buckets.grown]]): the
+    *    split bucket and its new sibling count as touched, so its rows
+    *    are re-bucketed by the same clustering, with no job of its own.
+    *    A batch splits at most one bucket.
+    *  - **Legacy flat layout.** A root with flat `part-*` files and no
+    *    meta is read whole as the existing rows, every bucket counts as
+    *    touched, and the flat files are swapped out for nothing.
+    *  - A root that holds bucket dirs but no meta never recorded its
+    *    count: it is refused, since writing it under another count would
+    *    split its keys across buckets.
     *
     * Per batch: one job for the touched set, then one plan with one
     * Exchange (the layout's clustering, before `partitionBy`: otherwise
@@ -232,49 +319,81 @@ object BucketedState {
     * files per batch). The caller's grouping runs after that Exchange,
     * on the write tasks. Rows are key-sorted within each bucket, so
     * parquet min/max stats prune a point read inside it. Untouched
-    * buckets are never read or written. The touched buckets' data bytes
-    * before and after the write, from their listings, give the sidecars
-    * the batch's byte change. `batch` heads the swap manifest. */
-  def rewrite(root: String, keys: Seq[String], buckets: Buckets, probe: DataFrame,
-              reader: DataFrameReader => DataFrameReader = identity,
-              flat: Option[DataFrame] = None, batch: Long = -1L,
-              grow: Boolean = false)
-             (next: (Option[DataFrame], Layout) => Rewrite): Unit = {
+    * buckets are never read or written. The new meta's `bytes` adds the
+    * touched buckets' data bytes after the write and subtracts those
+    * before, from their listings. A batch whose columns the meta has not
+    * seen (DDL drift) also stages the root's [[SummaryName]] file. `batch`
+    * heads the swap manifest and goes into the meta. */
+  def write(root: String, keys: Seq[String], probe: DataFrame, sizing: DataFrame,
+            batch: Long = -1L)(next: (Option[DataFrame], Layout) => DataFrame): Unit = {
     val spark = probe.sparkSession
     val fs = fsOf(spark, root)
     val (live, tmp) = (new Path(root), new Path(root + ".tmp"))
-    val owned = probe.storageLevel == StorageLevel.NONE
-    if (owned) probe.persist()
-    try {
+    recover(fs, root)
+    val prev = readMeta(fs, root)
+    if (batch < 0 || !prev.exists(_.batch == batch)) {
+      val children = if (fs.exists(live)) fs.listStatus(live).toSeq else Nil
+      if (prev.isEmpty && children.exists(_.getPath.getName.startsWith(s"$BucketCol=")))
+        throw new IllegalStateException(s"$root holds $BucketCol dirs but no $MetaName, " +
+          "so its bucket count was never recorded; a write under another count would " +
+          "split its keys across buckets. Rebuild it from its source.")
+      // a legacy flat layout: flat part files and no meta
+      val flatFiles =
+        if (prev.isEmpty && children.exists(st => st.isFile && st.getPath.getName.startsWith("part-")))
+          children.filter(_.isFile).map(_.getPath.getName)
+        else Nil
+      val flat = if (flatFiles.isEmpty) None else Some(spark.read.parquet(root))
+      val target = spark.sessionState.conf.filesMaxPartitionBytes
+      val buckets = prev.fold(Buckets(initialBuckets(sizing +: flat.toSeq, target)))(_.buckets)
+      val bytes = prev.flatMap(_.bytes).getOrElse(sizeOf(fs, root))
+      val grow = bytes / buckets.count > target
       val after = if (grow) buckets.grown else buckets
       val layout = new Layout(keys, after,
         math.min(after.count, spark.sessionState.conf.numShufflePartitions))
-      val split = if (grow) Seq(buckets.split, buckets.split + buckets.m) else Nil
-      val touched = if (flat.isDefined) 0 until after.count
-        else (touchedBuckets(probe, keys, after) ++ split).distinct.sorted
-      val paths = touched.map(bucketDir(root, _)).filter(fs.exists)
-      val Rewrite(rows, sidecars, summary) = next(flat.orElse(
-        if (paths.isEmpty) None
-        else Some(reader(spark.read.option("basePath", root))
-          .parquet(paths.map(_.toString): _*).drop(BucketCol))), layout)
-      require(rows.columns.contains(BucketCol),
-        s"rows rewritten into $root must be clustered through the batch's Layout")
-      rows.sortWithinPartitions(layout.groupCols.map(col): _*)
-        .write.partitionBy(BucketCol).parquet(tmp.toString)
-      val added = touched.map(b => dataBytes(fs, new Path(tmp, s"$BucketCol=$b"))).sum -
-        paths.map(dataBytes(fs, _)).sum
-      summary.foreach(writeSummary(spark, new Path(tmp, SummaryName), _))
-      val staged = sidecars(added)
-      for ((name, Some(text)) <- staged) {
-        val out = fs.create(new Path(tmp, name))
-        try out.write(text.getBytes("UTF-8")) finally out.close()
-      }
-      val flatFiles = if (flat.isEmpty) Nil
-        else fs.listStatus(live).filter(_.isFile).map(_.getPath.getName).toSeq
-      Swap.installChildren(fs, live, tmp, bakOf(root), flatFiles ++
-        touched.map(b => s"$BucketCol=$b") ++ summary.map(_ => SummaryName) ++
-        staged.map(_._1), batch)
-    } finally if (owned) probe.unpersist()
+      val owned = probe.storageLevel == StorageLevel.NONE
+      if (owned) probe.persist()
+      try {
+        val split = if (grow) Seq(buckets.split, buckets.split + buckets.m) else Nil
+        val touched = if (flat.isDefined) 0 until after.count
+          else (touchedBuckets(probe, keys, after) ++ split).distinct.sorted
+        val paths = touched.map(bucketDir(root, _)).filter(fs.exists)
+        val rows = next(flat.orElse(
+          if (paths.isEmpty) None
+          else Some(reader(prev.flatMap(_.schema))(spark.read.option("basePath", root))
+            .parquet(paths.map(_.toString): _*).drop(BucketCol))), layout)
+        require(rows.columns.contains(BucketCol),
+          s"rows rewritten into $root must be clustered through the batch's Layout")
+        rows.sortWithinPartitions(layout.groupCols.map(col): _*)
+          .write.partitionBy(BucketCol).parquet(tmp.toString)
+        val added = touched.map(b => dataBytes(fs, new Path(tmp, s"$BucketCol=$b"))).sum -
+          paths.map(dataBytes(fs, _)).sum
+        // the column set is the LOGICAL union across drifts: untouched
+        // buckets may lag it on disk until a batch touches them
+        val cols = rows.columns.filterNot(_ == BucketCol).toSeq
+        val prevCols = prev.map(_.columns).getOrElse(Nil)
+        val logical = prevCols ++ cols.filterNot(prevCols.contains)
+        // typed union schema: this write's schema wins for the columns it
+        // carries (it absorbed every touched bucket's drift through the
+        // read above); columns only the previous meta knew, dropped by DDL
+        // but still in lagging buckets, stay so reads surface them as null
+        val union = StructType(cols.map(rows.schema(_).copy(nullable = true)) ++
+          prev.flatMap(_.schema).toSeq.flatMap(_.fields.filterNot(f => cols.contains(f.name))))
+        // baked only when it covers every logical column: a previous meta
+        // without one cannot say what a drift column living only in
+        // untouched buckets looks like, and a partial schema would hide it
+        val typed = Some(union).filter(u => logical.forall(u.fieldNames.toSet))
+        // a drift batch replaces the schema summary, so a plain parquet
+        // read of the root infers every column, not one bucket's
+        val summary = if (prev.exists(_.columns != logical)) Seq(SummaryName) else Nil
+        summary.foreach(n => writeSummary(spark, new Path(tmp, n), union))
+        val out = fs.create(new Path(tmp, MetaName))
+        try out.write(metaJson(Meta(after, Some(bytes + added), batch, logical, typed))
+          .getBytes("UTF-8"))
+        finally out.close()
+        Swap.installChildren(fs, live, tmp, bakOf(root), flatFiles ++
+          touched.map(b => s"$BucketCol=$b") ++ summary :+ MetaName, batch)
+      } finally if (owned) probe.unpersist()
+    }
   }
 
   /** Readers do not recover; only the writer does. A root whose
@@ -290,11 +409,12 @@ object BucketedState {
           s"interrupted swap. The next $writer into $root recovers it; " +
           "read it after that.")
 
-  /** The whole settled state without its layout column, read through
-    * `reader`. `empty`, when given, answers for a root that holds no
-    * bucket dir (no state yet, or every row retracted). */
+  /** The whole settled state without its layout column, read with
+    * `schema`, else with the meta's typed schema, else with mergeSchema.
+    * `empty`, when given, answers for a root that holds no bucket dir (no
+    * state yet, or every row retracted). */
   def read(spark: SparkSession, root: String, writer: String,
-           reader: DataFrameReader => DataFrameReader = identity,
+           schema: Option[StructType] = None,
            empty: Option[() => DataFrame] = None): DataFrame = {
     val fs = fsOf(spark, root)
     requireSettled(fs, root, writer)
@@ -302,7 +422,8 @@ object BucketedState {
       .exists(_.getPath.getName.startsWith(s"$BucketCol="))
     if (empty.isDefined && noBuckets) empty.get()
     else {
-      val df = reader(spark.read).parquet(root)
+      val df = reader(schema.orElse(readMeta(fs, root).flatMap(_.schema)))(spark.read)
+        .parquet(root)
       if (df.columns.contains(BucketCol)) df.drop(BucketCol) else df
     }
   }

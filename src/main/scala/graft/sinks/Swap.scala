@@ -7,11 +7,11 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * each with exactly one implementation here:
   *
   *  - a whole directory ([[recoverDir]] / [[installDir]]): compaction,
-  *    index rebuilds, the flat rollup fold, z-order manifests;
+  *    index rebuilds, z-order manifests;
   *  - a named set of a root's children ([[recoverChildren]] /
   *    [[installChildren]], [[settled]] for readers): the bucketed state
-  *    of [[BucketedState]] (the CDC merge with its meta, the bucketed
-  *    rollup fold with its batch marker);
+  *    of [[BucketedState]] (the CDC merge and the bucketed rollup folds,
+  *    each with its meta);
   *  - one small file ([[writeText]] / [[readText]], [[replaceFile]]):
   *    scan cursors, Delta checkpoints.
   *
@@ -140,8 +140,9 @@ object Swap {
     *    swap's), then move every backup back.
     *
     * `committed` lets a caller whose commit record is itself a swapped
-    * child (the rollup's batch marker) recognise a crash after that
-    * child moved in but before the sentinel was written. */
+    * child (the bucketed state's meta, which records the batch id)
+    * recognise a crash after that child moved in but before the sentinel
+    * was written. */
   def recoverChildren(fs: FileSystem, root: Path, tmp: Path, bak: Path,
                       committed: Long => Boolean = _ => false): Unit = {
     if (fs.exists(bak)) {

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.model.{CdcEnvelope => E}
 import graft.operators.{Collapse, TransformerChain}
-import graft.sinks.{BucketedState, Swap}
+import graft.sinks.BucketedState
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
@@ -46,95 +46,17 @@ object CdcStream {
       }
   }
 
-  /** State-dir metadata: the bucket layout every batch agrees on
-    * ([[BucketedState.Buckets]]: base count, level and split pointer),
-    * the data bytes of the buckets, and the column set, so bucket schemas
-    * stay homogeneous. `bytes` is kept from each batch's touched-bucket
-    * listings; an older meta has none (nor a level or split pointer, so
-    * its `numBuckets` is the base count at level 0), and its buckets are
-    * then listed once. `schema` is the TYPED union across drifts: with
-    * it, state reads pass an explicit schema instead of mergeSchema,
-    * skipping the per-batch footer-inference job over every affected
-    * bucket — at lake scale a mergeSchema read sweeps EVERY file footer
-    * of the affected buckets before the real read even starts, and at
-    * streaming cadence that job recurs per micro-batch. Lagging buckets
-    * (lazy DDL migration) read identically either way: the parquet
-    * reader surfaces null for schema columns a file predates — the
-    * exact semantics mergeSchema produced. Absent when it would not
-    * cover every logical column, and on older metas: readers then fall
-    * back to mergeSchema. */
-  private final case class StateMeta(buckets: BucketedState.Buckets,
-      bytes: Option[Long], columns: Seq[String],
-      schema: Option[org.apache.spark.sql.types.StructType] = None)
-
-  private val MetaName = "_graft_meta.json"
   /** The writer call named by readers that refuse a half-swapped state. */
   private val Writer = "CdcStream.mergeBatch"
 
-  private def readMeta(fs: org.apache.hadoop.fs.FileSystem,
-                       dir: String): Option[StateMeta] = {
-    val p = new org.apache.hadoop.fs.Path(dir, MetaName)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val raw = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      def num(name: String): Option[Long] = s""""$name"\\s*:\\s*(\\d+)""".r
-        .findFirstMatchIn(raw).map(_.group(1).toLong)
-      val buckets = num("n0").map(n0 => BucketedState.Buckets(n0.toInt,
-          num("level").getOrElse(0L).toInt, num("split").getOrElse(0L).toInt))
-        .orElse(num("numBuckets").map(n => BucketedState.Buckets(n.toInt)))
-      val cols = """"columns"\s*:\s*\[(.*?)\]""".r.findFirstMatchIn(raw)
-        .map(_.group(1).split(",").map(_.trim.stripPrefix("\"")
-          .stripSuffix("\"")).filter(_.nonEmpty).toSeq)
-      // typed schema, base64 of StructType.json — base64 keeps the
-      // regex-parsed meta file free of nested quotes/braces. Any parse
-      // failure degrades to None (mergeSchema fallback), never an error.
-      val schema = """"schemaB64"\s*:\s*"([A-Za-z0-9+/=]*)"""".r
-        .findFirstMatchIn(raw).map(_.group(1)).flatMap { b64 =>
-          scala.util.Try {
-            org.apache.spark.sql.types.DataType.fromJson(new String(
-              java.util.Base64.getDecoder.decode(b64), "UTF-8"))
-              .asInstanceOf[org.apache.spark.sql.types.StructType]
-          }.toOption
-        }
-      buckets.map(StateMeta(_, num("bytes"), cols.getOrElse(Nil), schema))
-    }
-  }
-
-  /** The meta's file text. The meta is a sidecar of the bucket swap:
-    * staged beside the rewritten buckets and moved in last, so it is
-    * never overwritten in place. */
-  private def metaJson(meta: StateMeta): String = {
-    val schemaField = meta.schema.map { s =>
-      s""","schemaB64":"${java.util.Base64.getEncoder
-        .encodeToString(s.json.getBytes("UTF-8"))}""""
-    }.getOrElse("")
-    val b = meta.buckets
-    s"""{"numBuckets":${b.count},"n0":${b.n0},"level":${b.level},""" +
-      s""""split":${b.split},"bytes":${meta.bytes.getOrElse(0L)},"columns":[""" +
-      meta.columns.map("\"" + _ + "\"").mkString(",") + s"]$schemaField}"
-  }
-
-  /** Buckets may sit at different drift generations (lazy migration), so
-    * a state read must union their schemas, not inherit whichever file
-    * the reader samples first. With the meta's typed union schema that
-    * union is known: reads pass it and skip the footer-inference
-    * mergeSchema job (lagging buckets surface null for columns they
-    * predate either way, see [[StateMeta]]); a meta without one falls
-    * back to mergeSchema. */
-  private def stateReader(meta: Option[StateMeta])
-      (r: org.apache.spark.sql.DataFrameReader) =
-    meta.flatMap(_.schema).fold(r.option("mergeSchema", "true"))(r.schema)
-
   /** Read the merged state back without the layout's bucket column.
     * Schema-merging: under lazy DDL migration bucket dirs may sit at
-    * different drift generations; the union schema surfaces null for
-    * columns a lagging bucket predates. Throws on a half-swapped state
-    * dir, naming the paths ([[BucketedState.requireSettled]]). */
+    * different drift generations; the union schema (the meta's, or
+    * mergeSchema on an older meta) surfaces null for columns a lagging
+    * bucket predates. Throws on a half-swapped state dir, naming the
+    * paths ([[BucketedState.requireSettled]]). */
   def readState(spark: SparkSession, stateDir: String): DataFrame =
-    BucketedState.read(spark, stateDir, Writer,
-      stateReader(readMeta(BucketedState.fsOf(spark, stateDir), stateDir)))
+    BucketedState.read(spark, stateDir, Writer)
 
   /** Point lookup: compute the key's bucket on the DRIVER
     * ([[BucketedState.bucketOfKey]], the twin of the layout's hash) and
@@ -151,7 +73,7 @@ object CdcStream {
     require(pks.length == key.length, "one value per key column")
     val fs = BucketedState.fsOf(spark, stateDir)
     BucketedState.requireSettled(fs, stateDir, Writer)
-    val buckets = readMeta(fs, stateDir).map(_.buckets).getOrElse(
+    val buckets = BucketedState.layout(fs, stateDir).getOrElse(
       throw new IllegalArgumentException(s"$stateDir is not a bucketed state"))
     val dir = BucketedState.bucketDir(stateDir, BucketedState.bucketOfKey(key, buckets))
     // an absent bucket dir means no rows hash there: an empty result in
@@ -195,18 +117,10 @@ object CdcStream {
     * pkg/sink_factory/sink_factory.go:100-133 middleware ordering,
     * Collapse before write change_item_collapse.go:48).
     *
-    * Bucket count: the meta's layout, else `numBuckets`, else a new
-    * state gets one bucket per shuffle partition, or one per
-    * `spark.sql.files.maxPartitionBytes` of the plan's size estimate of
-    * what its first batch writes when that is more (one per shuffle
-    * partition when the estimate is unknown). The state then grows by
-    * linear hashing ([[BucketedState.Buckets]]): the meta keeps the
-    * buckets' data bytes, and once they pass `maxPartitionBytes` per
-    * bucket, a batch splits the bucket at the split pointer into two in
-    * its own children swap, with the meta moved last and no extra Spark
-    * job; a batch splits at most one bucket. Both settings are Spark's
-    * own, read from the session; the reference likewise sizes snapshot
-    * parts from table size (sharding_storage.go `DesiredTableSize`).
+    * Bucket count: [[BucketedState.write]] sizes a new state from this
+    * first batch (plus a legacy flat state), one bucket per shuffle
+    * partition or more, and grows it by linear hashing, one bucket split
+    * per batch at most, in the batch's own swap and with no extra job.
     *
     * Schema drift (DDL adding columns, change_item.go DDL kinds) migrates
     * LAZILY, per bucket: a drifting batch rewrites only the buckets its
@@ -229,8 +143,7 @@ object CdcStream {
     * logical union across drifts. A legacy flat-layout dir is still
     * migrated whole on first contact (its layout, not just its
     * schema, changes). */
-  def mergeBatch(batch0: DataFrame, stateDir: String, pks: Seq[String],
-                 numBuckets: Option[Int] = None): Unit = {
+  def mergeBatch(batch0: DataFrame, stateDir: String, pks: Seq[String]): Unit = {
     // with no key, every row would hash to one bucket and the
     // last-write-wins would keep one row per bucket
     require(pks.nonEmpty, s"mergeBatch into $stateDir needs at least one primary key")
@@ -238,46 +151,13 @@ object CdcStream {
     val batch =
       if (batch0.columns.contains(E.Kind)) batch0
       else E.fromSnapshot(batch0, lit(0L))
-    val spark = batch.sparkSession
-    val fs = BucketedState.fsOf(spark, stateDir)
-    val root = new org.apache.hadoop.fs.Path(stateDir)
-    val bak = new org.apache.hadoop.fs.Path(stateDir + ".bak")
-    // a .bak without a swap manifest that holds flat part-* files is an
-    // interrupted legacy migration in the older layout: it does not
-    // name the bucket dirs already moved in, and all of them are
-    // replay debris (the flat snapshot is the pre-batch state)
-    if (Swap.unlisted(fs, bak) && fs.listStatus(bak)
-        .exists(_.getPath.getName.startsWith("part-")))
-      fs.listStatus(root).filter(_.getPath.getName.startsWith(BucketedState.BucketCol))
-        .foreach(st => fs.delete(st.getPath, true))
-    // a swap that died mid-flight never reached the checkpoint, so its
-    // batch replays: recovery restores the pre-batch buckets and meta
-    // (or finishes a committed teardown) before anything is read
-    BucketedState.recover(spark, stateDir)
-    val meta = readMeta(fs, stateDir)
-
-    // legacy flat layout: state exists but predates the bucketed meta —
-    // the only full migration left (the LAYOUT changes, not just the
-    // schema; DDL drift migrates lazily per touched bucket instead).
-    // A legacy dir is read whole, and its flat files are swapped out
-    val flat =
-      if (meta.isEmpty && fs.exists(root) && fs.listStatus(root).exists(s =>
-          s.isFile && s.getPath.getName.startsWith("part-")))
-        Some(spark.read.parquet(stateDir))
-      else None
-    val target = spark.sessionState.conf.filesMaxPartitionBytes
-    val buckets = meta.map(_.buckets).orElse(numBuckets.map(BucketedState.Buckets(_)))
-      .getOrElse(BucketedState.Buckets(initialBuckets(batch0 +: flat.toSeq, target)))
-    val bytes = meta.flatMap(_.bytes).getOrElse(BucketedState.sizeOf(fs, stateDir))
-
     // the batch's raw row events, projected to data columns + ordering:
     // the probe whose keys name the touched buckets AND the new side of
     // the one last-write-wins below (read back from the probe's cache)
     val rows = batch.filter(E.isRowEvent(col(E.Kind)))
     val events = rows.select(
       (E.dataCols(rows) ++ Seq(E.Kind, E.Lsn, E.Counter)).map(col): _*)
-    BucketedState.rewrite(stateDir, pks, buckets, events, stateReader(meta),
-        flat = flat, grow = bytes / buckets.count > target) { (existing, layout) =>
+    BucketedState.write(stateDir, pks, events, sizing = batch0) { (existing, layout) =>
       // current state re-enters as older-than-everything inserts.
       // unionByName with allowMissingColumns absorbs mid-stream schema
       // drift (DDL adding/dropping columns): new columns backfill null
@@ -292,47 +172,9 @@ object CdcStream {
           .unionByName(events, allowMissingColumns = true))), layout.groupCols)
       // union of old-state and new-batch data columns (schema drift)
       val outCols = E.dataCols(merged).filterNot(_ == BucketedState.BucketCol)
-      val out = merged.filter(col(E.Kind) =!= E.Delete)
+      merged.filter(col(E.Kind) =!= E.Delete)
         .select((BucketedState.BucketCol +: outCols).map(col): _*)
-
-      // the meta column set is the LOGICAL union across drifts: untouched
-      // buckets may lag it on disk until a batch touches them
-      val prevCols = meta.map(_.columns).getOrElse(Nil)
-      val logicalCols = prevCols ++ outCols.filterNot(prevCols.contains)
-      // typed union schema: this write's data schema wins for the columns
-      // it carries (it already absorbed every affected bucket's drift via
-      // the schema-union read above); columns only the previous meta's
-      // schema knew — dropped by DDL but still present in lagging buckets
-      // — are retained so reads keep surfacing them as null
-      val outSchema = outCols.map(out.schema(_).copy(nullable = true))
-      val names = outSchema.map(_.name).toSet
-      val unionSchema = org.apache.spark.sql.types.StructType(outSchema ++
-        meta.flatMap(_.schema).toSeq.flatMap(_.fields.filterNot(f => names(f.name))))
-      // bake the schema only when it covers every logical column: a
-      // previous meta without one cannot say what a drift column living
-      // only in untouched buckets looks like, and baking a partial schema
-      // would hide that column from every later read — stay on mergeSchema
-      val typed = Some(unionSchema)
-        .filter(u => logicalCols.forall(u.fieldNames.toSet))
-      // a drift batch also replaces the root's schema summary, so a plain
-      // parquet read of the root infers every column, not one bucket's
-      BucketedState.Rewrite(out, added => Seq(MetaName -> Some(metaJson(
-        StateMeta(layout.buckets, Some(bytes + added), logicalCols, typed)))),
-        summary = Some(unionSchema).filter(_ => meta.exists(_.columns != logicalCols)))
     }
-  }
-
-  /** The base bucket count of a new state: one per shuffle partition, so
-    * each write task gets one bucket, or one per `target` bytes of the
-    * plans' size estimates when that is more. A plan Spark cannot bound
-    * (its estimate is the default size) counts as unknown. */
-  private def initialBuckets(first: Seq[DataFrame], target: Long): Int = {
-    val conf = first.head.sparkSession.sessionState.conf
-    val sizes = first.map(_.queryExecution.optimizedPlan.stats.sizeInBytes)
-    val perTarget =
-      if (sizes.exists(_ >= conf.defaultSizeInBytes)) BigInt(0)
-      else (sizes.sum + target - 1) / target
-    math.max(conf.numShufflePartitions, perTarget.min(Int.MaxValue).toInt)
   }
 
   /** The state directory of table `table` under `baseDir`: table names

@@ -43,9 +43,6 @@ class RegistrySpec extends SparkSpec {
     val out = Seq("hello").toDF("s")
       .select(Hashing.hex8ToLong(col("s"))).as[Long].head()
     assert(out == 1564557354L) // md5("hello") = 5d41402a...
-    val buckets = graft.Tables.load(spark, sf(), "region")
-      .select(Hashing.stableBucket(col("r_name"), 4)).as[Long].collect()
-    assert(buckets.forall(b => b >= 0 && b < 4))
     // seeded variants differ
     val s1 = Seq("x").toDF("s").select(Hashing.seeded(col("s"), 1)).as[Long].head()
     val s2 = Seq("x").toDF("s").select(Hashing.seeded(col("s"), 2)).as[Long].head()

@@ -30,6 +30,11 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
+  /** `body` with `n` shuffle partitions: a bucketed state that `body`
+    * creates starts with `n` buckets when its first batch is small. */
+  def withPartitions[A](n: Int)(body: => A): A =
+    withConf("spark.sql.shuffle.partitions", n.toString)(body)
+
   override def afterAll(): Unit =
     try tempDirs.synchronized(tempDirs.foreach(SparkSpec.deleteTree))
     finally super.afterAll()

@@ -88,7 +88,7 @@ class RollupSpec extends SparkSpec {
         when(col("ag") =!= "", img(col("ag"), col("av"))).as("after"))
     val q = stream.writeStream
       .foreachBatch { (b: DataFrame, id: Long) =>
-        Rollup.fold(spark, statePath, Rollup.retractions(b),
+        Rollup.foldBucketed(spark, statePath, Rollup.retractions(b),
           Seq("grp"), Seq("v"), batchId = id); ()
       }
       .option("checkpointLocation", root + "/ckpt")
@@ -98,12 +98,12 @@ class RollupSpec extends SparkSpec {
         (E.Insert, 2L, "", 0L, "a", 20L),
         (E.Insert, 3L, "", 0L, "b", 5L))
       q.processAllAvailable()
-      assert(collectState(spark.read.parquet(statePath)) ==
+      assert(collectState(Rollup.readBucketed(spark, statePath)) ==
         Set(("a", 2L, 30L), ("b", 1L, 5L)))
       mem.addData((E.Update, 4L, "a", 10L, "a", 11L),
         (E.Delete, 5L, "b", 5L, "", 0L))
       q.processAllAvailable()
-      assert(collectState(spark.read.parquet(statePath)) ==
+      assert(collectState(Rollup.readBucketed(spark, statePath)) ==
         Set(("a", 2L, 31L)))
     } finally q.stop()
   }
@@ -112,16 +112,16 @@ class RollupSpec extends SparkSpec {
     val root = tempDir("graft_rollup_rep")
     val statePath = root + "/state"
     val b1 = change(E.Insert, 1, nullImg, img(lit("a"), lit(10L)))
-    Rollup.fold(spark, statePath, Rollup.retractions(b1),
+    Rollup.foldBucketed(spark, statePath, Rollup.retractions(b1),
       Seq("grp"), Seq("v"), batchId = 0L)
     // replay of batch 0 (crash after swap, before checkpoint commit):
     // must be a no-op, not a double fold
-    val replayed = Rollup.fold(spark, statePath, Rollup.retractions(b1),
+    val replayed = Rollup.foldBucketed(spark, statePath, Rollup.retractions(b1),
       Seq("grp"), Seq("v"), batchId = 0L)
     assert(collectState(replayed) == Set(("a", 1L, 10L)))
     // the next batch id folds normally
     val b2 = change(E.Insert, 2, nullImg, img(lit("a"), lit(5L)))
-    val st = Rollup.fold(spark, statePath, Rollup.retractions(b2),
+    val st = Rollup.foldBucketed(spark, statePath, Rollup.retractions(b2),
       Seq("grp"), Seq("v"), batchId = 1L)
     assert(collectState(st) == Set(("a", 2L, 15L)))
   }
@@ -130,16 +130,19 @@ class RollupSpec extends SparkSpec {
     val root = tempDir("graft_rollup_bak")
     val statePath = root + "/state"
     val b1 = change(E.Insert, 1, nullImg, img(lit("a"), lit(10L)))
-    Rollup.fold(spark, statePath, Rollup.retractions(b1),
+    Rollup.foldBucketed(spark, statePath, Rollup.retractions(b1),
       Seq("grp"), Seq("v"))
-    // simulate a crash between the two swap moves: live went to .bak,
-    // the new state never arrived
+    // simulate a crash between the two halves of the swap: every live
+    // child (buckets and meta) went to .bak, the new state never arrived
     val fs = new org.apache.hadoop.fs.Path(statePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.rename(new org.apache.hadoop.fs.Path(statePath),
-      new org.apache.hadoop.fs.Path(statePath + ".bak"))
+    val bak = new org.apache.hadoop.fs.Path(statePath + ".bak")
+    fs.mkdirs(bak)
+    fs.listStatus(new org.apache.hadoop.fs.Path(statePath)).map(_.getPath)
+      .filterNot(_.getName.startsWith("."))
+      .foreach(p => fs.rename(p, new org.apache.hadoop.fs.Path(bak, p.getName)))
     val b2 = change(E.Insert, 2, nullImg, img(lit("a"), lit(5L)))
-    val st = Rollup.fold(spark, statePath, Rollup.retractions(b2),
+    val st = Rollup.foldBucketed(spark, statePath, Rollup.retractions(b2),
       Seq("grp"), Seq("v"))
     assert(collectState(st) == Set(("a", 2L, 15L)))
   }
@@ -299,6 +302,15 @@ class RollupSpec extends SparkSpec {
   private def jvmBucket(key: String, n: Int): Long =
     math.floorMod(graft.functions.Hashing.hex8ToLongJvm(key), n.toLong)
 
+  /** The bucketed state's commit record: layout, bytes and batch id. */
+  private val Meta = "_graft_meta.json"
+
+  private def readBytes(fs: org.apache.hadoop.fs.FileSystem,
+                        p: org.apache.hadoop.fs.Path): Array[Byte] = {
+    val in = fs.open(p)
+    try in.readAllBytes() finally in.close()
+  }
+
   test("bucketed fold rewrites ONLY the buckets its batch touches") {
     val root = tempDir("graft_rollup_bk")
     val statePath = root + "/state"
@@ -311,8 +323,8 @@ class RollupSpec extends SparkSpec {
     val boot = groups.zipWithIndex.map { case (g, i) =>
       change(E.Insert, i.toLong, nullImg, img(lit(g), lit(10L * (i + 1))))
     }.reduce(_ union _)
-    Rollup.foldBucketed(spark, statePath, Rollup.retractions(boot),
-      Seq("grp"), Seq("v"), numBuckets = n, batchId = 0L)
+    withPartitions(n)(Rollup.foldBucketed(spark, statePath,
+      Rollup.retractions(boot), Seq("grp"), Seq("v"), batchId = 0L))
     assert(collectState(Rollup.readBucketed(spark, statePath)) ==
       groups.zipWithIndex.map { case (g, i) => (g, 1L, 10L * (i + 1)) }.toSet)
 
@@ -325,7 +337,7 @@ class RollupSpec extends SparkSpec {
     val touched = s"__bucket=${jvmBucket("a", n)}"
     val b2 = change(E.Insert, 100L, nullImg, img(lit("a"), lit(7L)))
     Rollup.foldBucketed(spark, statePath, Rollup.retractions(b2),
-      Seq("grp"), Seq("v"), numBuckets = n, batchId = 1L)
+      Seq("grp"), Seq("v"), batchId = 1L)
     val after = mtimes()
     for ((dir, t0) <- before if dir != touched)
       assert(after(dir) == t0, s"untouched bucket $dir was rewritten")
@@ -336,7 +348,7 @@ class RollupSpec extends SparkSpec {
 
     // replay of batch 1 must be a no-op, not a double fold
     Rollup.foldBucketed(spark, statePath, Rollup.retractions(b2),
-      Seq("grp"), Seq("v"), numBuckets = n, batchId = 1L)
+      Seq("grp"), Seq("v"), batchId = 1L)
     assert(collectState(Rollup.readBucketed(spark, statePath)) == st)
   }
 
@@ -347,22 +359,22 @@ class RollupSpec extends SparkSpec {
     val fs = new org.apache.hadoop.fs.Path(statePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val b1 = change(E.Insert, 1, nullImg, img(lit("a"), lit(10L)))
-    Rollup.foldBucketed(spark, statePath, Rollup.retractions(b1),
-      Seq("grp"), Seq("v"), numBuckets = n, batchId = 0L)
-    // simulate a crash mid-swap: a's bucket and the marker moved to
+    withPartitions(n)(Rollup.foldBucketed(spark, statePath,
+      Rollup.retractions(b1), Seq("grp"), Seq("v"), batchId = 0L))
+    // simulate a crash mid-swap: a's bucket and the meta moved to
     // .bak, nothing new moved in
     val bkt = s"__bucket=${jvmBucket("a", n)}"
     val bak = new org.apache.hadoop.fs.Path(statePath + ".bak")
     fs.mkdirs(bak)
     fs.rename(new org.apache.hadoop.fs.Path(statePath, bkt),
       new org.apache.hadoop.fs.Path(bak, bkt))
-    fs.rename(new org.apache.hadoop.fs.Path(statePath, "_graft_batch"),
-      new org.apache.hadoop.fs.Path(bak, "_graft_batch"))
+    fs.rename(new org.apache.hadoop.fs.Path(statePath, Meta),
+      new org.apache.hadoop.fs.Path(bak, Meta))
     // the batch never committed, so it replays: recovery must restore
-    // the pre-fold state (incl. marker for batch 0) and fold ONCE
+    // the pre-fold state (incl. the meta of batch 0) and fold ONCE
     val b2 = change(E.Insert, 2, nullImg, img(lit("a"), lit(5L)))
     val st = Rollup.foldBucketed(spark, statePath, Rollup.retractions(b2),
-      Seq("grp"), Seq("v"), numBuckets = n, batchId = 1L)
+      Seq("grp"), Seq("v"), batchId = 1L)
     assert(collectState(st) == Set(("a", 2L, 15L)))
   }
 
@@ -378,24 +390,25 @@ class RollupSpec extends SparkSpec {
     val zKey = Iterator.from(0).map(i => s"z$i")
       .find(k => jvmBucket(k, n) != jvmBucket("a", n)).get
     val b1 = change(E.Insert, 1, nullImg, img(lit("a"), lit(10L)))
-    Rollup.foldBucketed(spark, statePath, Rollup.retractions(b1),
-      Seq("grp"), Seq("v"), numBuckets = n, batchId = 0L)
+    withPartitions(n)(Rollup.foldBucketed(spark, statePath,
+      Rollup.retractions(b1), Seq("grp"), Seq("v"), batchId = 0L))
+    val meta0 = readBytes(fs, new org.apache.hadoop.fs.Path(statePath, Meta))
     val b2 = change(E.Insert, 2, nullImg, img(lit(zKey), lit(5L)))
     Rollup.foldBucketed(spark, statePath, Rollup.retractions(b2),
-      Seq("grp"), Seq("v"), numBuckets = n, batchId = 1L)
+      Seq("grp"), Seq("v"), batchId = 1L)
     // rewind into the crash window: the fresh bucket is already folded
-    // into the root, but the pre-fold marker (batch 0) rode into .bak
-    // with the fresh-item manifest and the post-fold marker was never
-    // written
+    // into the root, but the pre-fold meta (batch 0) rode into .bak
+    // with the fresh-item manifest and the post-fold meta was never
+    // moved in
     val zBkt = s"__bucket=${jvmBucket(zKey, n)}"
     val bak = new org.apache.hadoop.fs.Path(statePath + ".bak")
     fs.mkdirs(bak)
-    fs.delete(new org.apache.hadoop.fs.Path(statePath, "_graft_batch"), false)
-    val mo = fs.create(new org.apache.hadoop.fs.Path(bak, "_graft_batch"))
-    try mo.write("0".getBytes("UTF-8")) finally mo.close()
+    fs.delete(new org.apache.hadoop.fs.Path(statePath, Meta), false)
+    val mo = fs.create(new org.apache.hadoop.fs.Path(bak, Meta))
+    try mo.write(meta0) finally mo.close()
     // manifest as the interrupted fold (batch 1) would have written it:
     // its batch id in the header, the fresh bucket, the terminator. The
-    // root marker is gone (crash before the post-fold marker write), so
+    // root meta is gone (crash before the post-fold meta moved in), so
     // recovery must take the rollback path, not the resume-teardown one.
     val fo = fs.create(new org.apache.hadoop.fs.Path(bak, "_graft_fresh"))
     try fo.write(s"batch=1\n$zBkt\n#end".getBytes("UTF-8"))
@@ -403,17 +416,17 @@ class RollupSpec extends SparkSpec {
     // replay of batch 1: recovery must DELETE the folded fresh bucket
     // (it has no .bak counterpart) before restoring, then fold once
     val st = Rollup.foldBucketed(spark, statePath, Rollup.retractions(b2),
-      Seq("grp"), Seq("v"), numBuckets = n, batchId = 1L)
+      Seq("grp"), Seq("v"), batchId = 1L)
     assert(collectState(st) == Set(("a", 1L, 10L), (zKey, 1L, 5L)))
   }
 
   test("committed fold with a half-torn .bak resumes teardown instead " +
       "of rolling back") {
     // the data-loss window the manifest header closes: the post-fold
-    // marker committed, then the .bak teardown crashed after the bucket
+    // meta committed, then the .bak teardown crashed after the bucket
     // backups were gone but while the fresh manifest survived. A naive
     // rollback would delete the committed fresh bucket (irrestorable)
-    // and keep the post-fold marker, so the replay is skipped and the
+    // and keep the post-fold meta, so the replay is skipped and the
     // fresh key's data silently lost.
     val root = tempDir("graft_rollup_bkt")
     val statePath = root + "/state"
@@ -423,12 +436,12 @@ class RollupSpec extends SparkSpec {
     val zKey = Iterator.from(0).map(i => s"z$i")
       .find(k => jvmBucket(k, n) != jvmBucket("a", n)).get
     val b1 = change(E.Insert, 1, nullImg, img(lit("a"), lit(10L)))
-    Rollup.foldBucketed(spark, statePath, Rollup.retractions(b1),
-      Seq("grp"), Seq("v"), numBuckets = n, batchId = 0L)
+    withPartitions(n)(Rollup.foldBucketed(spark, statePath,
+      Rollup.retractions(b1), Seq("grp"), Seq("v"), batchId = 0L))
     val b2 = change(E.Insert, 2, nullImg, img(lit(zKey), lit(5L)))
     Rollup.foldBucketed(spark, statePath, Rollup.retractions(b2),
-      Seq("grp"), Seq("v"), numBuckets = n, batchId = 1L)
-    // root is fully post-fold (marker=1); .bak holds ONLY the live
+      Seq("grp"), Seq("v"), batchId = 1L)
+    // root is fully post-fold (meta batch 1); .bak holds ONLY the live
     // manifest of batch 1 — its backups already torn down
     val bak = new org.apache.hadoop.fs.Path(statePath + ".bak")
     fs.mkdirs(bak)
@@ -437,7 +450,7 @@ class RollupSpec extends SparkSpec {
     try fo.write(s"batch=1\n$zBkt\n#end".getBytes("UTF-8"))
     finally fo.close()
     val st = Rollup.foldBucketed(spark, statePath, Rollup.retractions(b2),
-      Seq("grp"), Seq("v"), numBuckets = n, batchId = 1L)
+      Seq("grp"), Seq("v"), batchId = 1L)
     assert(collectState(st) == Set(("a", 1L, 10L), (zKey, 1L, 5L)))
     assert(!fs.exists(bak), ".bak teardown resumed")
   }
@@ -445,7 +458,7 @@ class RollupSpec extends SparkSpec {
   test("UNMARKED committed fold with a half-torn .bak resumes teardown " +
       "via the commit sentinel") {
     // with batchId = -1 the manifest header (batch=-1) can never match a
-    // root marker, so the id-based commit check alone would roll back a
+    // root meta's batch, so the id-based commit check alone would roll back a
     // committed-but-half-torn .bak, deleting the committed fresh bucket
     // it can no longer restore. The _graft_done sentinel (stamped at the
     // commit point, deleted last) is what recovery must key on.
@@ -457,12 +470,13 @@ class RollupSpec extends SparkSpec {
     val zKey = Iterator.from(0).map(i => s"z$i")
       .find(k => jvmBucket(k, n) != jvmBucket("a", n)).get
     val b1 = change(E.Insert, 1, nullImg, img(lit("a"), lit(10L)))
-    Rollup.foldBucketed(spark, statePath, Rollup.retractions(b1),
-      Seq("grp"), Seq("v"), numBuckets = n)
+    withPartitions(n)(Rollup.foldBucketed(spark, statePath,
+      Rollup.retractions(b1), Seq("grp"), Seq("v")))
     val b2 = change(E.Insert, 2, nullImg, img(lit(zKey), lit(5L)))
     Rollup.foldBucketed(spark, statePath, Rollup.retractions(b2),
-      Seq("grp"), Seq("v"), numBuckets = n)
-    // root is fully post-fold (no marker — unmarked folds write none);
+      Seq("grp"), Seq("v"))
+    // root is fully post-fold (its meta records no batch: the folds are
+    // unnumbered);
     // .bak holds the live manifest AND the commit sentinel, its bucket
     // backups already torn down
     val bak = new org.apache.hadoop.fs.Path(statePath + ".bak")
@@ -476,7 +490,7 @@ class RollupSpec extends SparkSpec {
     // bucket has no backup, rollback would delete it permanently
     val b3 = change(E.Insert, 3, nullImg, img(lit("a"), lit(1L)))
     val st = Rollup.foldBucketed(spark, statePath, Rollup.retractions(b3),
-      Seq("grp"), Seq("v"), numBuckets = n)
+      Seq("grp"), Seq("v"))
     assert(collectState(st) == Set(("a", 2L, 11L), (zKey, 1L, 5L)))
     assert(!fs.exists(bak), ".bak teardown resumed")
   }
@@ -486,17 +500,16 @@ class RollupSpec extends SparkSpec {
     val root = tempDir("graft_rollup_bke")
     val statePath = root + "/state"
     val b1 = change(E.Insert, 1, nullImg, img(lit("a"), lit(10L)))
-    Rollup.foldBucketed(spark, statePath, Rollup.retractions(b1),
-      Seq("grp"), Seq("v"), numBuckets = 4, batchId = 0L)
+    withPartitions(4)(Rollup.foldBucketed(spark, statePath,
+      Rollup.retractions(b1), Seq("grp"), Seq("v"), batchId = 0L))
     val b2 = change(E.Delete, 2, img(lit("a"), lit(10L)), nullImg)
     val st = Rollup.foldBucketed(spark, statePath, Rollup.retractions(b2),
-      Seq("grp"), Seq("v"), numBuckets = 4, batchId = 1L)
+      Seq("grp"), Seq("v"), batchId = 1L)
     assert(st.count() == 0)
     assert(st.columns.toSeq == Seq("grp", "n_rows", "sum_v"))
     // and the replay (same batch id) still short-circuits to empty
     val replay = Rollup.foldBucketed(spark, statePath,
-      Rollup.retractions(b2), Seq("grp"), Seq("v"),
-      numBuckets = 4, batchId = 1L)
+      Rollup.retractions(b2), Seq("grp"), Seq("v"), batchId = 1L)
     assert(replay.count() == 0)
   }
 
@@ -513,9 +526,8 @@ class RollupSpec extends SparkSpec {
       lit(null).cast("struct<grp:string,v:bigint>").as("before"),
       struct(col("grp"), col("v")).as("after"),
       lit(E.Insert).as(E.Kind), col("v").as(E.Lsn), lit(0).as(E.Counter))
-    Rollup.foldBucketedWithExtrema(spark, statePath,
-      Rollup.retractions(boot), base0, Seq("grp"), Seq("v"),
-      numBuckets = n, batchId = 0L)
+    withPartitions(n)(Rollup.foldBucketedWithExtrema(spark, statePath,
+      Rollup.retractions(boot), base0, Seq("grp"), Seq("v"), batchId = 0L))
     val mtimes0 = fs.listStatus(new org.apache.hadoop.fs.Path(statePath))
       .filter(_.getPath.getName.startsWith("__bucket="))
       .map(st => st.getPath.getName -> st.getModificationTime).toMap
@@ -528,8 +540,7 @@ class RollupSpec extends SparkSpec {
       .unionByName(Seq(("g1", 2L)).toDF("grp", "v"))
     Thread.sleep(1100) // local-FS mtime granularity
     val st = Rollup.foldBucketedWithExtrema(spark, statePath,
-      Rollup.retractions(b1), base1, Seq("grp"), Seq("v"),
-      numBuckets = n, batchId = 1L)
+      Rollup.retractions(b1), base1, Seq("grp"), Seq("v"), batchId = 1L)
 
     val expect = Rollup.initWithExtrema(base1, Seq("grp"), Seq("v"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
@@ -549,11 +560,104 @@ class RollupSpec extends SparkSpec {
 
     // replay of batch 1 is detected and skipped
     val replay = Rollup.foldBucketedWithExtrema(spark, statePath,
-      Rollup.retractions(b1), base1, Seq("grp"), Seq("v"),
-      numBuckets = n, batchId = 1L)
+      Rollup.retractions(b1), base1, Seq("grp"), Seq("v"), batchId = 1L)
     assert(replay.select("grp", "n_rows", "sum_v", "min_v", "max_v")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4))).toSet == expect)
+  }
+
+  /** Inserts of the ids `from until until`, each in group
+    * `g<id mod groups>` with value `id`. */
+  private def inserts(from: Long, until: Long, groups: Int): DataFrame =
+    spark.range(from, until).select(
+      lit(null).cast("struct<grp:string,v:bigint>").as("before"),
+      struct(concat(lit("g"), (col("id") % groups).cast("string")).as("grp"),
+        col("id").as("v")).as("after"),
+      lit(E.Insert).as(E.Kind), col("id").as(E.Lsn), lit(0).as(E.Counter))
+
+  private def layoutOf(statePath: String): Option[graft.sinks.BucketedState.Buckets] =
+    graft.sinks.BucketedState.layout(graft.sinks.BucketedState.fsOf(spark, statePath),
+      statePath)
+
+  test("a fold keeps the bucket count its meta records: one row per group " +
+      "under another shuffle partition count") {
+    // a count passed per call used to split groups: a state folded into
+    // 16 buckets and then into 64 kept 26 of 40 groups twice
+    val statePath = tempDir("graft_rollup_cnt") + "/state"
+    withPartitions(16)(Rollup.foldBucketed(spark, statePath,
+      Rollup.retractions(inserts(0, 400, 40)), Seq("grp"), Seq("v"), batchId = 0L))
+    val st = withPartitions(4)(Rollup.foldBucketed(spark, statePath,
+      Rollup.retractions(inserts(400, 460, 40)), Seq("grp"), Seq("v"), batchId = 1L))
+    assert(layoutOf(statePath).contains(graft.sinks.BucketedState.Buckets(16)))
+    val rows = st.select("grp").as[String].collect()
+    assert(rows.length == 40 && rows.distinct.length == 40)
+    assert(collectState(st) == collectState(Rollup.init(
+      spark.range(0, 460).select(concat(lit("g"), (col("id") % 40).cast("string"))
+        .as("grp"), col("id").as("v")), Seq("grp"), Seq("v"))))
+  }
+
+  test("a bucketed rollup root without a meta is refused, naming the root") {
+    // the layout of a fold that recorded only its batch id: bucket dirs
+    // and a `_graft_batch` file, no bucket count
+    val statePath = tempDir("graft_rollup_nometa") + "/state"
+    Rollup.foldBucketed(spark, statePath, Rollup.retractions(inserts(0, 40, 10)),
+      Seq("grp"), Seq("v"), batchId = 0L)
+    val fs = graft.sinks.BucketedState.fsOf(spark, statePath)
+    fs.delete(new org.apache.hadoop.fs.Path(statePath, Meta), false)
+    val mo = fs.create(new org.apache.hadoop.fs.Path(statePath, "_graft_batch"))
+    try mo.write("0".getBytes("UTF-8")) finally mo.close()
+    for (fold <- Seq[() => Any](
+        () => Rollup.foldBucketed(spark, statePath,
+          Rollup.retractions(inserts(40, 50, 10)), Seq("grp"), Seq("v"), batchId = 1L),
+        () => Rollup.foldBucketedWithExtrema(spark, statePath,
+          Rollup.retractions(inserts(40, 50, 10)), spark.range(0).select(
+            lit("g").as("grp"), col("id").as("v")), Seq("grp"), Seq("v")))) {
+      val e = intercept[IllegalStateException](fold())
+      assert(e.getMessage.contains(statePath), e.getMessage)
+    }
+  }
+
+  test("a fold past maxPartitionBytes per bucket splits one bucket, plain " +
+      "and with extrema, and equals recompute") {
+    for (extrema <- Seq(false, true)) {
+      val statePath = tempDir("graft_rollup_split") + "/state"
+      // id -> (group, value); every change below keeps it current
+      val live = scala.collection.mutable.Map[Long, (String, Long)]()
+      def liveDf = live.values.toSeq.toDF("grp", "v")
+      def fold(ch: DataFrame, id: Long): DataFrame =
+        if (extrema) Rollup.foldBucketedWithExtrema(spark, statePath,
+          Rollup.retractions(ch), liveDf, Seq("grp"), Seq("v"), batchId = id)
+        else Rollup.foldBucketed(spark, statePath, Rollup.retractions(ch),
+          Seq("grp"), Seq("v"), batchId = id)
+      (0L until 200L).foreach(i => live(i) = (s"g${i % 40}", i))
+      withPartitions(4)(fold(inserts(0, 200, 40), 0L))
+      assert(layoutOf(statePath).map(_.count).contains(4))
+      withConf("spark.sql.files.maxPartitionBytes", "64") {
+        for (b <- 1 to 3) {
+          // 10 new rows, and deletes of 10 rows that include each touched
+          // group's current maximum
+          val added = (1000L * b until 1000L * b + 10).map(i => i -> (s"g${i % 40}", i))
+          val dropped = live.keys.toSeq.sorted.takeRight(10)
+          val ops: Seq[(String, Option[(String, Long)], Option[(String, Long)])] =
+            dropped.map(i => (E.Delete, live.get(i), None)) ++
+              added.map { case (_, r) => (E.Insert, None, Some(r)) }
+          dropped.foreach(live.remove)
+          live ++= added
+          val ch = ops.zipWithIndex.map { case ((k, bi, ai), i) =>
+            (k, bi.map(_._1), bi.map(_._2), ai.map(_._1), ai.map(_._2), i.toLong)
+          }.toDF("k", "bg", "bv", "ag", "av", "lsn").select(
+            when(col("bg").isNotNull, img(col("bg"), col("bv"))).as("before"),
+            when(col("ag").isNotNull, img(col("ag"), col("av"))).as("after"),
+            col("k").as(E.Kind), col("lsn").as(E.Lsn), lit(0).as(E.Counter))
+          val st = fold(ch, b.toLong)
+          assert(layoutOf(statePath).map(_.count).contains(4 + b), s"extrema=$extrema batch $b")
+          if (extrema) assert(collectExt(st) ==
+            collectExt(Rollup.initWithExtrema(liveDf, Seq("grp"), Seq("v"))), s"batch $b")
+          else assert(collectState(st) ==
+            collectState(Rollup.init(liveDf, Seq("grp"), Seq("v"))), s"batch $b")
+        }
+      }
+    }
   }
 
   test("readBucketed pre-bootstrap: empty with a schema, loud without") {

@@ -24,7 +24,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * set (one pass over the batch's row events, which also builds their
   * cache), the shuffle of the one Exchange, and the write. The write
   * plan keeps the newest row per key in one Sort and a
-  * `WindowGroupLimit` after that Exchange, with no aggregate. The rollup fold, 5: its probe is the batch's
+  * `WindowGroupLimit` after that Exchange, with no aggregate. The rollup
+  * fold, 5, also when it splits a bucket: its probe is the batch's
   * delta, so the delta's aggregate shuffle and, under adaptive execution,
   * the build of its cache run as jobs of their own ahead of the touched
   * set. Both reads of a rollup state pass its schema, so no footer is
@@ -92,12 +93,15 @@ class BucketedJobBudgetSpec extends SparkSpec {
       lit(kind).as(E.Kind), col("id").as(E.Lsn), lit(0).as(E.Counter)))
 
   private def fold(state: String, batch: DataFrame, id: Long): Unit =
-    Rollup.foldBucketed(spark, state, batch, Seq("grp"), Seq("v"),
-      numBuckets = 8, batchId = id)
+    Rollup.foldBucketed(spark, state, batch, Seq("grp"), Seq("v"), batchId = id)
+
+  /** The 8-bucket bootstrap of the CDC merge cases. */
+  private def bootstrap(state: String): Unit =
+    withPartitions(8)(CdcStream.mergeBatch(snapshot, state, Seq("id")))
 
   test("CDC merge batch job budget: post-bootstrap 3") {
     val state = dir("mergejobs")
-    val jobs = budget(CdcStream.mergeBatch(snapshot, state, Seq("id"), numBuckets = Some(8))) {
+    val jobs = budget(bootstrap(state)) {
       CdcStream.mergeBatch(events, state, Seq("id"))
     }
     assert(jobs.size == 3, JobBudget.breakdown(jobs))
@@ -114,7 +118,7 @@ class BucketedJobBudgetSpec extends SparkSpec {
 
   test("CDC merge batch that splits a bucket: still 3 jobs") {
     val state = dir("splitjobs")
-    val jobs = budget(CdcStream.mergeBatch(snapshot, state, Seq("id"), numBuckets = Some(8))) {
+    val jobs = budget(bootstrap(state)) {
       splitting(CdcStream.mergeBatch(events, state, Seq("id")))
     }
     assert(bucketCount(state) == 9)
@@ -125,7 +129,7 @@ class BucketedJobBudgetSpec extends SparkSpec {
     "with and without a split") {
     for (split <- Seq(false, true)) {
       val merge = dir(s"mergesort$split")
-      CdcStream.mergeBatch(snapshot, merge, Seq("id"), numBuckets = Some(8))
+      bootstrap(merge)
       val plans = writePlans(
         if (split) splitting(CdcStream.mergeBatch(events, merge, Seq("id")))
         else CdcStream.mergeBatch(events, merge, Seq("id")))
@@ -146,9 +150,19 @@ class BucketedJobBudgetSpec extends SparkSpec {
     assert(jobs.size == 5, JobBudget.breakdown(jobs))
   }
 
+  test("bucketed rollup fold that splits a bucket: still 5 jobs") {
+    val state = dir("foldsplitjobs")
+    val jobs = budget(fold(state, changes(0, 400, E.Insert), 0L)) {
+      splitting(fold(state, changes(400, 460, E.Insert), 1L))
+    }
+    assert(BucketedState.layout(BucketedState.fsOf(spark, state), state).map(_.count)
+      .contains(5))
+    assert(jobs.size == 5, JobBudget.breakdown(jobs))
+  }
+
   test("one Exchange in the write plan of a CDC merge batch and a rollup fold") {
     val merge = dir("mergeplan")
-    CdcStream.mergeBatch(snapshot, merge, Seq("id"), numBuckets = Some(8))
+    bootstrap(merge)
     val mergeWrites = writePlans(CdcStream.mergeBatch(events, merge, Seq("id")))
     val fst = dir("foldplan")
     fold(fst, changes(0, 400, E.Insert), 0L)

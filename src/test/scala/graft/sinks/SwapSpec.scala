@@ -187,12 +187,11 @@ class SwapSpec extends graft.SparkSpec {
   // ---------------- set of children ----------------
 
   private val Meta = "_graft_meta.json"
-  private val Marker = "_graft_batch"
 
   /** `layout`: "buckets" (replaced, removed, fresh and untouched
     * buckets plus the meta), "legacy" (flat part files moved aside and
-    * replaced by nothing), "bootstrap" (no root), "marked" (a batch
-    * marker swapped last, committed by the id check). */
+    * replaced by nothing), "bootstrap" (no root), "marked" (a meta that
+    * records the batch id, swapped last, committed by the id check). */
   private def childrenCase(layout: String): () => Case = () => {
     val d = newDir()
     val root = new Path(d.toURI.toString, "state")
@@ -201,22 +200,22 @@ class SwapSpec extends graft.SparkSpec {
     def b(i: Int) = s"__bucket=$i"
     val names = layout match {
       case "legacy" => Seq("part-0", "part-1", b(0), b(1), Meta)
-      case "marked" => Seq(b(1), b(2), b(4), Marker)
       case _ => Seq(b(1), b(2), b(4), Meta)
     }
     val batch = if (layout == "marked") 7L else -1L
-    def markerBatch(fs: FileSystem): Option[Long] = {
-      val p = new Path(root, Marker)
+    def metaBatch(fs: FileSystem): Option[Long] = {
+      val p = new Path(root, Meta)
       if (!fs.exists(p)) None
       else {
         val in = fs.open(p)
-        try Some(new String(in.readAllBytes(), UTF_8).trim.toLong)
+        try "\"batch\":(\\d+)".r.findFirstMatchIn(new String(in.readAllBytes(), UTF_8))
+          .map(_.group(1).toLong)
         finally in.close()
       }
     }
     def recover(fs: FileSystem): Unit =
       Swap.recoverChildren(fs, root, tmp, bak,
-        committed = id => id >= 0 && markerBatch(fs).contains(id))
+        committed = id => id >= 0 && metaBatch(fs).contains(id))
     def protocol(fs: FileSystem): Unit = {
       recover(fs)
       layout match {
@@ -228,8 +227,8 @@ class SwapSpec extends graft.SparkSpec {
           // b(2) is removed: staged as nothing
           put(fs, new Path(tmp, s"${b(1)}/part-a"), "new-1")
           put(fs, new Path(tmp, s"${b(4)}/part-a"), "new-4")
-          put(fs, new Path(tmp, if (layout == "marked") Marker else Meta),
-            if (layout == "marked") "7" else "meta-2")
+          put(fs, new Path(tmp, Meta),
+            if (layout == "marked") """{"batch":7}""" else "meta-2")
       }
       Swap.installChildren(fs, root, tmp, bak, names, batch)
     }
@@ -242,8 +241,8 @@ class SwapSpec extends graft.SparkSpec {
         case _ =>
           Seq(0, 1, 2, 3).foreach(i =>
             put(fs, new Path(root, s"${b(i)}/part-a"), s"old-$i"))
-          if (layout == "marked") put(fs, new Path(root, Marker), "6")
-          else put(fs, new Path(root, Meta), "meta-1")
+          put(fs, new Path(root, Meta),
+            if (layout == "marked") """{"batch":6}""" else "meta-1")
       },
       run = protocol,
       recover = recover,
@@ -256,7 +255,7 @@ class SwapSpec extends graft.SparkSpec {
   test("children swap: every crash point recovers to before or after") {
     for (l <- childLayouts)
       crashSweep(childrenCase(l), _.indexWhere(op =>
-        if (l == "marked") op.startsWith("rename ") && op.endsWith(s"state/$Marker")
+        if (l == "marked") op.startsWith("rename ") && op.endsWith(s"state/$Meta")
         else op.startsWith("create") && op.endsWith("_graft_done")))
   }
 
@@ -264,44 +263,28 @@ class SwapSpec extends graft.SparkSpec {
     for (l <- childLayouts) falseRenameSweep(childrenCase(l))
   }
 
-  // ---------------- a CDC merge batch, end to end ----------------
+  // ---------------- a bucketed-state batch, end to end ----------------
 
-  /** A CDC merge batch into a 4-bucket state, crashed at every swap step
-    * and replayed; with `split`, the session's per-bucket target is just
-    * below the pre-batch state's bytes per bucket, so the batch also
-    * splits bucket 0 into buckets 0 and 4, and a replay after the split
-    * committed (5 buckets, under the target) splits none. The split state
-    * holds enough keys that rows, not each file's fixed overhead, make
-    * its bytes. */
-  private def crashReplay(split: Boolean): Unit = {
+  /** One batch of a real [[BucketedState]] writer into a 4-bucket state,
+    * crashed at every swap step and replayed. `boot` makes the pre-batch
+    * state at a root, `batch` runs the batch at a root, and `read` reads
+    * a state back: the uncrashed batch and every replay must read as
+    * `expected`, with its buckets and no sidecar. With `split`, the
+    * session's per-bucket target is just below the pre-batch state's
+    * bytes per bucket, so the batch also splits bucket 0 into buckets 0
+    * and 4. */
+  private def crashReplay[S](split: Boolean, expected: S)(boot: String => Unit)(
+      batch: String => Unit)(read: String => S): Unit = {
     val spark = graft.SparkSpec.session
-    import spark.implicits._
-    import graft.model.{CdcEnvelope => E}
-    import graft.streaming.CdcStream
     spark.sparkContext.hadoopConfiguration.set("fs.crashy.impl", classOf[CrashyFs].getName)
-    val expected = mutable.Map[Long, String]()
-    val keys = if (split) 4000L else 80L
-    (0L until keys).foreach(k => expected(k) = s"v$k")
-    // updates, deletes, new keys and repeated keys, over all 4 buckets
-    val events = (1 to 60).map { i =>
-      val k = (i * 7 % 100).toLong
-      val kind = if (i % 6 == 0) E.Delete
-        else if (expected.contains(k)) E.Update else E.Insert
-      if (kind == E.Delete) expected.remove(k) else expected(k) = s"w$i"
-      (k, if (kind == E.Delete) null else s"w$i", kind, i.toLong)
-    }
-    val batch = events.toDF("id", "v", E.Kind, E.Lsn).withColumn(E.Counter, org.apache.spark.sql.functions.lit(0))
     val pre = newDir()
-    CdcStream.mergeBatch(spark.range(0, keys).selectExpr("id", "concat('v', id) AS v"),
-      new File(pre, "state").toString, Seq("id"), numBuckets = Some(4))
+    withPartitions(4)(boot(new File(pre, "state").toString))
     /** A copy of the pre-batch state, under the crashy scheme. */
     def fresh(): (File, String) = {
       val d = newDir()
       org.apache.commons.io.FileUtils.copyDirectory(new File(pre, "state"), new File(d, "state"))
       (d, s"crashy://${d.getAbsolutePath}/state")
     }
-    def state(root: String) = CdcStream.readState(spark, root).select("id", "v")
-      .as[(Long, String)].collect().toMap
     def buckets(d: File) = new File(d, "state").listFiles().map(_.getName)
       .filter(_.startsWith("__bucket=")).toSet
     val want = (0 until (if (split) 5 else 4)).map(b => s"__bucket=$b").toSet
@@ -312,33 +295,87 @@ class SwapSpec extends graft.SparkSpec {
         .toString
     withConf("spark.sql.files.maxPartitionBytes", target) {
       val (refDir, ref) = fresh()
-      val steps = CrashyFs.run(ref, Int.MaxValue)(CdcStream.mergeBatch(batch, ref, Seq("id")))
-      assert(state(ref) == expected.toMap)
+      val steps = CrashyFs.run(ref, Int.MaxValue)(batch(ref))
+      assert(read(ref) == expected)
       assert(buckets(refDir) == want)
       assert(steps.size > 10 && steps.exists(_.endsWith("_graft_done")), steps.mkString("\n"))
       for (k <- 1 to steps.size) {
         val (d, root) = fresh()
         val where = s"crash at step $k (${steps(k - 1)})"
-        val err = intercept[Throwable](
-          CrashyFs.run(root, k)(CdcStream.mergeBatch(batch, root, Seq("id"))))
+        val err = intercept[Throwable](CrashyFs.run(root, k)(batch(root)))
         assert(Iterator.iterate(err)(_.getCause).takeWhile(_ != null)
           .exists(_.isInstanceOf[Crash]), s"$where: $err")
         // the batch never reached the checkpoint, so it replays
-        CdcStream.mergeBatch(batch, root, Seq("id"))
-        assert(state(root) == expected.toMap, s"$where: replay diverged")
+        batch(root)
+        assert(read(root) == expected, s"$where: replay diverged")
         assert(buckets(d) == want, s"$where: ${buckets(d)}")
         assert(!new File(d, "state.bak").exists() && !new File(d, "state.tmp").exists(), where)
       }
     }
   }
 
+  /** A CDC merge batch: updates, deletes, new keys and repeated keys over
+    * all 4 buckets. The split state holds enough keys that rows, not each
+    * file's fixed overhead, make its bytes, so a replay after the split
+    * committed (5 buckets, under the target) splits none. */
+  private def mergeCrashReplay(split: Boolean): Unit = {
+    val spark = graft.SparkSpec.session
+    import spark.implicits._
+    import graft.model.{CdcEnvelope => E}
+    import graft.streaming.CdcStream
+    val expected = mutable.Map[Long, String]()
+    val keys = if (split) 4000L else 80L
+    (0L until keys).foreach(k => expected(k) = s"v$k")
+    val events = (1 to 60).map { i =>
+      val k = (i * 7 % 100).toLong
+      val kind = if (i % 6 == 0) E.Delete
+        else if (expected.contains(k)) E.Update else E.Insert
+      if (kind == E.Delete) expected.remove(k) else expected(k) = s"w$i"
+      (k, if (kind == E.Delete) null else s"w$i", kind, i.toLong)
+    }
+    val batch = events.toDF("id", "v", E.Kind, E.Lsn).withColumn(E.Counter, org.apache.spark.sql.functions.lit(0))
+    crashReplay(split, expected.toMap)(root => CdcStream.mergeBatch(
+      spark.range(0, keys).selectExpr("id", "concat('v', id) AS v"), root, Seq("id")))(
+      root => CdcStream.mergeBatch(batch, root, Seq("id")))(
+      root => CdcStream.readState(spark, root).select("id", "v").as[(Long, String)].collect().toMap)
+  }
+
   test("a CDC merge batch replayed after a crash at every swap step converges") {
-    crashReplay(split = false)
+    mergeCrashReplay(split = false)
   }
 
   test("a CDC merge batch that splits a bucket, replayed after a crash at " +
     "every swap step, converges") {
-    crashReplay(split = true)
+    mergeCrashReplay(split = true)
+  }
+
+  test("a bucketed rollup fold with a batch id, replayed after a crash at " +
+    "every swap step, folds once, with and without a split") {
+    val spark = graft.SparkSpec.session
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    import graft.model.{CdcEnvelope => E}
+    import graft.operators.Rollup
+    // 400 rows over 40 groups; the batch inserts 60 rows and deletes 40
+    val row = struct(concat(lit("g"), (col("id") % 40).cast("string")).as("grp"),
+      col("id").as("v"))
+    val none = lit(null).cast("struct<grp:string,v:bigint>")
+    def changes(ids: org.apache.spark.sql.Dataset[_], kind: String) = Rollup.retractions(
+      ids.select((if (kind == E.Delete) row else none).as("before"),
+        (if (kind == E.Delete) none else row).as("after"),
+        lit(kind).as(E.Kind), col("id").as(E.Lsn), lit(0).as(E.Counter)))
+    val deleted = col("id") < 400 && col("id") % 10 === 3
+    val batch = changes(spark.range(400, 460), E.Insert)
+      .unionByName(changes(spark.range(0, 400).filter(deleted), E.Delete))
+    def collected(df: org.apache.spark.sql.DataFrame) =
+      df.select("grp", "n_rows", "sum_v").as[(String, Long, Long)].collect().toSet
+    val expected = collected(Rollup.init(spark.range(0, 460).filter(!deleted)
+      .select(row.getField("grp").as("grp"), col("id").as("v")), Seq("grp"), Seq("v")))
+    for (split <- Seq(false, true))
+      crashReplay(split, expected)(root => Rollup.foldBucketed(spark, root,
+        changes(spark.range(0, 400), E.Insert), Seq("grp"), Seq("v"), batchId = 0L))(
+        root => Rollup.foldBucketed(spark, root, batch, Seq("grp"), Seq("v"), batchId = 1L))(
+        root => collected(Rollup.readBucketed(spark, root)))
   }
 
   // ---------------- small file ----------------

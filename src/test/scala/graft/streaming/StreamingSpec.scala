@@ -56,7 +56,7 @@ class StreamingSpec extends SparkSpec {
     // 1000-key snapshot spread over all 32 buckets
     val snap = spark.range(0, 1000)
       .select(col("id"), concat(lit("v"), col("id")).as("v"))
-    CdcStream.mergeBatch(snap, state, Seq("id"), numBuckets = Some(32))
+    withPartitions(32)(CdcStream.mergeBatch(snap, state, Seq("id")))
     def listing(): Map[String, Set[(String, Long, Long)]] = {
       val root = java.nio.file.Paths.get(state)
       import scala.jdk.CollectionConverters._
@@ -105,8 +105,7 @@ class StreamingSpec extends SparkSpec {
           case (k, _, "delete", _) => table.remove(k)
           case (k, v, _, _) => table(k) = v
         }
-        CdcStream.mergeBatch(batch(events: _*), state, Seq("id"),
-          numBuckets = Some(8))
+        withPartitions(8)(CdcStream.mergeBatch(batch(events: _*), state, Seq("id")))
       }
       val got = CdcStream.readState(spark, state)
         .select("id", "v").as[(Long, String)].collect().toMap
@@ -118,7 +117,7 @@ class StreamingSpec extends SparkSpec {
     val state = tmp() + "/tl"
     val snap = spark.range(0, 500)
       .select(col("id"), concat(lit("v"), col("id")).as("v"))
-    CdcStream.mergeBatch(snap, state, Seq("id"), numBuckets = Some(16))
+    withPartitions(16)(CdcStream.mergeBatch(snap, state, Seq("id")))
     val hit = CdcStream.lookup(spark, state, Seq("id"), Seq(42L))
     assert(hit.select("v").as[String].collect().toSeq == Seq("v42"))
     // the plan touches exactly one bucket dir's files
@@ -136,7 +135,7 @@ class StreamingSpec extends SparkSpec {
     val snap = spark.range(0, 100).select(
       col("id"), (col("id") % 7).as("k2"),
       concat(lit("v"), col("id")).as("v"))
-    CdcStream.mergeBatch(snap, state, Seq("id", "k2"), numBuckets = Some(8))
+    withPartitions(8)(CdcStream.mergeBatch(snap, state, Seq("id", "k2")))
     val hit = CdcStream.lookup(spark, state, Seq("id", "k2"), Seq(13L, 6L))
     assert(hit.select("v").as[String].collect().toSeq == Seq("v13"))
     // key rendering ambiguity check: ("1","23") must not alias ("12","3")
@@ -148,7 +147,7 @@ class StreamingSpec extends SparkSpec {
     val state = tmp() + "/tc"
     val snap = spark.range(0, 200)
       .select(col("id"), concat(lit("v"), col("id")).as("v"))
-    CdcStream.mergeBatch(snap, state, Seq("id"), numBuckets = Some(8))
+    withPartitions(8)(CdcStream.mergeBatch(snap, state, Seq("id")))
     // simulate a swap that died between backup and move-in: one live
     // bucket sits in .bak, missing from the state dir
     val root = java.nio.file.Paths.get(state)
@@ -202,7 +201,7 @@ class StreamingSpec extends SparkSpec {
         "meta live" -> (bs => bs.filter(_.getFileName.toString == key5) ++
           bs.find(_.getFileName.toString != key5)))) {
       val state = tmp() + "/th"
-      CdcStream.mergeBatch(snap, state, Seq("id"), numBuckets = Some(n))
+      withPartitions(n)(CdcStream.mergeBatch(snap, state, Seq("id")))
       crash(state)(moved)
       refused(state, "mergeBatch")(
         s"$label readState" -> (() => CdcStream.readState(spark, state)),
@@ -216,7 +215,7 @@ class StreamingSpec extends SparkSpec {
     }
 
     // the bucketed rollup shares the layout and the reader: a fold that
-    // died with two buckets in .bak and its batch marker still live
+    // died with two buckets in .bak and its meta still live
     val rollup = tmp() + "/rh"
     val changes = spark.range(0, 40).select(
       lit(null).cast("struct<grp:string,v:bigint>").as("before"),
@@ -224,14 +223,14 @@ class StreamingSpec extends SparkSpec {
         col("id").as("v")).as("after"),
       lit(E.Insert).as(E.Kind), col("id").as(E.Lsn), lit(0).as(E.Counter))
     val retr = graft.operators.Rollup.retractions(changes)
-    graft.operators.Rollup.foldBucketed(spark, rollup, retr, Seq("grp"),
-      Seq("v"), numBuckets = n, batchId = 0L)
+    withPartitions(n)(graft.operators.Rollup.foldBucketed(spark, rollup, retr,
+      Seq("grp"), Seq("v"), batchId = 0L))
     crash(rollup)(_.take(2))
     refused(rollup, "foldBucketed")(
       "readBucketed" -> (() => graft.operators.Rollup.readBucketed(spark, rollup)))
     // the replay of batch 0 recovers the state and is skipped
     val st = graft.operators.Rollup.foldBucketed(spark, rollup, retr,
-      Seq("grp"), Seq("v"), numBuckets = n, batchId = 0L)
+      Seq("grp"), Seq("v"), batchId = 0L)
     assert(st.count() == 10 && st.agg(sum("n_rows")).head().getLong(0) == 40L)
   }
 
@@ -276,9 +275,9 @@ class StreamingSpec extends SparkSpec {
     }
     // the migration batch: every bucket counts as touched, the flat state
     // is read whole, and it goes through the same clustered merge
-    CdcStream.mergeBatch(events(1, drift = false).map(e => (e._1, e._2, e._4, e._5))
-      .toDF("id", "v", E.Kind, E.Lsn).withColumn(E.Counter, lit(0)),
-      state, Seq("id"), numBuckets = Some(8))
+    withPartitions(8)(CdcStream.mergeBatch(events(1, drift = false)
+      .map(e => (e._1, e._2, e._4, e._5))
+      .toDF("id", "v", E.Kind, E.Lsn).withColumn(E.Counter, lit(0)), state, Seq("id")))
     assert(!new java.io.File(state).listFiles().exists(_.getName.startsWith("part-")))
     check("legacy migration")
     // DDL drift: a column the state has never seen, on some keys only
@@ -321,7 +320,7 @@ class StreamingSpec extends SparkSpec {
     val snap = Seq((Option(1L), "a"), (Option(2L), "b"),
       (None: Option[Long], "nullkey"))
       .toDF("id", "v")
-    CdcStream.mergeBatch(snap, state, Seq("id"), numBuckets = Some(16))
+    withPartitions(16)(CdcStream.mergeBatch(snap, state, Seq("id")))
     assert(CdcStream.readState(spark, state).count() == 3)
     // the null-keyed row is findable: lookup probes the bucket the row
     // actually landed in (concat_ws would have dropped the null)
@@ -333,11 +332,9 @@ class StreamingSpec extends SparkSpec {
 
   test("mergeBatch pins numBuckets from the state meta across batches") {
     val state = tmp() + "/tm"
-    CdcStream.mergeBatch(batch((1L, "a", "insert", 0L)), state, Seq("id"),
-      numBuckets = Some(4))
-    // later caller passes a different numBuckets: the meta wins
-    CdcStream.mergeBatch(batch((2L, "b", "insert", 1L)), state, Seq("id"),
-      numBuckets = Some(64))
+    withPartitions(4)(CdcStream.mergeBatch(batch((1L, "a", "insert", 0L)), state, Seq("id")))
+    // a later batch under another shuffle partition count: the meta wins
+    withPartitions(64)(CdcStream.mergeBatch(batch((2L, "b", "insert", 1L)), state, Seq("id")))
     val dirs = new java.io.File(state).listFiles()
       .filter(_.getName.startsWith(BucketedState.BucketCol))
       .map(_.getName).toSeq
@@ -365,10 +362,10 @@ class StreamingSpec extends SparkSpec {
     "only in untouched buckets") {
     val state = tmp() + "/tw"
     val n = 8
-    CdcStream.mergeBatch(
+    withPartitions(n)(CdcStream.mergeBatch(
       spark.range(0, 100)
         .select(col("id"), concat(lit("v"), col("id")).as("v")),
-      state, Seq("id"), numBuckets = Some(n))
+      state, Seq("id")))
     def bucket(id: Long): Int = spark.range(id, id + 1)
       .select(BucketedState.bucketOf(Seq("id"), Buckets(n))).first().getInt(0)
     // drift column w arrives on key 5 only, so only its bucket holds it
@@ -395,10 +392,10 @@ class StreamingSpec extends SparkSpec {
     "rewritten, untouched bucket files byte-identical") {
     val state = tmp() + "/tl"
     // 1000-key snapshot spread over all 32 buckets
-    CdcStream.mergeBatch(
+    withPartitions(32)(CdcStream.mergeBatch(
       spark.range(0, 1000)
         .select(col("id"), concat(lit("v"), col("id")).as("v")),
-      state, Seq("id"), numBuckets = Some(32))
+      state, Seq("id")))
     def listing(): Map[String, Set[(String, Long, Long)]] = {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.list(java.nio.file.Paths.get(state))
@@ -491,9 +488,9 @@ class StreamingSpec extends SparkSpec {
     val state = tmp() + "/tsplit"
     val table = scala.collection.mutable.Map[Long, String]()
     (0L until 200L).foreach(k => table(k) = s"v$k")
-    CdcStream.mergeBatch(spark.range(0, 200)
+    withPartitions(2)(CdcStream.mergeBatch(spark.range(0, 200)
       .select(col("id"), concat(lit("v"), col("id")).as("v")),
-      state, Seq("id"), numBuckets = Some(2))
+      state, Seq("id")))
     assert(bucketIds(state) == Set(0, 1))
     val rnd = new scala.util.Random(20261019)
     var lsn = 0L
@@ -556,9 +553,9 @@ class StreamingSpec extends SparkSpec {
   test("a legacy 32-bucket meta keeps 32 buckets, and its untouched " +
     "buckets stay byte-identical") {
     val state = tmp() + "/tleg"
-    CdcStream.mergeBatch(spark.range(0, 1000)
+    withPartitions(32)(CdcStream.mergeBatch(spark.range(0, 1000)
       .select(col("id"), concat(lit("v"), col("id")).as("v")),
-      state, Seq("id"), numBuckets = Some(32))
+      state, Seq("id")))
     // the meta as written before the layout fields and the byte count
     val meta = java.nio.file.Paths.get(state, "_graft_meta.json")
     Files.writeString(meta, Files.readString(meta)
