@@ -10,7 +10,14 @@ import org.apache.spark.sql.SparkSession
   *     part sizing, sharding_storage.go DesiredTableSize);
   *   - AQE coalescing + skew-join handling (≙ salting for hot keys);
   *   - UTC session time, nanos-as-long for ns parquet, engine SQL
-  *     functions registered.
+  *     functions registered;
+  *   - `file:` paths through a local filesystem that forks no `chmod`
+  *     or `readlink` child, on both Hadoop entry points:
+  *     `fs.file.impl` ([[graft.sinks.NioLocalFileSystem]], the
+  *     `FileSystem` data files are written through) and
+  *     `fs.AbstractFileSystem.file.impl` ([[graft.sinks.NioLocalFs]],
+  *     the `FileContext` streaming checkpoint logs and state stores are
+  *     written through).
   *
   * `spark.sql.shuffle.partitions` stays a small explicit number in
   * local mode; under AQE it is only the pre-coalesce upper bound, and a
@@ -38,9 +45,11 @@ object GraftSession {
       // storage dominates.
       .config("spark.sql.parquet.compression.codec", "lz4")
       .config("spark.ui.enabled", "false")
-      // `file:` paths set each new file's and directory's mode in-process
-      // instead of forking `chmod` (graft.sinks.NioLocalFileSystem)
+      // `file:` without `chmod` or `readlink` children, through both
+      // `FileSystem` (data files) and `FileContext` (streaming checkpoints)
       .config("spark.hadoop.fs.file.impl", classOf[graft.sinks.NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.sinks.NioLocalFs].getName)
 
   /** Streaming state off-heap — apply to a builder for any deployment
     * whose stateful streams outgrow executor heap: the default

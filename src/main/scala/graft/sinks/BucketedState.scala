@@ -3,10 +3,11 @@ package graft.sinks
 import graft.functions.Hashing
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.column.ParquetProperties
-import org.apache.parquet.hadoop.{ParquetFileWriter, ParquetWriter}
-import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader, ParquetFileWriter, ParquetWriter}
+import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.spark.sql.{Column, DataFrame, DataFrameReader, SparkSession}
-import org.apache.spark.sql.execution.datasources.parquet.SparkToParquetSchemaConverter
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetToSparkSchemaConverter, SparkToParquetSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.storage.StorageLevel
@@ -235,6 +236,23 @@ object BucketedState {
       ParquetProperties.builder().build())
     w.start()
     w.end(java.util.Map.of("org.apache.spark.sql.parquet.row.metadata", schema.json))
+  }
+
+  /** One bucket dir read with the schema in the footer of its data file,
+    * or None when it has none. A bucket dir is written whole by one task,
+    * so its files share one schema: the one `spark.read.parquet(dir)`
+    * infers, read here on the driver instead of in the Spark job that
+    * inference runs. */
+  def readBucket(spark: SparkSession, fs: FileSystem, dir: Path): Option[DataFrame] = {
+    val data = if (!fs.exists(dir)) None else fs.listStatus(dir).find(st =>
+      st.isFile && !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith("."))
+    data.map { st =>
+      val in = ParquetFileReader.open(HadoopInputFile.fromStatus(st, spark.sessionState.newHadoopConf()))
+      val footer = try in.getFooter finally in.close()
+      val schema = ParquetFileFormat.readSchemaFromFooter(new Footer(st.getPath, footer),
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+      spark.read.schema(schema).parquet(dir.toString)
+    }
   }
 
   /** The distinct bucket ids of `probe`'s keys, in one job and no

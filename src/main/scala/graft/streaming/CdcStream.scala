@@ -67,7 +67,9 @@ object CdcStream {
     * generation (a bucket dir is always internally homogeneous —
     * rewrites replace it whole); a lagging bucket simply lacks columns
     * it predates, the same contract as a pre-drift read of the whole
-    * state. Throws on a half-swapped state dir, as [[readState]] does. */
+    * state. That schema is read from the bucket's footer on the driver,
+    * so the lookup's collect is its only Spark job. Throws on a
+    * half-swapped state dir, as [[readState]] does. */
   def lookup(spark: SparkSession, stateDir: String, pks: Seq[String],
              key: Seq[Any]): DataFrame = {
     require(pks.length == key.length, "one value per key column")
@@ -76,11 +78,10 @@ object CdcStream {
     val buckets = BucketedState.layout(fs, stateDir).getOrElse(
       throw new IllegalArgumentException(s"$stateDir is not a bucketed state"))
     val dir = BucketedState.bucketDir(stateDir, BucketedState.bucketOfKey(key, buckets))
-    // an absent bucket dir means no rows hash there: an empty result in
-    // the state schema, not an error
-    val df =
-      if (fs.exists(dir)) spark.read.parquet(dir.toString)
-      else readState(spark, stateDir).limit(0)
+    // a bucket dir that is absent or holds no data file means no rows hash
+    // there: an empty result in the state schema, not an error
+    val df = BucketedState.readBucket(spark, fs, dir)
+      .getOrElse(readState(spark, stateDir).limit(0))
     // null-safe equality: a null key value must MATCH null cells, not
     // filter everything (=== with null is null)
     pks.zip(key).foldLeft(df) { case (d, (k, v)) => d.filter(col(k) <=> lit(v)) }

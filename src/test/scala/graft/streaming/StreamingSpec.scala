@@ -143,6 +143,29 @@ class StreamingSpec extends SparkSpec {
     assert(miss.count() == 0)
   }
 
+  test("lookup job budget: 1, the collect; a lagging bucket lacks the drift " +
+    "columns it predates") {
+    val state = tmp() + "/tj"
+    val n = 8
+    withPartitions(n)(CdcStream.mergeBatch(spark.range(0, 200)
+      .select(col("id"), concat(lit("v"), col("id")).as("v")), state, Seq("id")))
+    // drift column w arrives on key 5 only, so only its bucket holds it
+    CdcStream.mergeBatch(Seq((5L, "v5b", 55L)).toDF("id", "v", "w")
+      .withColumn(E.Kind, lit("update")).withColumn(E.Lsn, lit(1L))
+      .withColumn(E.Counter, lit(0)), state, Seq("id"))
+    val lagging = (6L until 200L).find(k =>
+      BucketedState.bucketOfKey(Seq(k), Buckets(n)) !=
+        BucketedState.bucketOfKey(Seq(5L), Buckets(n))).get
+    for ((key, want) <- Seq(5L -> Seq("id", "v", "w"), lagging -> Seq("id", "v"))) {
+      var rows = Seq.empty[org.apache.spark.sql.Row]
+      val jobs = graft.JobBudget.jobsOf(spark) {
+        rows = CdcStream.lookup(spark, state, Seq("id"), Seq(key)).collect().toSeq
+      }
+      assert(jobs.size == 1, s"key $key:" + graft.JobBudget.breakdown(jobs))
+      assert(rows.size == 1 && rows.head.schema.fieldNames.toSeq == want, s"key $key: $rows")
+    }
+  }
+
   test("mergeBatch recovers a crashed swap from the .bak dir") {
     val state = tmp() + "/tc"
     val snap = spark.range(0, 200)
