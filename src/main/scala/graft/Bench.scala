@@ -82,6 +82,8 @@ object Bench {
     // refuses a verdict on a steal-soaked session but never subtracts
     // it (see ParkMeter's note on heartbeat lag under legitimate load).
     val stealSecs = scala.collection.mutable.Map[String, Double]()
+    // classes compiled, and compile time, in each row's window
+    val codegen = scala.collection.mutable.Map[String, Codegen]()
     // materialize the wire-parse fixture caches BEFORE the timed loop: a
     // regenerated sf dir invalidates their signature and a cold rebuild
     // inside the timed region charges the parse query ~10x its
@@ -102,10 +104,12 @@ object Bench {
               // reset per iteration: the reported busy matches the LAST
               // (reported) run, same convention as the wall time
               streamBusyMs.set(0)
+              val cg0 = Codegen.now()
               val t0 = System.nanoTime()
               fn(spark, sfDir).write.format("noop").mode("overwrite").save()
               winStart = t0
               winEnd = System.nanoTime()
+              codegen(name) = Codegen.now() - cg0
               last = (winEnd - t0) / 1e9
             }
             // park overlap of the LAST (reported) run's window — the
@@ -224,6 +228,9 @@ object Bench {
     val stealJson = stealSecs.toSeq.sortBy(_._1)
       .map { case (k, v) => s""""$k":${r3(v)}""" }.mkString("{", ",", "}")
     val stealInQueries = stealSecs.values.sum
+    val codegenJson = codegen.toSeq.sortBy(_._1).map { case (k, c) =>
+      s""""$k":{"compiles":${c.compiles},"compile_ms":${r3(c.compileMs)}}"""
+    }.mkString("{", ",", "}")
     // digest of the FULL per-query map: the compact
     // printed line deliberately carries only the 5 slowest rows (the
     // driver's ~2 KB tail-capture window), which let a query that got
@@ -236,7 +243,7 @@ object Bench {
     val qDigest = graft.functions.Hashing.hex(java.security.MessageDigest
       .getInstance("MD5")
       .digest(qs.getBytes(java.nio.charset.StandardCharsets.UTF_8))).take(16)
-    val fullJson = s"""{"metric":"total","value":$total,"unit":"sec","value_core":${r3(coreSum)},"value_lifecycle":${r3(lifecycleSum)},"lifecycle":$lifecycleNames,"queries":$qs,"rows":${results.size},"qdigest":"$qDigest","stream_busy":$streamBusyJson,"park_secs":$parkJson,"park_in_queries_secs":${r3(parkInQueries)},"steal_secs":$stealJson,"steal_in_queries_secs":${r3(stealInQueries)},"n_ok":${ok.size},"n_err":$nErr,"transfer_rows_per_sec":${rowsPerSec.round},$transferEvidence,"sf":"$sfDir"}"""
+    val fullJson = s"""{"metric":"total","value":$total,"unit":"sec","value_core":${r3(coreSum)},"value_lifecycle":${r3(lifecycleSum)},"lifecycle":$lifecycleNames,"queries":$qs,"rows":${results.size},"qdigest":"$qDigest","stream_busy":$streamBusyJson,"park_secs":$parkJson,"park_in_queries_secs":${r3(parkInQueries)},"steal_secs":$stealJson,"steal_in_queries_secs":${r3(stealInQueries)},"codegen":$codegenJson,"n_ok":${ok.size},"n_err":$nErr,"transfer_rows_per_sec":${rowsPerSec.round},$transferEvidence,"sf":"$sfDir"}"""
     // The final printed line must fit the driver's ~2 KB tail-capture
     // window: 158 queries x 17-digit doubles is 4.6 KB and arrives
     // decapitated (early bench artifacts read `parsed: null`). Print a

@@ -17,7 +17,31 @@ import org.apache.spark.sql.SparkSession
   *     `FileSystem` data files are written through) and
   *     `fs.AbstractFileSystem.file.impl` ([[graft.sinks.NioLocalFs]],
   *     the `FileContext` streaming checkpoint logs and state stores are
-  *     written through).
+  *     written through);
+  *   - each generated class compiled once per process. Spark caches
+  *     compiled classes by (class loader, source), and three defaults
+  *     defeat that cache (`CodegenOnceSpec` pins all three):
+  *     - `spark.sql.artifact.isolation.enabled=false`: with isolation on,
+  *       each session clone that `persist` makes (`CacheManager` clones
+  *       the session because AQE's bucketed-scan and final-stage shuffle
+  *       options are on by default) runs its jobs in a new executor
+  *       session with a new class loader, so every class compiled there
+  *       is compiled again. One untraced 10 s `index_maintain` benchmark
+  *       run opened 16 executor sessions, now 1. The engine adds no
+  *       session artifacts (no `addArtifact`, no Spark Connect), so
+  *       isolation guards nothing here.
+  *     - `spark.sql.codegen.cache.maxEntries` [[CodegenCacheEntries]]:
+  *       the first standing-index pass of a process (4 arrivals, both
+  *       compactions after every second one) compiles 166 classes, so
+  *       the default 100-entry LRU cache missed on every use: 382
+  *       compiles in a repeated pass.
+  *       The 537-test suite compiles 6,530 distinct classes; 2,000
+  *       holds about ten passes without keeping a whole suite's worth.
+  *     - `spark.sql.codegen.useIdInClassName=false`: the whole-stage
+  *       class name carries the codegen stage id, which AQE assigns in
+  *       the order it plans stages, and that order follows which stages
+  *       finish first. With the id in the name, 3 of 8 repeated passes
+  *       compiled 4 to 10 classes again.
   *
   * `spark.sql.shuffle.partitions` stays a small explicit number in
   * local mode; under AQE it is only the pre-coalesce upper bound, and a
@@ -50,6 +74,13 @@ object GraftSession {
       .config("spark.hadoop.fs.file.impl", classOf[graft.sinks.NioLocalFileSystem].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
         classOf[graft.sinks.NioLocalFs].getName)
+      // each generated class compiled once per process (see above)
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries)
+      .config("spark.sql.codegen.useIdInClassName", "false")
+
+  /** Generated classes Spark's codegen cache keeps, process-wide. */
+  private val CodegenCacheEntries = 2000
 
   /** Streaming state off-heap — apply to a builder for any deployment
     * whose stateful streams outgrow executor heap: the default

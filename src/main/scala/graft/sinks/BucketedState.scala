@@ -1,7 +1,7 @@
 package graft.sinks
 
 import graft.functions.Hashing
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.column.ParquetProperties
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader, ParquetFileWriter, ParquetWriter}
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
@@ -246,13 +246,17 @@ object BucketedState {
   def readBucket(spark: SparkSession, fs: FileSystem, dir: Path): Option[DataFrame] = {
     val data = if (!fs.exists(dir)) None else fs.listStatus(dir).find(st =>
       st.isFile && !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith("."))
-    data.map { st =>
-      val in = ParquetFileReader.open(HadoopInputFile.fromStatus(st, spark.sessionState.newHadoopConf()))
-      val footer = try in.getFooter finally in.close()
-      val schema = ParquetFileFormat.readSchemaFromFooter(new Footer(st.getPath, footer),
-        new ParquetToSparkSchemaConverter(spark.sessionState.conf))
-      spark.read.schema(schema).parquet(dir.toString)
-    }
+    data.map(st => spark.read.schema(footerSchema(spark, st)).parquet(dir.toString))
+  }
+
+  /** The Spark schema in the footer of the parquet file `st`, read on
+    * the driver: what Spark's schema inference derives from that one
+    * footer, without the Spark job inference runs to read it. */
+  def footerSchema(spark: SparkSession, st: FileStatus): StructType = {
+    val in = ParquetFileReader.open(HadoopInputFile.fromStatus(st, spark.sessionState.newHadoopConf()))
+    val footer = try in.getFooter finally in.close()
+    ParquetFileFormat.readSchemaFromFooter(new Footer(st.getPath, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
   }
 
   /** The distinct bucket ids of `probe`'s keys, in one job and no

@@ -4,7 +4,9 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetOptions}
 import org.apache.spark.sql.internal.SessionState
+import org.apache.spark.sql.types.StructType
 
 /** Bridge into Spark's `private[sql]` Column/Expression internals.
   *
@@ -71,10 +73,10 @@ object bridge {
     * `spark.read.parquet` re-listed it for partition discovery — two
     * distributed listing jobs over the same unmutated tree (measured
     * ~0.4 s each on a 250-dir index; at lake scale each is a full
-    * object-store sweep). `read()` infers the schema from the footers
-    * (a Spark job) only when it is called, so a caller can decide from
-    * the files alone. Partition columns are discovered from the
-    * directory layout exactly as `spark.read.parquet` would. */
+    * object-store sweep). `read()` takes the schema from a footer only
+    * when it is called, so a caller can decide from the files alone.
+    * Partition columns are discovered from the directory layout exactly
+    * as `spark.read.parquet` would. */
   final class ParquetListing private[bridge] (
       cs: org.apache.spark.sql.classic.SparkSession,
       idx: org.apache.spark.sql.execution.datasources.InMemoryFileIndex,
@@ -83,13 +85,27 @@ object bridge {
     /** (path, bytes) of every data file (hidden/_ files excluded). */
     val files: Seq[(String, Long)] =
       statuses.map(f => (f.getPath.toString, f.getLen))
+    /** The schema `spark.read.parquet` infers. Without `mergeSchema`
+      * Spark reads one footer, of a summary file if there is one, else
+      * of the first data file by path, and reads it in a Spark job;
+      * that footer is read here on the driver instead. */
+    private def dataSchema(fmt: ParquetFileFormat): StructType = {
+      import org.apache.parquet.hadoop.ParquetFileWriter.{
+        PARQUET_COMMON_METADATA_FILE => Common, PARQUET_METADATA_FILE => Meta}
+      val merge = new ParquetOptions(Map.empty[String, String], cs.sessionState.conf).mergeSchema
+      val leaves = statuses.sortBy(_.getPath.toString)
+      def named(n: String) = leaves.find(_.getPath.getName == n)
+      val footer = if (merge) None else named(Common).orElse(named(Meta))
+        .orElse(leaves.find(f => !Set(Common, Meta)(f.getPath.getName)))
+      footer.map(_root_.graft.sinks.BucketedState.footerSchema(cs, _))
+        .orElse(fmt.inferSchema(cs, Map.empty, statuses))
+        .getOrElse(throw new IllegalArgumentException(
+          s"listParquet: no parquet schema inferable at $path"))
+    }
     def read(): org.apache.spark.sql.DataFrame = {
       import org.apache.spark.sql.execution.datasources._
-      val fmt = new parquet.ParquetFileFormat
-      val dataSchema = fmt.inferSchema(cs, Map.empty, statuses).getOrElse(
-        throw new IllegalArgumentException(
-          s"listParquet: no parquet schema inferable at $path"))
-      val rel = HadoopFsRelation(idx, idx.partitionSchema, dataSchema,
+      val fmt = new ParquetFileFormat
+      val rel = HadoopFsRelation(idx, idx.partitionSchema, dataSchema(fmt),
         bucketSpec = None, fmt, Map.empty)(cs)
       org.apache.spark.sql.classic.Dataset.ofRows(cs, LogicalRelation(rel))
     }

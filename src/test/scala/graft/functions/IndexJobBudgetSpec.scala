@@ -1,16 +1,18 @@
 package graft.functions
 
 import graft.{JobBudget, SparkSpec}
+import graft.sinks.Sinks
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Job budget of one standing-index arrival: the Spark jobs started
   * inside one call of [[Dedup.bandIndexUpdate]] and of
   * [[Dedup.containmentIndexUpdate]], on a new index (bootstrap) and on
-  * one that already holds a batch; and of a compaction with nothing to
-  * merge. Job counts repeat exactly from run to run, so they pin the
-  * per-arrival fixed cost: a plan change that adds a job fails here
-  * before it shows as wall time ([[JobBudget]]). */
+  * one that already holds a batch; and of a compaction that rewrites a
+  * directory and of one with nothing to merge. Job counts repeat
+  * exactly from run to run, so they pin the per-arrival fixed cost: a
+  * plan change that adds a job fails here before it shows as wall time
+  * ([[JobBudget]]). */
 class IndexJobBudgetSpec extends SparkSpec {
 
   private def jobsOf(body: => Unit) = JobBudget.jobsOf(spark)(body)
@@ -44,6 +46,30 @@ class IndexJobBudgetSpec extends SparkSpec {
     }
     assert((boot.size, next.size) == ((11, 14)),
       s"bootstrap: ${breakdown(boot)} || post-bootstrap: ${breakdown(next)}")
+  }
+
+  test("a compaction that rewrites: band 1 job, containment 1 job; the " +
+    "schema comes from a footer read on the driver") {
+    val dir = tempDir("graft_compactjobs")
+    val (band, cont) = (s"$dir/band", s"$dir/cont")
+    val docs = graft.Tables.load(spark, sf(), "documents")
+      .select(col("doc_id"), col("text"))
+    val thirds = (0 until 3).map(m => docs.filter(col("doc_id") % 3 === m))
+    thirds.take(2).foreach { b =>
+      Dedup.bandIndexUpdate(band, b, "text", "doc_id")
+      Dedup.containmentIndexUpdate(cont, b, "text", "doc_id")
+    }
+    var bandStats, contStats: Sinks.CompactionStats = null
+    val bandJobs = jobsOf { bandStats = Dedup.bandIndexCompact(spark, band) }
+    // the first compaction merges both directories of the containment
+    // index; after one more arrival the next merges postings/ alone
+    Dedup.containmentIndexCompact(spark, cont)
+    Dedup.containmentIndexUpdate(cont, thirds(2), "text", "doc_id")
+    val contJobs = jobsOf { contStats = Dedup.containmentIndexCompact(spark, cont) }
+    for (st <- Seq(bandStats, contStats))
+      assert(st.filesBefore > 1 && st.filesAfter == 1, st)
+    assert((bandJobs.size, contJobs.size) == ((1, 1)),
+      s"band: ${breakdown(bandJobs)} || containment: ${breakdown(contJobs)}")
   }
 
   test("a compaction leaves a directory with nothing to merge alone: no " +

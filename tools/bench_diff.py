@@ -23,6 +23,10 @@ stall seconds inside each row's window) — batch rows compare on
 its measured query wall the tool REFUSES the verdict instead of
 flagging rows a stalled host inflated (r16: the driver artifact read
 1.45x the committed anchor purely on parks).
+
+Artifacts that carry a per-row `codegen` map (classes compiled and
+compile ms in the row's window) also get each row's compile-count delta,
+printed exactly, with no threshold.
 """
 import json
 import os
@@ -73,6 +77,26 @@ def load(path):
     # session speed proxy: median transfer time (lower = faster session)
     med = sorted(runs)[len(runs) // 2] if runs else None
     return d, med
+
+
+def codegen_deltas(old, new):
+    """Print each shared row's change in classes compiled, exactly.
+
+    Compile counts repeat from run to run, so unlike wall time they
+    need no noise threshold: every moved row is printed."""
+    oc, nc = old.get("codegen"), new.get("codegen")
+    if oc is None or nc is None:
+        return
+    shared = sorted(set(oc) & set(nc))
+    moved = [(n, oc[n]["compiles"], nc[n]["compiles"]) for n in shared
+             if oc[n]["compiles"] != nc[n]["compiles"]]
+    o_tot = sum(oc[n]["compiles"] for n in shared)
+    n_tot = sum(nc[n]["compiles"] for n in shared)
+    print(f"codegen compiles over {len(shared)} shared rows: "
+          f"old {o_tot} -> new {n_tot} ({n_tot - o_tot:+d}); "
+          f"{len(moved)} row(s) moved")
+    for name, a, b in sorted(moved, key=lambda m: (m[2] - m[1], m[0])):
+        print(f"  {b - a:+6d}  {a:>5d} -> {b:<5d} {name}")
 
 
 def main():
@@ -180,6 +204,7 @@ def main():
             print(f"added rows: {', '.join(added)}")
         if gone:
             print(f"removed rows: {', '.join(gone)}")
+    codegen_deltas(old, new)
     # park coverage gate: when parks ate a large share of a session's
     # measured query wall, per-row park windows are themselves noisy
     # (the heartbeat localizes a stall to ~100ms granularity and cannot
