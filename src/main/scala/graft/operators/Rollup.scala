@@ -287,7 +287,8 @@ object Rollup {
   /** Read a bucketed rollup state without its layout column. Refuses a
     * half-swapped state, naming the paths
     * ([[graft.sinks.BucketedState.requireSettled]]); the next fold
-    * recovers it. `schema`, when given, is the state's post-read shape
+    * recovers it. Refuses a layout the fold does not write, naming the
+    * root or its meta. `schema`, when given, is the state's post-read shape
     * (group keys + n_rows + sum columns); without it the read takes the
     * schema the state's meta records, so neither infers one from a
     * parquet footer (a Spark job per read). An

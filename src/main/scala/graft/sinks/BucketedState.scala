@@ -5,7 +5,7 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.column.ParquetProperties
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader, ParquetFileWriter, ParquetWriter}
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
-import org.apache.spark.sql.{Column, DataFrame, DataFrameReader, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
   ParquetToSparkSchemaConverter, SparkToParquetSchemaConverter}
 import org.apache.spark.sql.functions._
@@ -39,6 +39,9 @@ import org.apache.spark.storage.StorageLevel
   *    batch and swap: [[Buckets]] is the layout's linear hashing;
   *  - [[read]] and [[requireSettled]] serve readers, which never
   *    recover: a root whose swap is not settled is refused.
+  *
+  * Writer and readers take a root only as [[write]] leaves it, and refuse
+  * any other layout they recognise, naming the root or the meta.
   */
 object BucketedState {
 
@@ -114,25 +117,25 @@ object BucketedState {
 
   /** The root's one commit record, `_graft_meta.json`, written by both
     * writers and staged last in every swap: the layout every batch agrees
-    * on, `bytes` (the data bytes of all buckets), the id of the batch
-    * that committed it (-1 for none: the CDC merge, an unnumbered fold),
-    * the logical column set across drifts, and the TYPED union schema.
-    *
-    * `bytes` is kept from each batch's touched-bucket listings. A meta
-    * written before it has only `numBuckets` (no level or split pointer),
-    * reads as `Buckets(numBuckets)`, and its buckets are listed once.
-    * `schema` lets reads pass an explicit schema instead of a mergeSchema
-    * sweep over every affected bucket's footer, which at streaming
-    * cadence would recur per batch; lagging buckets (lazy DDL migration)
-    * read identically either way, since the parquet reader surfaces null
-    * for columns a file predates. It is absent when it would not cover
-    * every logical column, and on older metas: reads then fall back to
-    * mergeSchema. */
-  private final case class Meta(buckets: Buckets, bytes: Option[Long], batch: Long,
-                                columns: Seq[String], schema: Option[StructType])
+    * on, `bytes` (the data bytes of all buckets, kept from each batch's
+    * touched-bucket listings), the id of the batch that committed it (-1
+    * for none: the CDC merge, an unnumbered fold; the file then has no
+    * `batch`), and the TYPED union schema across drifts. Reads pass that
+    * schema instead of a mergeSchema sweep over every affected bucket's
+    * footer, which at streaming cadence would recur per batch; lagging
+    * buckets (lazy DDL migration) read identically either way, since the
+    * parquet reader surfaces null for columns a file predates. */
+  private final case class Meta(buckets: Buckets, bytes: Long, batch: Long, schema: StructType)
 
   private val MetaName = "_graft_meta.json"
 
+  /** Refuse a layout [[write]] does not produce, naming `path`. */
+  private def refuse(path: Any, what: String): Nothing =
+    throw new IllegalStateException(s"$path $what: not a layout BucketedState " +
+      "writes. Rebuild the state from its source.")
+
+  /** The meta of `root`, None when it has none. A meta that lacks a field
+    * [[metaJson]] writes, or whose schema does not parse, is refused. */
   private def readMeta(fs: FileSystem, root: String): Option[Meta] = {
     val p = new Path(root, MetaName)
     if (!fs.exists(p)) None
@@ -141,60 +144,56 @@ object BucketedState {
       val raw = try new String(in.readAllBytes(), "UTF-8") finally in.close()
       def num(name: String): Option[Long] = s""""$name"\\s*:\\s*(-?\\d+)""".r
         .findFirstMatchIn(raw).map(_.group(1).toLong)
-      val buckets = num("n0").map(n0 => Buckets(n0.toInt,
-          num("level").getOrElse(0L).toInt, num("split").getOrElse(0L).toInt))
-        .orElse(num("numBuckets").map(n => Buckets(n.toInt)))
-      val cols = """"columns"\s*:\s*\[(.*?)\]""".r.findFirstMatchIn(raw)
-        .map(_.group(1).split(",").map(_.trim.stripPrefix("\"")
-          .stripSuffix("\"")).filter(_.nonEmpty).toSeq)
       // base64 of StructType.json keeps the regex-parsed file free of
-      // nested quotes and braces; a parse failure degrades to None (the
-      // mergeSchema fallback), never an error
-      val schema = """"schemaB64"\s*:\s*"([A-Za-z0-9+/=]*)"""".r
-        .findFirstMatchIn(raw).flatMap(m => scala.util.Try(DataType.fromJson(
-          new String(java.util.Base64.getDecoder.decode(m.group(1)), "UTF-8"))
-          .asInstanceOf[StructType]).toOption)
-      buckets.map(Meta(_, num("bytes"), num("batch").getOrElse(-1L), cols.getOrElse(Nil), schema))
+      // nested quotes and braces
+      val b64 = """"schemaB64"\s*:\s*"([A-Za-z0-9+/=]*)"""".r.findFirstMatchIn(raw).map(_.group(1))
+      val missing = Seq("n0", "level", "split", "bytes").filter(num(_).isEmpty) ++
+        (if (b64.isEmpty) Seq("schemaB64") else Nil)
+      if (missing.nonEmpty) refuse(p, s"has no ${missing.mkString(", ")}")
+      val schema = scala.util.Try(DataType.fromJson(new String(
+          java.util.Base64.getDecoder.decode(b64.get), "UTF-8")).asInstanceOf[StructType])
+        .getOrElse(refuse(p, "holds a schemaB64 that does not parse as a schema"))
+      Some(Meta(Buckets(num("n0").get.toInt, num("level").get.toInt, num("split").get.toInt),
+        num("bytes").get, num("batch").getOrElse(-1L), schema))
     }
   }
 
-  /** The meta's file text. `numBuckets`, the current count, is what a
-    * reader of the oldest format looks for. */
+  /** [[readMeta]], refusing a root that holds rows but no meta: `__bucket`
+    * dirs (a bucket count never recorded: a write under another count
+    * would split its keys across buckets) or flat `part-*` files. None is
+    * a root with no state yet. */
+  private def committedMeta(fs: FileSystem, root: String): Option[Meta] = {
+    val meta = readMeta(fs, root)
+    if (meta.isEmpty && fs.exists(new Path(root))) {
+      val names = fs.listStatus(new Path(root)).map(_.getPath.getName)
+      if (names.exists(_.startsWith(s"$BucketCol=")))
+        refuse(root, s"holds $BucketCol dirs but no $MetaName, so its bucket count was never recorded")
+      if (names.exists(_.startsWith("part-")))
+        refuse(root, s"holds flat part files and no $MetaName")
+    }
+    meta
+  }
+
+  /** The meta's file text. */
   private def metaJson(m: Meta): String = {
     val b = m.buckets
     val batch = if (m.batch >= 0) s""""batch":${m.batch},""" else ""
-    val schema = m.schema.fold("")(s => s""","schemaB64":"${java.util.Base64.getEncoder
-      .encodeToString(s.json.getBytes("UTF-8"))}"""")
-    s"""{"numBuckets":${b.count},"n0":${b.n0},"level":${b.level},"split":${b.split},""" +
-      s""""bytes":${m.bytes.getOrElse(0L)},$batch"columns":[""" +
-      m.columns.map("\"" + _ + "\"").mkString(",") + s"]$schema}"
+    s"""{"n0":${b.n0},"level":${b.level},"split":${b.split},"bytes":${m.bytes},$batch""" +
+      s""""schemaB64":"${java.util.Base64.getEncoder.encodeToString(m.schema.json.getBytes("UTF-8"))}"}"""
   }
 
-  /** The bucket layout the meta of `root` records, if any. */
-  def layout(fs: FileSystem, root: String): Option[Buckets] = readMeta(fs, root).map(_.buckets)
-
-  /** A read of bucket files with `schema`, or with mergeSchema without one:
-    * buckets may sit at different drift generations. */
-  private def reader(schema: Option[StructType])(r: DataFrameReader): DataFrameReader =
-    schema.fold(r.option("mergeSchema", "true"))(r.schema)
+  /** The bucket layout the meta of `root` records, None for a root with
+    * no state yet. Refuses what [[write]] refuses. */
+  def layout(fs: FileSystem, root: String): Option[Buckets] = committedMeta(fs, root).map(_.buckets)
 
   /** Swap recovery on entry, before anything under `root` is read. The
     * meta is the swap's commit record: a swap whose manifest batch id the
     * live meta records committed before its sentinel was written, so only
     * its teardown is finished (rolling back would pair pre-batch buckets
-    * with a post-batch meta, and the replay would be skipped and lost).
-    * A `.bak` with no manifest that holds flat `part-*` files is a legacy
-    * migration interrupted in an older layout: it does not name the
-    * bucket dirs already moved in, and all of them are replay debris (the
-    * flat snapshot is the pre-batch state). */
-  private def recover(fs: FileSystem, root: String): Unit = {
-    val (live, bak) = (new Path(root), bakOf(root))
-    if (Swap.unlisted(fs, bak) && fs.listStatus(bak).exists(_.getPath.getName.startsWith("part-")))
-      fs.listStatus(live).filter(_.getPath.getName.startsWith(BucketCol))
-        .foreach(st => fs.delete(st.getPath, true))
-    Swap.recoverChildren(fs, live, new Path(root + ".tmp"), bak,
+    * with a post-batch meta, and the replay would be skipped and lost). */
+  private def recover(fs: FileSystem, root: String): Unit =
+    Swap.recoverChildren(fs, new Path(root), new Path(root + ".tmp"), bakOf(root),
       b => b >= 0 && readMeta(fs, root).exists(_.batch == b))
-  }
 
   /** The batch's one clustering step, handed to the caller's row logic.
     * [[cluster]] adds [[BucketCol]] under the batch's [[buckets]] and
@@ -285,28 +284,21 @@ object BucketedState {
       !st.getPath.getName.startsWith(".") && !st.getPath.getName.startsWith("_"))
       .map(_.getLen).sum
 
-  /** Bytes of the data files of every bucket under `root`, from a
-    * driver-side listing (no Spark job). */
-  private def sizeOf(fs: FileSystem, root: String): Long =
-    if (!fs.exists(new Path(root))) 0L
-    else fs.listStatus(new Path(root)).filter(st => st.isDirectory &&
-      st.getPath.getName.startsWith(s"$BucketCol=")).map(st => dataBytes(fs, st.getPath)).sum
-
   /** The base bucket count of a new root: one per shuffle partition, so
     * each write task gets one bucket, or one per `target` bytes of the
-    * plans' size estimates when that is more. A plan Spark cannot bound
+    * plan's size estimate when that is more. A plan Spark cannot bound
     * counts as unknown: its estimate, or a leaf's, is the default size (a
     * projection or aggregate over an unbounded leaf, like a stream
     * batch's, scales that default down to a huge estimate that bounds
     * nothing). The reference likewise sizes snapshot parts from table
     * size (sharding_storage.go `DesiredTableSize`). */
-  private def initialBuckets(first: Seq[DataFrame], target: Long): Int = {
-    val conf = first.head.sparkSession.sessionState.conf
-    val plans = first.map(_.queryExecution.optimizedPlan)
+  private def initialBuckets(first: DataFrame, target: Long): Int = {
+    val conf = first.sparkSession.sessionState.conf
+    val plan = first.queryExecution.optimizedPlan
     val perTarget =
-      if (plans.exists(p => (p +: p.collectLeaves()).exists(
-          _.stats.sizeInBytes >= conf.defaultSizeInBytes))) BigInt(0)
-      else (plans.map(_.stats.sizeInBytes).sum + target - 1) / target
+      if ((plan +: plan.collectLeaves()).exists(_.stats.sizeInBytes >= conf.defaultSizeInBytes))
+        BigInt(0)
+      else (plan.stats.sizeInBytes + target - 1) / target
     math.max(conf.numShufflePartitions, perTarget.min(Int.MaxValue).toInt)
   }
 
@@ -321,19 +313,19 @@ object BucketedState {
     *    already holds it: the call recovers the root and returns.
     *  - **Sizing.** A new root gets `max(p, ⌈size / maxPartitionBytes⌉)`
     *    base buckets ([[initialBuckets]]), `size` being the plan estimate
-    *    of `sizing` (what the first batch writes) plus a legacy flat
-    *    state's. Both settings are Spark's own, read from the session.
+    *    of `sizing` (what the first batch writes). Both settings are
+    *    Spark's own, read from the session.
     *  - **Growth.** Once the meta's `bytes` pass `maxPartitionBytes` per
     *    bucket, the batch splits bucket `split` ([[Buckets.grown]]): the
     *    split bucket and its new sibling count as touched, so its rows
     *    are re-bucketed by the same clustering, with no job of its own.
     *    A batch splits at most one bucket.
-    *  - **Legacy flat layout.** A root with flat `part-*` files and no
-    *    meta is read whole as the existing rows, every bucket counts as
-    *    touched, and the flat files are swapped out for nothing.
-    *  - A root that holds bucket dirs but no meta never recorded its
-    *    count: it is refused, since writing it under another count would
-    *    split its keys across buckets.
+    *  - **One format.** A root is taken only as this call leaves it: a
+    *    meta with the layout, `bytes` and the schema, the bucket dirs and
+    *    an optional [[SummaryName]]. Any other layout it recognises (rows
+    *    without a meta, a meta missing a field) is refused with an
+    *    `IllegalStateException` naming the root or the meta, before
+    *    anything is written.
     *
     * Per batch: one job for the touched set, then one plan with one
     * Exchange (the layout's clustering, before `partitionBy`: otherwise
@@ -352,22 +344,11 @@ object BucketedState {
     val fs = fsOf(spark, root)
     val (live, tmp) = (new Path(root), new Path(root + ".tmp"))
     recover(fs, root)
-    val prev = readMeta(fs, root)
+    val prev = committedMeta(fs, root)
     if (batch < 0 || !prev.exists(_.batch == batch)) {
-      val children = if (fs.exists(live)) fs.listStatus(live).toSeq else Nil
-      if (prev.isEmpty && children.exists(_.getPath.getName.startsWith(s"$BucketCol=")))
-        throw new IllegalStateException(s"$root holds $BucketCol dirs but no $MetaName, " +
-          "so its bucket count was never recorded; a write under another count would " +
-          "split its keys across buckets. Rebuild it from its source.")
-      // a legacy flat layout: flat part files and no meta
-      val flatFiles =
-        if (prev.isEmpty && children.exists(st => st.isFile && st.getPath.getName.startsWith("part-")))
-          children.filter(_.isFile).map(_.getPath.getName)
-        else Nil
-      val flat = if (flatFiles.isEmpty) None else Some(spark.read.parquet(root))
       val target = spark.sessionState.conf.filesMaxPartitionBytes
-      val buckets = prev.fold(Buckets(initialBuckets(sizing +: flat.toSeq, target)))(_.buckets)
-      val bytes = prev.flatMap(_.bytes).getOrElse(sizeOf(fs, root))
+      val buckets = prev.fold(Buckets(initialBuckets(sizing, target)))(_.buckets)
+      val bytes = prev.fold(0L)(_.bytes)
       val grow = bytes / buckets.count > target
       val after = if (grow) buckets.grown else buckets
       val layout = new Layout(keys, after,
@@ -376,43 +357,36 @@ object BucketedState {
       if (owned) probe.persist()
       try {
         val split = if (grow) Seq(buckets.split, buckets.split + buckets.m) else Nil
-        val touched = if (flat.isDefined) 0 until after.count
-          else (touchedBuckets(probe, keys, after) ++ split).distinct.sorted
+        val touched = (touchedBuckets(probe, keys, after) ++ split).distinct.sorted
         val paths = touched.map(bucketDir(root, _)).filter(fs.exists)
-        val rows = next(flat.orElse(
-          if (paths.isEmpty) None
-          else Some(reader(prev.flatMap(_.schema))(spark.read.option("basePath", root))
-            .parquet(paths.map(_.toString): _*).drop(BucketCol))), layout)
+        // bucket dirs exist only under a meta (committedMeta)
+        val rows = next(prev.filter(_ => paths.nonEmpty).map(m =>
+          spark.read.schema(m.schema).option("basePath", root)
+            .parquet(paths.map(_.toString): _*).drop(BucketCol)), layout)
         require(rows.columns.contains(BucketCol),
           s"rows rewritten into $root must be clustered through the batch's Layout")
         rows.sortWithinPartitions(layout.groupCols.map(col): _*)
           .write.partitionBy(BucketCol).parquet(tmp.toString)
         val added = touched.map(b => dataBytes(fs, new Path(tmp, s"$BucketCol=$b"))).sum -
           paths.map(dataBytes(fs, _)).sum
-        // the column set is the LOGICAL union across drifts: untouched
-        // buckets may lag it on disk until a batch touches them
+        // typed union schema across drifts: this write's schema wins for
+        // the columns it carries (it absorbed every touched bucket's drift
+        // through the read above); columns only the previous meta knew,
+        // dropped by DDL but still in lagging buckets, stay so reads
+        // surface them as null
         val cols = rows.columns.filterNot(_ == BucketCol).toSeq
-        val prevCols = prev.map(_.columns).getOrElse(Nil)
-        val logical = prevCols ++ cols.filterNot(prevCols.contains)
-        // typed union schema: this write's schema wins for the columns it
-        // carries (it absorbed every touched bucket's drift through the
-        // read above); columns only the previous meta knew, dropped by DDL
-        // but still in lagging buckets, stay so reads surface them as null
         val union = StructType(cols.map(rows.schema(_).copy(nullable = true)) ++
-          prev.flatMap(_.schema).toSeq.flatMap(_.fields.filterNot(f => cols.contains(f.name))))
-        // baked only when it covers every logical column: a previous meta
-        // without one cannot say what a drift column living only in
-        // untouched buckets looks like, and a partial schema would hide it
-        val typed = Some(union).filter(u => logical.forall(u.fieldNames.toSet))
+          prev.toSeq.flatMap(_.schema.fields.filterNot(f => cols.contains(f.name))))
         // a drift batch replaces the schema summary, so a plain parquet
         // read of the root infers every column, not one bucket's
-        val summary = if (prev.exists(_.columns != logical)) Seq(SummaryName) else Nil
+        val summary =
+          if (prev.exists(_.schema.fieldNames.toSet != union.fieldNames.toSet)) Seq(SummaryName)
+          else Nil
         summary.foreach(n => writeSummary(spark, new Path(tmp, n), union))
         val out = fs.create(new Path(tmp, MetaName))
-        try out.write(metaJson(Meta(after, Some(bytes + added), batch, logical, typed))
-          .getBytes("UTF-8"))
+        try out.write(metaJson(Meta(after, bytes + added, batch, union)).getBytes("UTF-8"))
         finally out.close()
-        Swap.installChildren(fs, live, tmp, bakOf(root), flatFiles ++
+        Swap.installChildren(fs, live, tmp, bakOf(root),
           touched.map(b => s"$BucketCol=$b") ++ summary :+ MetaName, batch)
       } finally if (owned) probe.unpersist()
     }
@@ -432,20 +406,22 @@ object BucketedState {
           "read it after that.")
 
   /** The whole settled state without its layout column, read with
-    * `schema`, else with the meta's typed schema, else with mergeSchema.
-    * `empty`, when given, answers for a root that holds no bucket dir (no
-    * state yet, or every row retracted). */
+    * `schema`, else with the meta's. `empty`, when given, answers for a
+    * root that holds no bucket dir (no state yet, or every row retracted).
+    * Refuses what [[write]] refuses. */
   def read(spark: SparkSession, root: String, writer: String,
            schema: Option[StructType] = None,
            empty: Option[() => DataFrame] = None): DataFrame = {
     val fs = fsOf(spark, root)
     requireSettled(fs, root, writer)
+    val meta = committedMeta(fs, root)
     lazy val noBuckets = !fs.exists(new Path(root)) || !fs.listStatus(new Path(root))
       .exists(_.getPath.getName.startsWith(s"$BucketCol="))
     if (empty.isDefined && noBuckets) empty.get()
     else {
-      val df = reader(schema.orElse(readMeta(fs, root).flatMap(_.schema)))(spark.read)
-        .parquet(root)
+      val s = schema.orElse(meta.map(_.schema)).getOrElse(throw new IllegalStateException(
+        s"$root holds no bucketed state: it has no $MetaName"))
+      val df = spark.read.schema(s).parquet(root)
       if (df.columns.contains(BucketCol)) df.drop(BucketCol) else df
     }
   }

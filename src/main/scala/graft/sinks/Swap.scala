@@ -97,12 +97,6 @@ object Swap {
   private def isBookkeeping(name: String): Boolean =
     name.startsWith(Manifest) || name == Sentinel
 
-  /** True when `bak` holds a children backup with no manifest, the
-    * layout written before swaps recorded their fresh names: recovery
-    * cannot tell which root children the interrupted swap moved in. */
-  def unlisted(fs: FileSystem, bak: Path): Boolean =
-    fs.exists(bak) && !fs.exists(new Path(bak, Manifest))
-
   /** True when the root whose children backup is `bak` holds exactly the
     * state before or after a swap: no `bak` at all, or a `bak` that
     * holds the commit sentinel (every staged child moved in, only the
@@ -142,7 +136,10 @@ object Swap {
     * `committed` lets a caller whose commit record is itself a swapped
     * child (the bucketed state's meta, which records the batch id)
     * recognise a crash after that child moved in but before the sentinel
-    * was written. */
+    * was written. Every crash of [[installChildren]] recovers without it,
+    * but a `bak` written before swaps wrote a sentinel, with its backups
+    * already torn down, looks like a current one, and only this check
+    * keeps its rollback from deleting the committed fresh children. */
   def recoverChildren(fs: FileSystem, root: Path, tmp: Path, bak: Path,
                       committed: Long => Boolean = _ => false): Unit = {
     if (fs.exists(bak)) {

@@ -20,41 +20,26 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 object CdcStream {
 
   /** Bufferer flush-trigger config (reference: bufferer.go:16-32
-    * TriggingCount/TriggingSize/TriggingInterval). Count/size triggers
-    * map to source rate limits (`maxOffsetsPerTrigger` etc.) which are
-    * source options; the interval maps to the processing trigger. */
+    * TriggingInterval): the interval maps to the processing trigger. The
+    * reference's count and size triggers are source rate limits, which
+    * belong to the source read, not to this trigger. */
   final case class Bufferer(interval: Option[String] = Some("10 seconds"),
-                            availableNow: Boolean = false,
-                            maxRecordsPerBatch: Option[Long] = None,
-                            maxBytesPerBatch: Option[Long] = None) {
+                            availableNow: Boolean = false) {
     def trigger: Trigger =
       if (availableNow) Trigger.AvailableNow()
       else interval.map(Trigger.ProcessingTime(_)).getOrElse(
         Trigger.ProcessingTime(0L))
-
-    /** Count/size flush limits become source rate options (the trigger
-      * point is source-specific: Kafka uses maxOffsetsPerTrigger, file
-      * sources maxFilesPerTrigger/maxBytesPerTrigger). */
-    def sourceOptions(sourceKind: String): Map[String, String] =
-      sourceKind match {
-        case "kafka" =>
-          maxRecordsPerBatch.map("maxOffsetsPerTrigger" -> _.toString).toMap
-        case "file" =>
-          maxBytesPerBatch.map("maxBytesPerTrigger" -> _.toString).toMap ++
-            maxRecordsPerBatch.map("maxFilesPerTrigger" -> _.toString).toMap
-        case _ => Map.empty
-      }
   }
 
   /** The writer call named by readers that refuse a half-swapped state. */
   private val Writer = "CdcStream.mergeBatch"
 
   /** Read the merged state back without the layout's bucket column.
-    * Schema-merging: under lazy DDL migration bucket dirs may sit at
-    * different drift generations; the union schema (the meta's, or
-    * mergeSchema on an older meta) surfaces null for columns a lagging
-    * bucket predates. Throws on a half-swapped state dir, naming the
-    * paths ([[BucketedState.requireSettled]]). */
+    * Under lazy DDL migration bucket dirs may sit at different drift
+    * generations; the meta's union schema surfaces null for columns a
+    * lagging bucket predates. Throws on a half-swapped state dir, naming
+    * the paths ([[BucketedState.requireSettled]]), and on a layout
+    * [[BucketedState.write]] does not produce. */
   def readState(spark: SparkSession, stateDir: String): DataFrame =
     BucketedState.read(spark, stateDir, Writer)
 
@@ -69,7 +54,7 @@ object CdcStream {
     * it predates, the same contract as a pre-drift read of the whole
     * state. That schema is read from the bucket's footer on the driver,
     * so the lookup's collect is its only Spark job. Throws on a
-    * half-swapped state dir, as [[readState]] does. */
+    * half-swapped state dir or a refused layout, as [[readState]] does. */
   def lookup(spark: SparkSession, stateDir: String, pks: Seq[String],
              key: Seq[Any]): DataFrame = {
     require(pks.length == key.length, "one value per key column")
@@ -95,8 +80,7 @@ object CdcStream {
     * Incremental by construction: the state is laid out as
     * `stateDir/__bucket=i/` dirs keyed by a stable PK hash, and a batch
     * rewrites ONLY the buckets containing its keys — rewrite I/O scales
-    * with the batch's key spread, not total state size (the flat-layout
-    * predecessor rewrote the whole state every batch). Per-batch plan,
+    * with the batch's key spread, not total state size. Per-batch plan,
     * three Spark jobs: one pass over the batch's row events for the
     * touched-bucket set (it also builds their cache); then ONE plan with
     * ONE Exchange, the layout's clustering of (the touched buckets
@@ -119,7 +103,7 @@ object CdcStream {
     * Collapse before write change_item_collapse.go:48).
     *
     * Bucket count: [[BucketedState.write]] sizes a new state from this
-    * first batch (plus a legacy flat state), one bucket per shuffle
+    * first batch, one bucket per shuffle
     * partition or more, and grows it by linear hashing, one bucket split
     * per batch at most, in the batch's own swap and with no extra job.
     *
@@ -139,11 +123,8 @@ object CdcStream {
     * batch, and (b) any rewrite a batch does perform projects the
     * touched buckets to the union (null-filled drifted columns) —
     * observable results are identical either way, convergence is just
-    * faster. A meta without the typed schema falls back to mergeSchema
-    * reads. The meta's column set records the
-    * logical union across drifts. A legacy flat-layout dir is still
-    * migrated whole on first contact (its layout, not just its
-    * schema, changes). */
+    * faster. A state dir in any layout the writer does not produce is
+    * refused, naming the dir or its meta. */
   def mergeBatch(batch0: DataFrame, stateDir: String, pks: Seq[String]): Unit = {
     // with no key, every row would hash to one bucket and the
     // last-write-wins would keep one row per bucket
@@ -231,9 +212,7 @@ object CdcStream {
     * chain can reject rows from is persisted once, so its source is
     * scanned once, and a batch with no quarantine row writes no file.
     * Otherwise the batch is merged as it comes, with no cache and no
-    * extra job. `bufferer` sets the trigger;
-    * its row and byte limits are source options
-    * ([[Bufferer.sourceOptions]]). */
+    * extra job. `bufferer` sets the trigger. */
   def replicate(stream: DataFrame, stateDir: String, checkpointDir: String,
                 pks: Seq[String],
                 bufferer: Bufferer = Bufferer(),

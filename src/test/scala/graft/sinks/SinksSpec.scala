@@ -1,36 +1,13 @@
 package graft.sinks
 
-
-import scala.collection.mutable
-
-import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import graft.{JobBudget, SparkSpec}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.bridge
 
 class SinksSpec extends SparkSpec {
 
   private def tmp(): String =
     tempDir("graft_sinks")
-
-  /** SQL execution id of every job `body` starts, in start order. */
-  private def jobsOf(body: => Unit): Seq[Option[String]] = {
-    val seen = mutable.ArrayBuffer.empty[Option[String]]
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = seen.synchronized {
-        seen += Option(e.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
-      }
-    }
-    assert(bridge.drainListenerBus(spark, 10000))
-    spark.sparkContext.addSparkListener(l)
-    try body
-    finally {
-      assert(bridge.drainListenerBus(spark, 10000))
-      spark.sparkContext.removeSparkListener(l)
-    }
-    seen.synchronized(seen.toList)
-  }
 
   private def parquetFiles(dir: String): Seq[String] =
     Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
@@ -39,12 +16,13 @@ class SinksSpec extends SparkSpec {
   test("unpartitioned parquet sink of a small aggregate starts no job before the write") {
     val agg: DataFrame = spark.range(20000)
       .groupBy((col("id") % 50).as("k")).agg(sum("id").as("v"))
-    val plain = jobsOf(agg.write.parquet(tmp() + "/plain"))
+    // the SQL execution id of each job, `-` outside any execution
+    val plain = JobBudget.jobsOf(spark)(agg.write.parquet(tmp() + "/plain")).map(_._1)
     val path = tmp() + "/sink"
-    val jobs = jobsOf(Sinks.parquet(agg, path))
+    val jobs = JobBudget.jobsOf(spark)(Sinks.parquet(agg, path)).map(_._1)
     // every job belongs to the write's own query execution, and there
     // are as many as a bare DataFrameWriter write of the same frame runs
-    assert(jobs.nonEmpty && jobs.forall(_.isDefined), jobs)
+    assert(jobs.nonEmpty && !jobs.contains("-"), jobs)
     assert(jobs.distinct.size == 1, jobs)
     assert(jobs.size == plain.size, s"sink $jobs vs bare write $plain")
     assert(spark.read.parquet(path).count() == 50)

@@ -257,29 +257,13 @@ class StreamingSpec extends SparkSpec {
     assert(st.count() == 10 && st.agg(sum("n_rows")).head().getLong(0) == 40L)
   }
 
-  test("legacy flat state migrates into buckets on first contact") {
-    val state = tmp() + "/tlg"
-    spark.range(0, 50)
-      .select(col("id"), concat(lit("v"), col("id")).as("v"))
-      .write.parquet(state)                       // pre-bucketed layout
-    CdcStream.mergeBatch(batch((5L, "v5x", "update", 1L)), state, Seq("id"))
-    val out = CdcStream.readState(spark, state)
-    assert(out.count() == 50)
-    assert(out.filter(col("id") === 5).select("v").as[String].head() == "v5x")
-    // flat files are gone, bucket dirs exist
-    val names = new java.io.File(state).listFiles().map(_.getName).toSeq
-    assert(!names.exists(_.startsWith("part-")), s"flat files remain: $names")
-    assert(names.exists(_.startsWith(BucketedState.BucketCol)))
-  }
-
-  test("legacy migration and DDL drift batches equal a naive last-write-wins") {
+  test("DDL drift batches from a bucketed bootstrap equal a naive last-write-wins") {
     val state = tmp() + "/tlw"
     // naive replay: key -> (v, extra), event by event
     val table = scala.collection.mutable.Map[Long, (String, Option[Long])]()
     (0L until 60L).foreach(k => table(k) = (s"v$k", None))
-    spark.range(0, 60)
-      .select(col("id"), concat(lit("v"), col("id")).as("v"))
-      .write.parquet(state)                       // pre-bucketed layout
+    withPartitions(8)(CdcStream.mergeBatch(spark.range(0, 60)
+      .select(col("id"), concat(lit("v"), col("id")).as("v")), state, Seq("id")))
     def events(from: Long, drift: Boolean) = (0 until 40).map { i =>
       val lsn = from + i
       val k = (i * 7 % 75).toLong                 // repeats, new keys
@@ -296,46 +280,19 @@ class StreamingSpec extends SparkSpec {
         .as[(Long, String, Option[Long])].collect().map(r => r._1 -> (r._2, r._3)).toMap
       assert(got == table.toMap, s"$round diverged")
     }
-    // the migration batch: every bucket counts as touched, the flat state
-    // is read whole, and it goes through the same clustered merge
-    withPartitions(8)(CdcStream.mergeBatch(events(1, drift = false)
-      .map(e => (e._1, e._2, e._4, e._5))
-      .toDF("id", "v", E.Kind, E.Lsn).withColumn(E.Counter, lit(0)), state, Seq("id")))
-    assert(!new java.io.File(state).listFiles().exists(_.getName.startsWith("part-")))
-    check("legacy migration")
+    CdcStream.mergeBatch(events(1, drift = false).map(e => (e._1, e._2, e._4, e._5))
+      .toDF("id", "v", E.Kind, E.Lsn).withColumn(E.Counter, lit(0)), state, Seq("id"))
+    check("first batch")
     // DDL drift: a column the state has never seen, on some keys only
     val drift = events(100, drift = true)
     CdcStream.mergeBatch(drift.toDF("id", "v", "extra", E.Kind, E.Lsn)
       .withColumn(E.Counter, lit(0)), state, Seq("id"))
     check("drift")
-  }
-
-  test("crash mid-legacy-migration leaves the flat snapshot recoverable") {
-    val state = tmp() + "/tlc"
-    spark.range(0, 50)
-      .select(col("id"), concat(lit("v"), col("id")).as("v"))
-      .write.parquet(state)
-    // simulate a crash inside the swap window: the flat part-* files are
-    // staged in .bak, and one rewritten bucket already landed in root
-    import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get(state)
-    val bak = java.nio.file.Paths.get(state + ".bak")
-    java.nio.file.Files.createDirectories(bak)
-    java.nio.file.Files.list(root).iterator().asScala.toSeq
-      .filter(p => java.nio.file.Files.isRegularFile(p))
-      .foreach(p => java.nio.file.Files.move(p, bak.resolve(p.getFileName)))
-    val debris = tmp() + "/debris"
-    Seq((999L, "zz")).toDF("id", "v").write.parquet(debris)
-    java.nio.file.Files.move(java.nio.file.Paths.get(debris),
-      root.resolve(s"${BucketedState.BucketCol}=0"))
-    // replay: recovery must restore the flat snapshot, discard the
-    // half-swapped bucket, then run the migration + merge
-    CdcStream.mergeBatch(batch((5L, "v5c", "update", 9L)), state, Seq("id"))
-    val out = CdcStream.readState(spark, state)
-    assert(out.count() == 50, "pre-batch snapshot lost across crash")
-    assert(out.filter(col("id") === 999).count() == 0, "debris row survived")
-    assert(out.filter(col("id") === 5).select("v").as[String].head() == "v5c")
-    assert(!java.nio.file.Files.exists(bak))
+    // a one-key batch without the drift column: the drift values in the
+    // buckets it leaves untouched still read back, through the meta's schema
+    table(1L) = ("x", None)
+    CdcStream.mergeBatch(batch((1L, "x", "update", 300L)), state, Seq("id"))
+    check("after drift")
   }
 
   test("null PK components bucket where lookup probes") {
@@ -379,36 +336,6 @@ class StreamingSpec extends SparkSpec {
       .select("id", "v", "extra").as[(Long, String, Option[Long])]
       .collect().toSeq.sortBy(_._1)
     assert(out == Seq((1L, "a", None), (2L, "b", None), (3L, "c", Some(7L))))
-  }
-
-  test("a meta without a typed schema keeps a drift column that lives " +
-    "only in untouched buckets") {
-    val state = tmp() + "/tw"
-    val n = 8
-    withPartitions(n)(CdcStream.mergeBatch(
-      spark.range(0, 100)
-        .select(col("id"), concat(lit("v"), col("id")).as("v")),
-      state, Seq("id")))
-    def bucket(id: Long): Int = spark.range(id, id + 1)
-      .select(BucketedState.bucketOf(Seq("id"), Buckets(n))).first().getInt(0)
-    // drift column w arrives on key 5 only, so only its bucket holds it
-    CdcStream.mergeBatch(Seq((5L, "v5", 55L)).toDF("id", "v", "w")
-      .withColumn(E.Kind, lit("update")).withColumn(E.Lsn, lit(1L))
-      .withColumn(E.Counter, lit(0)), state, Seq("id"))
-    // an older meta: the column list, no typed schema
-    val meta = java.nio.file.Paths.get(state, "_graft_meta.json")
-    java.nio.file.Files.writeString(meta,
-      s"""{"numBuckets":$n,"columns":["id","v","w"]}""")
-    java.nio.file.Files.deleteIfExists(
-      java.nio.file.Paths.get(state, "._graft_meta.json.crc"))
-    // the next batch touches a different bucket only
-    val other = (6L until 100L).find(bucket(_) != bucket(5L)).get
-    CdcStream.mergeBatch(batch((other, "x", "update", 2L)), state, Seq("id"))
-    val out = CdcStream.readState(spark, state)
-    assert(out.columns.contains("w"), s"w lost: ${out.columns.toSeq}")
-    assert(out.filter(col("id") === 5).select("w").as[Long].head() == 55L)
-    assert(out.filter(col("id") === other).select("v").as[String].head() == "x")
-    assert(out.count() == 100)
   }
 
   test("DDL drift mid-stream migrates lazily: only touched buckets " +
@@ -573,18 +500,12 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
-  test("a legacy 32-bucket meta keeps 32 buckets, and its untouched " +
-    "buckets stay byte-identical") {
-    val state = tmp() + "/tleg"
+  test("a 32-bucket state keeps 32 buckets under a later, smaller " +
+    "shuffle partition count, and its untouched buckets stay byte-identical") {
+    val state = tmp() + "/t32"
     withPartitions(32)(CdcStream.mergeBatch(spark.range(0, 1000)
       .select(col("id"), concat(lit("v"), col("id")).as("v")),
       state, Seq("id")))
-    // the meta as written before the layout fields and the byte count
-    val meta = java.nio.file.Paths.get(state, "_graft_meta.json")
-    Files.writeString(meta, Files.readString(meta)
-      .replaceAll("\"(n0|level|split|bytes)\":\\d+,", ""))
-    Files.deleteIfExists(java.nio.file.Paths.get(state, "._graft_meta.json.crc"))
-    assert(!Files.readString(meta).contains("n0"), Files.readString(meta))
     val before = bucketListing(state)
     assert(before.size == 32)
     CdcStream.mergeBatch(batch((5L, "v5b", "update", 1L)), state, Seq("id"))
@@ -741,14 +662,5 @@ class StreamingSpec extends SparkSpec {
       val analyzed = joined.queryExecution.analyzed.toString
       assert("(?i)eventtimewatermark".r.findAllIn(analyzed).size == 2)
     } finally q.stop()
-  }
-
-  test("bufferer count/size limits map to per-source rate options") {
-    val b = CdcStream.Bufferer(maxRecordsPerBatch = Some(1000),
-      maxBytesPerBatch = Some(1 << 20))
-    assert(b.sourceOptions("kafka") == Map("maxOffsetsPerTrigger" -> "1000"))
-    assert(b.sourceOptions("file") ==
-      Map("maxBytesPerTrigger" -> "1048576", "maxFilesPerTrigger" -> "1000"))
-    assert(b.sourceOptions("rate").isEmpty)
   }
 }
